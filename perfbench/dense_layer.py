@@ -2,9 +2,9 @@
 
 Two overlapping layers over one lon/lat window:
 
-* layer A: one star-shaped polygon per cell of a 90x90 grid (8,100 parts),
+* layer A: one star-shaped polygon per cell of a 64x64 grid (4,096 parts),
   16-64 vertices each, about one in ten with a hole;
-* layer B: one larger polygon per cell of a 36x36 grid (1,296 parts), ids
+* layer B: one larger polygon per cell of a 26x26 grid (676 parts), ids
   from ``B_ID0``, so a point can fall in one polygon of each layer.
 
 Every ring is star-shaped around its cell centre with jittered-regular
@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 
 X0, Y0, SPAN = 100.0, 10.0, 18.0
-A_GRID, B_GRID = 90, 36
+A_GRID, B_GRID = 64, 26
 B_ID0 = 1_000_000
 HOLE_FRAC = 0.1
 

@@ -1,5 +1,5 @@
 """Run plumbing: work directory, session settings, environment stamp, peak
-memory of the process tree, and cached-data accounting.
+memory of the process tree, stopping that tree, and cached-data accounting.
 
 Nothing here times the engine; it sets up and observes the process that
 does.
@@ -7,12 +7,15 @@ does.
 
 from __future__ import annotations
 
+import ctypes
 import os
 import platform
 import shutil
+import signal
 import subprocess
 import sys
 import threading
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
@@ -122,8 +125,8 @@ def stamp(spark, master: str, workload: str, seed: int, trace: bool,
 _PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
-def _tree_rss_bytes(pid: int) -> int:
-    """Summed RSS of ``pid`` and all its descendants, read from /proc."""
+def _proc_table() -> tuple[dict[int, list[int]], dict[int, int]]:
+    """Children of every process and the RSS of each, read from /proc."""
     children: dict[int, list[int]] = {}
     rss: dict[int, int] = {}
     for name in os.listdir("/proc"):
@@ -139,12 +142,22 @@ def _tree_rss_bytes(pid: int) -> int:
         ppid = int(stat.rsplit(")", 1)[1].split()[1])
         children.setdefault(ppid, []).append(int(name))
         rss[int(name)] = pages * _PAGE
-    total, todo = 0, [pid]
+    return children, rss
+
+
+def _descendants(pid: int, children: dict[int, list[int]]) -> list[int]:
+    found, todo = [], list(children.get(pid, ()))
     while todo:
         p = todo.pop()
-        total += rss.get(p, 0)
+        found.append(p)
         todo.extend(children.get(p, ()))
-    return total
+    return found
+
+
+def _tree_rss_bytes(pid: int) -> int:
+    """Summed RSS of ``pid`` and all its descendants."""
+    children, rss = _proc_table()
+    return sum(rss.get(p, 0) for p in [pid] + _descendants(pid, children))
 
 
 class PeakRss:
@@ -165,15 +178,89 @@ class PeakRss:
         self._thread.join(timeout=5)
 
     def _loop(self) -> None:
-        pid = os.getpid()
+        """The peak is of the lower of two consecutive samples: a child
+        that has just been spawned shares its parent's pages until it
+        execs, and counting the parent twice for that instant is noise."""
+        pid, prev = os.getpid(), 0
         while True:
-            self.peak = max(self.peak, _tree_rss_bytes(pid))
+            cur = _tree_rss_bytes(pid)
+            self.peak = max(self.peak, min(prev, cur))
+            prev = cur
             if self._stop.wait(self.interval_s):
                 return
 
     @property
     def peak_mb(self) -> float:
         return self.peak / 2**20
+
+
+# ---------------------------------------------------------------------------
+# Stopping every process the run started
+# ---------------------------------------------------------------------------
+
+_PR_SET_CHILD_SUBREAPER = 36
+
+
+def adopt_orphans() -> None:
+    """Make this process the reaper of its orphaned descendants, and turn
+    SIGTERM into SystemExit so that cleanup runs on that path too.
+
+    Python workers are forked by the Spark JVM; when the JVM ends first they
+    are re-parented here, where ``stop_processes`` can wait for them."""
+    ctypes.CDLL(None, use_errno=True).prctl(_PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    signal.signal(signal.SIGTERM, lambda signum, frame: sys.exit(128 + signum))
+
+
+def _reap() -> None:
+    """Collect the exit status of every child that has ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def _live_descendants() -> list[int]:
+    _reap()
+    return _descendants(os.getpid(), _proc_table()[0])
+
+
+def stop_processes(grace_s: float = 30.0) -> None:
+    """Stop the Spark JVM this process launched, then every process still
+    below this one, and return only when all of them have ended.
+
+    The JVM is asked first (its stdin closes, it runs its shutdown hooks
+    and exits); whatever is left gets SIGTERM, and SIGKILL after a grace
+    period."""
+    from pyspark import SparkContext
+
+    signal.signal(signal.SIGTERM, signal.SIG_IGN)  # finish the cleanup
+    if SparkContext._active_spark_context is not None:
+        try:
+            SparkContext._active_spark_context.stop()
+        except Exception as exc:  # a broken gateway still has a process to stop
+            log(f"perfbench: SparkContext.stop failed: {exc}")
+    gateway, SparkContext._gateway, SparkContext._jvm = SparkContext._gateway, None, None
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        if proc.stdin is not None:
+            proc.stdin.close()
+        try:
+            proc.wait(timeout=grace_s)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    deadline = time.monotonic() + grace_s
+    while left := _live_descendants():
+        sig = signal.SIGTERM if time.monotonic() < deadline else signal.SIGKILL
+        for pid in left:
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        time.sleep(0.2)
 
 
 # ---------------------------------------------------------------------------

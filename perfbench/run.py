@@ -2,7 +2,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload flagship --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload flagship --seed 1 --seconds 10 --trace 0
 
 One driver process, one client, closed loop: the next job is submitted when
 the previous one has finished and its output has been checked.  With
@@ -29,7 +29,6 @@ ROOT = os.path.dirname(HERE)
 
 MIN_JOBS = 3
 SETUPS = 3
-OVERHEAD_REPS = 2
 T0 = time.perf_counter()
 
 
@@ -99,8 +98,11 @@ def start_sessions(master: str, conf: dict, tracer, trace: bool):
 
 
 def measure(spark, wl, seconds: float, tally: Tally) -> dict:
-    checked_job(spark, wl, tally)  # warm-up: JIT and first use in the workers
-    walls, leaked = [], harness.release_cached(spark)
+    """Jobs until at least ``MIN_JOBS`` have run and ``seconds`` have been
+    measured.  There is no separate warm-up: the first job pays JIT and
+    first use in the workers, and as the slowest of three or more it never
+    sets the median."""
+    walls, leaked = [], 0
     while len(walls) < MIN_JOBS or sum(walls) < seconds:
         wall, _ = checked_job(spark, wl, tally)
         walls.append(wall)
@@ -145,17 +147,14 @@ def end_to_end(wl, walls, setups, rss) -> dict:
 def per_layer(spark, con, wl, work, tracer, tally, first_job: dict) -> dict:
     import layers
 
-    checked_job(spark, wl, tally)  # warm-up, as in the timed runs
-    base = [checked_job(spark, wl, tally)[0] for _ in range(OVERHEAD_REPS)]
-    traced = []
-    for _ in range(OVERHEAD_REPS):
-        t0 = time.perf_counter()
-        with tracer.span("job"):
-            since = sparkstats.mark(spark)
-            checked_job(spark, wl, tally)
-            sql = sparkstats.sql_metrics(spark, since)
-            app = sparkstats.app_metrics(spark, since)
-        traced.append(time.perf_counter() - t0)
+    checked_job(spark, wl, tally)  # warm-up, so base and traced jobs compare
+    base, _ = checked_job(spark, wl, tally)
+    with tracer.span("job"):
+        since = sparkstats.mark(spark)
+        checked_job(spark, wl, tally)
+        sql = sparkstats.sql_metrics(spark, since)
+        app = sparkstats.app_metrics(spark, since)
+    traced = tracer.seconds("job")[-1]
     leaked = harness.release_cached(spark)
 
     rungs = layers.ladder(spark, wl, tracer)
@@ -202,7 +201,7 @@ def per_layer(spark, con, wl, work, tracer, tally, first_job: dict) -> dict:
         "spark.leaked_cached_rdds": leaked,
         "fit.fixed_s": fixed_s,
         "fit.per_row_ns": per_row_ns,
-        "trace.overhead_frac": statistics.median(traced) / statistics.median(base) - 1,
+        "trace.overhead_frac": traced / base - 1,
     }
 
 
@@ -219,31 +218,27 @@ def run(args, master: str, work: str, rss) -> tuple[dict, dict, Tally]:
     tracer, tally = layers.Tracer(), Tally()
     spark, first_job = start_sessions(master, harness.session_conf(work), tracer,
                                       bool(args.trace))
-    try:
-        record = harness.stamp(spark, master, args.workload, args.seed,
-                               bool(args.trace), args.seconds)
-        con = oracle.connect(os.path.join(work, "tmp"))
-        wl = WORKLOADS[args.workload](args.seed, work)
-        harness.log(f"perfbench: sessions up at {time.perf_counter() - T0:.1f}s")
-        wl.prepare(spark, con)
-        harness.log(f"perfbench: inputs ready at {time.perf_counter() - T0:.1f}s")
-        if args.trace:
-            metrics = per_layer(spark, con, wl, work, tracer, tally, first_job)
-            os.makedirs(os.path.join(harness.WORK_ROOT, "traces"), exist_ok=True)
-            tracer.write(os.path.join(
-                harness.WORK_ROOT, "traces", f"{args.workload}-seed{args.seed}.json"))
-        else:
-            res = measure(spark, wl, args.seconds, tally)
-            setups = [a + b for a, b in zip(tracer.seconds("session.start"),
-                                            tracer.seconds("session.first_job"))]
-            metrics = end_to_end(wl, res["walls"], setups, rss)
-            record["job_walls_s"] = res["walls"]
-            record["leaked_cached_rdds"] = res["leaked"]
-        con.close()
-        harness.log(f"perfbench: measured at {time.perf_counter() - T0:.1f}s")
-    finally:
-        spark.stop()
-    harness.log(f"perfbench: stopped at {time.perf_counter() - T0:.1f}s")
+    record = harness.stamp(spark, master, args.workload, args.seed,
+                           bool(args.trace), args.seconds)
+    con = oracle.connect(os.path.join(work, "tmp"))
+    wl = WORKLOADS[args.workload](args.seed, work)
+    harness.log(f"perfbench: sessions up at {time.perf_counter() - T0:.1f}s")
+    wl.prepare(spark, con)
+    harness.log(f"perfbench: inputs ready at {time.perf_counter() - T0:.1f}s")
+    if args.trace:
+        metrics = per_layer(spark, con, wl, work, tracer, tally, first_job)
+        os.makedirs(os.path.join(harness.WORK_ROOT, "traces"), exist_ok=True)
+        tracer.write(os.path.join(
+            harness.WORK_ROOT, "traces", f"{args.workload}-seed{args.seed}.json"))
+    else:
+        res = measure(spark, wl, args.seconds, tally)
+        setups = [a + b for a, b in zip(tracer.seconds("session.start"),
+                                        tracer.seconds("session.first_job"))]
+        metrics = end_to_end(wl, res["walls"], setups, rss)
+        record["job_walls_s"] = res["walls"]
+        record["leaked_cached_rdds"] = res["leaked"]
+    con.close()
+    harness.log(f"perfbench: measured at {time.perf_counter() - T0:.1f}s")
     return metrics, record, tally
 
 
@@ -262,12 +257,15 @@ def main(argv=None) -> int:
               f"choose from {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
     master = harness.master_string()
+    harness.adopt_orphans()
     work = harness.make_work_dir(f"{args.workload}-seed{args.seed}")
     try:
         with harness.PeakRss() as rss:
             metrics, record, tally = run(args, master, work, rss)
     finally:
+        harness.stop_processes()
         harness.remove_work_dir(work)
+    harness.log(f"perfbench: stopped at {time.perf_counter() - T0:.1f}s")
 
     units = PER_LAYER if args.trace else END_TO_END
     record["failed_frac"] = tally.failed_frac

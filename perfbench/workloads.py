@@ -68,7 +68,7 @@ class Workload:
     why = ""
     how, first_match, tiles = "left", True, True
     rows = 0
-    partitions = 32
+    partitions = 8  # two Arrow batches (65,536 rows each) or less per task
     sample_mod = 1009
 
     def __init__(self, seed: int, work: str):
@@ -134,9 +134,9 @@ class Workload:
 
 class Flagship(Workload):
     name = "flagship"
-    why = ("1.5M seeded range points, 75-part fixture, left first-match pip_join "
+    why = ("1M seeded range points, 75-part fixture, left first-match pip_join "
            "+ z12 tiles to noop: Arrow boundary, pandas assembly, quadkey")
-    rows = 1_500_000
+    rows = 1_000_000
 
     @property
     def first_key(self) -> int:
@@ -151,7 +151,7 @@ class Flagship(Workload):
 
 class DensePolygons(Workload):
     name = "dense_polygons"
-    why = ("250k points over ~10^4 seeded polygon parts in two overlapping "
+    why = ("250k points over ~5k seeded polygon parts in two overlapping "
            "layers, inner all-match pip_join, no tiles: STR probe and ray cast")
     how, first_match, tiles = "inner", False, False
     rows = 250_000
