@@ -361,7 +361,7 @@ def scaling_flagship(spark, n_rows: int) -> tuple[float, int]:
     """Scaling-evidence job: PIP spatial join + tile assignment over an
     n_rows synthetic point table (derived geotags, same rule as the gate
     queries). Generated with spark.range → pure column math → broadcast PIP
-    mapInPandas → tile columns; 128 input partitions so local[8] and
+    Arrow UDF over lon/lat → tile columns; 128 input partitions so local[8] and
     local[32] split identical work. Compute-dominated at 4M+ rows — the
     regime where the two-cluster-size criterion is meaningful.
     """

@@ -7,15 +7,17 @@ exact predicate) with the exact predicate being strict-interior ray casting
 prepared-geometry reuse pattern of ogrgeometry.cpp:7530-7665 (build the
 polygon-side index ONCE, probe many points).
 
-Spark-first execution, two physical strategies:
+Spark-first execution, three physical strategies:
 
 1. ``pip_join`` (broadcast) — the polygon side is a small dimension
    (thousands of polygons): pack rings into numpy ONCE on the driver,
-   broadcast, and stream the point side through ``mapInPandas``. ZERO
-   shuffle: the plan is scan → mapInPandas → (anything downstream). At
-   100 TB of points this is a map-only stage that scales linearly with
-   executors — the polygon index plays the role of GDAL's prepared
-   geometries, the per-polygon bbox array plays the quadtree.
+   broadcast, and compute each point's matching poly_ids as one Arrow
+   column UDF over ``(lon, lat)`` only, exploded in the JVM. ZERO shuffle:
+   the plan is scan → ArrowEvalPython → Generate → (anything downstream),
+   and pass-through columns never leave the JVM. At 100 TB of points this
+   is a map-only stage that scales linearly with executors — the polygon
+   index plays the role of GDAL's prepared geometries, the per-polygon
+   bbox array plays the quadtree.
 
 2. ``pip_join_cells`` (shuffle) — for polygon sides too big to broadcast:
    cover every polygon with WebMercator tiles at a chosen zoom (the
@@ -25,8 +27,12 @@ Spark-first execution, two physical strategies:
    salt — a standard two-sided skew fix the reference never needed
    single-node (SURVEY.md §4 "salting: absent").
 
-Both paths end in the same exact kernel, so results are identical; only the
-physical plan differs.
+3. ``pip_join_cells_compact`` (broadcast cover) — quadtree-compacted cell
+   covers, built on the driver and broadcast; each point explodes to its
+   ancestor cell at every level.
+
+All three end in the same exact ray-cast kernel, so results are identical;
+only the physical plan differs.
 """
 
 from __future__ import annotations
@@ -35,6 +41,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,15 +79,6 @@ class PolygonIndex:
         self.poly_ids = np.asarray(poly_ids, dtype=np.int64)
         self.rings_list = rings_list  # list[list[np.ndarray(n,2)]] (one part each)
         self.boxes = np.asarray(boxes, dtype=np.float64)  # (P, 4) xmin ymin xmax ymax
-        self._by_id = None
-
-    def rings_by_id(self) -> dict:
-        """Lazy poly_id → list-of-parts lookup (built once per executor)."""
-        if self._by_id is None:
-            self._by_id = {}
-            for pid, rings in zip(self.poly_ids, self.rings_list):
-                self._by_id.setdefault(int(pid), []).append(rings)
-        return self._by_id
 
     @classmethod
     def from_rows(cls, rows):
@@ -129,13 +127,15 @@ class PolygonIndex:
         self._str_blocks = blocks
 
     def probe(self, px: np.ndarray, py: np.ndarray, first_match: bool):
-        """Return (point_idx, poly_id) match pairs for a batch of points.
+        """Return (point_idx, poly_id) match pairs for a batch of points,
+        sorted by point_idx then poly_id, one pair per (point, feature).
 
         Candidate generation walks the STR blocks: one vectorized bbox mask
         per block prunes whole groups of NODE_SIZE parts at once; per-entry
         bbox + exact ray-cast tests run only on the block's surviving point
-        subset. first_match (min poly_id per point) is reduced at the end —
-        tree order is spatial, not id order."""
+        subset. Pairs are reduced at the end — tree order is spatial, not id
+        order: first_match keeps the min poly_id per point, otherwise a
+        feature whose parts overlap under the point still matches once."""
         if getattr(self, "_str_blocks", None) is None:
             self._build_str_blocks()
         out_pt: list[np.ndarray] = []
@@ -166,17 +166,38 @@ class PolygonIndex:
             return empty, empty
         pt = np.concatenate(out_pt)
         poly = np.concatenate(out_poly)
-        if first_match:
-            order = np.lexsort((poly, pt))
-            pt, poly = pt[order], poly[order]
-            _, first = np.unique(pt, return_index=True)
-            pt, poly = pt[first], poly[first]
-        return pt, poly
+        order = np.lexsort((poly, pt))
+        pt, poly = pt[order], poly[order]
+        new = pt[1:] != pt[:-1]
+        if not first_match:
+            new |= poly[1:] != poly[:-1]
+        keep = np.concatenate(([True], new))
+        return pt[keep], poly[keep]
+
+    def contains(self, px: np.ndarray, py: np.ndarray, poly_id: np.ndarray) -> np.ndarray:
+        """Row-wise exact test: is point ``i`` inside feature ``poly_id[i]``
+        (any of its parts)? A feature's parts are one run of the sorted
+        ``poly_ids``, found by binary search."""
+        out = np.zeros(px.shape[0], dtype=bool)
+        order = np.argsort(poly_id, kind="stable")
+        ids, starts = np.unique(poly_id[order], return_index=True)
+        lo = np.searchsorted(self.poly_ids, ids, side="left")
+        hi = np.searchsorted(self.poly_ids, ids, side="right")
+        for rows, a, b in zip(np.split(order, starts[1:]), lo, hi):
+            for k in range(a, b):
+                out[rows] |= G.points_in_polygon(px[rows], py[rows], self.rings_list[k])
+        return out
 
 
 def build_polygon_index(polygons: DataFrame) -> PolygonIndex:
     rows = polygons.select("poly_id", "rings").collect()
     return PolygonIndex.from_rows(rows)
+
+
+def _numpy(a: pa.Array) -> np.ndarray:
+    """Arrow column → numpy. NULL doubles become NaN, which fail every
+    envelope and ray-cast test, so they never match."""
+    return a.to_numpy(zero_copy_only=False)
 
 
 # ---------------------------------------------------------------------------
@@ -197,50 +218,77 @@ def pip_join(
     ``first_match=True`` keeps only the lowest poly_id per point (GDAL's
     first-match 1-row join semantics, ogr_gensql.cpp:1516-1546 — FID order).
     """
-    spark = points.sparkSession
-    index = build_polygon_index(polygons)
-    bc = spark.sparkContext.broadcast(index)
+    bc = points.sparkSession.sparkContext.broadcast(build_polygon_index(polygons))
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    @F.arrow_udf("array<long>")
+    def pip_poly_ids(px: pa.Array, py: pa.Array) -> pa.Array:
+        pt, poly = bc.value.probe(_numpy(px), _numpy(py), first_match)
+        offsets = np.searchsorted(pt, np.arange(len(px) + 1))  # pt is sorted
+        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(poly))
 
-    out_schema = StructType(
-        list(points.schema.fields) + [StructField("poly_id", LongType(), True)]
+    # Only the two coordinates cross into Python; explode in the JVM turns
+    # each point's match list into rows (explode_outer keeps empty lists as
+    # one NULL-poly_id row).
+    explode = F.explode_outer if how == "left" else F.explode
+    ids = pip_poly_ids(F.col(lon).cast("double"), F.col(lat).cast("double"))
+    return points.withColumn("poly_id", explode(ids))
+
+
+# ---------------------------------------------------------------------------
+# Strategies 2 and 3: cell-key equi-joins + exact filter
+# ---------------------------------------------------------------------------
+
+def _envelope_cells(box, zoom: int) -> list:
+    """XYZ tiles at ``zoom`` intersecting an envelope (xmin, ymin, xmax,
+    ymax), latitudes clamped to the Mercator limit. Uses the same lon/lat →
+    tile math as the point side, so edges agree."""
+    xmin, ymin, xmax, ymax = box
+    (tx0, ty0), (tx1, ty1) = (
+        TM.py_lonlat_to_tile(x, y, zoom)
+        for x, y in ((xmin, min(ymax, TM.MAX_LAT)), (xmax, max(ymin, -TM.MAX_LAT)))
     )
-    left = how == "left"
-    lon_i = points.columns.index(lon)
-    lat_i = points.columns.index(lat)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = bc.value
-        for pdf in batches:
-            if pdf.shape[0] == 0:
-                continue
-            px = pdf.iloc[:, lon_i].to_numpy(dtype=np.float64)
-            py = pdf.iloc[:, lat_i].to_numpy(dtype=np.float64)
-            pt_idx, poly_id = idx.probe(px, py, first_match)
-            out = pdf.iloc[pt_idx].copy()
-            out["poly_id"] = poly_id
-            if left:
-                unmatched = np.ones(pdf.shape[0], dtype=bool)
-                unmatched[pt_idx] = False
-                miss = pdf.iloc[np.nonzero(unmatched)[0]].copy()
-                miss["poly_id"] = pd.array([None] * miss.shape[0], dtype="Int64")
-                out = pd.concat([out, miss], ignore_index=True)
-            yield out
-
-    return points.mapInPandas(run, schema=out_schema)
+    return [(tx, ty) for ty in range(ty0, ty1 + 1) for tx in range(tx0, tx1 + 1)]
 
 
-# ---------------------------------------------------------------------------
-# Strategy 2: cell-key equi-join with salting
-# ---------------------------------------------------------------------------
+def _exact_matches(
+    candidates: DataFrame,
+    index: PolygonIndex,
+    point_cols: list,
+    lon: str,
+    lat: str,
+    first_match: bool,
+) -> DataFrame:
+    """Keep the candidate (point, poly_id) pairs whose point is inside the
+    feature, then reduce to min(poly_id) per point if ``first_match``.
+
+    Rings come from a broadcast index (the prepared-geometry reuse pattern,
+    ogrgeometry.cpp:7530-7665), NOT through the shuffle — the join only ever
+    moves (point cols, poly_id, cell key). The first-match reduction keys on
+    the compact surrogate id (``_pip_rid``) rather than the full point row:
+    the aggregate shuffle moves an 8-byte key; wide payload columns travel
+    as values only and collapse map-side (partial aggregation) before the
+    exchange."""
+    bc = candidates.sparkSession.sparkContext.broadcast(index)
+
+    @F.arrow_udf("boolean")
+    def contains(px: pa.Array, py: pa.Array, poly_id: pa.Array) -> pa.Array:
+        return pa.array(bc.value.contains(_numpy(px), _numpy(py), _numpy(poly_id)))
+
+    out = candidates.filter(
+        contains(F.col(lon).cast("double"), F.col(lat).cast("double"), F.col("poly_id"))
+    )
+    if first_match:
+        aggs = [F.first(c).alias(c) for c in point_cols]
+        aggs.append(F.min("poly_id").alias("poly_id"))
+        out = out.groupBy("_pip_rid").agg(*aggs)
+    return out.select(*point_cols, "poly_id")
+
 
 def polygon_cell_cover(polygons: DataFrame, zoom: int) -> DataFrame:
     """Explode polygons to their covering XYZ tiles at ``zoom``.
 
     Cover = all tiles intersecting the polygon ENVELOPE (the prefilter
-    contract; exact test happens after the join). Envelope→tile-range uses
-    the same lon/lat→tile math as the point side so edges agree.
+    contract; exact test happens after the join).
     """
     covered_schema = "poly_id long, cell_tx int, cell_ty int"
 
@@ -249,26 +297,13 @@ def polygon_cell_cover(polygons: DataFrame, zoom: int) -> DataFrame:
             rows = set()  # set: multipolygon parts can share cells
             for pid, rings in zip(pdf["poly_id"], pdf["rings"]):
                 for part in _feature_parts(rings):
-                    xmin, ymin, xmax, ymax = G.rings_envelope(part)
-                    ymin = max(ymin, -TM.MAX_LAT)
-                    ymax = min(ymax, TM.MAX_LAT)
-                    tx0, ty_top = TM.py_lonlat_to_tile(xmin, ymax, zoom)
-                    tx1, ty_bot = TM.py_lonlat_to_tile(xmax, ymin, zoom)
-                    for ty in range(ty_top, ty_bot + 1):
-                        for tx in range(tx0, tx1 + 1):
-                            rows.add((pid, tx, ty))
-            rows = sorted(rows)
-            yield pd.DataFrame(
-                {
-                    "poly_id": [r[0] for r in rows],
-                    "cell_tx": [r[1] for r in rows],
-                    "cell_ty": [r[2] for r in rows],
-                }
-            )
+                    for tx, ty in _envelope_cells(G.rings_envelope(part), zoom):
+                        rows.add((pid, tx, ty))
+            yield pd.DataFrame(sorted(rows), columns=["poly_id", "cell_tx", "cell_ty"])
 
     # cover rows carry ONLY (poly_id, cell) — at scale the shuffle never
     # moves ring geometry; the exact test resolves rings from a broadcast
-    # index (the prepared-geometry pattern, ogrgeometry.cpp:7530-7665)
+    # index (see _exact_matches)
     return polygons.select("poly_id", "rings").mapInPandas(cover, covered_schema)
 
 
@@ -280,19 +315,16 @@ def pip_join_cells(
     zoom: int = 7,
     salt: int = 0,
     first_match: bool = False,
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """Cell-cover equi-join PIP + exact kernel.
 
-    ``broadcast_cover=True`` (default): the (poly_id, cell) cover is built
-    driver-side and broadcast — a map-only candidate join, right whenever
-    the polygon side fits on the driver. ``broadcast_cover=False`` keeps the
-    cover distributed and shuffles both sides on the cell key — the path for
-    polygon sides too large to broadcast; there ``salt`` > 1 replicates each
-    cover row ``salt`` times and spreads points deterministically across
-    replicas, shrinking a hot cell's shuffle partition by the salt factor.
+    The (poly_id, cell) cover stays distributed and both sides shuffle on
+    the cell key — the path for polygon sides too large to broadcast a
+    cover for (``pip_join_cells_compact`` broadcasts one). ``salt`` > 1
+    replicates each cover row ``salt`` times and spreads points
+    deterministically across replicas, shrinking a hot cell's shuffle
+    partition by the salt factor.
     """
-    spark = points.sparkSession
     pts = points
     if first_match:
         # Compact surrogate key for the first-match reduction: grouping on
@@ -303,33 +335,10 @@ def pip_join_cells(
         pts = pts.withColumn("_pip_rid", F.monotonically_increasing_id())
     tx, ty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
     pts = pts.withColumn("cell_tx", tx).withColumn("cell_ty", ty)
-
-    # Polygons are collected ONCE: the same rows feed the broadcast ring
-    # index (below) and the driver-computed cell cover — a dimension-table
-    # build, no extra Spark stages re-evaluated per action. (For a polygon
-    # side too big to collect, use polygon_cell_cover() + a repartitioned
-    # join instead.)
-    poly_rows = polygons.select("poly_id", "rings").collect()
-    index = PolygonIndex.from_rows(poly_rows)
-    if broadcast_cover:
-        cover_rows = set()  # set: multipolygon parts can share cells
-        for pid, box in zip(index.poly_ids, index.boxes):
-            xmin, ymin, xmax, ymax = box
-            ymin = max(ymin, -TM.MAX_LAT)
-            ymax = min(ymax, TM.MAX_LAT)
-            tx0, ty_top = TM.py_lonlat_to_tile(xmin, ymax, zoom)
-            tx1, ty_bot = TM.py_lonlat_to_tile(xmax, ymin, zoom)
-            for ty_ in range(ty_top, ty_bot + 1):
-                for tx_ in range(tx0, tx1 + 1):
-                    cover_rows.add((int(pid), tx_, ty_))
-        cover = spark.createDataFrame(
-            sorted(cover_rows), "poly_id long, cell_tx int, cell_ty int"
-        )
-    else:
-        cover = polygon_cell_cover(polygons, zoom)
+    cover = polygon_cell_cover(polygons, zoom)
 
     join_keys = ["cell_tx", "cell_ty"]
-    if not broadcast_cover and salt and salt > 1:
+    if salt > 1:
         pts = pts.withColumn(
             "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in points.columns]), F.lit(salt)).cast("int")
         )
@@ -338,53 +347,14 @@ def pip_join_cells(
         )
         join_keys = join_keys + ["_salt"]
 
-    if broadcast_cover:
-        joined = pts.join(F.broadcast(cover), on=join_keys, how="inner")
-    else:
-        # Force the at-scale plan: shuffle both sides on the cell key and
-        # hash-build the cover. Without the hint, Catalyst broadcasts
-        # whichever side is under the broadcast threshold — at test scale
-        # that is the POINTS side, which turns the stream side into the
-        # 1-partition cover and serializes the whole stage.
-        joined = pts.join(cover.hint("shuffle_hash"), on=join_keys, how="inner")
-
-    # Exact predicate: rings come from a broadcast poly_id→rings index (the
-    # prepared-geometry reuse pattern), NOT through the shuffle — the join
-    # only ever moves (point cols, poly_id, cell key).
-    bc = spark.sparkContext.broadcast(index)
-
-    @F.pandas_udf("boolean")
-    def contains(lon_s: pd.Series, lat_s: pd.Series, poly_id: pd.Series) -> pd.Series:
-        rings_by_id = bc.value.rings_by_id()
-        out = np.zeros(len(lon_s), dtype=bool)
-        px = lon_s.to_numpy(dtype=np.float64)
-        py = lat_s.to_numpy(dtype=np.float64)
-        for pid, grp in pd.RangeIndex(len(lon_s)).to_series().groupby(poly_id.values):
-            pos = grp.to_numpy()
-            hit = np.zeros(pos.shape[0], dtype=bool)
-            for part in rings_by_id[int(pid)]:  # OR over multipolygon parts
-                hit |= G.points_in_polygon(px[pos], py[pos], part)
-            out[pos] = hit
-        return pd.Series(out)
-
-    result = (
-        joined.filter(contains(F.col(lon), F.col(lat), F.col("poly_id")))
-        .drop("cell_tx", "cell_ty", "_salt")
-    )
-    if first_match:
-        result = _first_match_reduce(result, points.columns)
-    return result
-
-
-def _first_match_reduce(matched: DataFrame, point_cols: list) -> DataFrame:
-    """min(poly_id) per input point, keyed on the compact surrogate id
-    (``_pip_rid``) rather than the full point row — the aggregate shuffle
-    moves an 8-byte key; wide payload columns travel as values only and
-    collapse map-side (partial aggregation) before the exchange."""
-    aggs = [F.first(c).alias(c) for c in point_cols]
-    aggs.append(F.min("poly_id").alias("poly_id"))
-    return (
-        matched.groupBy("_pip_rid").agg(*aggs).select(*point_cols, "poly_id")
+    # Force the at-scale plan: shuffle both sides on the cell key and
+    # hash-build the cover. Without the hint, Catalyst broadcasts whichever
+    # side is under the broadcast threshold — at test scale that is the
+    # POINTS side, which turns the stream side into the 1-partition cover
+    # and serializes the whole stage.
+    joined = pts.join(cover.hint("shuffle_hash"), on=join_keys, how="inner")
+    return _exact_matches(
+        joined, build_polygon_index(polygons), points.columns, lon, lat, first_match
     )
 
 
@@ -404,33 +374,22 @@ def pip_join_cells_compact(
     a fixed ×(zoom+1) flatMap). The equi-join key is (z, tx, ty); the exact
     ray-cast kernel then filters candidates exactly as pip_join_cells.
     """
-    spark = points.sparkSession
-    poly_rows = polygons.select("poly_id", "rings").collect()
-    index = PolygonIndex.from_rows(poly_rows)
-
+    index = build_polygon_index(polygons)
     cover_cells: dict[int, set] = {}
     for pid, box in zip(index.poly_ids, index.boxes):
-        xmin, ymin, xmax, ymax = box
-        ymin = max(ymin, -TM.MAX_LAT)
-        ymax = min(ymax, TM.MAX_LAT)
-        tx0, ty_top = TM.py_lonlat_to_tile(xmin, ymax, zoom)
-        tx1, ty_bot = TM.py_lonlat_to_tile(xmax, ymin, zoom)
-        s = cover_cells.setdefault(int(pid), set())
-        for ty_ in range(ty_top, ty_bot + 1):
-            for tx_ in range(tx0, tx1 + 1):
-                s.add((tx_, ty_))
+        cover_cells.setdefault(int(pid), set()).update(_envelope_cells(box, zoom))
     cover_rows = []
     for pid, cells in cover_cells.items():
         for z, tx_, ty_ in TM.py_compact_cells(cells, zoom):
             cover_rows.append((pid, z, tx_, ty_))
-    cover = spark.createDataFrame(
+    cover = points.sparkSession.createDataFrame(
         cover_rows, "poly_id long, cell_z int, cell_tx int, cell_ty int"
     )
 
     pts_in = points
     if first_match:
         # Compact key BEFORE the per-level explode so all of a row's
-        # candidate matches share one 8-byte id (see _first_match_reduce).
+        # candidate matches share one 8-byte id (see _exact_matches).
         pts_in = pts_in.withColumn("_pip_rid", F.monotonically_increasing_id())
     tx, ty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
     pts = (
@@ -448,27 +407,4 @@ def pip_join_cells_compact(
     joined = pts.join(
         F.broadcast(cover), on=["cell_z", "cell_tx", "cell_ty"], how="inner"
     )
-
-    bc = spark.sparkContext.broadcast(index)
-
-    @F.pandas_udf("boolean")
-    def contains(lon_s: pd.Series, lat_s: pd.Series, poly_id: pd.Series) -> pd.Series:
-        rings_by_id = bc.value.rings_by_id()
-        out = np.zeros(len(lon_s), dtype=bool)
-        px = lon_s.to_numpy(dtype=np.float64)
-        py = lat_s.to_numpy(dtype=np.float64)
-        for pid, grp in pd.RangeIndex(len(lon_s)).to_series().groupby(poly_id.values):
-            pos = grp.to_numpy()
-            hit = np.zeros(pos.shape[0], dtype=bool)
-            for part in rings_by_id[int(pid)]:
-                hit |= G.points_in_polygon(px[pos], py[pos], part)
-            out[pos] = hit
-        return pd.Series(out)
-
-    result = (
-        joined.filter(contains(F.col(lon), F.col(lat), F.col("poly_id")))
-        .drop("cell_z", "cell_tx", "cell_ty")
-    )
-    if first_match:
-        result = _first_match_reduce(result, points.columns)
-    return result
+    return _exact_matches(joined, index, points.columns, lon, lat, first_match)

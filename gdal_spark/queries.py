@@ -206,7 +206,6 @@ def q_pip_cells_salted(spark, sf_dir):
     path — identical output to pip_broadcast, different physical plan."""
     out = PIP.pip_join_cells(
         order_points(spark, sf_dir), polygons_df(spark), zoom=7, salt=4,
-        broadcast_cover=False,
     )
     return out.groupBy("o_orderkey").agg(F.min("poly_id").alias("poly_id"))
 

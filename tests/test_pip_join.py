@@ -1,5 +1,10 @@
-"""End-to-end spatial join tests: broadcast path vs cell-join path vs a
+"""End-to-end spatial join tests: every PIP strategy and join mode vs a
 pure-Python oracle over the deterministic pages + polygons fixtures."""
+
+import io
+import struct
+from collections import Counter
+from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
@@ -41,54 +46,103 @@ def expected():
     return oracle_pairs(N_PAGES)
 
 
-def test_broadcast_pip_join_matches_oracle(fixtures, expected):
-    pts, polys = fixtures
-    got = {
-        (r["i"], r["poly_id"])
-        for r in PJ.pip_join(pts, polys).select("i", "poly_id").collect()
-    }
-    assert got == expected
-    assert len(got) > 0  # hot-cell rows guarantee matches
+JOINS = {
+    "pip_join": lambda pts, polys, how, fm: PJ.pip_join(
+        pts, polys, how=how, first_match=fm
+    ),
+    "pip_join_cells": lambda pts, polys, how, fm: PJ.pip_join_cells(
+        pts, polys, zoom=6, first_match=fm
+    ),
+    "pip_join_cells_compact": lambda pts, polys, how, fm: PJ.pip_join_cells_compact(
+        pts, polys, zoom=6, first_match=fm
+    ),
+}
+# every (strategy, how, first_match) the strategy supports; only the
+# broadcast join has a left mode
+MODES = [
+    (name, how, fm)
+    for name in JOINS
+    for how in (("inner", "left") if name == "pip_join" else ("inner",))
+    for fm in (False, True)
+]
 
 
-def test_cell_pip_join_matches_oracle(fixtures, expected):
+def want_rows(pairs, ids, how, first_match):
+    """Oracle output rows (point id, poly_id) for a join mode: min poly_id
+    per point under first_match, a NULL row per unmatched point under left."""
+    if first_match:
+        best = {}
+        for i, pid in pairs:
+            best[i] = min(best.get(i, pid), pid)
+        pairs = best.items()
+    rows = Counter(pairs)
+    if how == "left":
+        matched = {i for i, _ in rows}
+        rows.update((i, None) for i in ids if i not in matched)
+    return rows
+
+
+@pytest.mark.parametrize("strategy,how,first_match", MODES)
+def test_pip_join_matches_oracle(fixtures, expected, strategy, how, first_match):
     pts, polys = fixtures
-    got = {
-        (r["i"], r["poly_id"])
-        for r in PJ.pip_join_cells(pts, polys, zoom=6).select("i", "poly_id").collect()
-    }
-    assert got == expected
+    out = JOINS[strategy](pts, polys, how, first_match)
+    got = Counter((r["i"], r["poly_id"]) for r in out.select("i", "poly_id").collect())
+    assert got == want_rows(expected, range(N_PAGES), how, first_match)
+    assert len(expected) > 0  # hot-cell rows guarantee matches
 
 
 def test_cell_pip_join_salted_matches_oracle(fixtures, expected):
     pts, polys = fixtures
-    got = {
-        (r["i"], r["poly_id"])
-        for r in PJ.pip_join_cells(pts, polys, zoom=6, salt=4)
-        .select("i", "poly_id")
-        .collect()
-    }
-    assert got == expected
+    out = PJ.pip_join_cells(pts, polys, zoom=6, salt=4)
+    got = Counter((r["i"], r["poly_id"]) for r in out.select("i", "poly_id").collect())
+    assert got == Counter(expected)
+    # the salt really splits the join: _salt is a key on both sides
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        out.explain("formatted")
+    keys = [ln for ln in buf.getvalue().splitlines() if ln.startswith(("Left keys", "Right keys"))]
+    assert len(keys) == 2 and all("_salt" in ln for ln in keys)
 
 
-def test_left_join_keeps_unmatched(fixtures, expected):
-    pts, polys = fixtures
-    rows = PJ.pip_join(pts, polys, how="left").select("i", "poly_id").collect()
-    matched_i = {i for (i, _) in expected}
-    got_pairs = {(r["i"], r["poly_id"]) for r in rows if r["poly_id"] is not None}
-    got_nulls = {r["i"] for r in rows if r["poly_id"] is None}
-    assert got_pairs == expected
-    assert got_nulls == set(range(N_PAGES)) - matched_i
-    assert len(rows) == len(expected) + len(got_nulls)
+def _bits(v):
+    return None if v is None else struct.pack("<d", v)
 
 
-def test_first_match_semantics(fixtures, expected):
-    pts, polys = fixtures
-    rows = PJ.pip_join(pts, polys, first_match=True).select("i", "poly_id").collect()
-    best = {}
-    for i, pid in expected:
-        best[i] = min(best.get(i, pid), pid)
-    assert {(r["i"], r["poly_id"]) for r in rows} == set(best.items())
+def test_pip_join_passes_nan_and_inf_through(spark, expected):
+    """Pass-through doubles (NaN, ±inf, -0.0) come back bit-identical in all
+    four modes; NULL / NaN / ±inf coordinates never match, so they yield a
+    NULL poly_id under left and no row under inner."""
+    nan, inf = float("nan"), float("inf")
+    lon0, lat0 = py_lonlat(0)  # hot cell: inside the fixture polygons
+    rows = [
+        (0, lon0, lat0, nan),
+        (1, lon0, lat0, inf),
+        (2, lon0, lat0, -inf),
+        (3, lon0, lat0, -0.0),
+        (4, None, lat0, nan),
+        (5, lon0, None, 1.0),
+        (6, nan, lat0, 2.0),
+        (7, lon0, nan, inf),
+        (8, inf, lat0, 3.0),
+        (9, -inf, -inf, nan),
+        (10, lon0, inf, -inf),
+    ]
+    pts = spark.createDataFrame(rows, "i long, lon double, lat double, v double")
+    hits = [(i, pid) for i in range(4) for (j, pid) in expected if j == 0]
+    assert hits
+    by_i = {r[0]: r for r in rows}
+    for how in ("inner", "left"):
+        for first_match in (False, True):
+            out = PJ.pip_join(pts, P.polygons_df(spark), how=how, first_match=first_match)
+            got = Counter(
+                (r["i"], r["poly_id"], _bits(r["lon"]), _bits(r["lat"]), _bits(r["v"]))
+                for r in out.collect()
+            )
+            want = Counter(
+                (i, pid, *map(_bits, by_i[i][1:]))
+                for i, pid in want_rows(hits, by_i, how, first_match).elements()
+            )
+            assert got == want, (how, first_match)
 
 
 def test_hot_cell_is_actually_hot(fixtures):
@@ -106,11 +160,11 @@ def test_pages_text_invariant_vs_generator(spark):
 
 
 def test_multipolygon_pip_both_strategies(spark):
-    """MultiPolygon features flow through BOTH PIP strategies (broadcast
-    map-only and cell-cover equi-join) with identical results: a point in
-    either part matches the feature; points in the hole do not match."""
-    from gdal_spark.data.pages import multipolygons_df
-    from gdal_spark.operators.pip_join import pip_join, pip_join_cells
+    """MultiPolygon features flow through every PIP strategy and mode with
+    identical results: a point in either part matches the feature once
+    (also where two parts of one feature overlap); points in the hole do
+    not match."""
+    from gdal_spark.data.pages import MULTIPOLYGON_SCHEMA, multipolygons_df
 
     pts = spark.createDataFrame(
         [
@@ -120,22 +174,26 @@ def test_multipolygon_pip_both_strategies(spark):
             (4, -19.0, 11.0),   # inside mp1 holey part (not in hole)
             (5, -17.0, 13.0),   # inside mp1's hole -> no match
             (6, -28.0, 12.0),   # inside mp1 plain part
-            (7, 0.0, 0.0),      # nowhere
+            (7, 0.0, 0.0),      # on a corner of feature 7 only -> no match
+            (8, 1.5, 1.5),      # inside BOTH overlapping parts of feature 7
         ],
         "i long, lon double, lat double",
     )
-    mp = multipolygons_df(spark)
-    want = {1: 2000, 2: 2000, 4: 2001, 6: 2001}
-    got_b = {
-        r["i"]: r["poly_id"]
-        for r in pip_join(pts, mp, first_match=True).collect()
-    }
-    assert got_b == want
-    got_c = {
-        r["i"]: r["poly_id"]
-        for r in pip_join_cells(pts, mp, zoom=6, first_match=True).collect()
-    }
-    assert got_c == want
+
+    def square(x0, x1):
+        return [[[x0, x0], [x1, x0], [x1, x1], [x0, x1], [x0, x0]]]
+
+    overlapping = spark.createDataFrame(
+        [(7, [square(0.0, 2.0), square(1.0, 3.0)], 0.0, 0.0, 3.0, 3.0)],
+        MULTIPOLYGON_SCHEMA,
+    )
+    mp = multipolygons_df(spark).unionByName(overlapping)
+    want = {1: 2000, 2: 2000, 4: 2001, 6: 2001, 8: 7}
+    for strategy, how, first_match in MODES:
+        out = JOINS[strategy](pts, mp, how, first_match)
+        got = Counter((r["i"], r["poly_id"]) for r in out.collect())
+        assert got == want_rows(want.items(), range(1, 9), how, first_match), (
+            strategy, how, first_match)
 
 
 def test_strtree_blocks_cover_all_entries(spark):

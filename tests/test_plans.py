@@ -33,7 +33,45 @@ def test_tile_assign_pruned_scan_no_shuffle(spark):
 def test_pip_broadcast_map_only(spark):
     p = _plan(spark, "pip_broadcast")
     first_exchange = p.index("Exchange") if "Exchange" in p else 10 ** 9
-    assert p.index("MapInPandas") < first_exchange
+    assert p.index("ArrowEvalPython") < first_exchange
+
+
+def _wide_points(spark):
+    """64 points with a 500-byte text payload column."""
+    from pyspark.sql import functions as F
+
+    return spark.range(64).select(
+        F.col("id").alias("i"),
+        (F.pmod(F.col("id") * 37, F.lit(120)) - 60).cast("double").alias("lon"),
+        (F.pmod(F.col("id") * 53, F.lit(160)) / 2 - 40).cast("double").alias("lat"),
+        F.repeat(F.lit("x"), 500).alias("text"),
+    )
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+@pytest.mark.parametrize("first_match", [False, True])
+def test_pip_join_one_python_node_over_coordinates(spark, how, first_match):
+    """Every pip_join mode evaluates Python exactly once, and only the two
+    coordinate columns cross the boundary — payload columns stay in the
+    JVM."""
+    import re
+
+    from gdal_spark.data.pages import polygons_df
+    from gdal_spark.operators.pip_join import pip_join
+
+    out = pip_join(_wide_points(spark), polygons_df(spark), how=how, first_match=first_match)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        out.explain("formatted")
+    lines = buf.getvalue().splitlines()
+    nodes = [
+        (ln.split()[1], lines[k + 2])  # "(n) Name" header, Input, Arguments
+        for k, ln in enumerate(lines)
+        if re.match(r"\(\d+\) \w*(Python|InPandas|InArrow)", ln)
+    ]
+    assert [name for name, _ in nodes] == ["ArrowEvalPython"]
+    udf_args = re.search(r"Arguments: \[\w+\(([^)]*)\)", nodes[0][1]).group(1)
+    assert re.sub(r"#\d+L?", "", udf_args) == "lon, lat"
 
 
 def test_join_agg_broadcasts_dims(spark):
@@ -69,17 +107,10 @@ def test_pip_first_match_aggregates_on_compact_key(spark):
     import io as _io
     from contextlib import redirect_stdout as _ro
 
-    from pyspark.sql import functions as F
-
     from gdal_spark.data.pages import polygons_df
     from gdal_spark.operators import pip_join as PJ
 
-    pts = spark.range(64).select(
-        F.col("id").alias("i"),
-        (F.pmod(F.col("id") * 37, F.lit(120)) - 60).cast("double").alias("lon"),
-        (F.pmod(F.col("id") * 53, F.lit(160)) / 2 - 40).cast("double").alias("lat"),
-        F.repeat(F.lit("x"), 500).alias("text"),
-    )
+    pts = _wide_points(spark)
     for out in (
         PJ.pip_join_cells(pts, polygons_df(spark), zoom=5, first_match=True),
         PJ.pip_join_cells_compact(pts, polygons_df(spark), zoom=5, first_match=True),
