@@ -33,15 +33,33 @@ Spark-first execution, three physical strategies:
 
 All three end in the same exact ray-cast kernel, so results are identical;
 only the physical plan differs.
+
+All three also take their ``PolygonIndex`` from one place: it is built and
+broadcast once per polygon DataFrame OBJECT, at the first PIP call on it,
+and every later call on that object (any strategy, any mode) reuses the
+same broadcast. Python workers that Spark reuses across jobs therefore keep
+the unpickled index and its STR blocks. This only pays when a caller passes
+the same polygons DataFrame object to more than one call; a fresh
+``polygons_df(spark)`` per call builds a fresh index, as before.
+
+The index is a snapshot of the polygons at the first PIP call on that
+object and is never refreshed, even after Spark writes to its source
+(``INSERT INTO`` a table read with ``spark.table``, an overwritten path).
+Read the source again for a new DataFrame object, and so a new index. The
+entry goes away when its DataFrame is garbage-collected; Spark's
+ContextCleaner then removes the broadcast.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,7 +76,10 @@ def _feature_parts(rings_obj) -> list:
     nesting: rings → points → xy) becomes [rings]; a MultiPolygon (depth-4:
     parts → rings → points → xy) explodes to its parts — the internal
     explode of ogrmultipolygon parts with per-part ring tests
-    (ogrcurvepolygon.cpp:810-867 applied per part)."""
+    (ogrcurvepolygon.cpp:810-867 applied per part). A NULL or empty
+    geometry has no parts: it can never contain a point."""
+    if rings_obj is None or len(rings_obj) == 0:
+        return []
     probe = rings_obj[0][0][0]
     if np.isscalar(probe) or isinstance(probe, (int, float, np.floating)):
         return [G.rings_to_numpy(rings_obj)]  # Polygon
@@ -78,7 +99,8 @@ class PolygonIndex:
     def __init__(self, poly_ids, rings_list, boxes):
         self.poly_ids = np.asarray(poly_ids, dtype=np.int64)
         self.rings_list = rings_list  # list[list[np.ndarray(n,2)]] (one part each)
-        self.boxes = np.asarray(boxes, dtype=np.float64)  # (P, 4) xmin ymin xmax ymax
+        # (P, 4) xmin ymin xmax ymax, also for P == 0
+        self.boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
 
     @classmethod
     def from_rows(cls, rows):
@@ -105,6 +127,9 @@ class PolygonIndex:
         Lazily built once per executor."""
         ns = self.NODE_SIZE
         p = self.boxes.shape[0]
+        if p == 0:
+            self._str_blocks = []
+            return
         cx = (self.boxes[:, 0] + self.boxes[:, 2]) / 2.0
         cy = (self.boxes[:, 1] + self.boxes[:, 3]) / 2.0
         n_blocks = max((p + ns - 1) // ns, 1)
@@ -190,8 +215,34 @@ class PolygonIndex:
 
 
 def build_polygon_index(polygons: DataFrame) -> PolygonIndex:
+    """Collect ``polygons`` and build a fresh index (no caching; the PIP
+    joins go through ``_index_broadcast``)."""
     rows = polygons.select("poly_id", "rings").collect()
     return PolygonIndex.from_rows(rows)
+
+
+# polygons DataFrame -> its broadcast index; weak keys, so an entry lives
+# exactly as long as the DataFrame object it was built from
+_INDEXES: "weakref.WeakKeyDictionary[DataFrame, Broadcast]" = weakref.WeakKeyDictionary()
+_INDEXES_LOCK = threading.Lock()
+
+
+def _index_broadcast(polygons: DataFrame) -> Broadcast:
+    """The broadcast ``PolygonIndex`` of ``polygons``: built and broadcast
+    at the first call for this DataFrame object, the same broadcast (same
+    id) on every later call. Keyed on the object, not on its plan: two
+    reads of one path plan alike even after the path is overwritten.
+
+    The lock guards only the dict: builds for different layers run in
+    parallel, and when two threads race on one layer the broadcast that
+    reaches the dict first is kept by both."""
+    with _INDEXES_LOCK:
+        bc = _INDEXES.get(polygons)
+    if bc is None:
+        built = polygons.sparkSession.sparkContext.broadcast(build_polygon_index(polygons))
+        with _INDEXES_LOCK:
+            bc = _INDEXES.setdefault(polygons, built)
+    return bc
 
 
 def _numpy(a: pa.Array) -> np.ndarray:
@@ -217,8 +268,15 @@ def pip_join(
     ``how='left'`` keeps unmatched points with null poly_id (GDAL LEFT JOIN);
     ``first_match=True`` keeps only the lowest poly_id per point (GDAL's
     first-match 1-row join semantics, ogr_gensql.cpp:1516-1546 — FID order).
+    Any other ``how`` raises ``ValueError``.
+
+    The polygon index is a snapshot taken at the first PIP call on this
+    ``polygons`` object and is never refreshed, even after Spark writes to
+    its source; read the source again to see the writes.
     """
-    bc = points.sparkSession.sparkContext.broadcast(build_polygon_index(polygons))
+    if how not in ("inner", "left"):
+        raise ValueError(f"pip_join: how must be 'inner' or 'left', got {how!r}")
+    bc = _index_broadcast(polygons)
 
     @F.arrow_udf("array<long>")
     def pip_poly_ids(px: pa.Array, py: pa.Array) -> pa.Array:
@@ -252,7 +310,7 @@ def _envelope_cells(box, zoom: int) -> list:
 
 def _exact_matches(
     candidates: DataFrame,
-    index: PolygonIndex,
+    bc: Broadcast,
     point_cols: list,
     lon: str,
     lat: str,
@@ -261,14 +319,13 @@ def _exact_matches(
     """Keep the candidate (point, poly_id) pairs whose point is inside the
     feature, then reduce to min(poly_id) per point if ``first_match``.
 
-    Rings come from a broadcast index (the prepared-geometry reuse pattern,
-    ogrgeometry.cpp:7530-7665), NOT through the shuffle — the join only ever
-    moves (point cols, poly_id, cell key). The first-match reduction keys on
-    the compact surrogate id (``_pip_rid``) rather than the full point row:
-    the aggregate shuffle moves an 8-byte key; wide payload columns travel
-    as values only and collapse map-side (partial aggregation) before the
-    exchange."""
-    bc = candidates.sparkSession.sparkContext.broadcast(index)
+    Rings come from the broadcast index ``bc`` (the prepared-geometry reuse
+    pattern, ogrgeometry.cpp:7530-7665), NOT through the shuffle — the join
+    only ever moves (point cols, poly_id, cell key). The first-match
+    reduction keys on the compact surrogate id (``_pip_rid``) rather than
+    the full point row: the aggregate shuffle moves an 8-byte key; wide
+    payload columns travel as values only and collapse map-side (partial
+    aggregation) before the exchange."""
 
     @F.arrow_udf("boolean")
     def contains(px: pa.Array, py: pa.Array, poly_id: pa.Array) -> pa.Array:
@@ -324,6 +381,13 @@ def pip_join_cells(
     replicates each cover row ``salt`` times and spreads points
     deterministically across replicas, shrinking a hot cell's shuffle
     partition by the salt factor.
+
+    The polygon index is a snapshot taken at the first PIP call on this
+    ``polygons`` object and is never refreshed, even after Spark writes to
+    its source; read the source again to see the writes.
+    The cell cover, though, is read from ``polygons`` at each job: after
+    such a write, a feature matches a point only if both its snapshot rings
+    and the cells of its new rings hold the point.
     """
     pts = points
     if first_match:
@@ -354,7 +418,7 @@ def pip_join_cells(
     # and serializes the whole stage.
     joined = pts.join(cover.hint("shuffle_hash"), on=join_keys, how="inner")
     return _exact_matches(
-        joined, build_polygon_index(polygons), points.columns, lon, lat, first_match
+        joined, _index_broadcast(polygons), points.columns, lon, lat, first_match
     )
 
 
@@ -373,8 +437,13 @@ def pip_join_cells_compact(
     explodes to its ancestor cell at every zoom ≤ base (one row per level,
     a fixed ×(zoom+1) flatMap). The equi-join key is (z, tx, ty); the exact
     ray-cast kernel then filters candidates exactly as pip_join_cells.
+
+    The polygon index is a snapshot taken at the first PIP call on this
+    ``polygons`` object and is never refreshed, even after Spark writes to
+    its source; read the source again to see the writes.
     """
-    index = build_polygon_index(polygons)
+    bc = _index_broadcast(polygons)
+    index = bc.value
     cover_cells: dict[int, set] = {}
     for pid, box in zip(index.poly_ids, index.boxes):
         cover_cells.setdefault(int(pid), set()).update(_envelope_cells(box, zoom))
@@ -407,4 +476,4 @@ def pip_join_cells_compact(
     joined = pts.join(
         F.broadcast(cover), on=["cell_z", "cell_tx", "cell_ty"], how="inner"
     )
-    return _exact_matches(joined, index, points.columns, lon, lat, first_match)
+    return _exact_matches(joined, bc, points.columns, lon, lat, first_match)

@@ -1,9 +1,13 @@
 """End-to-end spatial join tests: every PIP strategy and join mode vs a
 pure-Python oracle over the deterministic pages + polygons fixtures."""
 
+import gc
 import io
 import struct
+import threading
+import weakref
 from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import redirect_stdout
 
 import numpy as np
@@ -25,8 +29,8 @@ def fixtures(spark):
     return pts, polys
 
 
-def oracle_pairs(n):
-    recs = P.polygon_records()
+def oracle_pairs(n, recs=None):
+    recs = P.polygon_records() if recs is None else recs
     parsed = [
         (r["poly_id"], [np.asarray(ring) for ring in r["rings"]]) for r in recs
     ]
@@ -67,6 +71,10 @@ MODES = [
 ]
 
 
+def _pairs(out):
+    return Counter((r["i"], r["poly_id"]) for r in out.select("i", "poly_id").collect())
+
+
 def want_rows(pairs, ids, how, first_match):
     """Oracle output rows (point id, poly_id) for a join mode: min poly_id
     per point under first_match, a NULL row per unmatched point under left."""
@@ -82,19 +90,48 @@ def want_rows(pairs, ids, how, first_match):
     return rows
 
 
-@pytest.mark.parametrize("strategy,how,first_match", MODES)
-def test_pip_join_matches_oracle(fixtures, expected, strategy, how, first_match):
-    pts, polys = fixtures
+@pytest.fixture(scope="module")
+def layers(spark, fixtures, expected):
+    """Polygon layers with their oracle pairs: the fixture; no polygons at
+    all; the fixture with a NULL and an empty geometry mixed in, which
+    never match."""
+    _, polys = fixtures
+    recs = P.polygon_records()
+    recs.insert(5, dict(recs[0], poly_id=900, rings=None))
+    recs.append(dict(recs[0], poly_id=901, rings=[]))
+    return {
+        "fixture": (polys, expected),
+        "empty": (spark.createDataFrame([], P.POLYGON_SCHEMA), set()),
+        "null_rings": (spark.createDataFrame(recs, P.POLYGON_SCHEMA), expected),
+    }
+
+
+# every mode on every layer; the fixture layer keeps the bare mode id
+# (e.g. ``pip_join-inner-False``)
+ORACLE_CASES = [
+    pytest.param(
+        *mode, layer,
+        id="-".join(map(str, mode)) + ("" if layer == "fixture" else f"-{layer}"),
+    )
+    for layer in ("fixture", "empty", "null_rings")
+    for mode in MODES
+]
+
+
+@pytest.mark.parametrize("strategy,how,first_match,layer", ORACLE_CASES)
+def test_pip_join_matches_oracle(fixtures, layers, strategy, how, first_match, layer):
+    pts, _ = fixtures
+    polys, pairs = layers[layer]
     out = JOINS[strategy](pts, polys, how, first_match)
-    got = Counter((r["i"], r["poly_id"]) for r in out.select("i", "poly_id").collect())
-    assert got == want_rows(expected, range(N_PAGES), how, first_match)
-    assert len(expected) > 0  # hot-cell rows guarantee matches
+    got = _pairs(out)
+    assert got == want_rows(pairs, range(N_PAGES), how, first_match)
+    assert pairs or layer == "empty"  # hot-cell rows guarantee matches
 
 
 def test_cell_pip_join_salted_matches_oracle(fixtures, expected):
     pts, polys = fixtures
     out = PJ.pip_join_cells(pts, polys, zoom=6, salt=4)
-    got = Counter((r["i"], r["poly_id"]) for r in out.select("i", "poly_id").collect())
+    got = _pairs(out)
     assert got == Counter(expected)
     # the salt really splits the join: _salt is a key on both sides
     buf = io.StringIO()
@@ -143,6 +180,139 @@ def test_pip_join_passes_nan_and_inf_through(spark, expected):
                 for i, pid in want_rows(hits, by_i, how, first_match).elements()
             )
             assert got == want, (how, first_match)
+
+
+def test_pip_join_rejects_unknown_how(fixtures):
+    pts, polys = fixtures
+    for how in ("right", "outer", "LEFT", "full", None):
+        with pytest.raises(ValueError, match="how"):
+            PJ.pip_join(pts, polys, how=how)
+
+
+def test_empty_index_probes_to_no_matches():
+    index = PJ.PolygonIndex.from_rows([])
+    assert index.boxes.shape == (0, 4)
+    pt, poly = index.probe(np.array([0.0, 2.35]), np.array([0.0, 48.85]), first_match=False)
+    assert pt.size == 0 and poly.size == 0
+
+
+def test_index_built_and_broadcast_once_per_polygons_frame(spark, fixtures, expected, monkeypatch):
+    """Every strategy and mode on one polygons DataFrame shares one index
+    build and one broadcast; results stay exact."""
+    builds = []
+    real_build = PJ.build_polygon_index
+
+    def counting_build(polygons):
+        builds.append(1)
+        return real_build(polygons)
+
+    broadcasts = []
+    real_broadcast = PJ._index_broadcast
+
+    def recording_broadcast(polygons):
+        bc = real_broadcast(polygons)
+        broadcasts.append(bc._jbroadcast.id())
+        return bc
+
+    monkeypatch.setattr(PJ, "build_polygon_index", counting_build)
+    monkeypatch.setattr(PJ, "_index_broadcast", recording_broadcast)
+    pts, _ = fixtures
+    polys = P.polygons_df(spark)
+    calls = [("pip_join", "inner", False), ("pip_join", "left", True),
+             ("pip_join_cells", "inner", False), ("pip_join_cells_compact", "inner", True)]
+    for strategy, how, first_match in calls:
+        out = JOINS[strategy](pts, polys, how, first_match)
+        got = _pairs(out)
+        assert got == want_rows(expected, range(N_PAGES), how, first_match), strategy
+    assert len(builds) == 1
+    assert len(broadcasts) == len(calls) and len(set(broadcasts)) == 1
+
+
+def test_reread_of_overwritten_layer_gets_a_new_index(spark, fixtures, tmp_path):
+    """The index is a snapshot per DataFrame object: re-reading a parquet
+    path after it was overwritten with other polygons (which plans the
+    same) follows the new polygons."""
+    pts, _ = fixtures
+    path = str(tmp_path / "layer.parquet")
+    recs = P.polygon_records()
+    # the second layer: every other polygon, under new ids
+    recs_b = [dict(r, poly_id=r["poly_id"] + 1000) for r in recs[::2]]
+    for layer in (recs, recs_b):
+        spark.createDataFrame(layer, P.POLYGON_SCHEMA).write.mode("overwrite").parquet(path)
+        polys = spark.read.parquet(path)
+        for how in ("inner", "left"):
+            out = PJ.pip_join(pts, polys, how=how)
+            got = _pairs(out)
+            assert got == want_rows(oracle_pairs(N_PAGES, layer), range(N_PAGES), how, False)
+
+
+def test_index_entry_dropped_with_its_frame(spark, fixtures):
+    pts, _ = fixtures
+    polys = P.polygons_df(spark)
+    assert PJ.pip_join(pts, polys).count() > 0
+    bc = PJ._INDEXES[polys]
+    ref = weakref.ref(polys)
+    del polys
+    gc.collect()
+    assert ref() is None
+    assert all(v is not bc for v in PJ._INDEXES.values())
+
+
+def test_index_is_a_snapshot_never_refreshed_after_a_write(spark, fixtures, expected, tmp_path):
+    """One ``spark.table`` object reused across an INSERT keeps serving the
+    polygons it held at its first PIP call, in every strategy, although
+    Spark itself shows the object the new rows; a new read of the table
+    gets a new index that holds them."""
+    pts, _ = fixtures
+    first = [{"poly_id": r["poly_id"], "rings": r["rings"]} for r in P.polygon_records()]
+    # the insert: a copy, under a new id, of every feature that matches
+    hit_ids = {pid for _, pid in expected}
+    added = [dict(r, poly_id=r["poly_id"] + 1000) for r in first if r["poly_id"] in hit_ids]
+    schema = "poly_id long, rings array<array<array<double>>>"
+    spark.sql("DROP TABLE IF EXISTS pip_snapshot")
+    spark.sql(f"CREATE TABLE pip_snapshot ({schema}) USING parquet LOCATION '{tmp_path}'")
+    try:
+        spark.createDataFrame(first, schema).write.insertInto("pip_snapshot")
+        polys = spark.table("pip_snapshot")
+        want_first = want_rows(expected, range(N_PAGES), "inner", False)
+        for strategy in JOINS:
+            assert _pairs(JOINS[strategy](pts, polys, "inner", False)) == want_first, strategy
+
+        spark.createDataFrame(added, schema).write.insertInto("pip_snapshot")
+        assert polys.count() == len(first) + len(added)
+        for strategy in JOINS:
+            assert _pairs(JOINS[strategy](pts, polys, "inner", False)) == want_first, strategy
+
+        reread = spark.table("pip_snapshot")
+        want_all = want_rows(oracle_pairs(N_PAGES, first + added), range(N_PAGES), "inner", False)
+        assert sum(want_all.values()) == 2 * sum(want_first.values())
+        assert _pairs(PJ.pip_join(pts, reread)) == want_all
+    finally:
+        spark.sql("DROP TABLE IF EXISTS pip_snapshot")
+
+
+def test_index_builds_run_outside_the_cache_lock(spark, monkeypatch):
+    """Two threads build the indexes of two layers at the same time (each
+    build waits for the other), and two threads racing on one layer end up
+    with one broadcast."""
+    barrier = threading.Barrier(2, timeout=10)
+
+    def blocking_build(polygons):
+        barrier.wait()
+        return PJ.PolygonIndex.from_rows([])
+
+    monkeypatch.setattr(PJ, "build_polygon_index", blocking_build)
+
+    def in_two_threads(frames):
+        with ThreadPoolExecutor(2) as pool:
+            return list(pool.map(PJ._index_broadcast, frames))
+
+    a, b, c = (spark.createDataFrame([], P.POLYGON_SCHEMA) for _ in range(3))
+    bc_a, bc_b = in_two_threads([a, b])
+    assert bc_a is not bc_b
+    assert PJ._INDEXES[a] is bc_a and PJ._INDEXES[b] is bc_b
+    bc_1, bc_2 = in_two_threads([c, c])
+    assert bc_1 is bc_2 is PJ._INDEXES[c]
 
 
 def test_hot_cell_is_actually_hot(fixtures):
