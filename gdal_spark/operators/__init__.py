@@ -1,58 +1,5 @@
 """Operator surface of the engine (SURVEY.md §2 inventory + webtext
-training-data extensions). Import the modules directly for the full APIs;
-the most-used entry points are re-exported here."""
-
-from gdal_spark.operators.dedup import (  # noqa: F401
-    exact_dedup,
-    jaccard_pairs,
-    minhash_dedup_pairs,
-    minhash_signatures,
-    simhash,
-    simhash_pairs,
-)
-from gdal_spark.operators.knn import (  # noqa: F401
-    knn_cell_join,
-    knn_cell_join_adaptive,
-    knn_join,
-)
-# NOTE: pip_join's functions are NOT re-exported here — the function name
-# `pip_join` would shadow the `gdal_spark.operators.pip_join` submodule.
-# Use `from gdal_spark.operators.pip_join import pip_join, pip_join_cells`.
-from gdal_spark.operators.similarity import (  # noqa: F401
-    ann_lsh_topk,
-    cosine_pairs,
-    cosine_topk,
-)
-from gdal_spark.operators.text import extract_text, lang_id, quality_columns  # noqa: F401
-from gdal_spark.operators.tiles import (  # noqa: F401
-    assign_tiles,
-    overview_level,
-    overview_level_nearest,
-    overview_pyramid,
-    sample_bilinear,
-    sample_cubic,
-    sample_nearest,
-    synthetic_raster,
-)
-
-# round-2 operator surface
-from gdal_spark.operators.curve_sort import curve_rank  # noqa: F401
-from gdal_spark.operators.dedup import connected_components  # noqa: F401
-from gdal_spark.operators.dissolve import dissolve_union  # noqa: F401
-from gdal_spark.operators.poly_join import (  # noqa: F401
-    clip_to_rect,
-    layer_erase_area_rect,
-    layer_intersection_rect,
-    poly_relate_join,
-)
-# NOTE: polygonize's function is NOT re-exported — like pip_join, the name
-# would shadow the `gdal_spark.operators.polygonize` submodule.
-# Use `from gdal_spark.operators.polygonize import polygonize`.
-from gdal_spark.operators.similarity import ivf_topk  # noqa: F401
-from gdal_spark.operators.temporal import asof_join, range_join  # noqa: F401
-from gdal_spark.operators.tiles import (  # noqa: F401
-    overview_level_stat,
-    render_base_tiles,
-    sample_bilinear_nodata,
-    sample_lanczos,
-)
+training-data extensions), one module per operator family. Import the
+module you need, e.g. ``from gdal_spark.operators.pip_join import pip_join``:
+this package imports none of them, so a worker that unpickles one operator
+loads only that operator's module."""

@@ -19,11 +19,12 @@ Spark-first execution, three physical strategies:
    index plays the role of GDAL's prepared geometries, the per-polygon
    bbox array plays the quadtree.
 
-2. ``pip_join_cells`` (shuffle) — for polygon sides too big to broadcast:
-   cover every polygon with WebMercator tiles at a chosen zoom (the
-   rasterize-lite of llrasterize.cpp:58 semantics), explode, and equi-join
-   on the cell key. Hot cells (dense geotag clusters) are salted: the point
-   side gets a deterministic salt, the polygon-cover side is replicated per
+2. ``pip_join_cells`` (shuffle) — cover every polygon part's envelope
+   with WebMercator tiles at a chosen zoom (the rasterize-lite of
+   llrasterize.cpp:58 semantics) in the calling process, from the same
+   index the exact test uses, and equi-join on the cell key with both sides
+   shuffled. Hot cells (dense geotag clusters) are salted: the point side
+   gets a deterministic salt, the polygon-cover side is replicated per
    salt — a standard two-sided skew fix the reference never needed
    single-node (SURVEY.md §4 "salting: absent").
 
@@ -54,10 +55,8 @@ from __future__ import annotations
 
 import threading
 import weakref
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark import Broadcast
 from pyspark.sql import DataFrame
@@ -341,27 +340,17 @@ def _exact_matches(
     return out.select(*point_cols, "poly_id")
 
 
-def polygon_cell_cover(polygons: DataFrame, zoom: int) -> DataFrame:
-    """Explode polygons to their covering XYZ tiles at ``zoom``.
-
-    Cover = all tiles intersecting the polygon ENVELOPE (the prefilter
-    contract; exact test happens after the join).
-    """
-    covered_schema = "poly_id long, cell_tx int, cell_ty int"
-
-    def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = set()  # set: multipolygon parts can share cells
-            for pid, rings in zip(pdf["poly_id"], pdf["rings"]):
-                for part in _feature_parts(rings):
-                    for tx, ty in _envelope_cells(G.rings_envelope(part), zoom):
-                        rows.add((pid, tx, ty))
-            yield pd.DataFrame(sorted(rows), columns=["poly_id", "cell_tx", "cell_ty"])
-
-    # cover rows carry ONLY (poly_id, cell) — at scale the shuffle never
-    # moves ring geometry; the exact test resolves rings from a broadcast
-    # index (see _exact_matches)
-    return polygons.select("poly_id", "rings").mapInPandas(cover, covered_schema)
+def _cover_cells(index: PolygonIndex, zoom: int) -> dict[int, set]:
+    """poly_id -> the XYZ tiles at ``zoom`` that the envelope of any of its
+    parts intersects: the cell cover both cell strategies join on (the
+    prefilter contract; the exact test runs after the join). Built in the
+    calling process from the broadcast index, so it agrees with the rings the exact
+    test uses, and cover rows carry only (poly_id, cell) — the shuffle
+    never moves ring geometry."""
+    cells: dict[int, set] = {}
+    for pid, box in zip(index.poly_ids, index.boxes):
+        cells.setdefault(int(pid), set()).update(_envelope_cells(box, zoom))
+    return cells
 
 
 def pip_join_cells(
@@ -375,19 +364,16 @@ def pip_join_cells(
 ) -> DataFrame:
     """Cell-cover equi-join PIP + exact kernel.
 
-    The (poly_id, cell) cover stays distributed and both sides shuffle on
-    the cell key — the path for polygon sides too large to broadcast a
-    cover for (``pip_join_cells_compact`` broadcasts one). ``salt`` > 1
-    replicates each cover row ``salt`` times and spreads points
-    deterministically across replicas, shrinking a hot cell's shuffle
-    partition by the salt factor.
+    Both sides shuffle on the cell key and the (poly_id, cell) cover is
+    the hash-join build side (``pip_join_cells_compact`` broadcasts its
+    cover instead). ``salt`` > 1 replicates each cover row ``salt`` times
+    and spreads points deterministically across replicas, shrinking a hot
+    cell's shuffle partition by the salt factor.
 
-    The polygon index is a snapshot taken at the first PIP call on this
-    ``polygons`` object and is never refreshed, even after Spark writes to
-    its source; read the source again to see the writes.
-    The cell cover, though, is read from ``polygons`` at each job: after
-    such a write, a feature matches a point only if both its snapshot rings
-    and the cells of its new rings hold the point.
+    The polygon index, and the cover built from it, is a snapshot taken at
+    the first PIP call on this ``polygons`` object and is never refreshed,
+    even after Spark writes to its source; read the source again to see the
+    writes.
     """
     pts = points
     if first_match:
@@ -399,7 +385,12 @@ def pip_join_cells(
         pts = pts.withColumn("_pip_rid", F.monotonically_increasing_id())
     tx, ty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
     pts = pts.withColumn("cell_tx", tx).withColumn("cell_ty", ty)
-    cover = polygon_cell_cover(polygons, zoom)
+    bc = _index_broadcast(polygons)
+    cover = points.sparkSession.createDataFrame(
+        [(pid, *cell) for pid, cells in _cover_cells(bc.value, zoom).items()
+         for cell in cells],
+        "poly_id long, cell_tx int, cell_ty int",
+    )
 
     join_keys = ["cell_tx", "cell_ty"]
     if salt > 1:
@@ -417,9 +408,7 @@ def pip_join_cells(
     # POINTS side, which turns the stream side into the 1-partition cover
     # and serializes the whole stage.
     joined = pts.join(cover.hint("shuffle_hash"), on=join_keys, how="inner")
-    return _exact_matches(
-        joined, _index_broadcast(polygons), points.columns, lon, lat, first_match
-    )
+    return _exact_matches(joined, bc, points.columns, lon, lat, first_match)
 
 
 def pip_join_cells_compact(
@@ -443,16 +432,10 @@ def pip_join_cells_compact(
     its source; read the source again to see the writes.
     """
     bc = _index_broadcast(polygons)
-    index = bc.value
-    cover_cells: dict[int, set] = {}
-    for pid, box in zip(index.poly_ids, index.boxes):
-        cover_cells.setdefault(int(pid), set()).update(_envelope_cells(box, zoom))
-    cover_rows = []
-    for pid, cells in cover_cells.items():
-        for z, tx_, ty_ in TM.py_compact_cells(cells, zoom):
-            cover_rows.append((pid, z, tx_, ty_))
     cover = points.sparkSession.createDataFrame(
-        cover_rows, "poly_id long, cell_z int, cell_tx int, cell_ty int"
+        [(pid, *cell) for pid, cells in _cover_cells(bc.value, zoom).items()
+         for cell in TM.py_compact_cells(cells, zoom)],
+        "poly_id long, cell_z int, cell_tx int, cell_ty int",
     )
 
     pts_in = points

@@ -202,8 +202,8 @@ def q_pip_broadcast(spark, sf_dir):
 
 @register("pip_cells_salted", _PIP_ORACLE)
 def q_pip_cells_salted(spark, sf_dir):
-    """Cell-cover equi-join PIP with salt=4 on the distributed-cover shuffle
-    path — identical output to pip_broadcast, different physical plan."""
+    """Cell-cover equi-join PIP with salt=4 on the shuffled cell-key path —
+    identical output to pip_broadcast, different physical plan."""
     out = PIP.pip_join_cells(
         order_points(spark, sf_dir), polygons_df(spark), zoom=7, salt=4,
     )
@@ -1725,7 +1725,7 @@ def q_raster_overview_nearest(spark, sf_dir):
     dst pixel samples src (2i, 2j); verified via the closed-form world
     raster — dst tile (tx, ty) at z1 averages src pixels (2·gpx, 2·gpy)."""
     base = TL.synthetic_raster(spark, zoom=2, bands=1)
-    z1 = TL.overview_level_nearest(base, tile_size=256)
+    z1 = TL.overview_level(base, tile_size=256, stat="nearest")
     mean = F.aggregate(
         F.col("data"), F.lit(0.0), lambda a, v: a + v
     ) / F.size("data")
@@ -2499,7 +2499,7 @@ GROUP BY tx.v, ty.v"""
 def _ov_stat_query(kernel: str):
     def q(spark, sf_dir):
         base = TL.synthetic_raster(spark, zoom=2, bands=1)
-        z1 = TL.overview_level_stat(base, tile_size=256, stat=kernel)
+        z1 = TL.overview_level(base, tile_size=256, stat=kernel)
         mean = F.aggregate(
             F.col("data"), F.lit(0.0), lambda a, v: a + v
         ) / F.size("data")

@@ -3,7 +3,10 @@ pure-Python oracle over the deterministic pages + polygons fixtures."""
 
 import gc
 import io
+import os
 import struct
+import subprocess
+import sys
 import threading
 import weakref
 from collections import Counter
@@ -313,6 +316,20 @@ def test_index_builds_run_outside_the_cache_lock(spark, monkeypatch):
     assert PJ._INDEXES[a] is bc_a and PJ._INDEXES[b] is bc_b
     bc_1, bc_2 = in_two_threads([c, c])
     assert bc_1 is bc_2 is PJ._INDEXES[c]
+
+
+def test_pip_join_import_loads_no_other_operator():
+    """A worker that unpickles a PIP UDF imports gdal_spark.operators.pip_join;
+    that must not drag in every other operator module."""
+    code = (
+        "import sys, gdal_spark.operators.pip_join; "
+        "print(sorted(m for m in sys.modules if m.startswith('gdal_spark.operators.')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), timeout=120,
+    ).stdout
+    assert out.strip() == "['gdal_spark.operators.pip_join']"
 
 
 def test_hot_cell_is_actually_hot(fixtures):

@@ -100,6 +100,14 @@ def test_cells_salted_uses_shuffled_hash_join(spark):
     assert "ShuffledHashJoin" in p
 
 
+def test_cells_cover_comes_from_the_index_not_a_ring_scan(spark):
+    """pip_join_cells builds its (poly_id, cell) cover in the calling
+    process from the broadcast polygon index it collects anyway: no
+    MapInPandas over the rings in the plan."""
+    p = _plan(spark, "pip_cells_salted")
+    assert "MapInPandas" not in p
+
+
 def test_pip_first_match_aggregates_on_compact_key(spark):
     """Library-default first_match must key its reduction on the 8-byte
     surrogate id (_pip_rid), never the full point row — a wide text column

@@ -1,7 +1,8 @@
 """Raster sampling + pyramid parity vs numpy oracles implementing the
-reference kernels verbatim (gdalwarpkernel.cpp:5228-5330 nearest,
-:2952-3010 bilinear; overview.cpp average)."""
+reference kernels verbatim (gdalwarpkernel.cpp:5228-5330 nearest, the
+:104-126 filter menu for the tap samplers; overview.cpp kernels)."""
 
+import functools
 import math
 
 import numpy as np
@@ -38,20 +39,58 @@ def oracle_nearest(lon, lat, band):
     return py_pixel_value(ix, iy, band)
 
 
-def oracle_bilinear(lon, lat, band):
-    gx, gy = py_global_pixel(lon, lat)
-    n = (1 << ZOOM) * TS - 1
-    ix0 = math.floor(gx - 0.5)
-    iy0 = math.floor(gy - 0.5)
-    wx = gx - 0.5 - ix0
-    wy = gy - 0.5 - iy0
-    total = 0.0
-    for dx, dy in [(0, 0), (1, 0), (0, 1), (1, 1)]:
-        cx = min(n, max(0, ix0 + dx))
-        cy = min(n, max(0, iy0 + dy))
-        w = (wx if dx else 1 - wx) * (wy if dy else 1 - wy)
-        total += w * py_pixel_value(cx, cy, band)
-    return total
+def _tap_oracle(offsets, weight, normalize, nodata=None):
+    """Warp-kernel tap sum (GWKResample): taps at ``offsets`` around
+    floor(src - 0.5), edge-clamped, separable weights w(frac - offset);
+    Σw·v, or Σw·v / Σw over the taps whose value is not ``nodata``."""
+
+    def oracle(lon, lat, band):
+        gx, gy = py_global_pixel(lon, lat)
+        n = (1 << ZOOM) * TS - 1
+        ix0 = math.floor(gx - 0.5)
+        iy0 = math.floor(gy - 0.5)
+        fx = gx - 0.5 - ix0
+        fy = gy - 0.5 - iy0
+        num = den = 0.0
+        for dy in offsets:
+            for dx in offsets:
+                v = py_pixel_value(min(n, max(0, ix0 + dx)), min(n, max(0, iy0 + dy)), band)
+                if v == nodata:
+                    continue
+                w = weight(fx - dx) * weight(fy - dy)
+                num += w * v
+                den += w
+        return num / den if normalize else num
+
+    return oracle
+
+
+def _triangle(t):
+    return max(0.0, 1.0 - abs(t))
+
+
+def _catmull_rom(t, a=-0.5):  # GWKCubic
+    t = abs(t)
+    if t < 1:
+        return (a + 2) * t ** 3 - (a + 3) * t ** 2 + 1
+    if t < 2:
+        return a * (t ** 3 - 5 * t ** 2 + 8 * t - 4)
+    return 0.0
+
+
+def _bspline(t):  # GWKBSpline ×6; the constant cancels in Σw·v / Σw
+    t = abs(t)
+    if t < 1:
+        return 4 - 6 * t ** 2 + 3 * t ** 3
+    if t < 2:
+        return (2 - t) ** 3
+    return 0.0
+
+
+def _lanczos3(t, a=3.0):  # GWKLanczosSinc
+    if t == 0:
+        return 1.0
+    return a * math.sin(math.pi * t) * math.sin(math.pi * t / a) / (math.pi * t) ** 2
 
 
 PROBES = [
@@ -79,13 +118,67 @@ def test_nearest_matches_reference_kernel(spark, raster, probe_df):
         assert got[i] == oracle_nearest(lon, lat, 1), (i, lon, lat)
 
 
-def test_bilinear_matches_reference_kernel(spark, raster, probe_df):
+# the value of probe 0's top-left bilinear tap in band 2: a nodata value
+# that one probe certainly meets
+_gx0, _gy0 = py_global_pixel(*PROBES[0][1:])
+NODATA = py_pixel_value(math.floor(_gx0 - 0.5), math.floor(_gy0 - 0.5), 2)
+
+# sampler name -> (call, value column, numpy oracle)
+TAP_SAMPLERS = {
+    "bilinear": (
+        T.sample_bilinear, "bilinear_val",
+        _tap_oracle((0, 1), _triangle, normalize=False),
+    ),
+    "cubic": (
+        T.sample_cubic, "cubic_val",
+        _tap_oracle((-1, 0, 1, 2), _catmull_rom, normalize=False),
+    ),
+    "cubicspline": (
+        T.sample_cubicspline, "cubicspline_val",
+        _tap_oracle((-1, 0, 1, 2), _bspline, normalize=True),
+    ),
+    "lanczos": (
+        T.sample_lanczos, "lanczos_val",
+        _tap_oracle(range(-2, 4), _lanczos3, normalize=True),
+    ),
+    "bilinear_nodata": (
+        functools.partial(T.sample_bilinear_nodata, nodata=NODATA),
+        "bilinear_val",
+        _tap_oracle((0, 1), _triangle, normalize=True, nodata=NODATA),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(TAP_SAMPLERS))
+def test_tap_sampler_matches_reference_kernel(spark, raster, probe_df, name):
+    sample, col, oracle = TAP_SAMPLERS[name]
     got = {
-        r["i"]: r["bilinear_val"]
-        for r in T.sample_bilinear(probe_df, raster, ZOOM, band=2, tile_size=TS).collect()
+        r["i"]: r[col]
+        for r in sample(probe_df, raster, ZOOM, band=2, tile_size=TS).collect()
     }
     for i, lon, lat in PROBES:
-        assert got[i] == pytest.approx(oracle_bilinear(lon, lat, 2), rel=1e-12), (i, lon, lat)
+        assert got[i] == pytest.approx(oracle(lon, lat, 2), rel=1e-12), (i, lon, lat)
+
+
+NON_FINITE = [float("nan"), float("inf"), float("-inf"), None]
+
+
+@pytest.mark.parametrize("name", ["nearest", *TAP_SAMPLERS])
+def test_sampler_returns_null_for_non_finite_coordinates(spark, raster, name):
+    """NULL, NaN or ±inf in lon or lat gives a NULL value and keeps the
+    point's row; a clamp must never turn a bad index into a real pixel."""
+    if name == "nearest":
+        sample, col = T.sample_nearest, "nearest_val"
+    else:
+        sample, col, _ = TAP_SAMPLERS[name]
+    rows = [(0, 2.35, 48.85)]
+    rows += [(1 + k, v, 10.0) for k, v in enumerate(NON_FINITE)]
+    rows += [(11 + k, 10.0, v) for k, v in enumerate(NON_FINITE)]
+    pts = spark.createDataFrame(rows, "i long, lon double, lat double")
+    got = {r["i"]: r[col] for r in sample(pts, raster, ZOOM, band=2, tile_size=TS).collect()}
+    assert sorted(got) == [i for i, _, _ in rows]
+    assert got[0] is not None
+    assert {i: v for i, v in got.items() if i and v is not None} == {}
 
 
 def test_nearest_differs_from_bilinear_somewhere(spark, raster, probe_df):
@@ -159,9 +252,15 @@ def test_render_base_nearest_decimation(spark):
         )[0]
 
 
+def _mode(v):
+    """Most frequent value; ties -> the smallest."""
+    vals, counts = np.unique(v, return_counts=True)
+    return vals[counts.argmax()]
+
+
 def test_overview_stat_kernels_vs_numpy(spark):
-    """min/max/sum/q1/q3 stat overviews vs a direct numpy reduction of the
-    same synthetic base (the kernels not covered by driver gates)."""
+    """Every overview kernel vs a direct numpy reduction of the same
+    synthetic base."""
     from gdal_spark.operators import tiles as TL
 
     base = TL.synthetic_raster(spark, zoom=1, bands=1, tile_size=16)
@@ -169,12 +268,16 @@ def test_overview_stat_kernels_vs_numpy(spark):
     world = TL.pixel_value(xx, yy, 1)
     blocks = world.reshape(16, 2, 16, 2).transpose(0, 2, 1, 3).reshape(16, 16, 4)
     expected = {
+        "average": blocks.mean(-1), "nearest": world[::2, ::2],
+        "rms": np.sqrt((blocks ** 2).mean(-1)),
+        "mode": np.apply_along_axis(_mode, -1, blocks),
+        "median": np.median(blocks, -1),
         "min": blocks.min(-1), "max": blocks.max(-1), "sum": blocks.sum(-1),
         "q1": np.quantile(blocks, 0.25, axis=-1),
         "q3": np.quantile(blocks, 0.75, axis=-1),
     }
     for stat, want in expected.items():
-        out = TL.overview_level_stat(base, 16, stat).collect()
+        out = TL.overview_level(base, 16, stat).collect()
         assert len(out) == 1
         got = np.asarray(out[0]["data"]).reshape(16, 16)
         assert np.allclose(got, want), stat
