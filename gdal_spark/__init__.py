@@ -14,6 +14,11 @@ Design stance (SURVEY.md §7):
   * skew      = salted repartition of hot cells
 """
 
+from gdal_spark._zipcache import install as _install_zipcache
 from gdal_spark.session import get_spark  # noqa: F401
+
+# Python workers import this package when they unpickle an engine UDF or the
+# broadcast polygon index; from then on their tasks skip the zip re-reads.
+_install_zipcache()
 
 __version__ = "0.1.0"

@@ -8,7 +8,10 @@ batches), and an explicit shuffle-partition count.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -76,11 +79,12 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_gdal_spark_shipped", False):
         return
-    import shutil
-    import tempfile
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(tempfile.mkdtemp(prefix="gdal_spark_pyfiles_"), "gdal_spark")
+    tmp_dir = tempfile.mkdtemp(prefix="gdal_spark_pyfiles_")
+    # In local mode the file server serves the zip from this path for the
+    # life of the SparkContext, so it is removed only when the process exits.
+    atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
+    zip_base = os.path.join(tmp_dir, "gdal_spark")
     zip_path = shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir), "gdal_spark")
     sc.addPyFile(zip_path)
     sc._gdal_spark_shipped = True
