@@ -7,24 +7,28 @@ ogr/ogrlayer.cpp:7538).
 
 Spark-first plan shapes (the 100 TB story):
 
-* ``line_poly_relate_join`` — identical candidate machinery to the polygon
-  relate join: envelope → cell-cover explode (pure column math), equi-join
-  on the cell key with reference-cell dedup, exact noded-probe kernel on
-  candidates only.  Skewed cells are ordinary equi-join skew (AQE).
-* ``clip_lines_to_rect`` — map-only: vectorized Liang–Barsky over every
-  segment in an Arrow batch; no shuffle at any scale.
+* ``line_poly_relate_join`` / ``line_line_intersection_join`` — the
+  polygon joins' candidate plan (poly_join._candidate_pairs: envelope →
+  cell-cover explode, equi-join on the cell key with reference-cell dedup)
+  and their exact step (poly_join._refine: one Arrow UDF over the two
+  geometry columns, rows exploded in the JVM).  Skewed cells are ordinary
+  equi-join skew (AQE).
+* ``clip_lines_to_rect``, ``line_substring``, ``hausdorff_join`` —
+  map-only: the same Arrow refine UDF over the coordinate column; no
+  shuffle at any scale.
+* ``point_line_distance_join`` — map-only: one column Arrow UDF over the
+  point coordinates, vectorized over the whole batch.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from gdal_spark.operators.poly_join import _with_cover
+from gdal_spark.operators.poly_join import _candidate_pairs, _refine
 from gdal_spark.spatial import geometry as G
 
 LINE_FLAGS = ["intersects", "crosses", "touches", "within"]
@@ -53,41 +57,18 @@ def line_poly_relate_join(
     """Candidate (envelope-overlapping) line×polygon pairs with the OGC
     line/area predicate set.  Output: (id_a=line, id_b=polygon,
     intersects, crosses, touches, within)."""
-    ca = _with_cover(
-        with_line_envelope(lines, coords_col), zoom, line_id, coords_col,
-        "_a",
-    )
-    cb = _with_cover(polys, zoom, poly_id, rings_col, "_b")
-    cand = (
-        ca.join(cb, on=["cell_tx", "cell_ty"], how="inner")
-        .filter(
-            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
-            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
-        )
-        .select("id_a", "rings_a", "id_b", "rings_b")
-    )
 
-    schema = "id_a long, id_b long, " + ", ".join(
-        f"{f} boolean" for f in LINE_FLAGS
+    def relate(coords, rings):
+        rel = G.relate_line_polygon(
+            np.asarray(coords, dtype=np.float64), G.rings_to_numpy(rings))
+        return [tuple(rel[f] for f in LINE_FLAGS)]
+
+    pairs = _candidate_pairs(
+        with_line_envelope(lines, coords_col), polys, zoom,
+        line_id, coords_col, poly_id, rings_col,
     )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ["id_a", "id_b", *LINE_FLAGS]}
-            for ia, cc, ib, rb in zip(
-                pdf["id_a"], pdf["rings_a"], pdf["id_b"], pdf["rings_b"]
-            ):
-                rel = G.relate_line_polygon(
-                    np.asarray([list(p) for p in cc], dtype=np.float64),
-                    G.rings_to_numpy(rb),
-                )
-                rows["id_a"].append(ia)
-                rows["id_b"].append(ib)
-                for f in LINE_FLAGS:
-                    rows[f].append(rel[f])
-            yield pd.DataFrame(rows)
-
-    return cand.mapInPandas(refine, schema)
+    fields = ", ".join(f"{f} boolean" for f in LINE_FLAGS)
+    return _refine(pairs, ["id_a", "id_b"], relate, fields, "geom_a", "geom_b")
 
 
 def clip_lines_to_rect(
@@ -99,40 +80,26 @@ def clip_lines_to_rect(
     one row per SURVIVING segment: (line_id, seg_idx, cx1, cy1, cx2, cy2,
     seg_len) — per-segment rows keep downstream length sums order-free."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                line_id: [], "seg_idx": [], "cx1": [], "cy1": [],
-                "cx2": [], "cy2": [], "seg_len": [],
-            }
-            for lid, cc in zip(pdf[line_id], pdf[coords_col]):
-                arr = np.asarray([list(p) for p in cc], dtype=np.float64)
-                if arr.shape[0] < 2:
-                    continue
-                x1, y1 = arr[:-1, 0], arr[:-1, 1]
-                x2, y2 = arr[1:, 0], arr[1:, 1]
-                cx1, cy1, cx2, cy2, keep = G.clip_segment_rect(
-                    x1, y1, x2, y2, xmin, ymin, xmax, ymax
-                )
-                idx = np.nonzero(keep)[0]
-                # sqrt of the explicit sum (not hypot) — bit-parity with the
-                # SQL oracle's sqrt(dx*dx + dy*dy)
-                ln = np.sqrt(
-                    (cx2[idx] - cx1[idx]) ** 2 + (cy2[idx] - cy1[idx]) ** 2
-                )
-                out[line_id].extend([int(lid)] * idx.shape[0])
-                out["seg_idx"].extend(idx.tolist())
-                out["cx1"].extend(cx1[idx].tolist())
-                out["cy1"].extend(cy1[idx].tolist())
-                out["cx2"].extend(cx2[idx].tolist())
-                out["cy2"].extend(cy2[idx].tolist())
-                out["seg_len"].extend(ln.tolist())
-            yield pd.DataFrame(out)
+    def clip(coords):
+        arr = np.asarray(coords, dtype=np.float64)
+        if arr.shape[0] < 2:
+            return []
+        cx1, cy1, cx2, cy2, keep = G.clip_segment_rect(
+            arr[:-1, 0], arr[:-1, 1], arr[1:, 0], arr[1:, 1],
+            xmin, ymin, xmax, ymax,
+        )
+        idx = np.nonzero(keep)[0]
+        cx1, cy1, cx2, cy2 = cx1[idx], cy1[idx], cx2[idx], cy2[idx]
+        # sqrt of the explicit sum (not hypot) — bit-parity with the SQL
+        # oracle's sqrt(dx*dx + dy*dy)
+        ln = np.sqrt((cx2 - cx1) ** 2 + (cy2 - cy1) ** 2)
+        return list(zip(*(v.tolist() for v in (idx, cx1, cy1, cx2, cy2, ln))))
 
-    return lines.mapInPandas(
-        run,
-        f"{line_id} long, seg_idx long, cx1 double, cy1 double, "
-        "cx2 double, cy2 double, seg_len double",
+    return _refine(
+        lines, [F.col(line_id).cast("long").alias(line_id)], clip,
+        "seg_idx long, cx1 double, cy1 double, cx2 double, cy2 double, "
+        "seg_len double",
+        coords_col,
     )
 
 
@@ -148,71 +115,34 @@ def line_line_intersection_join(
     parameter computation.  Output: one row per crossing segment pair —
     (id_a, id_b, seg_a, seg_b, ix, iy).  Collinear overlaps are not point
     events and are skipped."""
-    ca = _with_cover(
-        with_line_envelope(a, coords_a), zoom, id_a, coords_a, "_a"
-    )
-    cb = _with_cover(
-        with_line_envelope(b, coords_b), zoom, id_b, coords_b, "_b"
-    )
-    cand = (
-        ca.join(cb, on=["cell_tx", "cell_ty"], how="inner")
-        .filter(
-            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
-            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
-        )
-        .select("id_a", "rings_a", "id_b", "rings_b")
-    )
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "id_a": [], "id_b": [], "seg_a": [], "seg_b": [],
-                "ix": [], "iy": [],
-            }
-            for ia, cca, ib, ccb in zip(
-                pdf["id_a"], pdf["rings_a"], pdf["id_b"], pdf["rings_b"]
-            ):
-                ea = G.line_edges(
-                    np.asarray([list(p) for p in cca], dtype=np.float64)
-                )
-                eb = G.line_edges(
-                    np.asarray([list(p) for p in ccb], dtype=np.float64)
-                )
-                if ea.shape[0] == 0 or eb.shape[0] == 0:
-                    continue
-                p = ea[:, None, 0, :]
-                d = ea[:, None, 1, :] - p
-                q = eb[None, :, 0, :]
-                e = eb[None, :, 1, :] - q
-                w = q - p
-                denom = d[..., 0] * e[..., 1] - d[..., 1] * e[..., 0]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    t = (
-                        w[..., 0] * e[..., 1] - w[..., 1] * e[..., 0]
-                    ) / denom
-                    u = (
-                        w[..., 0] * d[..., 1] - w[..., 1] * d[..., 0]
-                    ) / denom
-                hit = (
-                    (denom != 0.0)
-                    & (t >= 0.0) & (t <= 1.0) & (u >= 0.0) & (u <= 1.0)
-                )
-                sa, sb = np.nonzero(hit)
-                if sa.shape[0] == 0:
-                    continue
-                ix = p[sa, 0, 0] + t[sa, sb] * d[sa, 0, 0]
-                iy = p[sa, 0, 1] + t[sa, sb] * d[sa, 0, 1]
-                rows["id_a"].extend([int(ia)] * sa.shape[0])
-                rows["id_b"].extend([int(ib)] * sa.shape[0])
-                rows["seg_a"].extend(sa.tolist())
-                rows["seg_b"].extend(sb.tolist())
-                rows["ix"].extend(ix.tolist())
-                rows["iy"].extend(iy.tolist())
-            yield pd.DataFrame(rows)
+    def crossings(coords_a, coords_b):
+        ea = G.line_edges(np.asarray(coords_a, dtype=np.float64))
+        eb = G.line_edges(np.asarray(coords_b, dtype=np.float64))
+        if ea.shape[0] == 0 or eb.shape[0] == 0:
+            return []
+        p = ea[:, None, 0, :]
+        d = ea[:, None, 1, :] - p
+        q = eb[None, :, 0, :]
+        e = eb[None, :, 1, :] - q
+        w = q - p
+        denom = d[..., 0] * e[..., 1] - d[..., 1] * e[..., 0]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t = (w[..., 0] * e[..., 1] - w[..., 1] * e[..., 0]) / denom
+            u = (w[..., 0] * d[..., 1] - w[..., 1] * d[..., 0]) / denom
+        hit = (denom != 0.0) & (t >= 0.0) & (t <= 1.0) & (u >= 0.0) & (u <= 1.0)
+        sa, sb = np.nonzero(hit)
+        ix = p[sa, 0, 0] + t[sa, sb] * d[sa, 0, 0]
+        iy = p[sa, 0, 1] + t[sa, sb] * d[sa, 0, 1]
+        return list(zip(sa.tolist(), sb.tolist(), ix.tolist(), iy.tolist()))
 
-    return cand.mapInPandas(
-        refine,
-        "id_a long, id_b long, seg_a long, seg_b long, ix double, iy double",
+    pairs = _candidate_pairs(
+        with_line_envelope(a, coords_a), with_line_envelope(b, coords_b), zoom,
+        id_a, coords_a, id_b, coords_b,
+    )
+    return _refine(
+        pairs, ["id_a", "id_b"], crossings,
+        "seg_a long, seg_b long, ix double, iy double", "geom_a", "geom_b",
     )
 
 
@@ -317,13 +247,12 @@ def point_line_distance_join(
     (ST_ClosestPoint / OGRGeometry nearest-point semantics)."""
     # deterministic broadcast order (argmin breaks exact-d² ties by array
     # index, which must mirror the (line_id, seg_idx) oracle tie order)
-    recs = lines.select(line_id, coords_col).orderBy(line_id).collect()
+    recs = lines.select(line_id, coords_col).dropna().orderBy(line_id).collect()
     segs = []
     ids = []
     sidx = []
     for r in recs:
-        arr = np.asarray([list(p) for p in r[coords_col]], dtype=np.float64)
-        e = G.line_edges(arr)
+        e = G.line_edges(np.asarray(r[coords_col], dtype=np.float64))
         for j in range(e.shape[0]):
             segs.append(e[j])
             ids.append(int(r[line_id]))
@@ -333,39 +262,40 @@ def point_line_distance_join(
     sx_arr = np.asarray(sidx, dtype=np.int64)
     spark = points.sparkSession
     b = spark.sparkContext.broadcast((seg_arr, id_arr, sx_arr))
+    fields = f"{line_id} long, seg_idx long, dist double"
+    if return_point:
+        fields += ", cx double, cy double"
+    rtype = T.DataType.fromDDL(f"struct<{fields}>")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf(rtype)
+    def nearest(x: pa.Array, y: pa.Array) -> pa.Array:
         sa, ia, xa = b.value
         a = sa[:, 0, :]                     # (S, 2)
         d = sa[:, 1, :] - a
         dd = (d * d).sum(axis=1)
         dd = np.where(dd == 0.0, 1.0, dd)
-        for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype=np.float64)[:, None]
-            py = pdf[y_col].to_numpy(dtype=np.float64)[:, None]
-            t = ((px - a[None, :, 0]) * d[None, :, 0]
-                 + (py - a[None, :, 1]) * d[None, :, 1]) / dd[None, :]
-            t = np.minimum(np.maximum(t, 0.0), 1.0)
-            qx = a[None, :, 0] + t * d[None, :, 0]
-            qy = a[None, :, 1] + t * d[None, :, 1]
-            d2 = (px - qx) ** 2 + (py - qy) ** 2
-            k = np.argmin(d2, axis=1)      # first minimum = smallest index
-            rows = np.arange(px.shape[0])
-            out = {
-                point_id: pdf[point_id].to_numpy(),
-                line_id: ia[k],
-                "seg_idx": xa[k],
-                "dist": np.sqrt(d2[rows, k]),
-            }
-            if return_point:
-                out["cx"] = qx[rows, k]
-                out["cy"] = qy[rows, k]
-            yield pd.DataFrame(out)
+        # NULL coordinates arrive as NaN; a non-finite point has no nearest line
+        px = x.to_numpy(zero_copy_only=False)[:, None]
+        py = y.to_numpy(zero_copy_only=False)[:, None]
+        t = ((px - a[None, :, 0]) * d[None, :, 0]
+             + (py - a[None, :, 1]) * d[None, :, 1]) / dd[None, :]
+        t = np.minimum(np.maximum(t, 0.0), 1.0)
+        qx = a[None, :, 0] + t * d[None, :, 0]
+        qy = a[None, :, 1] + t * d[None, :, 1]
+        d2 = (px - qx) ** 2 + (py - qy) ** 2
+        k = np.argmin(d2, axis=1)      # first minimum = smallest index
+        rows = np.arange(px.shape[0])
+        cols = [ia[k], xa[k], np.sqrt(d2[rows, k])]
+        if return_point:
+            cols += [qx[rows, k], qy[rows, k]]
+        bad = ~(np.isfinite(px[:, 0]) & np.isfinite(py[:, 0]))
+        return pa.StructArray.from_arrays(
+            [pa.array(c, mask=bad) for c in cols], names=rtype.names)
 
-    schema = f"{point_id} long, {line_id} long, seg_idx long, dist double"
-    if return_point:
-        schema += ", cx double, cy double"
-    return points.select(point_id, x_col, y_col).mapInPandas(run, schema)
+    xy = (F.col(x_col).cast("double"), F.col(y_col).cast("double"))
+    return points.select(
+        F.col(point_id).cast("long").alias(point_id), nearest(*xy).alias("_near")
+    ).select(point_id, "_near.*")
 
 
 def line_substring(
@@ -383,48 +313,32 @@ def line_substring(
     operands).  Map-only.  Output: (line_id, n_vertices, x0, y0, x1, y1,
     sub_len_micro)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for lid, cc in zip(pdf[line_id], pdf[coords_col]):
-                arr = np.asarray([list(p) for p in cc], dtype=np.float64)
-                if arr.shape[0] < 2:
-                    continue
-                dx = arr[1:, 0] - arr[:-1, 0]
-                dy = arr[1:, 1] - arr[:-1, 1]
-                sl = np.floor(
-                    np.sqrt(dx * dx + dy * dy) * 1e6 + 0.5
-                ).astype(np.int64)
-                c1 = np.cumsum(sl)
-                c0 = c1 - sl
-                total = int(c1[-1])
-                d0 = int(np.floor(f0 * total))
-                d1 = int(np.floor(f1 * total))
+    def substring(coords):
+        arr = np.asarray(coords, dtype=np.float64)
+        if arr.shape[0] < 2:
+            return []
+        dx = arr[1:, 0] - arr[:-1, 0]
+        dy = arr[1:, 1] - arr[:-1, 1]
+        sl = np.floor(np.sqrt(dx * dx + dy * dy) * 1e6 + 0.5).astype(np.int64)
+        c1 = np.cumsum(sl)
+        c0 = c1 - sl
+        total = int(c1[-1])
+        d0 = int(np.floor(f0 * total))
+        d1 = int(np.floor(f1 * total))
 
-                def cut(d):
-                    k = int(np.searchsorted(c1, d, side="right"))
-                    k = min(k, sl.shape[0] - 1)
-                    t = (d - float(c0[k])) / float(sl[k])
-                    return (
-                        arr[k, 0] + t * dx[k],
-                        arr[k, 1] + t * dy[k],
-                    )
+        def cut(d):
+            k = min(int(np.searchsorted(c1, d, side="right")), sl.shape[0] - 1)
+            t = (d - float(c0[k])) / float(sl[k])
+            return arr[k, 0] + t * dx[k], arr[k, 1] + t * dy[k]
 
-                x0, y0 = cut(d0)
-                x1_, y1_ = cut(d1)
-                inner = int(((c1 > d0) & (c1 < d1)).sum())
-                out.append({
-                    line_id: int(lid),
-                    "n_vertices": inner + 2,
-                    "x0": x0, "y0": y0, "x1": x1_, "y1": y1_,
-                    "sub_len_micro": d1 - d0,
-                })
-            yield pd.DataFrame(out)
+        inner = int(((c1 > d0) & (c1 < d1)).sum())
+        return [(inner + 2, *cut(d0), *cut(d1), d1 - d0)]
 
-    return lines.mapInPandas(
-        run,
-        f"{line_id} long, n_vertices long, x0 double, y0 double, "
-        "x1 double, y1 double, sub_len_micro long",
+    return _refine(
+        lines, [F.col(line_id).cast("long").alias(line_id)], substring,
+        "n_vertices long, x0 double, y0 double, x1 double, y1 double, "
+        "sub_len_micro long",
+        coords_col,
     )
 
 
@@ -442,11 +356,9 @@ def hausdorff_join(
     dimension-sized and broadcasts; per pair one vectorized
     (|verts|,|segs|) point-segment matrix each direction; squared-distance
     cascade with a single final sqrt.  Output: (id_a, id_b, hd)."""
-    recs = b.select(id_b, coords_b).orderBy(id_b).collect()
+    recs = b.select(id_b, coords_b).dropna().orderBy(id_b).collect()
     bverts = [
-        (int(r[id_b]),
-         np.asarray([list(p) for p in r[coords_b]], dtype=np.float64))
-        for r in recs
+        (int(r[id_b]), np.asarray(r[coords_b], dtype=np.float64)) for r in recs
     ]
     spark = a.sparkSession
     bb = spark.sparkContext.broadcast(bverts)
@@ -470,22 +382,16 @@ def hausdorff_join(
         ey = py - qy
         return (ex * ex + ey * ey).min(axis=1)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bs = bb.value
-        for pdf in batches:
-            rows = {"id_a": [], "id_b": [], "hd": []}
-            for lid, cc in zip(pdf[id_a], pdf[coords_a]):
-                av = np.asarray([list(p) for p in cc], dtype=np.float64)
-                for bid, bv in bs:
-                    h = max(
-                        float(pt_seg_min_d2(av, bv).max()),
-                        float(pt_seg_min_d2(bv, av).max()),
-                    )
-                    rows["id_a"].append(int(lid))
-                    rows["id_b"].append(int(bid))
-                    rows["hd"].append(float(np.sqrt(h)))
-            yield pd.DataFrame(rows)
+    def hd(coords):
+        av = np.asarray(coords, dtype=np.float64)
+        return [
+            (bid, float(np.sqrt(max(
+                float(pt_seg_min_d2(av, bv).max()),
+                float(pt_seg_min_d2(bv, av).max()),
+            ))))
+            for bid, bv in bb.value
+        ]
 
-    return a.select(
-        F.col(id_a).alias(id_a), F.col(coords_a).alias(coords_a)
-    ).mapInPandas(run, "id_a long, id_b long, hd double")
+    return _refine(
+        a, [F.col(id_a).cast("long").alias("id_a")], hd, "id_b long, hd double", coords_a
+    )

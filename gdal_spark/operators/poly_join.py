@@ -1,4 +1,4 @@
-"""Polygon↔polygon spatial join (predicate menu) + rectangle clip.
+"""Polygon↔polygon spatial join (predicate menu) + rectangle clip + overlay.
 
 Reference semantics: OGRGeometry::Intersects/Touches/Overlaps/Contains/
 Within/Equals between two polygon layers (ogr/ogrgeometry.cpp:571,6002-6402;
@@ -6,66 +6,106 @@ exercised by autotest/ogr/ogr_geom.py:2430-2475) and OGRLayer::Clip
 (ogr/ogrlayer.cpp:7538, apps/gdalalg_vector_clip.cpp) for rectangular clip
 geometries.
 
-Spark-first plan (the 100 TB shape):
+Spark-first plan (the 100 TB shape). Every pair join here and in lines.py
+is GDAL's spatial-filter shape — envelope prefilter, then the exact
+predicate (ogr/ogrlayer.cpp:4005-4076) — written once, in two helpers:
 
-* ``poly_relate_join`` — both layers large: each polygon's envelope is
-  covered with WebMercator tile cells at a fixed zoom (pure column math,
-  explode of per-axis sequences), the layers equi-join on the cell key, and
-  duplicate candidates are eliminated map-side with the *reference-cell*
-  trick (a pair is kept only in the top-left cell of its envelope
-  intersection — no distinct/shuffle needed, standard in distributed spatial
-  joins). Only then does the exact numpy relate kernel
-  (spatial/geometry.py:relate_polygons) run per candidate pair inside an
-  Arrow-batched mapInPandas. Skewed cells (many polygons in one cell) are
-  ordinary equi-join skew — AQE skew-split applies.
+* ``_candidate_pairs`` — each feature's envelope is covered with
+  WebMercator tile cells at a fixed zoom (pure column math, latitudes
+  clamped to the Mercator limit, explode of per-axis sequences), the layers
+  equi-join on the cell key, and duplicate candidates are eliminated
+  map-side with the *reference-cell* trick (a pair is kept only in the
+  top-left cell of its envelope intersection — no distinct/shuffle needed,
+  standard in distributed spatial joins). Skewed cells (many polygons in
+  one cell) are ordinary equi-join skew — AQE skew-split applies.
 
-* ``clip_to_rect`` — map-only: envelope prefilter as a pushdown-friendly
-  column predicate, then the Sutherland–Hodgman kernel
-  (spatial/geometry.py:clip_rings_rect) per row in mapInPandas.
+* ``_refine`` — the exact numpy kernel (spatial/geometry.py,
+  spatial/overlay.py) runs per row inside one Arrow UDF that receives only
+  the geometry columns and returns the row's output records as an array of
+  structs; the JVM explodes it into rows, so ids and other pass-through
+  columns never leave the JVM. The map-only operators (``clip_to_rect``
+  after its pushdown-friendly envelope prefilter, the erase kernels, the
+  per-line kernels of lines.py) use the same helper.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from gdal_spark.spatial import geometry as G
 from gdal_spark.spatial import tilemath as TM
 
 FLAGS = ["intersects", "touches", "overlaps", "contains", "within", "equals"]
+_RINGS = "rings array<array<array<double>>>"
 
 
-def _with_cover(df: DataFrame, zoom: int, id_col: str, rings_col: str,
-                suffix: str) -> DataFrame:
-    """Envelope → tile-range columns → exploded (cell_tx, cell_ty) cover.
+def _candidate_pairs(
+    a: DataFrame, b: DataFrame, zoom: int,
+    id_a: str, geom_a: str, id_b: str, geom_b: str,
+) -> DataFrame:
+    """Every envelope-overlapping (a, b) pair once: (id_a, geom_a, id_b,
+    geom_b). Both inputs need envelope columns (xmin, ymin, xmax, ymax) —
+    at scale precomputed storage columns, so the cover math stays
+    whole-stage-codegen column work. Pairs whose envelopes share no cover
+    cell are disjoint by construction and not emitted."""
 
-    ty of the envelope TOP (ymax) is the smallest ty (XYZ y grows south).
-    The tile ranges (_txmin/_tymin) ride along for reference-cell dedup.
-    """
-    txmin, tymin = TM.lonlat_to_tile(F.col("xmin"), F.col("ymax"), zoom)
-    txmax, tymax = TM.lonlat_to_tile(F.col("xmax"), F.col("ymin"), zoom)
+    def cover(df: DataFrame, id_col: str, geom_col: str, s: str) -> DataFrame:
+        # tile math is NULL at the poles: clamp latitudes to the Mercator limit
+        ymin, ymax = (
+            F.least(F.greatest(F.col(c), F.lit(-TM.MAX_LAT)), F.lit(TM.MAX_LAT))
+            for c in ("ymin", "ymax")
+        )
+        # ty of the envelope TOP (ymax) is the smallest ty (XYZ y grows south)
+        txmin, tymin = TM.lonlat_to_tile(F.col("xmin"), ymax, zoom)
+        txmax, tymax = TM.lonlat_to_tile(F.col("xmax"), ymin, zoom)
+        return (
+            df.select(
+                F.col(id_col).cast("long").alias(f"id_{s}"),
+                F.col(geom_col).alias(f"geom_{s}"),
+                txmin.alias(f"_txmin_{s}"), tymin.alias(f"_tymin_{s}"),
+                txmax.alias(f"_txmax_{s}"), tymax.alias(f"_tymax_{s}"),
+            )
+            .withColumn("cell_tx", F.explode(F.sequence(f"_txmin_{s}", f"_txmax_{s}")))
+            .withColumn("cell_ty", F.explode(F.sequence(f"_tymin_{s}", f"_tymax_{s}")))
+        )
+
     return (
-        df.select(
-            F.col(id_col).alias(f"id{suffix}"),
-            F.col(rings_col).alias(f"rings{suffix}"),
-            txmin.alias(f"_txmin{suffix}"),
-            tymin.alias(f"_tymin{suffix}"),
-            txmax.alias(f"_txmax{suffix}"),
-            tymax.alias(f"_tymax{suffix}"),
+        cover(a, id_a, geom_a, "a")
+        .join(cover(b, id_b, geom_b, "b"), on=["cell_tx", "cell_ty"], how="inner")
+        # reference-cell dedup: envelope-intersection's top-left cell only.
+        # tile index is monotone in lon (and anti-monotone in lat), so the
+        # intersection's txmin = max of the two txmins, same for tymin.
+        .filter(
+            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
+            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
         )
-        .withColumn(
-            "cell_tx",
-            F.explode(F.sequence(f"_txmin{suffix}", f"_txmax{suffix}")),
-        )
-        .withColumn(
-            "cell_ty",
-            F.explode(F.sequence(f"_tymin{suffix}", f"_tymax{suffix}")),
-        )
+        .select("id_a", "geom_a", "id_b", "geom_b")
     )
+
+
+def _refine(df: DataFrame, keep_cols: list, kernel, fields: str, *geom_cols) -> DataFrame:
+    """``keep_cols`` followed by the records ``kernel`` makes from each row.
+
+    ``kernel(*geoms)`` gets one row's ``geom_cols`` as Python lists and
+    returns a list of records, tuples in the order of ``fields`` (a DDL
+    field list such as ``"hd double"``): one for a predicate, none for an
+    empty clip, n for crossings. One Arrow UDF over the geometry columns
+    only returns them as array<struct<fields>> and ``inline`` makes the
+    rows in the JVM, so ``keep_cols`` never cross into Python. A row with a
+    NULL geometry yields no records."""
+    rtype = T.ArrayType(T.DataType.fromDDL(fields))
+    arrow_type = to_arrow_type(rtype)
+
+    @F.arrow_udf(rtype)
+    def records(*geoms: pa.Array) -> pa.Array:
+        rows = zip(*(g.to_pylist() for g in geoms))
+        return pa.array([[] if None in row else kernel(*row) for row in rows], arrow_type)
+
+    return df.select(*keep_cols, F.inline(records(*geom_cols)))
 
 
 def poly_relate_join(
@@ -75,47 +115,16 @@ def poly_relate_join(
 ) -> DataFrame:
     """All candidate (envelope-overlapping) pairs with the full predicate
     set. Output: (id_a, id_b, intersects, touches, overlaps, contains,
-    within, equals); pairs whose envelopes share no cover cell are disjoint
-    by construction and not emitted.
+    within, equals). Both inputs need envelope columns (xmin, ymin, xmax,
+    ymax) alongside the ring arrays."""
 
-    Both inputs need envelope columns (xmin, ymin, xmax, ymax) alongside the
-    ring arrays — at scale these are precomputed storage columns so the
-    cover math stays whole-stage-codegen column work.
-    """
-    ca = _with_cover(a, zoom, id_a, rings_a, "_a")
-    cb = _with_cover(b, zoom, id_b, rings_b, "_b")
-    cand = (
-        ca.join(cb, on=["cell_tx", "cell_ty"], how="inner")
-        # reference-cell dedup: envelope-intersection's top-left cell only.
-        # tile index is monotone in lon (and anti-monotone in lat), so the
-        # intersection's txmin = max of the two txmins, same for tymin.
-        .filter(
-            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
-            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
-        )
-        .select("id_a", "rings_a", "id_b", "rings_b")
-    )
+    def relate(ra, rb):
+        rel = G.relate_polygons(G.rings_to_numpy(ra), G.rings_to_numpy(rb))
+        return [tuple(rel[f] for f in FLAGS)]
 
-    schema = "id_a long, id_b long, " + ", ".join(
-        f"{f} boolean" for f in FLAGS
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ["id_a", "id_b", *FLAGS]}
-            for ia, ra, ib, rb in zip(
-                pdf["id_a"], pdf["rings_a"], pdf["id_b"], pdf["rings_b"]
-            ):
-                rel = G.relate_polygons(
-                    G.rings_to_numpy(ra), G.rings_to_numpy(rb)
-                )
-                rows["id_a"].append(ia)
-                rows["id_b"].append(ib)
-                for f in FLAGS:
-                    rows[f].append(rel[f])
-            yield pd.DataFrame(rows)
-
-    return cand.mapInPandas(refine, schema)
+    pairs = _candidate_pairs(a, b, zoom, id_a, rings_a, id_b, rings_b)
+    fields = ", ".join(f"{f} boolean" for f in FLAGS)
+    return _refine(pairs, ["id_a", "id_b"], relate, fields, "geom_a", "geom_b")
 
 
 def poly_de9im_join(
@@ -124,40 +133,28 @@ def poly_de9im_join(
     rings_a: str = "rings", rings_b: str = "rings",
 ) -> DataFrame:
     """Full DE-9IM relate join (OGR_G_Relate, ogr/ogrgeometry.cpp:6494):
-    same cell-cover candidate plan as ``poly_relate_join`` (equi-join +
-    reference-cell dedup, AQE skew-split applies), refined by the exact
-    9-cell matrix kernel.  Output: (id_a, id_b, de9im string, intersects)."""
-    ca = _with_cover(a, zoom, id_a, rings_a, "_a")
-    cb = _with_cover(b, zoom, id_b, rings_b, "_b")
-    cand = (
-        ca.join(cb, on=["cell_tx", "cell_ty"], how="inner")
-        .filter(
-            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
-            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
-        )
-        .select("id_a", "rings_a", "id_b", "rings_b")
+    same cell-cover candidate plan as ``poly_relate_join``, refined by the
+    exact 9-cell matrix kernel. Output: (id_a, id_b, de9im string,
+    intersects); ``intersects`` (II, IB, BI or BB not F) is read off the
+    matrix in the JVM."""
+
+    def de9im(ra, rb):
+        return [(G.de9im_polygons(G.rings_to_numpy(ra), G.rings_to_numpy(rb)),)]
+
+    pairs = _candidate_pairs(a, b, zoom, id_a, rings_a, id_b, rings_b)
+    out = _refine(pairs, ["id_a", "id_b"], de9im, "de9im string", "geom_a", "geom_b")
+    return out.withColumn(
+        "intersects",
+        (F.substring("de9im", 1, 2) != "FF") | (F.substring("de9im", 4, 2) != "FF"),
     )
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"id_a": [], "id_b": [], "de9im": [], "intersects": []}
-            for ia, ra, ib, rb in zip(
-                pdf["id_a"], pdf["rings_a"], pdf["id_b"], pdf["rings_b"]
-            ):
-                m = G.de9im_polygons(
-                    G.rings_to_numpy(ra), G.rings_to_numpy(rb)
-                )
-                rows["id_a"].append(ia)
-                rows["id_b"].append(ib)
-                rows["de9im"].append(m)
-                rows["intersects"].append(
-                    m[0] != "F" or m[1] != "F" or m[3] != "F" or m[4] != "F"
-                )
-            yield pd.DataFrame(rows)
 
-    return cand.mapInPandas(
-        refine, "id_a long, id_b long, de9im string, intersects boolean"
-    )
+def _clip(rings, box) -> list:
+    """S–H clip of one polygon to an axis box: [(rings, n_rings, area)], or
+    no record when the clipped geometry is empty."""
+    clipped = G.clip_rings_rect(G.rings_to_numpy(rings), *box)
+    area = G.rings_area(clipped)
+    return [([r.tolist() for r in clipped], len(clipped), area)] if area > 0.0 else []
 
 
 def clip_to_rect(
@@ -170,39 +167,12 @@ def clip_to_rect(
     pre = df.filter(
         (F.col("xmin") <= F.lit(xmax)) & (F.col("xmax") >= F.lit(xmin))
         & (F.col("ymin") <= F.lit(ymax)) & (F.col("ymax") >= F.lit(ymin))
-    ).select(F.col(id_col).alias("id"), F.col(rings_col).alias("_rings"))
-
-    schema = (
-        "id long, rings array<array<array<double>>>, "
-        "n_rings int, clip_area double"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rings_out, n_rings, areas = [], [], [], []
-            for pid, rings in zip(pdf["id"], pdf["_rings"]):
-                clipped = G.clip_rings_rect(
-                    G.rings_to_numpy(rings), xmin, ymin, xmax, ymax
-                )
-                if not clipped:
-                    continue
-                area = G.rings_area(clipped)
-                if area <= 0.0:
-                    continue
-                ids.append(pid)
-                rings_out.append([[list(pt) for pt in r] for r in clipped])
-                n_rings.append(len(clipped))
-                areas.append(area)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "rings": pd.Series(rings_out, dtype="object"),
-                    "n_rings": pd.Series(n_rings, dtype="int32"),
-                    "clip_area": pd.Series(areas, dtype="float64"),
-                }
-            )
-
-    return pre.mapInPandas(run, schema)
+    box = (xmin, ymin, xmax, ymax)
+    return _refine(
+        pre, [F.col(id_col).cast("long").alias("id")], lambda r: _clip(r, box),
+        f"{_RINGS}, n_rings int, clip_area double", rings_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -223,63 +193,29 @@ def layer_intersection_rect(
     exact geometry via S–H clip of A's rings against B's box. Output:
     (id_a, id_b, rings, n_rings, inter_area) — empty intersections dropped.
     """
-    ca = _with_cover(a, zoom, id_a, rings_a, "_a")
-    cb = _with_cover(
-        b.withColumn(
-            "_box",
-            F.array(
-                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax")
-            ),
-        ),
-        zoom, id_b, "_box", "_b",
-    )
-    cand = (
-        ca.join(cb, on=["cell_tx", "cell_ty"], how="inner")
-        .filter(
-            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
-            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
-        )
-        .select("id_a", "rings_a", "id_b", F.col("rings_b").alias("_box"))
-    )
-    schema = (
-        "id_a long, id_b long, rings array<array<array<double>>>, "
-        "n_rings int, inter_area double"
+    boxes = b.withColumn("_box", F.array("xmin", "ymin", "xmax", "ymax"))
+    pairs = _candidate_pairs(a, boxes, zoom, id_a, rings_a, id_b, "_box")
+    return _refine(
+        pairs, ["id_a", "id_b"], _clip,
+        f"{_RINGS}, n_rings int, inter_area double", "geom_a", "geom_b",
     )
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "id_a": [], "id_b": [], "rings": [],
-                "n_rings": [], "inter_area": [],
-            }
-            for ia, ra, ib, box in zip(
-                pdf["id_a"], pdf["rings_a"], pdf["id_b"], pdf["_box"]
-            ):
-                xmn, ymn, xmx, ymx = (float(v) for v in box)
-                clipped = G.clip_rings_rect(
-                    G.rings_to_numpy(ra), xmn, ymn, xmx, ymx
-                )
-                if not clipped:
-                    continue
-                area = G.rings_area(clipped)
-                if area <= 0.0:
-                    continue
-                rows["id_a"].append(ia)
-                rows["id_b"].append(ib)
-                rows["rings"].append([r.tolist() for r in clipped])
-                rows["n_rings"].append(len(clipped))
-                rows["inter_area"].append(area)
-            yield pd.DataFrame(
-                {
-                    "id_a": pd.Series(rows["id_a"], dtype="int64"),
-                    "id_b": pd.Series(rows["id_b"], dtype="int64"),
-                    "rings": pd.Series(rows["rings"], dtype=object),
-                    "n_rings": pd.Series(rows["n_rings"], dtype="int32"),
-                    "inter_area": pd.Series(rows["inter_area"], dtype="float64"),
-                }
-            )
 
-    return cand.mapInPandas(refine, schema)
+def _erase_area(a: DataFrame, inter: DataFrame, id_a: str, rings_a: str) -> DataFrame:
+    """Erase(A, B) AREA accounting from the pairwise intersections ``inter``
+    (id_a, inter_area) of a method layer B with mutually disjoint features:
+    area(A \\ ∪B) = area(A) − Σ area(A ∩ B_i). Output: (id_a, area,
+    erased_area, remaining_area)."""
+    cut = inter.groupBy("id_a").agg(F.sum("inter_area").alias("erased_area"))
+    areas = _refine(
+        a, [F.col(id_a).cast("long").alias("id_a")],
+        lambda r: [(G.rings_area(G.rings_to_numpy(r)),)], "area double", rings_a,
+    )
+    return (
+        areas.join(cut, "id_a", "left")
+        .withColumn("erased_area", F.coalesce("erased_area", F.lit(0.0)))
+        .withColumn("remaining_area", F.col("area") - F.col("erased_area"))
+    )
 
 
 def layer_erase_area_rect(
@@ -293,31 +229,7 @@ def layer_erase_area_rect(
     erased_area, remaining_area). Geometry output of erase needs general
     polygon difference — documented MVP boundary."""
     inter = layer_intersection_rect(a, b, zoom, id_a, id_b, rings_a)
-    cut = inter.groupBy("id_a").agg(
-        F.sum("inter_area").alias("erased_area")
-    )
-    schema_src = a.select(
-        F.col(id_a).alias("id_a"), F.col(rings_a).alias("_rings")
-    )
-
-    def area_of(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].astype("int64"),
-                    "area": [
-                        G.rings_area(G.rings_to_numpy(r))
-                        for r in pdf["_rings"]
-                    ],
-                }
-            )
-
-    areas = schema_src.mapInPandas(area_of, "id_a long, area double")
-    return (
-        areas.join(cut, "id_a", "left")
-        .withColumn("erased_area", F.coalesce("erased_area", F.lit(0.0)))
-        .withColumn("remaining_area", F.col("area") - F.col("erased_area"))
-    )
+    return _erase_area(a, inter, id_a, rings_a)
 
 
 def layer_erase_parts_rect(
@@ -329,7 +241,7 @@ def layer_erase_parts_rect(
     by each envelope-intersecting rect via the 4-slab difference kernel
     (geometry.erase_rings_rect), iterating over the produced parts. B is a
     dimension (collected + broadcast); A streams through one map-only
-    mapInPandas stage — no shuffle, linear in A at 100 TB. Output one row
+    Arrow UDF stage — no shuffle, linear in A at 100 TB. Output one row
     per surviving A feature: (id_a, remaining_area, n_parts)."""
     spark = a.sparkSession
     rects = sorted(
@@ -338,42 +250,27 @@ def layer_erase_parts_rect(
         for r in b.select(id_b, "xmin", "ymin", "xmax", "ymax").collect()
     )
     bc = spark.sparkContext.broadcast(rects)
-    src = a.select(F.col(id_a).alias("id_a"), F.col(rings_a).alias("_rings"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        boxes = bc.value
-        for pdf in batches:
-            ids, rem, nparts = [], [], []
-            for pid, rings in zip(pdf["id_a"], pdf["_rings"]):
-                parts = [G.rings_to_numpy(rings)]
-                for (_rid, bx0, by0, bx1, by1) in boxes:
-                    nxt = []
-                    for p in parts:
-                        e = G.rings_envelope(p)
-                        if (e[2] <= bx0 or e[0] >= bx1
-                                or e[3] <= by0 or e[1] >= by1):
-                            nxt.append(p)  # no interior overlap: untouched
-                        else:
-                            nxt.extend(
-                                G.erase_rings_rect(p, bx0, by0, bx1, by1)
-                            )
-                    parts = nxt
-                    if not parts:
-                        break
-                area = float(sum(G.rings_area(p) for p in parts))
-                if parts and area > 0.0:
-                    ids.append(pid)
-                    rem.append(area)
-                    nparts.append(len(parts))
-            yield pd.DataFrame(
-                {
-                    "id_a": pd.Series(ids, dtype="int64"),
-                    "remaining_area": pd.Series(rem, dtype="float64"),
-                    "n_parts": pd.Series(nparts, dtype="int32"),
-                }
-            )
+    def erase(rings):
+        parts = [G.rings_to_numpy(rings)]
+        for (_rid, bx0, by0, bx1, by1) in bc.value:
+            nxt = []
+            for p in parts:
+                e = G.rings_envelope(p)
+                if e[2] <= bx0 or e[0] >= bx1 or e[3] <= by0 or e[1] >= by1:
+                    nxt.append(p)  # no interior overlap: untouched
+                else:
+                    nxt.extend(G.erase_rings_rect(p, bx0, by0, bx1, by1))
+            parts = nxt
+            if not parts:
+                break
+        area = float(sum(G.rings_area(p) for p in parts))
+        return [(area, len(parts))] if parts and area > 0.0 else []
 
-    return src.mapInPandas(run, "id_a long, remaining_area double, n_parts int")
+    return _refine(
+        a, [F.col(id_a).cast("long").alias("id_a")], erase,
+        "remaining_area double, n_parts int", rings_a,
+    )
 
 
 OVERLAY_OPS = ("union", "symdifference", "identity", "update")
@@ -459,63 +356,27 @@ def layer_overlay_poly(
     (concave, holed) — the general form of OGRLayer::Intersection / Clip
     (ogrlayer.cpp:5386, :7538; rect MVP in layer_intersection_rect).
 
-    Same 100 TB plan shape as the rect path: cell-cover candidates via one
-    equi-join (reference-cell dedup, no distinct), then the from-scratch
-    noding + boundary-selection + trace kernel (spatial/overlay.py) per
-    candidate pair inside an Arrow-batched mapInPandas. Output: (id_a,
-    id_b, rings, n_parts, n_rings, inter_area) — empty results dropped.
+    Same 100 TB plan shape as the rect path: cell-cover candidate pairs,
+    then the from-scratch noding + boundary-selection + trace kernel
+    (spatial/overlay.py) per candidate pair in the Arrow refine UDF.
+    Output: (id_a, id_b, rings, n_parts, n_rings, inter_area) — empty
+    results dropped.
     """
     from gdal_spark.spatial import overlay as OV
 
-    ca = _with_cover(a, zoom, id_a, rings_a, "_a")
-    cb = _with_cover(b, zoom, id_b, rings_b, "_b")
-    cand = (
-        ca.join(cb, on=["cell_tx", "cell_ty"], how="inner")
-        .filter(
-            (F.col("cell_tx") == F.greatest("_txmin_a", "_txmin_b"))
-            & (F.col("cell_ty") == F.greatest("_tymin_a", "_tymin_b"))
-        )
-        .select("id_a", "rings_a", "id_b", "rings_b")
-    )
-    schema = (
-        "id_a long, id_b long, rings array<array<array<double>>>, "
-        "n_parts int, n_rings int, inter_area double"
-    )
+    def overlay(ra, rb):
+        parts = OV.overlay_polygons(G.rings_to_numpy(ra), G.rings_to_numpy(rb), op)
+        area = OV.overlay_area(parts)
+        if area <= 0.0:
+            return []
+        flat = OV.overlay_parts_rings(parts)
+        return [([r.tolist() for r in flat], len(parts), len(flat), area)]
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "id_a", "id_b", "rings", "n_parts", "n_rings", "inter_area")}
-            for ia, ra, ib, rb in zip(
-                pdf["id_a"], pdf["rings_a"], pdf["id_b"], pdf["rings_b"]
-            ):
-                parts = OV.overlay_polygons(
-                    G.rings_to_numpy(ra), G.rings_to_numpy(rb), op)
-                if not parts:
-                    continue
-                area = OV.overlay_area(parts)
-                if area <= 0.0:
-                    continue
-                flat = OV.overlay_parts_rings(parts)
-                rows["id_a"].append(ia)
-                rows["id_b"].append(ib)
-                rows["rings"].append([r.tolist() for r in flat])
-                rows["n_parts"].append(len(parts))
-                rows["n_rings"].append(len(flat))
-                rows["inter_area"].append(area)
-            yield pd.DataFrame(
-                {
-                    "id_a": pd.Series(rows["id_a"], dtype="int64"),
-                    "id_b": pd.Series(rows["id_b"], dtype="int64"),
-                    "rings": pd.Series(rows["rings"], dtype=object),
-                    "n_parts": pd.Series(rows["n_parts"], dtype="int32"),
-                    "n_rings": pd.Series(rows["n_rings"], dtype="int32"),
-                    "inter_area": pd.Series(
-                        rows["inter_area"], dtype="float64"),
-                }
-            )
-
-    return cand.mapInPandas(refine, schema)
+    pairs = _candidate_pairs(a, b, zoom, id_a, rings_a, id_b, rings_b)
+    return _refine(
+        pairs, ["id_a", "id_b"], overlay,
+        f"{_RINGS}, n_parts int, n_rings int, inter_area double", "geom_a", "geom_b",
+    )
 
 
 def layer_erase_area_poly(
@@ -529,25 +390,4 @@ def layer_erase_area_poly(
     overlay kernel. Output: (id_a, area, erased_area, remaining_area)."""
     inter = layer_overlay_poly(
         a, b, "intersection", zoom, id_a, id_b, rings_a, rings_b)
-    cut = inter.groupBy("id_a").agg(
-        F.sum("inter_area").alias("erased_area"))
-    src = a.select(F.col(id_a).alias("id_a"), F.col(rings_a).alias("_rings"))
-
-    def area_of(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].astype("int64"),
-                    "area": [
-                        G.rings_area(G.rings_to_numpy(r))
-                        for r in pdf["_rings"]
-                    ],
-                }
-            )
-
-    areas = src.mapInPandas(area_of, "id_a long, area double")
-    return (
-        areas.join(cut, "id_a", "left")
-        .withColumn("erased_area", F.coalesce("erased_area", F.lit(0.0)))
-        .withColumn("remaining_area", F.col("area") - F.col("erased_area"))
-    )
+    return _erase_area(a, inter, id_a, rings_a)

@@ -155,7 +155,7 @@ def test_parts_rings_flatten():
 
 def test_layer_overlay_poly_plan_no_cartesian(spark):
     """Distributed plan: cell-cover equi-join only (no CartesianProduct /
-    BroadcastNestedLoopJoin), refine inside MapInPandas."""
+    BroadcastNestedLoopJoin), refine inside one Arrow UDF."""
     import io
     from contextlib import redirect_stdout
 
@@ -170,4 +170,4 @@ def test_layer_overlay_poly_plan_no_cartesian(spark):
     p = buf.getvalue()
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    assert "MapInPandas" in p
+    assert "ArrowEvalPython" in p

@@ -12,6 +12,8 @@ from contextlib import redirect_stdout
 import pytest
 
 from gdal_spark import queries as Q
+from gdal_spark.operators import lines as LN
+from gdal_spark.operators import poly_join as PJ
 
 SF = "/root/testdata/sf0.001"
 
@@ -72,6 +74,44 @@ def test_pip_join_one_python_node_over_coordinates(spark, how, first_match):
     assert [name for name, _ in nodes] == ["ArrowEvalPython"]
     udf_args = re.search(r"Arguments: \[\w+\(([^)]*)\)", nodes[0][1]).group(1)
     assert re.sub(r"#\d+L?", "", udf_args) == "lon, lat"
+
+
+_PAIR_JOINS = {
+    "poly_relate_join": lambda d: PJ.poly_relate_join(d.a, d.b),
+    "poly_de9im_join": lambda d: PJ.poly_de9im_join(d.a, d.b),
+    "layer_intersection_rect": lambda d: PJ.layer_intersection_rect(d.a, d.b),
+    "layer_overlay_poly": lambda d: PJ.layer_overlay_poly(d.a, d.c),
+    "line_poly_relate_join": lambda d: LN.line_poly_relate_join(d.lines, d.a),
+    "line_line_intersection_join": lambda d: LN.line_line_intersection_join(d.lines, d.grid),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIR_JOINS))
+def test_pair_join_one_python_node_over_geometries(spark, name):
+    """Every pair join refines its candidate pairs in exactly one Python
+    evaluation node, and only the two geometry columns cross the boundary —
+    ids stay in the JVM."""
+    import re
+    from types import SimpleNamespace
+
+    from gdal_spark.data import pages as P
+
+    d = SimpleNamespace(
+        a=P.polygons_df(spark), b=P.polygons_b_df(spark), c=P.polygons_c_df(spark),
+        lines=P.lines_df(spark), grid=P.gridlines_df(spark),
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        _PAIR_JOINS[name](d).explain("formatted")
+    lines = buf.getvalue().splitlines()
+    nodes = [
+        (ln.split()[1], lines[k + 2])  # "(n) Name" header, Input, Arguments
+        for k, ln in enumerate(lines)
+        if re.match(r"\(\d+\) \w*(Python|InPandas|InArrow)", ln)
+    ]
+    assert [node for node, _ in nodes] == ["ArrowEvalPython"]
+    udf_args = re.search(r"Arguments: \[\w+\(([^)]*)\)", nodes[0][1]).group(1)
+    assert re.sub(r"#\d+L?", "", udf_args) == "geom_a, geom_b"
 
 
 def test_join_agg_broadcasts_dims(spark):
@@ -200,7 +240,7 @@ def test_poly_relate_join_no_cartesian_no_distinct(spark):
     p = buf.getvalue()
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    assert "MapInPandas" in p
+    assert "ArrowEvalPython" in p
 
 
 def test_dissolve_single_shuffle(spark):
@@ -272,8 +312,8 @@ def test_pii_scrub_is_map_only(spark):
 
 def test_overlay_erase_kernel_is_map_only_stage(spark):
     """The geometric A-side erase streams map-only (B broadcast as a plain
-    python list): its MapInPandas must sit directly over the scan with no
-    Exchange between."""
+    python list): its ArrowEvalPython must sit directly over the scan with
+    no Exchange between."""
     from gdal_spark.data.pages import polygons_b_df, polygons_df
     from gdal_spark.operators import poly_join as PJ
     from gdal_spark.queries import _OVERLAY_B_IDS
@@ -291,7 +331,7 @@ def test_overlay_erase_kernel_is_map_only_stage(spark):
         out.explain("formatted")
     p = buf.getvalue()
     first_exchange = p.index("Exchange") if "Exchange" in p else 10 ** 9
-    assert p.index("MapInPandas") < first_exchange
+    assert p.index("ArrowEvalPython") < first_exchange
 
 
 def test_s2_encode_single_agg_shuffle(spark):

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.data.pages import polygons_b_df, polygons_df
+from gdal_spark.operators import lines as LN
 from gdal_spark.operators import poly_join as PJ
 from gdal_spark.spatial import geometry as G
 
@@ -242,3 +243,102 @@ class TestSubdivide:
 
         with _pt.raises(ValueError):
             subdivide(None, max_vertices=4)
+
+
+def _box_rows(spark, boxes):
+    """(poly_id, x0, y0, x1, y1) boxes → a polygon layer with envelopes."""
+    return spark.createDataFrame(
+        [(pid, [r.tolist() for r in rect(x0, y0, x1, y1)], x0, y0, x1, y1)
+         for pid, x0, y0, x1, y1 in boxes],
+        "poly_id long, rings array<array<array<double>>>, "
+        "xmin double, ymin double, xmax double, ymax double",
+    )
+
+
+@pytest.mark.parametrize("pole", [-1.0, 1.0])
+def test_pole_touching_envelopes_still_pair(spark, pole):
+    """A box reaching a pole and a box (and a line) inside it are one
+    candidate pair: the cell cover clamps latitudes to the Mercator limit
+    (at -90 the unclamped tile math is NULL and the pair was lost)."""
+    from gdal_spark.data.pages import LINE_SCHEMA
+
+    y0, y1 = sorted((80.0 * pole, 90.0 * pole))
+    a = _box_rows(spark, [(1, 10.0, y0, 20.0, y1)])
+    b = _box_rows(spark, [(2, 12.0, y0 + 2.0, 15.0, y1 - 2.0)])
+    rel = PJ.poly_relate_join(a, b).collect()
+    assert [(r["id_a"], r["id_b"], r["contains"]) for r in rel] == [(1, 2, True)]
+    inter = PJ.layer_intersection_rect(a, b).collect()
+    assert [(r["id_a"], r["id_b"], r["inter_area"]) for r in inter] == [(1, 2, 18.0)]
+    lines = spark.createDataFrame(
+        [(7, [[13.0, 85.0 * pole], [14.0, 84.0 * pole]])], LINE_SCHEMA)
+    lrel = LN.line_poly_relate_join(lines, a).collect()
+    assert [(r["id_a"], r["id_b"], r["within"]) for r in lrel] == [(7, 1, True)]
+
+
+def _with_null_geometry(df):
+    """``df`` plus a copy of its first row with id 999 and a NULL geometry
+    (``rings`` or ``coords``); the envelope columns (if any) stay non-NULL."""
+    id_col, geom_col = ("poly_id", "rings") if "rings" in df.columns else ("line_id", "coords")
+    extra = df.limit(1).withColumn(id_col, F.lit(999).cast("long")).withColumn(
+        geom_col, F.lit(None).cast(df.schema[geom_col].dataType))
+    return df.unionByName(extra)
+
+
+def _overlay_b(b):
+    from gdal_spark.queries import _OVERLAY_B_IDS
+
+    return b.filter(F.col("poly_id").isin(*_OVERLAY_B_IDS))
+
+
+_REFINE_CALLS = {
+    "poly_relate_join": lambda d: PJ.poly_relate_join(d.a, d.b),
+    "poly_de9im_join": lambda d: PJ.poly_de9im_join(d.a, d.b),
+    "clip_to_rect": lambda d: PJ.clip_to_rect(d.a, -180, -85, 180, 85),
+    "layer_intersection_rect": lambda d: PJ.layer_intersection_rect(d.a, _overlay_b(d.b)),
+    "layer_erase_area_rect": lambda d: PJ.layer_erase_area_rect(d.a, _overlay_b(d.b)),
+    "layer_erase_parts_rect": lambda d: PJ.layer_erase_parts_rect(d.a, _overlay_b(d.b)),
+    "layer_overlay_rect": lambda d: PJ.layer_overlay_rect(d.a, _overlay_b(d.b), "union"),
+    "layer_overlay_poly": lambda d: PJ.layer_overlay_poly(d.a, d.c),
+    "layer_erase_area_poly": lambda d: PJ.layer_erase_area_poly(d.a, d.c),
+    "line_poly_relate_join": lambda d: LN.line_poly_relate_join(d.lines, d.a),
+    "clip_lines_to_rect": lambda d: LN.clip_lines_to_rect(d.lines, -180, -85, 180, 85),
+    "line_line_intersection_join": lambda d: LN.line_line_intersection_join(d.lines, d.grid),
+    "line_substring": lambda d: LN.line_substring(d.lines, 0.2, 0.7),
+    "hausdorff_join": lambda d: LN.hausdorff_join(d.lines, d.grid),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REFINE_CALLS))
+def test_null_geometry_yields_no_rows(spark, name):
+    """A NULL geometry with a non-NULL envelope gives no output row (it
+    used to crash the Python worker): adding one to every geometry input
+    leaves the output unchanged."""
+    from types import SimpleNamespace
+
+    from gdal_spark.data.pages import gridlines_df, lines_df, polygons_c_df
+
+    plain = SimpleNamespace(
+        a=polygons_df(spark).filter(F.col("poly_id") % 5 == 0),
+        b=polygons_b_df(spark), c=polygons_c_df(spark),
+        lines=lines_df(spark).limit(8), grid=gridlines_df(spark),
+    )
+    nulled = SimpleNamespace(**{k: _with_null_geometry(df) for k, df in vars(plain).items()})
+    want = sorted(map(tuple, _REFINE_CALLS[name](plain).collect()))
+    got = sorted(map(tuple, _REFINE_CALLS[name](nulled).collect()))
+    assert want and got == want
+
+
+def test_point_line_distance_non_finite_point_has_no_nearest_line(spark):
+    """NULL, NaN and ±inf coordinates give NULL (line_id, seg_idx, dist,
+    cx, cy); a NULL line in the line layer is skipped."""
+    from gdal_spark.data.pages import LINE_SCHEMA
+
+    lines = spark.createDataFrame(
+        [(1, [[0.0, 0.0], [10.0, 0.0]]), (2, None)], LINE_SCHEMA)
+    pts = spark.createDataFrame(
+        [(1, 3.0, 4.0), (2, None, 1.0), (3, float("nan"), 1.0), (4, 1.0, float("inf"))],
+        "o_orderkey long, lon double, lat double",
+    )
+    out = LN.point_line_distance_join(pts, lines, return_point=True)
+    rows = {r[0]: tuple(r)[1:] for r in out.collect()}
+    assert rows == {1: (1, 0, 4.0, 3.0, 0.0), **{k: (None,) * 5 for k in (2, 3, 4)}}
