@@ -257,9 +257,12 @@ def point_line_distance_join(
             segs.append(e[j])
             ids.append(int(r[line_id]))
             sidx.append(j)
-    seg_arr = np.asarray(segs)          # (S, 2, 2)
+    seg_arr = np.asarray(segs, dtype=np.float64).reshape(-1, 2, 2)  # (S, 2, 2)
     id_arr = np.asarray(ids, dtype=np.int64)
     sx_arr = np.asarray(sidx, dtype=np.int64)
+    no_lines = seg_arr.shape[0] == 0
+    if no_lines:  # one dummy segment keeps the kernel's shapes; every row is NULL
+        seg_arr, id_arr, sx_arr = np.zeros((1, 2, 2)), np.zeros(1, np.int64), np.zeros(1, np.int64)
     spark = points.sparkSession
     b = spark.sparkContext.broadcast((seg_arr, id_arr, sx_arr))
     fields = f"{line_id} long, seg_idx long, dist double"
@@ -288,7 +291,7 @@ def point_line_distance_join(
         cols = [ia[k], xa[k], np.sqrt(d2[rows, k])]
         if return_point:
             cols += [qx[rows, k], qy[rows, k]]
-        bad = ~(np.isfinite(px[:, 0]) & np.isfinite(py[:, 0]))
+        bad = ~(np.isfinite(px[:, 0]) & np.isfinite(py[:, 0])) | no_lines
         return pa.StructArray.from_arrays(
             [pa.array(c, mask=bad) for c in cols], names=rtype.names)
 
@@ -320,6 +323,9 @@ def line_substring(
         dx = arr[1:, 0] - arr[:-1, 0]
         dy = arr[1:, 1] - arr[:-1, 1]
         sl = np.floor(np.sqrt(dx * dx + dy * dy) * 1e6 + 0.5).astype(np.int64)
+        nz = np.flatnonzero(sl)
+        if not nz.size:  # zero length: both cuts at the first vertex
+            return [(2, arr[0, 0], arr[0, 1], arr[0, 0], arr[0, 1], 0)]
         c1 = np.cumsum(sl)
         c0 = c1 - sl
         total = int(c1[-1])
@@ -327,7 +333,8 @@ def line_substring(
         d1 = int(np.floor(f1 * total))
 
         def cut(d):
-            k = min(int(np.searchsorted(c1, d, side="right")), sl.shape[0] - 1)
+            # past the end, cut the last segment of nonzero length
+            k = min(int(np.searchsorted(c1, d, side="right")), int(nz[-1]))
             t = (d - float(c0[k])) / float(sl[k])
             return arr[k, 0] + t * dx[k], arr[k, 1] + t * dy[k]
 
@@ -357,8 +364,10 @@ def hausdorff_join(
     (|verts|,|segs|) point-segment matrix each direction; squared-distance
     cascade with a single final sqrt.  Output: (id_a, id_b, hd)."""
     recs = b.select(id_b, coords_b).dropna().orderBy(id_b).collect()
+    # a line with no vertices is skipped, as a NULL line is
     bverts = [
-        (int(r[id_b]), np.asarray(r[coords_b], dtype=np.float64)) for r in recs
+        (int(r[id_b]), np.asarray(r[coords_b], dtype=np.float64).reshape(-1, 2))
+        for r in recs if len(r[coords_b])
     ]
     spark = a.sparkSession
     bb = spark.sparkContext.broadcast(bverts)
@@ -366,7 +375,10 @@ def hausdorff_join(
     def pt_seg_min_d2(pts: np.ndarray, seg: np.ndarray) -> np.ndarray:
         """min over segments of point->segment squared distance; pts (n,2),
         seg (m,2) vertices of a polyline (m-1 segments).  Expression order
-        mirrors the SQL oracle exactly for cross-engine FP parity."""
+        mirrors the SQL oracle exactly for cross-engine FP parity.  A
+        single vertex is one zero-length segment."""
+        if seg.shape[0] == 1:
+            seg = np.repeat(seg, 2, axis=0)
         ax, ay = seg[:-1, 0], seg[:-1, 1]
         dx = seg[1:, 0] - seg[:-1, 0]
         dy = seg[1:, 1] - seg[:-1, 1]
@@ -383,7 +395,9 @@ def hausdorff_join(
         return (ex * ex + ey * ey).min(axis=1)
 
     def hd(coords):
-        av = np.asarray(coords, dtype=np.float64)
+        av = np.asarray(coords, dtype=np.float64).reshape(-1, 2)
+        if not av.shape[0]:
+            return []
         return [
             (bid, float(np.sqrt(max(
                 float(pt_seg_min_d2(av, bv).max()),

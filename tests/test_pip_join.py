@@ -15,6 +15,8 @@ from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gdal_spark.data import pages as P
@@ -383,33 +385,107 @@ def test_multipolygon_pip_both_strategies(spark):
             strategy, how, first_match)
 
 
-def test_strtree_blocks_cover_all_entries(spark):
-    """STR bulk load: every part appears in exactly one block; block bboxes
-    bound their members; probe equals a naive full-scan reference."""
-    import numpy as np
+# ---------------------------------------------------------------------------
+# The index kernel against G.points_in_polygon run on every part
+# ---------------------------------------------------------------------------
 
-    from gdal_spark.data.pages import polygons_df
-    from gdal_spark.operators.pip_join import build_polygon_index
-    from gdal_spark.spatial import geometry as G
+def full_scan(parts, px, py) -> set:
+    """Naive reference: for every ``(poly_id, box, rings)`` part, the box
+    test, then ``G.points_in_polygon`` on its rings; (point, poly_id) pairs."""
+    pairs = set()
+    for pid, (xmin, ymin, xmax, ymax), rings in parts:
+        box = np.flatnonzero((px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax))
+        pairs |= {(int(i), int(pid)) for i in box[G.points_in_polygon(px[box], py[box], rings)]}
+    return pairs
 
-    idx = build_polygon_index(polygons_df(spark))
-    idx._build_str_blocks()
-    seen = np.concatenate([b[0] for b in idx._str_blocks])
-    assert sorted(seen.tolist()) == list(range(idx.poly_ids.shape[0]))
-    for idxs, (x0, y0, x1, y1) in idx._str_blocks:
-        bb = idx.boxes[idxs]
-        assert x0 <= bb[:, 0].min() and x1 >= bb[:, 2].max()
-        assert y0 <= bb[:, 1].min() and y1 >= bb[:, 3].max()
 
+def assert_kernel_matches(recs, px, py):
+    """``probe`` in both modes and ``contains`` on every (point, feature)
+    give exactly the full-scan pairs, and so do the index's own
+    ``rings_list``."""
+    idx = PJ.PolygonIndex.from_rows(recs)
+    want = full_scan([(r["poly_id"], G.rings_envelope(part), part)
+                      for r in recs for part in PJ._feature_parts(r["rings"])], px, py)
+    pt, poly = idx.probe(px, py, first_match=False)
+    assert list(zip(pt.tolist(), poly.tolist())) == sorted(want)
+    pt, poly = idx.probe(px, py, first_match=True)
+    best = {}
+    for i, pid in want:
+        best[i] = min(best.get(i, pid), pid)
+    assert list(zip(pt.tolist(), poly.tolist())) == sorted(best.items())
+    ids = np.array(sorted({r["poly_id"] for r in recs}), dtype=np.int64)
+    rows = np.repeat(np.arange(px.shape[0]), ids.shape[0])
+    fids = np.tile(ids, px.shape[0])
+    got = idx.contains(px[rows], py[rows], fids)
+    assert {(int(i), int(f)) for i, f in zip(rows[got], fids[got])} == want
+    assert full_scan(zip(idx.poly_ids, idx.boxes, idx.rings_list), px, py) == want
+
+
+def test_probe_matches_full_scan_on_fixture():
+    """The 75-part fixture, 5000 seeded points over its window."""
     rng = np.random.default_rng(3)
     px = rng.uniform(-20, 50, 5000)
     py = rng.uniform(30, 60, 5000)
-    got_pt, got_poly = idx.probe(px, py, first_match=True)
-    # naive reference: full scan + min poly id
-    ref = {}
-    for k in range(idx.poly_ids.shape[0]):
-        inside = G.points_in_polygon(px, py, idx.rings_list[k])
-        for i in np.nonzero(inside)[0]:
-            pid = int(idx.poly_ids[k])
-            ref[i] = min(ref.get(i, pid), pid)
-    assert dict(zip(got_pt.tolist(), got_poly.tolist())) == ref
+    assert_kernel_matches(P.polygon_records(), px, py)
+
+
+def test_probe_on_empty_one_part_and_overlapping_layers():
+    square = [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]]
+    shifted = [[x + 1.0, y + 1.0] for x, y in square]
+    g = np.arange(-1.0, 3.5, 0.5)
+    px, py = (a.ravel() for a in np.meshgrid(g, g))
+    for recs in ([], [{"poly_id": 1, "rings": [square]}],
+                 [{"poly_id": 7, "rings": [[square], [shifted]]},
+                  {"poly_id": 3, "rings": [shifted, square]}]):
+        assert_kernel_matches(recs, px, py)
+
+
+@st.composite
+def layer_and_points(draw):
+    """A small layer on a lattice (so points can sit exactly on vertices
+    and edges), with short, unclosed and repeated-vertex rings, holes
+    anywhere and overlapping MultiPolygon parts; and points on vertices,
+    edge midpoints, lattice nodes, the grid's cell and band boundaries and
+    its outer edge, plus NaN and ±inf."""
+    step = draw(st.sampled_from([1.0, 0.5, 0.1, 1e-3, 7.0]))
+    x0, y0 = draw(st.sampled_from([(0.0, 0.0), (100.0, 10.0), (-170.0, -45.0)]))
+    node = st.tuples(st.integers(-4, 4), st.integers(-4, 4))
+
+    def ring():
+        pts = draw(st.lists(node, min_size=1, max_size=7))
+        if draw(st.booleans()):
+            pts.insert(draw(st.integers(0, len(pts) - 1)), pts[0])  # repeated vertex
+        if draw(st.integers(0, 4)):
+            pts.append(pts[0])  # closed, mostly
+        return [[x0 + i * step, y0 + j * step] for i, j in pts]
+
+    def polygon():
+        return [ring() for _ in range(draw(st.integers(1, 3)))]
+
+    recs = []
+    for pid in draw(st.lists(st.integers(0, 40), unique=True, max_size=5)):
+        rings = polygon() if draw(st.booleans()) else [
+            polygon() for _ in range(draw(st.integers(1, 3)))]
+        recs.append({"poly_id": pid, "rings": rings})
+
+    verts = np.array([v for r in recs for part in PJ._feature_parts(r["rings"])
+                      for ring_ in part for v in ring_] or [[x0, y0]])
+    mids = (verts[1:] + verts[:-1]) / 2.0
+    nodes = np.array(draw(st.lists(node, max_size=20)) or [(0, 0)]) * (step / 2.0) + (x0, y0)
+    idx = PJ.PolygonIndex.from_rows(recs)
+    (gx, sx, nx), (gy, sy, ny) = idx._grid
+    bx, by = gx + np.arange(nx + 1) / sx, gy + np.arange(ny + 1) / sy
+    on_grid = np.concatenate([
+        np.stack(np.broadcast_arrays(bx[:, None], verts[None, :8, 1]), -1).reshape(-1, 2),
+        np.stack(np.broadcast_arrays(verts[None, :8, 0], by[:, None]), -1).reshape(-1, 2),
+    ])
+    odd = [float("nan"), float("inf"), -float("inf"), x0]
+    special = np.array([(a, b) for a in odd for b in odd + [y0]])
+    pts = np.concatenate([verts, mids, nodes, on_grid, special])
+    return recs, pts[:, 0].copy(), pts[:, 1].copy()
+
+
+@settings(max_examples=150, deadline=None)
+@given(layer_and_points())
+def test_kernel_matches_points_in_polygon(case):
+    assert_kernel_matches(*case)

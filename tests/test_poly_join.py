@@ -342,3 +342,40 @@ def test_point_line_distance_non_finite_point_has_no_nearest_line(spark):
     out = LN.point_line_distance_join(pts, lines, return_point=True)
     rows = {r[0]: tuple(r)[1:] for r in out.collect()}
     assert rows == {1: (1, 0, 4.0, 3.0, 0.0), **{k: (None,) * 5 for k in (2, 3, 4)}}
+
+
+@pytest.mark.parametrize("layer", [[], [(2, None)]], ids=["empty", "all_null"])
+def test_point_line_distance_without_lines_is_null(spark, layer):
+    """An empty or all-NULL line layer gives every point NULL (line_id,
+    seg_idx, dist, cx, cy)."""
+    from gdal_spark.data.pages import LINE_SCHEMA
+
+    lines = spark.createDataFrame(layer, LINE_SCHEMA)
+    pts = spark.createDataFrame([(1, 3.0, 4.0), (2, None, 1.0)], "o_orderkey long, lon double, lat double")
+    out = LN.point_line_distance_join(pts, lines, return_point=True)
+    assert {r[0]: tuple(r)[1:] for r in out.collect()} == {k: (None,) * 5 for k in (1, 2)}
+
+
+def test_hausdorff_single_vertex_line_is_a_point(spark):
+    """A single-vertex line is one zero-length segment on either side; a
+    line with no vertices yields no row, as a NULL line does."""
+    from gdal_spark.data.pages import LINE_SCHEMA
+
+    a = spark.createDataFrame(
+        [(1, [[0.0, 0.0]]), (2, [[0.0, 3.0], [4.0, 3.0]]), (3, [])], LINE_SCHEMA)
+    b = spark.createDataFrame(
+        [(10, [[0.0, 0.0], [0.0, 4.0]]), (11, [[4.0, 0.0]]), (12, [])], LINE_SCHEMA)
+    got = {(r["id_a"], r["id_b"]): r["hd"] for r in LN.hausdorff_join(a, b).collect()}
+    assert got == {(1, 10): 4.0, (1, 11): 4.0, (2, 10): 4.0, (2, 11): 5.0}
+
+
+def test_line_substring_of_zero_length_line(spark):
+    """A line whose segments all have zero length cuts at its first vertex
+    with sub_len_micro 0; a trailing zero-length segment does not stop a
+    cut at the very end."""
+    from gdal_spark.data.pages import LINE_SCHEMA
+
+    lines = spark.createDataFrame(
+        [(1, [[1.0, 1.0], [1.0, 1.0]]), (2, [[0.0, 0.0], [2.0, 0.0], [2.0, 0.0]])], LINE_SCHEMA)
+    got = {r[0]: tuple(r)[1:] for r in LN.line_substring(lines, 0.5, 1.0).collect()}
+    assert got == {1: (2, 1.0, 1.0, 1.0, 1.0, 0), 2: (2, 1.0, 0.0, 2.0, 0.0, 1_000_000)}
