@@ -36,137 +36,13 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Queries the driver gate already stamped green in earlier rounds
-# (CORRECTNESS_r01/r02 share one 50-key set; CORRECTNESS_r03 stamped a
-# disjoint 50).  The gate caps at ~50 entries per round, so ``queries()``
-# lists the NEVER-gated registrations FIRST: each round stamps ~50 more
-# until the registry is fully driver-verified.  Every query remains
-# verified locally each session against the same DuckDB oracles
-# (tests/test_entry_correctness.py runs all of them at sf0.001 and sf0.01).
-_GATED_ROUNDS = frozenset({
-    "tile_assign", "tile_rollup", "pip_broadcast", "pip_cells_salted",
-    "pip_zonal_stats", "knn_exact", "knn_cells", "raster_sample_nearest",
-    "raster_sample_bilinear", "raster_overview_mean", "tile_bounds",
-    "sql_summary", "sql_distinct", "sql_orderby_limit", "sql_like_ilike",
-    "sql_first_match_join", "sql_union_all", "sql_predicates",
-    "sql_scalar_funcs", "sql_count_star", "sql_json_get", "sql_join_agg",
-    "sql_dissolve", "dedup_exact", "text_quality", "text_token_counts",
-    "text_lang_id", "text_fingerprint", "dedup_minhash_sig",
-    "dedup_minhash_pairs", "dedup_simhash", "embed_cosine_topk",
-    "embed_ann_lsh", "embed_cosine_pairs", "multimodal_meta",
-    "events_tile_windows", "dedup_jaccard_verify", "sort_quadkey",
-    "special_fields", "grid_idw", "wkb_roundtrip", "window_analytics",
-    "sessionize", "zonal_median_mode", "geom_measures", "geom_centroid",
-    "rasterize_points", "raster_sample_cubic", "geom_wkt", "knn_adaptive",
-    # --- round 3 (CORRECTNESS_r03, all green, disjoint from r01/r02) ---
-    "delaunay_triangulate", "curve_linearize", "utm_project", "knn_cells_z7",
-    "hilbert_sort", "raster_overview_nearest", "poly_predicates", "clip_rect",
-    "dissolve_union", "tile_render_png", "tile_render_base",
-    "tile_render_bilinear", "pip_multipolygon", "geom_length",
-    "geom_point_distance", "grid_data_metrics", "grid_nearest",
-    "raster_overview_rms", "raster_overview_mode", "raster_overview_median",
-    "grid_moving_avg", "overlay_intersection", "overlay_erase",
-    "dissolve_noded", "overlay_union", "overlay_symdiff", "overlay_identity",
-    "overlay_update", "pip_cells_compact", "embed_ann_ivf",
-    "sql_in_between_null", "tpch_q1", "tpch_q6", "geom_length_geodesic",
-    "raster_sample_lanczos", "raster_pyramid_levels", "zonal_stats_ext",
-    "dedup_clusters", "raster_sample_bilinear_nodata", "text_repetition",
-    "source_stats", "events_asof_join", "range_price_join",
-    "sample_stratified", "text_chunking", "polygonize_regions",
-    "dem_slope_hillshade", "contour_cells", "dem_viewshed",
-    "raster_proximity",
-    # --- round 4 (CORRECTNESS_r04, all 50 green, disjoint from r01-r03) ---
-    "warp_reproject_nearest", "warp_reproject_inverse", "warp_cutline",
-    "geom_relate_de9im", "line_poly_predicates", "line_line_intersections",
-    "line_hausdorff", "point_line_distance", "st_line_merge",
-    "geoparquet_roundtrip", "geoparquet_points_roundtrip",
-    "geotiff_cog_overviews", "warc_extract_roundtrip", "st_cluster_dbscan",
-    "st_cluster_kmeans", "coverage_simplify", "raster_sieve",
-    "raster_fillnodata", "raster_pansharpen", "rasterize_lines_bresenham",
-    "rasterize_polygons", "s2_cell_encode", "s2_parent_rollup",
-    "embed_pq_encode", "embed_pq_adc", "embed_kmeans_lloyd",
-    "text_c4_filters", "text_gopher_rules", "text_line_dedup",
-    "text_substring_dup", "text_bpe_train", "corpus_decontaminate_bloom",
-    "url_normalize", "sql_ansi_portability", "tpch_q3", "tpch_q10",
-    "contour_polygons", "voronoi_assign", "geom_make_valid",
-    "geom_buffer_concave", "wrapdateline", "laea_project", "warp_gcp_poly",
-    "warp_tps_transform", "warp_rpc_transform", "snapshot_merge_upsert",
-    "lineage_metrics", "streaming_window_counts",
-    "streaming_session_windows", "web_pagerank",
-})
-
-
-# Round-5 stamping priority (final round — no later rotation exists, so a
-# gate never stamped now stays local-only forever).  Two goals, in order:
-#   1. ROW COVERAGE: every SURVEY §2 / LLM-pipeline-table row that has no
-#      driver stamp yet gets at least one representative key FIRST (format
-#      sinks, GDALG pipeline, DDL + hive-partition sinks, general overlay,
-#      GeoLoc/approx transformers, exact geodesics, Z-geometry, dialect
-#      tail, band-math/quantize, Zarr/netCDF multidim, JPEG tiles,
-#      ogr2ogr facade, LM/DSIR/SemDeDup/AUC/audio corpus ops, new CRS
-#      families).
-#   2. FAMILY DEPTH (VERDICT r4 next-steps #1): snapshot/Iceberg,
-#      streaming completion, format roundtrips, TPC-H Q2-Q22, the warp
-#      kernel menu, sketches, graph + tokenizer tails.
-# Remaining never-gated keys follow in registration order, stamped keys
-# last.
-_PRIORITY_R5 = (
-    # --- 1. one representative per never-stamped §2 / LLM-table row ---
-    "geojson_roundtrip", "shapefile_polygons_roundtrip", "gpkg_roundtrip",
-    "pipeline_gdalg", "ddl_ctas_view", "hive_partition_prune",
-    "overlay_poly_clip", "warp_geoloc_inverse", "warp_approx_transform",
-    "geodesic_polygon_area_karney", "geodesic_inverse_karney",
-    "geom_distance3d", "st_geohash", "raster_rgb2pct", "raster_dither_bayer",
-    "zarr_mdim_roundtrip", "netcdf_mdim_roundtrip", "mbtiles_jpeg_pyramid",
-    "ogr2ogr_convert", "text_unigram_lm", "corpus_dsir_select",
-    "embed_semdedup", "model_auc_rank", "audio_resample",
-    "lcc_project", "utm_any_zone", "warp_rpc_dem",
-    "hex_cell_encode", "hex_parent_rollup", "corpus_curation_capstone",
-    # --- 2. verdict-#1 families ---
-    "table_time_travel", "snapshot_merge_delete",
-    "snapshot_schema_evolution", "snapshot_compact",
-    "streaming_dedup", "streaming_stream_join", "streaming_running_state",
-    "shapefile_roundtrip", "gpkg_points_roundtrip", "flatgeobuf_bbox_scan",
-    "mvt_roundtrip", "geotiff_roundtrip", "mbtiles_pyramid",
-    "tpch_q2", "tpch_q4", "tpch_q5", "tpch_q7", "tpch_q8", "tpch_q9",
-    "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16",
-    "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-    "streaming_stream_join_outer", "streaming_static_join",
-    "kml_roundtrip", "gml_roundtrip", "gpx_roundtrip",
-    "csv_wkt_roundtrip", "arrow_ipc_roundtrip",
-    "warp_utm_grid", "warp_reproject_bilinear", "warp_reproject_cubic",
-    "warp_reproject_average", "warp_reproject_sum", "warp_reproject_rms",
-    "warp_reproject_mode",
-    "sketch_hll_distinct", "sketch_cms_heavy_hitters",
-    "sketch_hist_quantiles",
-    "web_hits", "web_triangles", "web_communities_lp",
-    "network_shortest_path",
-    "text_bpe_encode", "text_bm25_topk", "text_bigram_kn",
-    "text_inverted_index", "text_winnowing",
-    "embed_ann_ivfpq", "embed_ann_recall", "dedup_minhash_calibration",
-    "warp_rpc_inverse", "warp_geoloc_transform", "coverage_check",
-    "sql_pivot", "sql_unpivot", "sql_group_by_all",
-)
-
-
-def _ungated_first(d: dict) -> dict:
-    out = {k: d[k] for k in _PRIORITY_R5 if k in d and k not in _GATED_ROUNDS}
-    out.update(
-        (k, v) for k, v in d.items()
-        if k not in _GATED_ROUNDS and k not in out
-    )
-    out.update((k, v) for k, v in d.items() if k in _GATED_ROUNDS)
-    return out
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 — entries the
-    driver gate has never run (rounds 1-3 stamped 100 distinct keys)
-    are listed first so a capped gate rotates onto them this round."""
-    return _ungated_first(dict(Q.QUERIES))
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return dict(Q.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twins of ``queries()`` (same column names,
     same rounding, md5-based hashing shared across engines)."""
-    return _ungated_first(dict(Q.ORACLES))
+    return dict(Q.ORACLES)

@@ -10,8 +10,10 @@ Design stance (SURVEY.md §7):
   * geometry  = WKB BinaryType + exploded ring arrays + bbox struct columns
   * cell keys = XYZ/WebMercator tiles + quadkeys (exact gdal2tiles math)
   * kernels   = numpy over Arrow batches, never per-row Python
-  * joins     = broadcast bbox-grid (small dim) or cell equi-join (large dim)
-  * skew      = salted repartition of hot cells
+  * joins     = PIP: one broadcast map-only index probe; polygon pairs and
+                kNN: cell-key equi-joins
+  * skew      = the PIP plan has no exchange, so no hot cell to salt; AQE
+                skew-join splitting handles the shuffled cell-key joins
 """
 
 from gdal_spark._zipcache import install as _install_zipcache

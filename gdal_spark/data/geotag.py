@@ -13,7 +13,7 @@ doubles:
 domain ±85.05° — gdal2tiles.py:423-431).
 
 Skew rule (FIXTURES.md §1): every 100th row is teleported to one hot cell
-(Paris, 2.35/48.85 + <1e-3° jitter) to exercise salting at scale.
+(Paris, 2.35/48.85 + <1e-3° jitter) to exercise skew handling at scale.
 """
 
 from __future__ import annotations

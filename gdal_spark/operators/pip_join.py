@@ -7,48 +7,32 @@ exact predicate) with the exact predicate being strict-interior ray casting
 prepared-geometry reuse pattern of ogrgeometry.cpp:7530-7665 (build the
 polygon-side index ONCE, probe many points).
 
-Spark-first execution, three physical strategies:
+Spark-first execution, one physical plan: the polygon side is a small
+dimension (thousands of polygons), so its ring edges are packed into flat
+numpy arrays ONCE on the driver and broadcast, and each point's matching
+poly_ids are one Arrow column UDF over ``(lon, lat)`` only, exploded in the
+JVM. ZERO shuffle: the plan is scan → ArrowEvalPython → Generate →
+(anything downstream); pass-through columns never leave the JVM, and with
+no exchange there is no hot cell to salt. At 100 TB of points this is a
+map-only stage that scales with executors — the index plays GDAL's
+prepared geometries, its grid of part boxes the quadtree, and its per-row
+edge bands the raster intervals. A partitioned plan would pay only for a
+layer too large to broadcast; it would have to move rings through the
+shuffle, and is not built.
 
-1. ``pip_join`` (broadcast) — the polygon side is a small dimension
-   (thousands of polygons): pack its ring edges into flat numpy arrays
-   ONCE on the driver, broadcast, and compute each point's matching
-   poly_ids as one Arrow column UDF over ``(lon, lat)`` only, exploded in
-   the JVM. ZERO shuffle: the plan is scan → ArrowEvalPython → Generate →
-   (anything downstream); pass-through columns never leave the JVM. At
-   100 TB of points this is a map-only stage that scales with executors —
-   the index plays GDAL's prepared geometries, its grid of part boxes the
-   quadtree, and its per-row edge bands the raster intervals.
+The ``PolygonIndex`` is built and broadcast once per polygon DataFrame
+OBJECT, at the first ``pip_join`` on it, and every later call on that
+object (any mode) reuses the same broadcast. Python workers that Spark
+reuses across jobs therefore keep the unpickled index. This only pays when
+a caller passes the same polygons DataFrame object to more than one call; a
+fresh ``polygons_df(spark)`` per call builds a fresh index.
 
-2. ``pip_join_cells`` (shuffle) — cover every polygon part's envelope
-   with WebMercator tiles at a chosen zoom (the rasterize-lite of
-   llrasterize.cpp:58 semantics) in the calling process, from the same
-   index the exact test uses, and equi-join on the cell key with both sides
-   shuffled. Hot cells (dense geotag clusters) are salted: the point side
-   gets a deterministic salt, the polygon-cover side is replicated per
-   salt — a standard two-sided skew fix the reference never needed
-   single-node (SURVEY.md §4 "salting: absent").
-
-3. ``pip_join_cells_compact`` (broadcast cover) — quadtree-compacted cell
-   covers, built on the driver and broadcast; each point explodes to its
-   ancestor cell at every level.
-
-All three end in the same exact ray-cast kernel, so results are identical;
-only the physical plan differs.
-
-All three also take their ``PolygonIndex`` from one place: it is built and
-broadcast once per polygon DataFrame OBJECT, at the first PIP call on it,
-and every later call on that object (any strategy, any mode) reuses the
-same broadcast. Python workers that Spark reuses across jobs therefore keep
-the unpickled index. This only pays when a caller passes
-the same polygons DataFrame object to more than one call; a fresh
-``polygons_df(spark)`` per call builds a fresh index, as before.
-
-The index is a snapshot of the polygons at the first PIP call on that
-object and is never refreshed, even after Spark writes to its source
-(``INSERT INTO`` a table read with ``spark.table``, an overwritten path).
-Read the source again for a new DataFrame object, and so a new index. The
-entry goes away when its DataFrame is garbage-collected; Spark's
-ContextCleaner then removes the broadcast.
+The index is a snapshot of the polygons at the first call on that object
+and is never refreshed, even after Spark writes to its source (``INSERT
+INTO`` a table read with ``spark.table``, an overwritten path). Read the
+source again for a new DataFrame object, and so a new index. The entry goes
+away when its DataFrame is garbage-collected; Spark's ContextCleaner then
+removes the broadcast.
 """
 
 from __future__ import annotations
@@ -63,7 +47,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_spark.spatial import geometry as G
-from gdal_spark.spatial import tilemath as TM
 
 
 # ---------------------------------------------------------------------------
@@ -86,8 +69,8 @@ def _feature_parts(rings_obj) -> list:
 
 
 # Grid cell side as a fraction of the layer's median part height; the most
-# cells the grid may have (its CSR offsets stay under 1 MB); points (or rows)
-# per kernel pass, which bounds the (pair, edge) temporaries
+# cells the grid may have (its CSR offsets stay under 1 MB); points per
+# kernel pass, which bounds the (pair, edge) temporaries
 _CELL_FRAC, _MAX_CELLS, _CHUNK = 0.25, 1 << 18, 8192
 
 
@@ -265,22 +248,10 @@ class PolygonIndex:
             keep[1:] |= poly[1:] != poly[:-1]
         return pt[keep], poly[keep]
 
-    def contains(self, px: np.ndarray, py: np.ndarray, poly_id: np.ndarray) -> np.ndarray:
-        """Row-wise exact test: is point ``i`` inside feature ``poly_id[i]``
-        (any of its parts)? A feature's parts are one run of the sorted
-        ``poly_ids``, found by binary search."""
-        out = np.zeros(px.shape[0], dtype=bool)
-        lo, hi = (np.searchsorted(self.poly_ids, poly_id, side=s) for s in ("left", "right"))
-        for s in range(0, px.shape[0], _CHUNK):
-            row, part = _ranges(lo[s:s + _CHUNK], hi[s:s + _CHUNK])
-            hit = self._inside(px[s:s + _CHUNK], py[s:s + _CHUNK], row, part)
-            out[row[hit] + s] = True
-        return out
-
 
 def build_polygon_index(polygons: DataFrame) -> PolygonIndex:
-    """Collect ``polygons`` and build a fresh index (no caching; the PIP
-    joins go through ``_index_broadcast``)."""
+    """Collect ``polygons`` and build a fresh index (no caching;
+    ``pip_join`` goes through ``_index_broadcast``)."""
     rows = polygons.select("poly_id", "rings").collect()
     return PolygonIndex.from_rows(rows)
 
@@ -316,7 +287,7 @@ def _numpy(a: pa.Array) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Strategy 1: broadcast map-only join
+# The join
 # ---------------------------------------------------------------------------
 
 def pip_join(
@@ -332,11 +303,8 @@ def pip_join(
     ``how='left'`` keeps unmatched points with null poly_id (GDAL LEFT JOIN);
     ``first_match=True`` keeps only the lowest poly_id per point (GDAL's
     first-match 1-row join semantics, ogr_gensql.cpp:1516-1546 — FID order).
-    Any other ``how`` raises ``ValueError``.
-
-    The polygon index is a snapshot taken at the first PIP call on this
-    ``polygons`` object and is never refreshed, even after Spark writes to
-    its source; read the source again to see the writes.
+    Any other ``how`` raises ``ValueError``. ``polygons`` is read once per
+    DataFrame object (see the module docstring).
     """
     if how not in ("inner", "left"):
         raise ValueError(f"pip_join: how must be 'inner' or 'left', got {how!r}")
@@ -355,173 +323,3 @@ def pip_join(
     ids = pip_poly_ids(F.col(lon).cast("double"), F.col(lat).cast("double"))
     return points.withColumn("poly_id", explode(ids))
 
-
-# ---------------------------------------------------------------------------
-# Strategies 2 and 3: cell-key equi-joins + exact filter
-# ---------------------------------------------------------------------------
-
-def _envelope_cells(box, zoom: int) -> list:
-    """XYZ tiles at ``zoom`` intersecting an envelope (xmin, ymin, xmax,
-    ymax), latitudes clamped to the Mercator limit. Uses the same lon/lat →
-    tile math as the point side, so edges agree."""
-    xmin, ymin, xmax, ymax = box
-    (tx0, ty0), (tx1, ty1) = (
-        TM.py_lonlat_to_tile(x, y, zoom)
-        for x, y in ((xmin, min(ymax, TM.MAX_LAT)), (xmax, max(ymin, -TM.MAX_LAT)))
-    )
-    return [(tx, ty) for ty in range(ty0, ty1 + 1) for tx in range(tx0, tx1 + 1)]
-
-
-def _exact_matches(
-    candidates: DataFrame,
-    bc: Broadcast,
-    point_cols: list,
-    lon: str,
-    lat: str,
-    first_match: bool,
-) -> DataFrame:
-    """Keep the candidate (point, poly_id) pairs whose point is inside the
-    feature, then reduce to min(poly_id) per point if ``first_match``.
-
-    Rings come from the broadcast index ``bc`` (the prepared-geometry reuse
-    pattern, ogrgeometry.cpp:7530-7665), NOT through the shuffle — the join
-    only ever moves (point cols, poly_id, cell key). The first-match
-    reduction keys on the compact surrogate id (``_pip_rid``) rather than
-    the full point row: the aggregate shuffle moves an 8-byte key; wide
-    payload columns travel as values only and collapse map-side (partial
-    aggregation) before the exchange."""
-
-    @F.arrow_udf("boolean")
-    def contains(px: pa.Array, py: pa.Array, poly_id: pa.Array) -> pa.Array:
-        return pa.array(bc.value.contains(_numpy(px), _numpy(py), _numpy(poly_id)))
-
-    out = candidates.filter(
-        contains(F.col(lon).cast("double"), F.col(lat).cast("double"), F.col("poly_id"))
-    )
-    if first_match:
-        aggs = [F.first(c).alias(c) for c in point_cols]
-        aggs.append(F.min("poly_id").alias("poly_id"))
-        out = out.groupBy("_pip_rid").agg(*aggs)
-    return out.select(*point_cols, "poly_id")
-
-
-def _cover_cells(index: PolygonIndex, zoom: int) -> dict[int, set]:
-    """poly_id -> the XYZ tiles at ``zoom`` that the envelope of any of its
-    parts intersects: the cell cover both cell strategies join on (the
-    prefilter contract; the exact test runs after the join). Built in the
-    calling process from the broadcast index, so it agrees with the rings the exact
-    test uses, and cover rows carry only (poly_id, cell) — the shuffle
-    never moves ring geometry."""
-    cells: dict[int, set] = {}
-    for pid, box in zip(index.poly_ids, index.boxes):
-        cells.setdefault(int(pid), set()).update(_envelope_cells(box, zoom))
-    return cells
-
-
-def pip_join_cells(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    zoom: int = 7,
-    salt: int = 0,
-    first_match: bool = False,
-) -> DataFrame:
-    """Cell-cover equi-join PIP + exact kernel.
-
-    Both sides shuffle on the cell key and the (poly_id, cell) cover is
-    the hash-join build side (``pip_join_cells_compact`` broadcasts its
-    cover instead). ``salt`` > 1 replicates each cover row ``salt`` times
-    and spreads points deterministically across replicas, shrinking a hot
-    cell's shuffle partition by the salt factor.
-
-    The polygon index, and the cover built from it, is a snapshot taken at
-    the first PIP call on this ``polygons`` object and is never refreshed,
-    even after Spark writes to its source; read the source again to see the
-    writes.
-    """
-    pts = points
-    if first_match:
-        # Compact surrogate key for the first-match reduction: grouping on
-        # every point column would shuffle-key the full row (text/html-width
-        # columns at 100 TB) — a scale-killer. A 64-bit id keeps the
-        # aggregate key 8 bytes; the payload columns ride as first() aggs
-        # (all values within a group are identical by construction).
-        pts = pts.withColumn("_pip_rid", F.monotonically_increasing_id())
-    tx, ty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    pts = pts.withColumn("cell_tx", tx).withColumn("cell_ty", ty)
-    bc = _index_broadcast(polygons)
-    cover = points.sparkSession.createDataFrame(
-        [(pid, *cell) for pid, cells in _cover_cells(bc.value, zoom).items()
-         for cell in cells],
-        "poly_id long, cell_tx int, cell_ty int",
-    )
-
-    join_keys = ["cell_tx", "cell_ty"]
-    if salt > 1:
-        pts = pts.withColumn(
-            "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in points.columns]), F.lit(salt)).cast("int")
-        )
-        cover = cover.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        join_keys = join_keys + ["_salt"]
-
-    # Force the at-scale plan: shuffle both sides on the cell key and
-    # hash-build the cover. Without the hint, Catalyst broadcasts whichever
-    # side is under the broadcast threshold — at test scale that is the
-    # POINTS side, which turns the stream side into the 1-partition cover
-    # and serializes the whole stage.
-    joined = pts.join(cover.hint("shuffle_hash"), on=join_keys, how="inner")
-    return _exact_matches(joined, bc, points.columns, lon, lat, first_match)
-
-
-def pip_join_cells_compact(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    zoom: int = 7,
-    first_match: bool = False,
-) -> DataFrame:
-    """Compacted-cover PIP join (the north rule's "compacted covers", the
-    H3 compact analog): each polygon's cell cover is quadtree-compacted
-    (4 complete siblings → parent, recursively — cover size scales with
-    polygon PERIMETER at the finest level instead of area), and each point
-    explodes to its ancestor cell at every zoom ≤ base (one row per level,
-    a fixed ×(zoom+1) flatMap). The equi-join key is (z, tx, ty); the exact
-    ray-cast kernel then filters candidates exactly as pip_join_cells.
-
-    The polygon index is a snapshot taken at the first PIP call on this
-    ``polygons`` object and is never refreshed, even after Spark writes to
-    its source; read the source again to see the writes.
-    """
-    bc = _index_broadcast(polygons)
-    cover = points.sparkSession.createDataFrame(
-        [(pid, *cell) for pid, cells in _cover_cells(bc.value, zoom).items()
-         for cell in TM.py_compact_cells(cells, zoom)],
-        "poly_id long, cell_z int, cell_tx int, cell_ty int",
-    )
-
-    pts_in = points
-    if first_match:
-        # Compact key BEFORE the per-level explode so all of a row's
-        # candidate matches share one 8-byte id (see _exact_matches).
-        pts_in = pts_in.withColumn("_pip_rid", F.monotonically_increasing_id())
-    tx, ty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    pts = (
-        pts_in.withColumn("_tx", tx)
-        .withColumn("_ty", ty)
-        .withColumn("cell_z", F.explode(F.sequence(F.lit(0), F.lit(zoom))))
-        .withColumn(
-            "cell_tx", F.expr(f"cast(shiftright(_tx, {zoom} - cell_z) as int)")
-        )
-        .withColumn(
-            "cell_ty", F.expr(f"cast(shiftright(_ty, {zoom} - cell_z) as int)")
-        )
-        .drop("_tx", "_ty")
-    )
-    joined = pts.join(
-        F.broadcast(cover), on=["cell_z", "cell_tx", "cell_ty"], how="inner"
-    )
-    return _exact_matches(joined, bc, points.columns, lon, lat, first_match)

@@ -202,11 +202,11 @@ def q_pip_broadcast(spark, sf_dir):
 
 @register("pip_cells_salted", _PIP_ORACLE)
 def q_pip_cells_salted(spark, sf_dir):
-    """Cell-cover equi-join PIP with salt=4 on the shuffled cell-key path —
-    identical output to pip_broadcast, different physical plan."""
-    out = PIP.pip_join_cells(
-        order_points(spark, sf_dir), polygons_df(spark), zoom=7, salt=4,
-    )
+    """All-match ``pip_join``, then min(poly_id) per point as a group-by —
+    the first-match rule computed in Spark rather than in the index probe.
+    (The name is kept from the retired salted cell-key join; the broadcast
+    join has no exchange, so no hot cell to salt.)"""
+    out = PIP.pip_join(order_points(spark, sf_dir), polygons_df(spark))
     return out.groupBy("o_orderkey").agg(F.min("poly_id").alias("poly_id"))
 
 
@@ -2733,12 +2733,12 @@ def q_overlay_update(spark, sf_dir):
 
 @register("pip_cells_compact", _PIP_ORACLE)
 def q_pip_cells_compact(spark, sf_dir):
-    """Compacted-cover PIP join (H3-compact analog on the tile quadtree):
-    polygon covers quadtree-compacted, points exploded to per-level ancestor
-    cells, equi-join on (z, tx, ty) — same oracle as pip_broadcast."""
-    return PIP.pip_join_cells_compact(
-        order_points(spark, sf_dir), polygons_df(spark), zoom=7,
-        first_match=True,
+    """First-match ``pip_join`` (min poly_id per point in the index probe),
+    same oracle as pip_broadcast. (The name is kept from the retired
+    compacted-cover cell join, which broadcast the same index and never
+    beat this plan.)"""
+    return PIP.pip_join(
+        order_points(spark, sf_dir), polygons_df(spark), first_match=True
     ).select("o_orderkey", "poly_id")
 
 

@@ -42,9 +42,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: runtime coalescing + skew-join splitting. The north rule calls
-        # for explicit skew handling; AQE is the first line, salting (see
-        # operators/pip_join.py) the second.
+        # AQE: runtime coalescing + skew-join splitting, the skew handling of
+        # the shuffled cell-key joins (poly_join.py, knn.py). The PIP join
+        # (operators/pip_join.py) is map-only: no exchange, no hot cell.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

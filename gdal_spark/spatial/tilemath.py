@@ -308,40 +308,3 @@ def sql_hilbert_d(tx_expr: str, ty_expr: str, order: int) -> str:
         s >>= 1
     return f"(SELECT d FROM ({inner}))"
 
-
-def py_compact_cells(cells: "set[tuple[int, int]]", zoom: int) -> "list[tuple[int, int, int]]":
-    """Quadtree-compact a set of (tx, ty) cells at ``zoom``: any 4 complete
-    siblings collapse into their parent, recursively — the H3 `compact`
-    analog on the WebMercator tile tree (north-rule "compacted covers").
-    Returns (z, tx, ty) triples; a point at ``zoom`` matches a compacted
-    cell (z, cx, cy) iff (tx >> (zoom - z), ty >> (zoom - z)) == (cx, cy).
-    """
-    out: list[tuple[int, int, int]] = []
-    cur = set(cells)
-    z = zoom
-    while z > 0 and cur:
-        children: dict[tuple[int, int], list[tuple[int, int]]] = {}
-        for tx, ty in cur:  # one grouped pass: O(cells) per level
-            children.setdefault((tx >> 1, ty >> 1), []).append((tx, ty))
-        nxt = set()
-        for p, kids in children.items():
-            if len(kids) == 4:
-                nxt.add(p)
-            else:
-                out.extend((z, tx, ty) for tx, ty in kids)
-        cur = nxt
-        z -= 1
-    out.extend((z, tx, ty) for tx, ty in cur)
-    return out
-
-
-def py_expand_cells(compacted: "list[tuple[int, int, int]]", zoom: int) -> "set[tuple[int, int]]":
-    """Inverse of py_compact_cells: expand every (z, tx, ty) back to its
-    descendant cells at ``zoom``."""
-    out: set[tuple[int, int]] = set()
-    for z, tx, ty in compacted:
-        k = zoom - z
-        for dx in range(1 << k):
-            for dy in range(1 << k):
-                out.add(((tx << k) + dx, (ty << k) + dy))
-    return out

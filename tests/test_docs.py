@@ -1,5 +1,5 @@
 """Doc-hygiene checks: counts advertised in README stay derived from the
-actual registry, and the driver-gate rotation set stays consistent."""
+actual registry, and the entry point serves that registry as it is."""
 
 import os
 import re
@@ -23,16 +23,8 @@ def test_readme_registry_count_current():
 
 def test_every_query_has_oracle():
     assert set(Q.ORACLES) == set(Q.QUERIES)
-
-
-def test_gated_rounds_subset_of_registry():
-    unknown = E._GATED_ROUNDS - set(Q.QUERIES)
-    assert not unknown, f"_GATED_ROUNDS names unregistered queries: {unknown}"
-    # rotation must leave never-gated keys first
-    order = list(E.queries())
-    n_ungated = len(order) - len(E._GATED_ROUNDS)
-    assert all(k not in E._GATED_ROUNDS for k in order[:n_ungated])
-    assert all(k in E._GATED_ROUNDS for k in order[n_ungated:])
+    # the entry point lists both in registration order
+    assert list(E.queries()) == list(E.oracle_sql()) == list(Q.QUERIES)
 
 
 def test_survey_ledger_matches_registry():
@@ -51,20 +43,3 @@ def test_survey_ledger_matches_registry():
     assert len(set(names)) == len(names), "duplicate ledger rows"
     assert set(names) == set(Q.QUERIES)
 
-
-def test_priority_r5_keys_valid():
-    """Every stamping-priority key must be a real registry entry (a typo
-    silently forfeits a driver-gate slot) and never already stamped (a
-    stamped key would waste a slot re-proving an old round)."""
-    unknown = set(E._PRIORITY_R5) - set(Q.QUERIES)
-    assert not unknown, f"_PRIORITY_R5 names unregistered queries: {unknown}"
-    restamp = set(E._PRIORITY_R5) & E._GATED_ROUNDS
-    assert not restamp, f"_PRIORITY_R5 re-lists stamped keys: {restamp}"
-    assert len(set(E._PRIORITY_R5)) == len(E._PRIORITY_R5), "duplicates"
-    # the final-round row-coverage block: these must sit in the first 50
-    # of queries() so a ~50-capped gate stamps every never-stamped row
-    order = list(E.queries())[:50]
-    for k in ("ddl_ctas_view", "hive_partition_prune", "pipeline_gdalg",
-              "overlay_poly_clip", "zarr_mdim_roundtrip",
-              "geodesic_polygon_area_karney", "mbtiles_jpeg_pyramid"):
-        assert k in order, f"{k} fell out of the first 50 stamping slots"

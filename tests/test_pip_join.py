@@ -1,8 +1,7 @@
-"""End-to-end spatial join tests: every PIP strategy and join mode vs a
-pure-Python oracle over the deterministic pages + polygons fixtures."""
+"""End-to-end spatial join tests: every ``pip_join`` mode vs a pure-Python
+oracle over the deterministic pages + polygons fixtures."""
 
 import gc
-import io
 import os
 import struct
 import subprocess
@@ -11,7 +10,6 @@ import threading
 import weakref
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
@@ -55,25 +53,8 @@ def expected():
     return oracle_pairs(N_PAGES)
 
 
-JOINS = {
-    "pip_join": lambda pts, polys, how, fm: PJ.pip_join(
-        pts, polys, how=how, first_match=fm
-    ),
-    "pip_join_cells": lambda pts, polys, how, fm: PJ.pip_join_cells(
-        pts, polys, zoom=6, first_match=fm
-    ),
-    "pip_join_cells_compact": lambda pts, polys, how, fm: PJ.pip_join_cells_compact(
-        pts, polys, zoom=6, first_match=fm
-    ),
-}
-# every (strategy, how, first_match) the strategy supports; only the
-# broadcast join has a left mode
-MODES = [
-    (name, how, fm)
-    for name in JOINS
-    for how in (("inner", "left") if name == "pip_join" else ("inner",))
-    for fm in (False, True)
-]
+# every (how, first_match) of pip_join
+MODES = [(how, fm) for how in ("inner", "left") for fm in (False, True)]
 
 
 def _pairs(out):
@@ -115,35 +96,22 @@ def layers(spark, fixtures, expected):
 # (e.g. ``pip_join-inner-False``)
 ORACLE_CASES = [
     pytest.param(
-        *mode, layer,
-        id="-".join(map(str, mode)) + ("" if layer == "fixture" else f"-{layer}"),
+        how, fm, layer,
+        id=f"pip_join-{how}-{fm}" + ("" if layer == "fixture" else f"-{layer}"),
     )
     for layer in ("fixture", "empty", "null_rings")
-    for mode in MODES
+    for how, fm in MODES
 ]
 
 
-@pytest.mark.parametrize("strategy,how,first_match,layer", ORACLE_CASES)
-def test_pip_join_matches_oracle(fixtures, layers, strategy, how, first_match, layer):
+@pytest.mark.parametrize("how,first_match,layer", ORACLE_CASES)
+def test_pip_join_matches_oracle(fixtures, layers, how, first_match, layer):
     pts, _ = fixtures
     polys, pairs = layers[layer]
-    out = JOINS[strategy](pts, polys, how, first_match)
+    out = PJ.pip_join(pts, polys, how=how, first_match=first_match)
     got = _pairs(out)
     assert got == want_rows(pairs, range(N_PAGES), how, first_match)
     assert pairs or layer == "empty"  # hot-cell rows guarantee matches
-
-
-def test_cell_pip_join_salted_matches_oracle(fixtures, expected):
-    pts, polys = fixtures
-    out = PJ.pip_join_cells(pts, polys, zoom=6, salt=4)
-    got = _pairs(out)
-    assert got == Counter(expected)
-    # the salt really splits the join: _salt is a key on both sides
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    keys = [ln for ln in buf.getvalue().splitlines() if ln.startswith(("Left keys", "Right keys"))]
-    assert len(keys) == 2 and all("_salt" in ln for ln in keys)
 
 
 def _bits(v):
@@ -202,8 +170,8 @@ def test_empty_index_probes_to_no_matches():
 
 
 def test_index_built_and_broadcast_once_per_polygons_frame(spark, fixtures, expected, monkeypatch):
-    """Every strategy and mode on one polygons DataFrame shares one index
-    build and one broadcast; results stay exact."""
+    """Every mode on one polygons DataFrame shares one index build and one
+    broadcast; results stay exact."""
     builds = []
     real_build = PJ.build_polygon_index
 
@@ -223,14 +191,12 @@ def test_index_built_and_broadcast_once_per_polygons_frame(spark, fixtures, expe
     monkeypatch.setattr(PJ, "_index_broadcast", recording_broadcast)
     pts, _ = fixtures
     polys = P.polygons_df(spark)
-    calls = [("pip_join", "inner", False), ("pip_join", "left", True),
-             ("pip_join_cells", "inner", False), ("pip_join_cells_compact", "inner", True)]
-    for strategy, how, first_match in calls:
-        out = JOINS[strategy](pts, polys, how, first_match)
+    for how, first_match in MODES:
+        out = PJ.pip_join(pts, polys, how=how, first_match=first_match)
         got = _pairs(out)
-        assert got == want_rows(expected, range(N_PAGES), how, first_match), strategy
+        assert got == want_rows(expected, range(N_PAGES), how, first_match), (how, first_match)
     assert len(builds) == 1
-    assert len(broadcasts) == len(calls) and len(set(broadcasts)) == 1
+    assert len(broadcasts) == len(MODES) and len(set(broadcasts)) == 1
 
 
 def test_reread_of_overwritten_layer_gets_a_new_index(spark, fixtures, tmp_path):
@@ -265,7 +231,7 @@ def test_index_entry_dropped_with_its_frame(spark, fixtures):
 
 def test_index_is_a_snapshot_never_refreshed_after_a_write(spark, fixtures, expected, tmp_path):
     """One ``spark.table`` object reused across an INSERT keeps serving the
-    polygons it held at its first PIP call, in every strategy, although
+    polygons it held at its first PIP call, although
     Spark itself shows the object the new rows; a new read of the table
     gets a new index that holds them."""
     pts, _ = fixtures
@@ -280,13 +246,11 @@ def test_index_is_a_snapshot_never_refreshed_after_a_write(spark, fixtures, expe
         spark.createDataFrame(first, schema).write.insertInto("pip_snapshot")
         polys = spark.table("pip_snapshot")
         want_first = want_rows(expected, range(N_PAGES), "inner", False)
-        for strategy in JOINS:
-            assert _pairs(JOINS[strategy](pts, polys, "inner", False)) == want_first, strategy
+        assert _pairs(PJ.pip_join(pts, polys)) == want_first
 
         spark.createDataFrame(added, schema).write.insertInto("pip_snapshot")
         assert polys.count() == len(first) + len(added)
-        for strategy in JOINS:
-            assert _pairs(JOINS[strategy](pts, polys, "inner", False)) == want_first, strategy
+        assert _pairs(PJ.pip_join(pts, polys)) == want_first
 
         reread = spark.table("pip_snapshot")
         want_all = want_rows(oracle_pairs(N_PAGES, first + added), range(N_PAGES), "inner", False)
@@ -349,7 +313,7 @@ def test_pages_text_invariant_vs_generator(spark):
 
 
 def test_multipolygon_pip_both_strategies(spark):
-    """MultiPolygon features flow through every PIP strategy and mode with
+    """MultiPolygon features flow through every ``pip_join`` mode with
     identical results: a point in either part matches the feature once
     (also where two parts of one feature overlap); points in the hole do
     not match."""
@@ -378,11 +342,11 @@ def test_multipolygon_pip_both_strategies(spark):
     )
     mp = multipolygons_df(spark).unionByName(overlapping)
     want = {1: 2000, 2: 2000, 4: 2001, 6: 2001, 8: 7}
-    for strategy, how, first_match in MODES:
-        out = JOINS[strategy](pts, mp, how, first_match)
+    for how, first_match in MODES:
+        out = PJ.pip_join(pts, mp, how=how, first_match=first_match)
         got = Counter((r["i"], r["poly_id"]) for r in out.collect())
         assert got == want_rows(want.items(), range(1, 9), how, first_match), (
-            strategy, how, first_match)
+            how, first_match)
 
 
 # ---------------------------------------------------------------------------
@@ -400,9 +364,8 @@ def full_scan(parts, px, py) -> set:
 
 
 def assert_kernel_matches(recs, px, py):
-    """``probe`` in both modes and ``contains`` on every (point, feature)
-    give exactly the full-scan pairs, and so do the index's own
-    ``rings_list``."""
+    """``probe`` in both modes gives exactly the full-scan pairs, and so do
+    the index's own ``rings_list``."""
     idx = PJ.PolygonIndex.from_rows(recs)
     want = full_scan([(r["poly_id"], G.rings_envelope(part), part)
                       for r in recs for part in PJ._feature_parts(r["rings"])], px, py)
@@ -413,11 +376,6 @@ def assert_kernel_matches(recs, px, py):
     for i, pid in want:
         best[i] = min(best.get(i, pid), pid)
     assert list(zip(pt.tolist(), poly.tolist())) == sorted(best.items())
-    ids = np.array(sorted({r["poly_id"] for r in recs}), dtype=np.int64)
-    rows = np.repeat(np.arange(px.shape[0]), ids.shape[0])
-    fids = np.tile(ids, px.shape[0])
-    got = idx.contains(px[rows], py[rows], fids)
-    assert {(int(i), int(f)) for i, f in zip(rows[got], fids[got])} == want
     assert full_scan(zip(idx.poly_ids, idx.boxes, idx.rings_list), px, py) == want
 
 

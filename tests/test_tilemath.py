@@ -163,18 +163,3 @@ def test_hilbert_column_matches_python(spark):
     for (tx, ty), h in got.items():
         assert h == py_hilbert_d(tx, ty, 8)
 
-
-def test_compact_expand_roundtrip():
-    from gdal_spark.spatial.tilemath import py_compact_cells, py_expand_cells
-
-    import random
-
-    rng = random.Random(7)
-    cells = {(rng.randrange(64), rng.randrange(64)) for _ in range(300)}
-    # add one full 8x8 aligned block so multi-level compaction triggers
-    cells |= {(16 + dx, 32 + dy) for dx in range(8) for dy in range(8)}
-    compacted = py_compact_cells(cells, 6)
-    assert py_expand_cells(compacted, 6) == cells
-    assert len(compacted) < len(cells)
-    zs = {z for z, _, _ in compacted}
-    assert min(zs) <= 4  # the aligned block collapsed at least 2 levels
