@@ -13,21 +13,18 @@ Format (public VTP spec; reference Create() at btdataset.cpp:845-900):
   the values run BOTTOM→TOP (the transposed, south-up layout that
   distinguishes BT from every row-major raw driver in this engine).
 
-Spark mapping — one task per COLUMN-BLOCK: the column-major layout
-makes a run of whole columns the contiguous byte unit, so read preads
-and write pwrites disjoint column ranges (the raw-raster slab contract
-rotated 90°)."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``)
+rotated 90°: a slab is a COLUMN-block, the contiguous unit of the
+column-major layout, transposed and flipped to north-up in the slab."""
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _DTYPES = {(2, 0): "<i2", (4, 0): "<i4", (4, 1): "<f4"}
 _OF_NP = {"i2": (2, 0), "i4": (4, 0), "f4": (4, 1)}
@@ -72,40 +69,21 @@ def parse_bt_header(buf: bytes) -> dict:
 def read_bt(spark: SparkSession, path: str,
             block_cols: int = 64) -> DataFrame:
     """Distributed scan → (gy, gx, val double) with gy 0 = NORTH; one
-    task per column-block, each a single contiguous pread (columns are
+    slab per column-block, each a single contiguous pread (columns are
     the contiguous unit in BT's transposed layout)."""
     with open(path, "rb") as fh:
         hdr = parse_bt_header(fh.read(256))
     w, h = hdr["w"], hdr["h"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    n_blocks = (w + block_cols - 1) // block_cols
+    bl = RG.Blocks(w, block_cols)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, x0, cols = bl.span(slab)
+        # (cols, h): each file column bottom->top
+        arr = read(256 + x0 * h * np_dt.itemsize, (cols, h), np_dt)
+        yield 0, 0, x0, arr.T[::-1]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    x0 = int(s) * block_cols
-                    cols = min(block_cols, w - x0)
-                    pos = 256 + x0 * h * item
-                    # (cols, h): each file column bottom->top
-                    arr = np.frombuffer(
-                        os.pread(fd, cols * h * item, pos),
-                        dtype=np_dt).reshape(cols, h)
-                    xx, fy = np.mgrid[0:cols, 0:h]
-                    yield pd.DataFrame({
-                        "gy": (h - 1 - fy.ravel()).astype(np.int64),
-                        "gx": (xx.ravel() + x0).astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode)
 
 
 def write_bt(
@@ -113,44 +91,23 @@ def write_bt(
     *, dtype: str = "i2", block_cols: int = 64, fill: float = 0.0,
     left: float = 0.0, top: float = 0.0, cellsize: float = 1.0,
 ) -> None:
-    """Distributed sink over (gy, gx, val), gy 0 = north: one task per
-    column-block pwrites its contiguous transposed range (values
+    """Distributed sink over (gy, gx, val), gy 0 = north: one pwrite
+    per column-block of its contiguous transposed range (values
     flipped into each column's bottom→top order)."""
     if dtype not in _OF_NP:
         raise ValueError(f"bt write: unsupported dtype {dtype!r}")
     np_dt = np.dtype(_DTYPES[_OF_NP[dtype]])
-    item = np_dt.itemsize
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(bt_header(w, h, dtype, left, left + w * cellsize,
-                           top - h * cellsize, top))
-        if fill == 0.0:
-            fh.truncate(256 + w * h * item)
-        else:
-            col = np.full(h, fill, dtype=np_dt).tobytes()
-            for _ in range(w):
-                fh.write(col)
+    data0 = RG.preallocate(
+        path, bt_header(w, h, dtype, left, left + w * cellsize,
+                        top - h * cellsize, top),
+        RG.fill_row(fill, np_dt, h), w)
+    bl = RG.Blocks(w, block_cols)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        x0 = blk * block_cols
-        cols = min(block_cols, w - x0)
-        buf = np.full((cols, h), fill, dtype=np_dt)
-        buf[pdf["gx"].to_numpy(np.int64) - x0,
-            h - 1 - pdf["gy"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"), 256 + x0 * h * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, x0, cols = bl.span(slab)
+        buf = RG.scatter(pdf, (cols, h), fill, np_dt,
+                         pdf["gx"].to_numpy() - x0,
+                         h - 1 - pdf["gy"].to_numpy())
+        return data0 + x0 * h * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gx") / F.lit(block_cols)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per column-block
-    )
+    RG.write_slabs(cells, path, bl.key("gx"), (h, w), encode)

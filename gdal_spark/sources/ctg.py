@@ -19,7 +19,7 @@ Every record self-describes its position, so the file is order-free;
 the engine writes record i at header + (y·cols + x)·80 which makes
 both directions pure fixed-stride slab IO.
 
-Spark mapping — the one-task-per-slab contract (sources/ehdr.py) with
+Spark mapping — one task per slab as in ``sources/_rawgrid.py``, over
 80-byte records: read preads disjoint record ranges and trusts each
 record's own coordinates; write pwrites each cell-block's records."""
 

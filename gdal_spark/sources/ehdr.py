@@ -21,23 +21,20 @@ Note the georeferencing quirk the reference preserves
 the upper-left pixel, not its outer corner — the geotransform origin
 is ``ULXMAP - XDIM/2``.
 
-Spark mapping — the engine's one-task-per-slab raw-raster contract
-(sources/envi.py): the driver parses only the tiny .hdr; read
-parallelizes one (band, row-block) slab per task, each ``pread``-ing
-its disjoint (strided per row, by interleave) byte ranges; write
-pre-extends the file driver-side and one task per slab ``pwrite``s its
-rows.  No pixel bytes touch the driver.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+a read slab is one (band, row-block), picked out of the interleaved
+block by a strided view; a write slab is a row-block of all bands, the
+contiguous unit under BIL.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 # (NBITS, PIXELTYPE) <-> numpy little-endian dtype
 _DTYPES = {
@@ -103,46 +100,23 @@ def _raw_path(hdr_path: str) -> str:
 def read_ehdr(
     spark: SparkSession, hdr_path: str, block_rows: int = 64,
 ) -> DataFrame:
-    """Distributed BIL scan → (band, gy, gx, val double): one task per
-    (band, row-block) slab; a slab's bytes are one w-pixel run per row
-    at stride bands*w (the BIL interleave)."""
+    """Distributed BIL scan → (band, gy, gx, val double): one (band,
+    row-block) slab preads the whole interleaved block and a strided
+    view picks the band's rows (one w-pixel run per row at stride
+    bands*w)."""
     hdr = parse_hdr(hdr_path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    raw = _raw_path(hdr_path)
-    n_blocks = (h + block_rows - 1) // block_rows
-    skip = hdr["skip"]
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        arr = read(hdr["skip"] + y0 * bands * w * np_dt.itemsize,
+                   (rows, bands, w), np_dt)
+        yield b, y0, 0, arr[:, b, :]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    # contiguous pread of the whole interleaved block,
-                    # then a strided view picks this band's rows
-                    pos = skip + (y0 * bands) * w * item
-                    blob = os.pread(fd, rows * bands * w * item, pos)
-                    arr = np.frombuffer(blob, dtype=np_dt).reshape(
-                        rows, bands, w)[:, b, :]
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(arr.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, _raw_path(hdr_path), bl.count, decode,
+                         banded=True)
 
 
 def write_ehdr(
@@ -152,51 +126,26 @@ def write_ehdr(
     cellsize: float = 1.0 / 1024.0, nodata: float = -9999.0,
 ) -> None:
     """Distributed BIL sink over (band, gy, gx, val): .hdr + pre-extended
-    .bil driver-side, then one task per ROW-BLOCK (all bands of its rows
-    — the interleave makes a row-block the contiguous unit) ``pwrite``s
-    its disjoint range."""
+    .bil driver-side, then one pwrite per ROW-BLOCK (all bands of its
+    rows — the interleave makes a row-block the contiguous unit)."""
     if dtype not in _OF_NP:
         raise ValueError(f"ehdr write: unsupported dtype {dtype!r}")
     nbits, pixeltype = _OF_NP[dtype]
     np_dt = np.dtype(_DTYPES[(nbits, pixeltype)])
-    item = np_dt.itemsize
     raw = _raw_path(hdr_path)
     os.makedirs(os.path.dirname(hdr_path) or ".", exist_ok=True)
     with open(hdr_path, "wb") as fh:
         fh.write(hdr_bytes(w, h, bands, nbits, pixeltype,
                            ulx_center, uly_center,
                            cellsize, cellsize, nodata))
-    n_blocks = (h + block_rows - 1) // block_rows
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(h * bands * w * item)  # sparse zeros
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(h * bands):
-                fh.write(row)
+    RG.preallocate(raw, b"", RG.fill_row(fill, np_dt, w), h * bands)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, bands, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["band"].to_numpy(np.int64),
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      (y0 * bands) * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, bands, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["band"].to_numpy(),
+                         pdf["gx"].to_numpy())
+        return y0 * bands * w * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, raw, bl.key(), (bands, h, w), encode)

@@ -18,23 +18,19 @@ Format: a text ``.hdr`` sidecar —
 implements BSQ interleave (band-sequential: band-major C-order), byte
 order 0, the numeric data types above.
 
-Spark mapping — the netCDF/Zarr one-task-per-slab pattern
-(sources/netcdf.py): the driver parses ONLY the tiny .hdr; read
-parallelizes one (band, row-block) slab per task, each task ``pread``-ing
-its disjoint byte range; write pre-extends the file driver-side and one
-task per slab ``pwrite``s its range.  No pixel bytes touch the driver.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``),
+one (band, row-block) slab per contiguous byte range.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 # ENVI data type code -> numpy little-endian dtype
 _DTYPES = {1: "u1", 2: "<i2", 4: "<f4", 5: "<f8", 12: "<u2"}
@@ -104,44 +100,21 @@ def _raw_path(hdr_path: str) -> str:
 def read_envi(
     spark: SparkSession, hdr_path: str, block_rows: int = 64,
 ) -> DataFrame:
-    """Distributed BSQ scan → (band, gy, gx, val double): one task per
-    (band, row-block) slab, each ``pread``-ing exactly its bytes."""
+    """Distributed BSQ scan → (band, gy, gx, val double): one (band,
+    row-block) slab per pread of exactly its bytes."""
     hdr = parse_hdr(hdr_path)
     w, h, bands = hdr["samples"], hdr["lines"], hdr["bands"]
     np_dt = np.dtype(_DTYPES[hdr["dtype_code"]])
-    raw = _raw_path(hdr_path)
-    band_bytes = w * h * np_dt.itemsize
-    n_blocks = (h + block_rows - 1) // block_rows
-    offset = hdr["offset"]
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        yield b, y0, 0, read(
+            hdr["offset"] + (b * h + y0) * w * np_dt.itemsize, (rows, w),
+            np_dt)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    nbytes = rows * w * np_dt.itemsize
-                    pos = offset + b * band_bytes + y0 * w * np_dt.itemsize
-                    arr = np.frombuffer(
-                        os.pread(fd, nbytes, pos), dtype=np_dt
-                    ).reshape(rows, w)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(arr.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, _raw_path(hdr_path), bl.count, decode,
+                         banded=True)
 
 
 def write_envi(
@@ -150,8 +123,7 @@ def write_envi(
     xll: float = 10.0, ytop: float = 50.0, cellsize: float = 1.0 / 1024.0,
 ) -> None:
     """Distributed BSQ sink over (band, gy, gx, val): .hdr + pre-extended
-    raw file driver-side, then one task per (band, row-block) slab
-    ``pwrite``s its disjoint range (the netCDF disjoint-range contract)."""
+    raw file driver-side, then one pwrite per (band, row-block) slab."""
     if dtype not in _CODE_OF:
         raise ValueError(f"envi write: unsupported dtype {dtype!r}")
     code = _CODE_OF[dtype]
@@ -161,40 +133,13 @@ def write_envi(
     with open(hdr_path, "wb") as fh:
         fh.write(hdr_bytes(w, h, bands, code, xll, ytop,
                            cellsize, cellsize))
-    band_bytes = w * h * np_dt.itemsize
-    n_blocks = (h + block_rows - 1) // block_rows
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(bands * band_bytes)  # sparse zeros
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(bands * h):
-                fh.write(row)
+    RG.preallocate(raw, b"", RG.fill_row(fill, np_dt, w), bands * h)
+    bl = RG.Blocks(h, block_rows, bands)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        s = int(key[0])
-        b, blk = divmod(s, n_blocks)
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      b * band_bytes + y0 * w * np_dt.itemsize)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [s], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        b, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return (b * h + y0) * w * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.col("band").cast("long") * F.lit(n_blocks)
-            + F.floor(F.col("gy") / F.lit(block_rows)).cast("long"),
-        )
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per slab
-    )
+    RG.write_slabs(cells, raw, bl.key(banded=True), (bands, h, w), encode)

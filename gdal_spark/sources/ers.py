@@ -26,22 +26,20 @@ ersdataset.cpp:1062-1064 passes to the raw band) — in the header's
 declared byte order, so unlike the EHdr BIL driver this one carries the
 MSBFirst big-endian BIL path.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py): parse only the header driver-side; one (band,
-row-block) slab per task preads the contiguous interleaved block and a
-strided view picks its band.  No pixel bytes touch the driver.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+a read slab is one (band, row-block), picked out of the interleaved
+block by a strided view; a write slab is a row-block of all bands.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _CELLTYPES = {
     ("Unsigned8BitInteger", "L"): "u1", ("Unsigned8BitInteger", "M"): "u1",
@@ -128,41 +126,19 @@ def parse_ers_header(path: str) -> dict:
 def read_ers(spark: SparkSession, ers_path: str,
              block_rows: int = 64) -> DataFrame:
     """Distributed BIL scan → (band, gy, gx, val double); one (band,
-    row-block) task preads the interleaved block, strided view per band."""
+    row-block) slab preads the interleaved block, strided view per band."""
     hdr = parse_ers_header(ers_path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    raw, skip = hdr["raw"], hdr["skip"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        arr = read(hdr["skip"] + y0 * bands * w * np_dt.itemsize,
+                   (rows, bands, w), np_dt)
+        yield b, y0, 0, arr[:, b, :]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    pos = skip + (y0 * bands) * w * item
-                    blob = os.pread(fd, rows * bands * w * item, pos)
-                    arr = np.frombuffer(blob, dtype=np_dt).reshape(
-                        rows, bands, w)[:, b, :]
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(arr.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, hdr["raw"], bl.count, decode, banded=True)
 
 
 def write_ers(
@@ -171,49 +147,25 @@ def write_ers(
     header_offset: int = 0, block_rows: int = 64, fill: float = 0.0,
 ) -> None:
     """Distributed BIL sink: .ers header + pre-extended raw driver-side,
-    one ROW-BLOCK (all bands — the BIL unit) pwrite per task."""
+    one pwrite per ROW-BLOCK (all bands — the BIL unit)."""
     if dtype not in _OF_NP:
         raise ValueError(f"ers write: unsupported dtype {dtype!r}")
     celltype = _OF_NP[dtype]
     np_dt = np.dtype(_CELLTYPES[(celltype, byteorder[0])])
-    item = np_dt.itemsize
     raw = ers_path[: ers_path.rfind(".")]
     os.makedirs(os.path.dirname(ers_path) or ".", exist_ok=True)
     with open(ers_path, "wb") as fh:
         fh.write(ers_header_bytes(w, h, bands, celltype, byteorder,
                                   header_offset))
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(header_offset + h * bands * w * item)
-        else:
-            fh.write(b"\x00" * header_offset)
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(h * bands):
-                fh.write(row)
-    n_blocks = (h + block_rows - 1) // block_rows
+    RG.preallocate(raw, bytes(header_offset),
+                   RG.fill_row(fill, np_dt, w), h * bands)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, bands, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["band"].to_numpy(np.int64),
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      header_offset + (y0 * bands) * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, bands, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["band"].to_numpy(),
+                         pdf["gx"].to_numpy())
+        return header_offset + y0 * bands * w * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, raw, bl.key(), (bands, h, w), encode)

@@ -28,22 +28,16 @@ The classic unsigned-16-bit idiom is covered: BITPIX=16 (signed
 storage) with BZERO=32768 — raw values are offset so the physical
 range is 0..65535 (fitsdataset.cpp LoadMetadata/BZERO handling).
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py): the driver parses only the 2880-byte header;
-read/write run one row-block slab per task pread/pwrite-ing disjoint
-byte ranges at the bottom-up flipped offsets.  No pixel bytes touch
-the driver.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``),
+one row-block slab at the bottom-up flipped offset.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 BLOCK = 2880
 
@@ -122,37 +116,17 @@ def read_fits(spark: SparkSession, path: str,
     hdr = parse_header(path)
     w, h = hdr["w"], hdr["h"]
     np_dt = np.dtype(_DTYPES[hdr["bitpix"]])
-    item = np_dt.itemsize
-    data0, bzero, bscale = hdr["data0"], hdr["bzero"], hdr["bscale"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        frow0 = h - (y0 + rows)  # bottom-up flip
+        arr = read(hdr["data0"] + frow0 * w * np_dt.itemsize, (rows, w),
+                   np_dt)[::-1]
+        yield 0, y0, 0, hdr["bzero"] + hdr["bscale"] * arr.astype(
+            np.float64)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    frow0 = h - (y0 + rows)  # bottom-up flip
-                    blob = os.pread(fd, rows * w * item,
-                                    data0 + frow0 * w * item)
-                    arr = np.frombuffer(blob, dtype=np_dt).reshape(
-                        rows, w)[::-1]  # back to top-down
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": bzero + bscale *
-                        arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode)
 
 
 def write_fits(
@@ -161,49 +135,24 @@ def write_fits(
     fill: float = 0.0, block_rows: int = 64,
 ) -> None:
     """Distributed sink over (gy, gx, val): header + zero-padded data
-    area driver-side, one row-block pwrite per task at the bottom-up
+    area driver-side, one row-block pwrite per slab at the bottom-up
     flipped offset.  Physical values are inverse-transformed to raw
     ((val - BZERO) / BSCALE) before storage."""
     if bitpix not in _DTYPES:
         raise ValueError(f"fits: unsupported BITPIX {bitpix}")
     np_dt = np.dtype(_DTYPES[bitpix])
-    item = np_dt.itemsize
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    hdr = header_bytes(w, h, bitpix, bzero, bscale)
-    data0 = len(hdr)
-    nbytes = h * w * item
-    with open(path, "wb") as fh:
-        fh.write(hdr)
-        if fill == 0.0 and bzero == 0.0:
-            fh.truncate(data0 + nbytes + (-nbytes) % BLOCK)
-        else:
-            raw = np.full(w, (fill - bzero) / bscale, dtype=np_dt).tobytes()
-            for _ in range(h):
-                fh.write(raw)
-            fh.write(b"\x00" * ((-nbytes) % BLOCK))
+    raw_fill = (fill - bzero) / bscale
+    data0 = RG.preallocate(path, header_bytes(w, h, bitpix, bzero, bscale),
+                           RG.fill_row(raw_fill, np_dt, w), h,
+                           tail=(-(h * w * np_dt.itemsize)) % BLOCK)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), (fill - bzero) / bscale, dtype=np_dt)
-        raw = (pdf["val"].to_numpy(np.float64) - bzero) / bscale
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = raw.astype(np_dt, copy=False)
-        frow0 = h - (y0 + rows)
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf[::-1].tobytes(order="C"),
-                      data0 + frow0 * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), raw_fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         vals=(pdf["val"].to_numpy(np.float64) - bzero)
+                         / bscale)
+        return data0 + (h - (y0 + rows)) * w * np_dt.itemsize, buf[::-1]
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)

@@ -22,19 +22,17 @@ header-labelled raws: the fixed-12-char key syntax and the
 ``flag value`` nodata contract, which read honors by dropping flagged
 cells.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py); single band, so a slab is a row-block.
-"""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``);
+single band, so a slab is a row-block."""
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _DTYPES = {"byte": "u1", "integer": "<i2", "real": "<f4"}
 _OF_NP = {"u1": "byte", "i2": "integer", "f4": "real"}
@@ -105,37 +103,16 @@ def read_idrisi(spark: SparkSession, rdc_path: str,
     hdr = parse_rdc(rdc_path)
     w, h = hdr["w"], hdr["h"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
     flag = hdr["flag"]
-    raw = _raw_path(rdc_path)
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        arr = read(y0 * w * np_dt.itemsize, (rows, w), np_dt)
+        yield 0, y0, 0, (arr if flag is None else
+                         np.ma.masked_equal(arr.astype(np.float64), flag))
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    blob = os.pread(fd, rows * w * item, y0 * w * item)
-                    arr = np.frombuffer(blob, dtype=np_dt).reshape(rows, w)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    vals = arr.ravel().astype(np.float64)
-                    keep = np.ones(vals.size, dtype=bool) if flag is None \
-                        else vals != flag
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64)[keep],
-                        "gx": xx.ravel().astype(np.int64)[keep],
-                        "val": vals[keep],
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, _raw_path(rdc_path), bl.count, decode)
 
 
 def write_idrisi(
@@ -145,49 +122,24 @@ def write_idrisi(
 ) -> None:
     """Distributed sink over (gy, gx, val): .rdc + pre-extended .rst
     driver-side (holes carry the flag value when one is declared), one
-    row-block pwrite per task.  min/max in the .rdc come from one
-    bounded aggregate over the cells."""
+    row-block pwrite per slab.  min/max in the .rdc come from one
+    bounded aggregate over the cells (0 and 0 when there are none)."""
     if dtype not in _OF_NP:
         raise ValueError(f"idrisi write: unsupported dtype {dtype!r}")
     np_dt = np.dtype(_DTYPES[_OF_NP[dtype]])
-    item = np_dt.itemsize
     fill = 0.0 if flag is None else flag
-    stats = cells.agg(F.min("val").alias("lo"),
-                      F.max("val").alias("hi")).collect()[0]
+    lo, hi = RG.value_range(cells)
     raw = _raw_path(rdc_path)
     os.makedirs(os.path.dirname(rdc_path) or ".", exist_ok=True)
     with open(rdc_path, "wb") as fh:
-        fh.write(rdc_bytes(w, h, _OF_NP[dtype],
-                           stats["lo"], stats["hi"], flag))
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(h * w * item)
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(h):
-                fh.write(row)
-    n_blocks = (h + block_rows - 1) // block_rows
+        fh.write(rdc_bytes(w, h, _OF_NP[dtype], lo, hi, flag))
+    RG.preallocate(raw, b"", RG.fill_row(fill, np_dt, w), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"), y0 * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return y0 * w * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, raw, bl.key(), (h, w), encode)

@@ -15,20 +15,18 @@ samples of the declared store type (ilwisdataset.cpp:979-1000 writes
 exactly these keys; GetStoreType:425-455 maps the five type names to
 u8/i2/i4/f4/f8).
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py) over the .mp# store; the .mpr ODF is driver-side
-metadata only."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``)
+over the .mp# store; the .mpr ODF is driver-side metadata only."""
 
 from __future__ import annotations
 
 import configparser
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _STORE_DT = {"byte": "u1", "int": "<i2", "long": "<i4",
              "float": "<f4", "real": "<f8"}
@@ -59,37 +57,17 @@ def parse_mpr(path: str) -> dict:
 def read_ilwis(spark: SparkSession, mpr_path: str,
                block_rows: int = 64) -> DataFrame:
     """Distributed scan → (gy, gx, val double): one row-block slab per
-    task over the .mp# store."""
+    pread of the .mp# store."""
     hdr = parse_mpr(mpr_path)
     w, h = hdr["w"], hdr["h"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    store = hdr["store"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        yield 0, y0, 0, read(y0 * w * np_dt.itemsize, (rows, w), np_dt)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(store, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    blob = os.pread(fd, rows * w * item, y0 * w * item)
-                    arr = np.frombuffer(blob, dtype=np_dt).reshape(rows, w)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, hdr["store"], bl.count, decode)
 
 
 def write_ilwis(
@@ -97,11 +75,10 @@ def write_ilwis(
     *, dtype: str = "f4", block_rows: int = 64, fill: float = 0.0,
 ) -> None:
     """Distributed sink over (gy, gx, val): .mpr ODF + pre-extended
-    .mp# store driver-side, one row-block pwrite per task."""
+    .mp# store driver-side, one row-block pwrite per slab."""
     if dtype not in _OF_NP:
         raise ValueError(f"ilwis write: unsupported dtype {dtype!r}")
     np_dt = np.dtype(("<" + dtype) if dtype != "u1" else dtype)
-    item = np_dt.itemsize
     base = mpr_path[:-4] if mpr_path.endswith(".mpr") else mpr_path
     store = base + ".mp#"
     os.makedirs(os.path.dirname(mpr_path) or ".", exist_ok=True)
@@ -115,34 +92,13 @@ def write_ilwis(
             f"Data={os.path.basename(store)}\n"
             "Structure=Line\n"
             f"Type={_OF_NP[dtype]}\n")
-    with open(store, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(h * w * item)
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(h):
-                fh.write(row)
+    RG.preallocate(store, b"", RG.fill_row(fill, np_dt, w), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(store, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"), y0 * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return y0 * w * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, store, bl.key(), (h, w), encode)

@@ -14,19 +14,16 @@ Layout (pure ASCII digit fields, fixed widths):
   elevation fields in DECIMETERS — value = field · 0.1 m
   (jdemdataset.cpp:187).
 
-Spark mapping — fixed record size means the file is splittable by
-arithmetic alone: the one-task-per-slab contract (sources/ehdr.py)
-with record-size strides; rows are TOP-down (row 1 first)."""
+Spark mapping — the fixed record size makes the file splittable by
+arithmetic alone: the raw-raster slab kernel (``sources/_rawgrid.py``)
+with record-size strides, writing whole records."""
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 HEADER_SIZE = 1011
 
@@ -67,49 +64,38 @@ def parse_header(path: str) -> dict:
 
 def read_jdem(spark: SparkSession, path: str,
               block_rows: int = 64) -> DataFrame:
-    """Distributed scan → (gy, gx, val double): one task per row-block
-    slab; each record's 1-based row number is validated like the
+    """Distributed scan → (gy, gx, val double): one row-block slab per
+    pread; each record's 1-based row number is validated like the
     reference does."""
     hdr = parse_header(path)
     w, h, rec = hdr["w"], hdr["h"], hdr["record"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        blob = read(HEADER_SIZE + y0 * rec, (rows * rec,), "u1").tobytes()
+        recs = []
+        for r in range(rows):
+            line = blob[r * rec:(r + 1) * rec]
+            rownum = int(line[6:9])
+            if rownum != y0 + r + 1:
+                raise ValueError(
+                    f"jdem: record row {rownum} != {y0 + r + 1}")
+            recs.append(np.array(
+                [int(line[9 + 5 * i:14 + 5 * i]) for i in range(w)],
+                dtype=np.float64) * 0.1)
+        yield 0, y0, 0, np.vstack(recs)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    blob = os.pread(fd, rows * rec,
-                                    HEADER_SIZE + y0 * rec)
-                    recs = []
-                    for r in range(rows):
-                        line = blob[r * rec:(r + 1) * rec]
-                        rownum = int(line[6:9])
-                        if rownum != y0 + r + 1:
-                            raise ValueError(
-                                f"jdem: record row {rownum} != "
-                                f"{y0 + r + 1}")
-                        vals = np.array(
-                            [int(line[9 + 5 * i:14 + 5 * i])
-                             for i in range(w)], dtype=np.float64) * 0.1
-                        recs.append(vals)
-                    arr = np.vstack(recs)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel(),
-                    })
-        finally:
-            os.close(fd)
+    return RG.read_slabs(spark, path, bl.count, decode)
 
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+
+def _records(mesh: bytes, y0: int, dm: np.ndarray) -> bytes:
+    """The records of rows ``y0..`` of a decimeter grid: mesh code,
+    1-based row number, one 5-digit field per column, CRLF."""
+    return b"".join(
+        mesh + f"{y0 + r + 1:03d}".encode()
+        + "".join(f"{v:05d}" for v in row).encode() + b"\r\n"
+        for r, row in enumerate(dm))
 
 
 def write_jdem(
@@ -117,43 +103,25 @@ def write_jdem(
     *, mesh_code: str = "493346", block_rows: int = 64, **hdr_kw,
 ) -> None:
     """Distributed sink over (gy, gx, val): header + blank records
-    driver-side, one row-block pwrite per task.  Values are stored as
-    5-digit decimeter fields (0..99999 → 0..9999.9 m)."""
+    driver-side, one row-block pwrite of whole records per slab.
+    Values are stored as 5-digit decimeter fields (0..99999 →
+    0..9999.9 m)."""
     rec = w * 5 + 9 + 2
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(header_bytes(w, h, **hdr_kw))
-        for r in range(h):
-            fh.write(mesh_code.encode()[:6].ljust(6, b"0"))
-            fh.write(f"{r + 1:03d}".encode())
-            fh.write(b"0" * (5 * w) + b"\r\n")
+    mesh = mesh_code.encode()[:6].ljust(6, b"0")
+    RG.preallocate(path, header_bytes(w, h, **hdr_kw)
+                   + _records(mesh, 0, np.zeros((h, w), dtype=np.int64)),
+                   b"", 0)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        grid = np.zeros((rows, w), dtype=np.int64)
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
         dm = np.rint(pdf["val"].to_numpy(np.float64) * 10).astype(np.int64)
         if dm.size and (dm.min() < 0 or dm.max() > 99999):
             raise ValueError("jdem: value outside the 5-digit "
                              "decimeter range")
-        grid[pdf["gy"].to_numpy(np.int64) - y0,
-             pdf["gx"].to_numpy(np.int64)] = dm
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            for r in range(rows):
-                digits = "".join(f"{v:05d}" for v in grid[r])
-                os.pwrite(fd, digits.encode(),
-                          HEADER_SIZE + (y0 + r) * rec + 9)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+        grid = RG.scatter(pdf, (rows, w), 0, np.int64,
+                          pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                          vals=dm)
+        return HEADER_SIZE + y0 * rec, _records(mesh, y0, grid)
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)

@@ -12,20 +12,18 @@ Format:
   little-endian), so it pins the byte-swap path;
 * depth 8 = uint8, 16 = uint16, 32 = float32.
 
-Spark mapping — the raw-raster slab contract (sources/ehdr.py): one
-(row-block) task per pread/pwrite of its contiguous interleaved range.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+a slab is a row-block, the contiguous unit under BIP.
 """
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _DTYPES = {8: ">u1", 16: ">u2", 32: ">f4"}
 _OF_NP = {"u1": 8, "u2": 16, "f4": 32}
@@ -48,40 +46,21 @@ def parse_kro_header(buf: bytes) -> dict:
 def read_kro(spark: SparkSession, path: str,
              block_rows: int = 64) -> DataFrame:
     """Distributed scan → (band, gy, gx, val double); one row-block
-    pread per task, big-endian samples decoded by the numpy view."""
+    pread per slab, big-endian samples decoded by the numpy view."""
     with open(path, "rb") as fh:
         hdr = parse_kro_header(fh.read(20))
     w, h, ncomp = hdr["w"], hdr["h"], hdr["ncomp"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        arr = read(20 + y0 * w * ncomp * np_dt.itemsize, (rows, w, ncomp),
+                   np_dt)
+        for b in range(ncomp):
+            yield b, y0, 0, arr[:, :, b]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    y0 = int(s) * block_rows
-                    rows = min(block_rows, h - y0)
-                    pos = 20 + y0 * w * ncomp * item
-                    arr = np.frombuffer(
-                        os.pread(fd, rows * w * ncomp * item, pos),
-                        dtype=np_dt).reshape(rows, w, ncomp)
-                    yy, xx, bb = np.mgrid[0:rows, 0:w, 0:ncomp]
-                    yield pd.DataFrame({
-                        "band": bb.ravel().astype(np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode, banded=True)
 
 
 def write_kro(
@@ -89,45 +68,21 @@ def write_kro(
     *, dtype: str = "u2", block_rows: int = 64, fill: float = 0.0,
 ) -> None:
     """Distributed sink over (band, gy, gx, val): header + pre-extended
-    file driver-side, one row-block pwrite per task (BIP layout makes a
+    file driver-side, one row-block pwrite per slab (BIP layout makes a
     row-block the contiguous unit); samples byte-swapped to big-endian
     by the numpy dtype."""
     if dtype not in _OF_NP:
         raise ValueError(f"kro write: unsupported dtype {dtype!r}")
     np_dt = np.dtype(_DTYPES[_OF_NP[dtype]])
-    item = np_dt.itemsize
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(kro_header(w, h, _OF_NP[dtype], ncomp))
-        if fill == 0.0:
-            fh.truncate(20 + h * w * ncomp * item)
-        else:
-            row = np.full(w * ncomp, fill, dtype=np_dt).tobytes()
-            for _ in range(h):
-                fh.write(row)
+    data0 = RG.preallocate(path, kro_header(w, h, _OF_NP[dtype], ncomp),
+                           RG.fill_row(fill, np_dt, w * ncomp), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w, ncomp), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64),
-            pdf["band"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      20 + y0 * w * ncomp * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w, ncomp), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         pdf["band"].to_numpy())
+        return data0 + y0 * w * ncomp * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, path, bl.key(), (ncomp, h, w), encode)

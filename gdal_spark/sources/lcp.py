@@ -21,22 +21,18 @@ Band count is DERIVED from the two flags exactly as the reference does:
 5 (base: elevation/slope/aspect/fuel/cover), +3 crown fuels, +2 ground
 fuels → 5/7/8/10.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py): a row-block slab preads its contiguous BIP rows and
-strides out each band; the sink pre-extends the file and each slab
-task pwrites all bands of its rows (a row-block is the contiguous
-unit under BIP)."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+a slab is a row-block, the contiguous unit under BIP, with each band
+strided out of it."""
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 HEADER_SIZE = 7316
 
@@ -90,41 +86,20 @@ def parse_header(path: str) -> dict:
 
 def read_lcp(spark: SparkSession, path: str,
              block_rows: int = 64) -> DataFrame:
-    """Distributed BIP scan → (band, gy, gx, val long): one task per
-    row-block slab; one contiguous pread per slab, numpy stride view
-    per band."""
+    """Distributed BIP scan → (band, gy, gx, val long): one contiguous
+    pread per row-block slab, numpy stride view per band."""
     hdr = parse_header(path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        arr = read(HEADER_SIZE + y0 * w * bands * 2, (rows, w, bands), "<i2")
+        for b in range(bands):
+            yield b, y0, 0, arr[:, :, b]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    blob = os.pread(fd, rows * w * bands * 2,
-                                    HEADER_SIZE + y0 * w * bands * 2)
-                    arr = np.frombuffer(blob, dtype="<i2").reshape(
-                        rows, w, bands)
-                    for b in range(bands):
-                        yy, xx = np.mgrid[0:rows, 0:w]
-                        yield pd.DataFrame({
-                            "band": np.full(rows * w, b, dtype=np.int64),
-                            "gy": (yy.ravel() + y0).astype(np.int64),
-                            "gx": xx.ravel().astype(np.int64),
-                            "val": arr[:, :, b].ravel().astype(np.int64),
-                        })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val long")
+    return RG.read_slabs(spark, path, bl.count, decode, banded=True,
+                         val="long")
 
 
 def write_lcp(
@@ -133,37 +108,19 @@ def write_lcp(
     block_rows: int = 64, fill: int = -9999, **hdr_kw,
 ) -> None:
     """Distributed BIP sink over (band, gy, gx, val): header +
-    pre-extended body driver-side, one row-block pwrite per task."""
+    pre-extended body driver-side, one row-block pwrite per slab."""
     bands = _BAND_COUNT[(crown, ground)]
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(header_bytes(w, h, crown=crown, ground=ground, **hdr_kw))
-        row = np.full(w * bands, fill, dtype="<i2").tobytes()
-        for _ in range(h):
-            fh.write(row)
+    RG.preallocate(
+        path, header_bytes(w, h, crown=crown, ground=ground, **hdr_kw),
+        RG.fill_row(fill, "<i2", w * bands), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w, bands), fill, dtype="<i2")
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64),
-            pdf["band"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy(np.int64).astype("<i2"))
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      HEADER_SIZE + y0 * w * bands * 2)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w, bands), fill, "<i2",
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         pdf["band"].to_numpy(),
+                         vals=pdf["val"].to_numpy(np.int64))
+        return HEADER_SIZE + y0 * w * bands * 2, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (bands, h, w), encode)

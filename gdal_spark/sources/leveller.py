@@ -18,20 +18,18 @@ w·h float32 little-endian heightfield, rows TOP-down
 (IReadBlock seeks nDataOffset + row·rowbytes with no flip,
 levellerdataset.cpp:514-528).
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py) over the hf_data payload; the tag chain is
-driver-side metadata only."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``)
+over the hf_data payload; the tag chain is driver-side metadata only."""
 
 from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 
 def _tag(name: str, data: bytes) -> bytes:
@@ -94,33 +92,14 @@ def read_leveller(spark: SparkSession, path: str,
     raw·em_scale + em_base."""
     hdr = parse_header(path)
     w, h = hdr["w"], hdr["h"]
-    scale, base, data0 = hdr["scale"], hdr["base"], hdr["data0"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        arr = read(hdr["data0"] + y0 * w * 4, (rows, w), "<f4")
+        yield 0, y0, 0, arr.astype(np.float64) * hdr["scale"] + hdr["base"]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    blob = os.pread(fd, rows * w * 4, data0 + y0 * w * 4)
-                    arr = np.frombuffer(blob, dtype="<f4").astype(
-                        np.float64) * scale + base
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr,
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode)
 
 
 def write_leveller(
@@ -129,42 +108,25 @@ def write_leveller(
     block_rows: int = 64,
 ) -> None:
     """Distributed sink over (gy, gx, val): trrn header + tag chain
-    driver-side (hf_data zero-filled), one row-block pwrite per task.
+    driver-side (hf_data zero-filled), one row-block pwrite per slab.
     Raw stored value = (val − em_base)/em_scale."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(b"trrn" + bytes([7]))
-        fh.write(_tag("hf_w", struct.pack("<I", w)))
-        fh.write(_tag("hf_b", struct.pack("<I", h)))
-        if em_scale != 1.0 or em_base != 0.0:
-            fh.write(_tag("coordsys_haselevm", struct.pack("<I", 1)))
-            fh.write(_tag("coordsys_em_scale", struct.pack("<d", em_scale)))
-            fh.write(_tag("coordsys_em_base", struct.pack("<d", em_base)))
-        nb = b"hf_data"
-        fh.write(bytes([len(nb)]) + nb + struct.pack("<I", w * h * 4))
-        data0 = fh.tell()
-        fh.truncate(data0 + w * h * 4)
+    head = (b"trrn" + bytes([7]) + _tag("hf_w", struct.pack("<I", w))
+            + _tag("hf_b", struct.pack("<I", h)))
+    if em_scale != 1.0 or em_base != 0.0:
+        head += (_tag("coordsys_haselevm", struct.pack("<I", 1))
+                 + _tag("coordsys_em_scale", struct.pack("<d", em_scale))
+                 + _tag("coordsys_em_base", struct.pack("<d", em_base)))
+    nb = b"hf_data"
+    head += bytes([len(nb)]) + nb + struct.pack("<I", w * h * 4)
+    data0 = RG.preallocate(path, head, bytes(w * 4), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.zeros((rows, w), dtype="<f4")
-        raw = (pdf["val"].to_numpy(np.float64) - em_base) / em_scale
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = raw.astype("<f4")
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"), data0 + y0 * w * 4)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), 0, "<f4",
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         vals=(pdf["val"].to_numpy(np.float64) - em_base)
+                         / em_scale)
+        return data0 + y0 * w * 4, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)

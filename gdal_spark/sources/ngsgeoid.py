@@ -15,19 +15,18 @@ edge (the reference flips at ngsgeoiddataset.cpp:107-110):
                  (ngsgeoiddataset.cpp:163-186); all header and data
                  words share the detected order.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py) with the bottom-up flip in the slab offsets."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``)
+with the bottom-up flip in the slab offsets."""
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 HEADER_SIZE = 4 * 8 + 3 * 4
 
@@ -65,41 +64,19 @@ def read_ngsgeoid(spark: SparkSession, path: str,
     hdr = parse_header(path)
     w, h = hdr["w"], hdr["h"]
     np_dt = np.dtype(hdr["dtype"])
-    slat, wlon = hdr["slat"], hdr["wlon"]
-    dlat, dlon = hdr["dlat"], hdr["dlon"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        frow0 = h - (y0 + rows)
+        yield 0, y0, 0, read(HEADER_SIZE + frow0 * w * 4, (rows, w),
+                             np_dt)[::-1]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows  # top-down block start
-                    rows = min(block_rows, h - y0)
-                    frow0 = h - (y0 + rows)
-                    blob = os.pread(fd, rows * w * 4,
-                                    HEADER_SIZE + frow0 * w * 4)
-                    arr = np.frombuffer(blob, dtype=np_dt).reshape(
-                        rows, w)[::-1]
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    gy = (yy.ravel() + y0).astype(np.int64)
-                    gx = xx.ravel().astype(np.int64)
-                    yield pd.DataFrame({
-                        "gy": gy, "gx": gx,
-                        "val": arr.ravel().astype(np.float64),
-                        "lat": slat + (h - 1 - gy) * dlat,
-                        "lon": wlon + gx * dlon,
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab,
-        "gy long, gx long, val double, lat double, lon double")
+    return RG.read_slabs(spark, path, bl.count, decode).select(
+        "gy", "gx", "val",
+        (F.lit(hdr["slat"]) + (F.lit(h - 1) - F.col("gy"))
+         * F.lit(hdr["dlat"])).alias("lat"),
+        (F.lit(hdr["wlon"]) + F.col("gx") * F.lit(hdr["dlon"])).alias("lon"))
 
 
 def write_ngsgeoid(
@@ -109,36 +86,19 @@ def write_ngsgeoid(
     big_endian: bool = False, block_rows: int = 64,
 ) -> None:
     """Distributed sink over (gy, gx, val): 44-byte header driver-side,
-    one row-block pwrite per task at the south-first flipped offset."""
+    one row-block pwrite per slab at the south-first flipped offset."""
     np_dt = np.dtype((">" if big_endian else "<") + "f4")
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(header_bytes(h, w, slat=slat, wlon=wlon, dlat=dlat,
-                              dlon=dlon, big_endian=big_endian))
-        fh.truncate(HEADER_SIZE + h * w * 4)
+    RG.preallocate(path, header_bytes(h, w, slat=slat, wlon=wlon,
+                                      dlat=dlat, dlon=dlon,
+                                      big_endian=big_endian),
+                   bytes(w * 4), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.zeros((rows, w), dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy(np.float64).astype(np_dt, copy=False))
-        frow0 = h - (y0 + rows)
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf[::-1].tobytes(order="C"),
-                      HEADER_SIZE + frow0 * w * 4)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), 0, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         vals=pdf["val"].to_numpy(np.float64))
+        return HEADER_SIZE + (h - (y0 + rows)) * w * 4, buf[::-1]
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)

@@ -15,20 +15,17 @@ Layout: a 1024-byte little-endian header —
 value = zMin + (raw − 1)·(zMax − zMin)/65534 (grddataset.cpp:160,
 SCALE16BIT = 65534 — raw 1..65535 spans the z range inclusively).
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py); the quantization transform runs vectorised inside
-each slab task."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``);
+the quantization transform runs vectorised inside each slab task."""
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 HEADER_SIZE = 1024
 SCALE16BIT = 65534.0
@@ -72,41 +69,21 @@ def parse_header(path: str) -> dict:
 def read_nwtgrd(spark: SparkSession, path: str,
                 block_rows: int = 64) -> DataFrame:
     """Distributed scan → (gy, gx, val double), gy top-down; raw 0
-    (null) rows are dropped, others inverse-quantized with the
+    (null) cells are dropped, others inverse-quantized with the
     format's (raw−1)/65534 rule."""
     hdr = parse_header(path)
     w, h = hdr["w"], hdr["h"]
     zmin = float(np.float32(hdr["zmin"]))
     scale = (float(np.float32(hdr["zmax"])) - zmin) / SCALE16BIT
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        raw = np.ma.masked_equal(read(HEADER_SIZE + y0 * w * 2, (rows, w),
+                                      "<u2").astype(np.float64), 0)
+        yield 0, y0, 0, zmin + (raw - 1.0) * scale
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    blob = os.pread(fd, rows * w * 2,
-                                    HEADER_SIZE + y0 * w * 2)
-                    raw = np.frombuffer(blob, dtype="<u2").reshape(
-                        rows, w)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    r = raw.ravel().astype(np.float64)
-                    keep = r > 0
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64)[keep],
-                        "gx": xx.ravel().astype(np.int64)[keep],
-                        "val": zmin + (r[keep] - 1.0) * scale,
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode)
 
 
 def write_nwtgrd(
@@ -118,47 +95,29 @@ def write_nwtgrd(
     """Distributed sink over (gy, gx, val): header driver-side (z range
     from one bounded aggregate unless pinned by the caller — pinning a
     range whose (zmax−zmin)/65534 step divides the data makes the
-    16-bit quantization exact), one row-block pwrite per task; missing
+    16-bit quantization exact), one row-block pwrite per slab; missing
     cells stay raw 0 (the null marker)."""
     if zmin is None or zmax is None:
-        stats = cells.agg(F.min("val").alias("lo"),
-                          F.max("val").alias("hi")).collect()[0]
-        zmin = float(stats["lo"]) if zmin is None else zmin
-        zmax = float(stats["hi"]) if zmax is None else zmax
+        lo, hi = RG.value_range(cells)
+        zmin = lo if zmin is None else zmin
+        zmax = hi if zmax is None else zmax
     zmin = float(np.float32(zmin))
     zmax = float(np.float32(zmax))
     scale = (zmax - zmin) / SCALE16BIT
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(header_bytes(
-            w, h, minx=minx, maxx=minx + (w - 1) * cell,
-            miny=miny, maxy=miny + (h - 1) * cell,
-            zmin=zmin, zmax=zmax))
-        fh.truncate(HEADER_SIZE + h * w * 2)
+    RG.preallocate(path, header_bytes(
+        w, h, minx=minx, maxx=minx + (w - 1) * cell,
+        miny=miny, maxy=miny + (h - 1) * cell, zmin=zmin, zmax=zmax),
+        bytes(w * 2), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.zeros((rows, w), dtype="<u2")
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
         v = pdf["val"].to_numpy(np.float64)
         raw = (np.rint((v - zmin) / scale) + 1.0 if scale > 0
                else np.ones_like(v))
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = raw.astype("<u2")
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      HEADER_SIZE + y0 * w * 2)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+        buf = RG.scatter(pdf, (rows, w), 0, "<u2",
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         vals=raw)
+        return HEADER_SIZE + y0 * w * 2, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)

@@ -19,20 +19,18 @@ lineoffset) triple makes the format interleave-agnostic: this driver
 WRITES band-sequential (BSQ) triples but READS whatever the triples
 describe.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py): driver parses the tiny .aux; each (band, row-block)
-slab preads its rows through the channel's declared strides; the sink
-pre-extends the raw file and slab tasks pwrite disjoint ranges."""
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+each (band, row-block) slab reads its rows through the channel's
+declared strides."""
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _DTYPES = {"8U": "u1", "16S": "<i2", "16U": "<u2", "32R": "<f4"}
 _OF_NP = {"u1": "8U", "i2": "16S", "u2": "16U", "f4": "32R"}
@@ -69,51 +67,28 @@ def parse_aux(aux_path: str) -> dict:
 
 def read_paux(spark: SparkSession, aux_path: str,
               block_rows: int = 64) -> DataFrame:
-    """Distributed scan → (band, gy, gx, val double): one task per
-    (band, row-block) slab, each pread bounded by the channel's
-    declared line stride."""
+    """Distributed scan → (band, gy, gx, val double): one (band,
+    row-block) slab, one pread per row bounded by the channel's
+    declared line stride and strided by its pixel offset."""
     hdr = parse_aux(aux_path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
-    chans, raw = hdr["chans"], hdr["raw"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        ch = hdr["chans"][b]
+        np_dt = np.dtype(ch["dtype"])
+        item, step = np_dt.itemsize, ch["pixel_off"]
+        out = np.empty((rows, w), dtype=np.float64)
+        for r in range(rows):
+            a = read(ch["offset"] + (y0 + r) * ch["line_off"],
+                     ((w - 1) * step + item,), "u1")
+            vals = np.lib.stride_tricks.as_strided(
+                a, shape=(w, item), strides=(step, 1)).copy()
+            out[r] = vals.view(np_dt).ravel()
+        yield b, y0, 0, out
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    ch = chans[b]
-                    np_dt = np.dtype(ch["dtype"])
-                    item = np_dt.itemsize
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    out = np.empty((rows, w), dtype=np.float64)
-                    for r in range(rows):
-                        pos = ch["offset"] + (y0 + r) * ch["line_off"]
-                        blob = os.pread(
-                            fd, (w - 1) * ch["pixel_off"] + item, pos)
-                        a = np.frombuffer(blob, dtype=np.uint8)
-                        vals = np.lib.stride_tricks.as_strided(
-                            a, shape=(w, item),
-                            strides=(ch["pixel_off"], 1)).copy()
-                        out[r] = vals.view(np_dt).ravel().astype(
-                            np.float64)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(out.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": out.ravel(),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, hdr["raw"], bl.count, decode, banded=True)
 
 
 def write_paux(
@@ -121,8 +96,8 @@ def write_paux(
     *, dtype: str = "i2", block_rows: int = 64, fill: float = 0.0,
 ) -> None:
     """Distributed BSQ sink over (band, gy, gx, val): .aux sidecar +
-    pre-extended raw driver-side, one (band, row-block) pwrite per
-    slab task."""
+    pre-extended raw driver-side, one pwrite per (band, row-block)
+    slab."""
     if dtype not in _OF_NP:
         raise ValueError(f"paux write: unsupported dtype {dtype!r}")
     np_dt = np.dtype("<" + dtype if dtype != "u1" else dtype)
@@ -137,37 +112,13 @@ def write_paux(
             off = b * h * w * item
             fh.write(f"ChanDefinition-{b + 1}: {_OF_NP[dtype]} {off} "
                      f"{item} {w * item} Swapped\n")
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(bands * h * w * item)
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(bands * h):
-                fh.write(row)
+    RG.preallocate(raw, b"", RG.fill_row(fill, np_dt, w), bands * h)
+    bl = RG.Blocks(h, block_rows, bands)
 
-    n_blocks = (h + block_rows - 1) // block_rows
+    def encode(slab, pdf):
+        b, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return (b * h + y0) * w * item, buf
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        b, blk = int(key[0]), int(key[1])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      (b * h + y0) * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
-
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("band", "_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, raw, bl.key(banded=True), (bands, h, w), encode)

@@ -22,22 +22,18 @@ The novelty vs the engine's other raw drivers: the data offset is not
 a fixed header size but label-driven (records × RECORD_BYTES), so the
 gate pins the pointer arithmetic, in the format's classic MSB flavor.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py): parse only the label driver-side; one (band,
-row-block) ``pread``/``pwrite`` per task.  No pixel bytes touch the
-driver.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``),
+one (band, row-block) slab of records each.
 """
 
 from __future__ import annotations
 
-import os
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 # (SAMPLE_TYPE, SAMPLE_BITS) -> numpy dtype (endianness explicit)
 _SAMPLE_TYPES = {
@@ -132,41 +128,20 @@ def parse_pds_label(path: str) -> dict:
 def read_pds(spark: SparkSession, path: str,
              block_rows: int = 64) -> DataFrame:
     """Distributed band-sequential scan → (band, gy, gx, val double);
-    one (band, row-block) pread per task at the label-resolved offset."""
+    one (band, row-block) pread per slab at the label-resolved
+    offset."""
     hdr = parse_pds_label(path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    rec, data0 = hdr["record_bytes"], hdr["data0"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    rec = hdr["record_bytes"]
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        arr = read(hdr["data0"] + (b * h + y0) * rec, (rows, rec), "u1")
+        yield b, y0, 0, arr[:, :w * np_dt.itemsize].copy().view(np_dt)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    pos = data0 + (b * h + y0) * rec
-                    blob = os.pread(fd, rows * rec, pos)
-                    arr = np.frombuffer(blob, dtype="u1").reshape(
-                        rows, rec)[:, : w * item].copy().view(np_dt)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(arr.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode, banded=True)
 
 
 def write_pds(
@@ -174,49 +149,19 @@ def write_pds(
     *, dtype: str = "i2", block_rows: int = 64, fill: float = 0.0,
 ) -> None:
     """Distributed band-sequential sink: ODL label + pre-extended data
-    driver-side, one (band, row-block) pwrite per task."""
+    driver-side, one pwrite per (band, row-block) slab."""
     if dtype not in _OF_NP:
         raise ValueError(f"pds write: unsupported dtype {dtype!r}")
-    st, bits = _OF_NP[dtype]
-    np_dt = np.dtype(_SAMPLE_TYPES[(st, bits)])
-    item = np_dt.itemsize
-    rec = w * item
-    label = pds_label_bytes(w, h, bands, dtype)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(label)
-        if fill == 0.0:
-            fh.truncate(len(label) + bands * h * rec)  # sparse zeros
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(bands * h):
-                fh.write(row)
-    data0 = len(label)
-    n_blocks = (h + block_rows - 1) // block_rows
+    np_dt = np.dtype(_SAMPLE_TYPES[_OF_NP[dtype]])
+    rec = w * np_dt.itemsize
+    data0 = RG.preallocate(path, pds_label_bytes(w, h, bands, dtype),
+                           RG.fill_row(fill, np_dt, w), bands * h)
+    bl = RG.Blocks(h, block_rows, bands)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        slab = int(key[0])
-        b, blk = divmod(slab, n_blocks)
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      data0 + (b * h + y0) * rec)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [slab], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        b, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return data0 + (b * h + y0) * rec, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            (F.col("band") * F.lit(n_blocks)
-             + F.floor(F.col("gy") / F.lit(block_rows))).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per (band, row-block)
-    )
+    RG.write_slabs(cells, path, bl.key(banded=True), (bands, h, w), encode)

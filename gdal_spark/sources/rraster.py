@@ -23,23 +23,21 @@ bands of one pixel adjacent), completing the interleave triple next to
 the ENVI driver's BSQ and the EHdr driver's BIL; the read path handles
 all three bandorders.
 
-Spark mapping — the engine's one-task-per-slab raw-raster contract
-(sources/envi.py): driver parses only the tiny .grd; read parallelizes
-one (band, row-block) slab per task (``pread`` of the block, strided
-view per interleave); write pre-extends the file and one task per
-row-block ``pwrite``s its range.  Per-band min/max for the header are
-computed as a bounded Spark aggregate, not a driver pass.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+a read slab is one (band, row-block), viewed per interleave; a write
+slab is a row-block of all bands.  Per-band min/max for the header
+are a bounded Spark aggregate, not a driver pass.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 # R raster datatype code -> numpy little-endian dtype
 _DTYPES = {"INT1U": "u1", "INT2S": "<i2", "INT2U": "<u2",
@@ -106,53 +104,30 @@ def _raw_path(grd_path: str) -> str:
 def read_rraster(
     spark: SparkSession, grd_path: str, block_rows: int = 64,
 ) -> DataFrame:
-    """Distributed scan → (band, gy, gx, val double): one task per
-    (band, row-block) slab; the pread block is reshaped per the header's
+    """Distributed scan → (band, gy, gx, val double): one (band,
+    row-block) slab per pread; the block is reshaped per the header's
     bandorder (BIP / BIL / BSQ)."""
     hdr = parse_grd(grd_path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
     order = hdr["bandorder"]
     np_dt = np.dtype(hdr["dtype"])
     item = np_dt.itemsize
-    raw = _raw_path(grd_path)
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        if order == "BSQ":
+            arr = read((b * h + y0) * w * item, (rows, w), np_dt)
+        elif order == "BIP":
+            arr = read(y0 * bands * w * item, (rows, w, bands),
+                       np_dt)[:, :, b]
+        else:  # BIL
+            arr = read(y0 * bands * w * item, (rows, bands, w),
+                       np_dt)[:, b, :]
+        yield b, y0, 0, arr
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    if order == "BSQ":
-                        pos = (b * h + y0) * w * item
-                        arr = np.frombuffer(
-                            os.pread(fd, rows * w * item, pos),
-                            dtype=np_dt).reshape(rows, w)
-                    else:  # BIP / BIL share one interleaved block read
-                        pos = y0 * bands * w * item
-                        blob = os.pread(fd, rows * bands * w * item, pos)
-                        cube = np.frombuffer(blob, dtype=np_dt)
-                        if order == "BIP":
-                            arr = cube.reshape(rows, w, bands)[:, :, b]
-                        else:
-                            arr = cube.reshape(rows, bands, w)[:, b, :]
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(arr.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, _raw_path(grd_path), bl.count, decode,
+                         banded=True)
 
 
 def write_rraster(
@@ -162,13 +137,12 @@ def write_rraster(
     cellsize: float = 1.0 / 1024.0, nodata: float = -9999.0,
 ) -> None:
     """Distributed BIP sink over (band, gy, gx, val): .grd + pre-extended
-    .gri driver-side, one task per row-block ``pwrite``s all bands of its
-    rows (BIP makes the row-block the contiguous unit).  Header min/max
-    come from a bounded per-band Spark aggregate."""
+    .gri driver-side, one pwrite per row-block of all bands of its rows
+    (BIP makes the row-block the contiguous unit).  Header min/max come
+    from a bounded per-band Spark aggregate."""
     if dtype not in _OF_NP:
         raise ValueError(f"rraster write: unsupported dtype {dtype!r}")
     np_dt = np.dtype(_DTYPES[_OF_NP[dtype]])
-    item = np_dt.itemsize
     raw = _raw_path(grd_path)
     os.makedirs(os.path.dirname(grd_path) or ".", exist_ok=True)
 
@@ -184,36 +158,14 @@ def write_rraster(
             w, h, bands, _OF_NP[dtype], "BIP",
             xmin, ymax - h * cellsize, xmin + w * cellsize, ymax,
             nodata, minv, maxv))
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(h * w * bands * item)  # sparse zeros
-        else:
-            px = np.full(w * bands, fill, dtype=np_dt).tobytes()
-            for _ in range(h):
-                fh.write(px)
+    RG.preallocate(raw, b"", RG.fill_row(fill, np_dt, w * bands), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w, bands), fill, dtype=np_dt)
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64),
-            pdf["band"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      y0 * w * bands * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w, bands), fill, np_dt,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         pdf["band"].to_numpy())
+        return y0 * w * bands * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, raw, bl.key(), (bands, h, w), encode)

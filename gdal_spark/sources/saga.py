@@ -22,21 +22,20 @@ preserved from the reference (sagadataset.cpp:508-560, 816-828):
 * ``POSITION_XMIN/YMIN`` name the CENTER of the south-west cell, not
   its outer corner.
 
-Spark mapping — the engine's one-task-per-slab raw-raster contract:
-read parallelizes one row-block per task (``pread`` of its disjoint
-range, with gy flipped from the bottom-up file row), write pre-extends
-the file and one task per row-block ``pwrite``s its rows.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``)
+over blocks of the bottom-up FILE rows, flipped to north-up in the
+slab.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _DTYPES = {"BYTE_UNSIGNED": "u1", "SHORTINT": "<i2",
            "SHORTINT_UNSIGNED": "<u2", "INTEGER": "<i4",
@@ -101,41 +100,20 @@ def read_saga(
 ) -> DataFrame:
     """Distributed scan → (gy, gx, val double) with gy 0 = NORTH (the
     engine's raster convention) recovered from the file's bottom-up
-    rows; one row-block pread per task."""
+    rows; one block of file rows per slab."""
     hdr = parse_sgrd(sgrd_path)
     w, h = hdr["w"], hdr["h"]
     np_dt = np.dtype(hdr["dtype"])
-    item = np_dt.itemsize
-    raw = _raw_path(sgrd_path)
-    offset = hdr["offset"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)   # blocks of FILE rows (south-up)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, fy0, rows = bl.span(slab)
+        arr = read(hdr["offset"] + fy0 * w * np_dt.itemsize, (rows, w),
+                   np_dt)
+        # file row fy -> north-up gy = h - 1 - fy
+        yield 0, h - fy0 - rows, 0, arr[::-1]
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(raw, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    fy0 = blk * block_rows          # file row (south-up)
-                    rows = min(block_rows, h - fy0)
-                    pos = offset + fy0 * w * item
-                    arr = np.frombuffer(
-                        os.pread(fd, rows * w * item, pos),
-                        dtype=np_dt).reshape(rows, w)
-                    fyy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        # file row fy -> north-up gy = h - 1 - fy
-                        "gy": (h - 1 - (fyy.ravel() + fy0)).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, _raw_path(sgrd_path), bl.count, decode)
 
 
 def write_saga(
@@ -146,12 +124,11 @@ def write_saga(
 ) -> None:
     """Distributed sink over (gy, gx, val) with gy 0 = north: rows are
     flipped into the format's bottom-up order; POSITION_XMIN/YMIN are
-    written as CELL CENTERS per the spec.  One row-block pwrite per
-    task."""
+    written as CELL CENTERS per the spec.  One pwrite per block of
+    file rows."""
     if dtype not in _OF_NP:
         raise ValueError(f"saga write: unsupported dtype {dtype!r}")
     np_dt = np.dtype(_DTYPES[_OF_NP[dtype]])
-    item = np_dt.itemsize
     raw = _raw_path(sgrd_path)
     os.makedirs(os.path.dirname(sgrd_path) or ".", exist_ok=True)
     with open(sgrd_path, "wb") as fh:
@@ -160,36 +137,15 @@ def write_saga(
             xmin + cellsize / 2.0,
             (ymax - h * cellsize) + cellsize / 2.0,
             cellsize, nodata))
-    n_blocks = (h + block_rows - 1) // block_rows
-    with open(raw, "wb") as fh:
-        if fill == 0.0:
-            fh.truncate(h * w * item)  # sparse zeros
-        else:
-            row = np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(h):
-                fh.write(row)
+    RG.preallocate(raw, b"", RG.fill_row(fill, np_dt, w), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])                 # block of FILE rows (south-up)
-        fy0 = blk * block_rows
-        rows = min(block_rows, h - fy0)
-        buf = np.full((rows, w), fill, dtype=np_dt)
-        fy = h - 1 - pdf["gy"].to_numpy(np.int64)  # north-up -> file row
-        buf[fy - fy0, pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(raw, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"), fy0 * w * item)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, fy0, rows = bl.span(slab)
+        fy = h - 1 - pdf["gy"].to_numpy()  # north-up -> file row
+        buf = RG.scatter(pdf, (rows, w), fill, np_dt,
+                         fy - fy0, pdf["gx"].to_numpy())
+        return fy0 * w * np_dt.itemsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor((F.lit(h - 1) - F.col("gy")) / F.lit(block_rows))
-            .cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, raw, bl.key(F.lit(h - 1) - F.col("gy")),
+                   (h, w), encode)

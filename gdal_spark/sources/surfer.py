@@ -23,25 +23,31 @@ Blanked nodes carry the format's famous blank value 1.70141e38
 (gsbgdataset.cpp:71 pins the exact float32 ``1.701410009187828e+38``;
 gsagdataset.cpp:72 the double ``1.70141E+38``) and are DROPPED on read.
 
-Spark mapping — binary follows the one-task-per-slab raw-raster
-contract (sources/ehdr.py) with the bottom-up row flip in the slab
-offsets; ASCII text is written per-row by the row-block task and read
-with a driver-side header parse + per-slab line ranges.
-"""
+Spark mapping — the binary layouts use the raw-raster slab kernel
+(``sources/_rawgrid.py``) with the bottom-up row flip in the slab
+offsets; ASCII text is written per-row by one task per grid row and
+read with a driver-side header parse + per-slab line ranges."""
 
 from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gdal_spark.sources import _rawgrid as RG
+
 BLANK_F32 = np.float32(1.701410009187828e38)
 BLANK_F64 = 1.70141e38
+_CW = 18  # DSAA cell width of write_gsag's fixed-width rows
+
+
+def _blanked(vals: np.ndarray) -> np.ma.MaskedArray:
+    """Float64 grid values with the blank nodes masked."""
+    return np.ma.masked_where(np.isclose(vals, BLANK_F64, rtol=1e-6), vals)
 
 
 # ---------------------------------------------------------------------------
@@ -66,38 +72,16 @@ def read_gsbg(spark: SparkSession, path: str,
     Blanked nodes (1.70141e38) are dropped."""
     hdr = parse_gsbg_header(path)
     w, h = hdr["w"], hdr["h"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        # top-down rows y0..y0+rows-1 live at file rows h-1-y, one
+        # contiguous descending range
+        arr = read(56 + (h - (y0 + rows)) * w * 4, (rows, w), "<f4")
+        yield 0, y0, 0, _blanked(arr[::-1].astype(np.float64))
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows  # top-down block start
-                    rows = min(block_rows, h - y0)
-                    # top-down rows y0..y0+rows-1 live at file rows
-                    # h-1-y .. contiguous descending; pread the range
-                    frow0 = h - (y0 + rows)
-                    blob = os.pread(fd, rows * w * 4,
-                                    56 + frow0 * w * 4)
-                    arr = np.frombuffer(blob, dtype="<f4").reshape(
-                        rows, w)[::-1]  # flip to top-down
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    vals = arr.ravel().astype(np.float64)
-                    keep = ~np.isclose(vals, BLANK_F64, rtol=1e-6)
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64)[keep],
-                        "gx": xx.ravel().astype(np.int64)[keep],
-                        "val": vals[keep],
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode)
 
 
 def write_gsbg(
@@ -106,51 +90,33 @@ def write_gsbg(
     block_rows: int = 64,
 ) -> None:
     """Distributed binary sink over (gy, gx, val): header + blank-filled
-    body driver-side, one row-block pwrite per task at the flipped
+    body driver-side, one row-block pwrite per slab at the flipped
     offset.  zlo/zhi come from one bounded aggregate."""
-    stats = cells.agg(F.min("val").alias("lo"),
-                      F.max("val").alias("hi")).collect()[0]
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(b"DSBB" + struct.pack("<2h", w, h))
-        fh.write(struct.pack(
-            "<6d", xlo, xlo + (w - 1) * cell, ylo, ylo + (h - 1) * cell,
-            float(stats["lo"]), float(stats["hi"])))
-        row = np.full(w, BLANK_F32, dtype="<f4").tobytes()
-        for _ in range(h):
-            fh.write(row)
-    n_blocks = (h + block_rows - 1) // block_rows
+    lo, hi = RG.value_range(cells)
+    head = b"DSBB" + struct.pack("<2h", w, h) + struct.pack(
+        "<6d", xlo, xlo + (w - 1) * cell, ylo, ylo + (h - 1) * cell, lo, hi)
+    data0 = RG.preallocate(path, head, RG.fill_row(BLANK_F32, "<f4", w), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), BLANK_F32, dtype="<f4")
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype("<f4", copy=False))
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            # flip: top-down rows y0.. go to file rows h-1-y (descending)
-            os.pwrite(fd, buf[::-1].tobytes(order="C"),
-                      56 + (h - (y0 + rows)) * w * 4)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), BLANK_F32, "<f4",
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        # flip: top-down rows y0.. go to file rows h-1-y (descending)
+        return data0 + (h - (y0 + rows)) * w * 4, buf[::-1]
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per row-block
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)
 
 
 # ---------------------------------------------------------------------------
 # DSAA — Surfer ASCII (one text row per grid row keeps the scan splittable)
 # ---------------------------------------------------------------------------
+
+def _text_row(vals: np.ndarray) -> bytes:
+    """One DSAA grid row as a fixed-width text line."""
+    return ("".join(f"{v:.12g}".rjust(_CW) for v in vals)
+            + "\r\n").encode("ascii")
+
 
 def write_gsag(
     cells: DataFrame, path: str, w: int, h: int,
@@ -158,54 +124,34 @@ def write_gsag(
 ) -> None:
     """ASCII sink: 5-line header driver-side, then every grid row as one
     text line (a legal wrap choice — readers split on whitespace),
-    assembled per row-block task and written with a single pwrite into
+    assembled per grid-row slab and written with a single pwrite into
     a pre-sized region via fixed-width formatting."""
-    stats = cells.agg(F.min("val").alias("lo"),
-                      F.max("val").alias("hi")).collect()[0]
+    lo, hi = RG.value_range(cells)
     header = (
         "DSAA\r\n"
         f"{w} {h}\r\n"
         f"{xlo:.7g} {xlo + (w - 1) * cell:.7g}\r\n"
         f"{ylo:.7g} {ylo + (h - 1) * cell:.7g}\r\n"
-        f"{float(stats['lo']):.7g} {float(stats['hi']):.7g}\r\n"
+        f"{lo:.7g} {hi:.7g}\r\n"
     ).encode("ascii")
     # fixed-width cells make every row line the same byte length, so
     # tasks can pwrite disjoint ranges without a shuffle to one file
-    cw = 18
-    row_len = w * cw + 2
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(header)
-        blank = (f"{BLANK_F64:.12g}".rjust(cw) * w) + "\r\n"
-        for _ in range(h):
-            fh.write(blank.encode("ascii"))
-    data0 = len(header)
+    row_len = w * _CW + 2
+    data0 = RG.preallocate(path, header, _text_row(np.full(w, BLANK_F64)), h)
 
-    def write_rows(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        gy = int(key[0])
+    def encode(gy, pdf):
         vals = np.full(w, BLANK_F64)
-        vals[pdf["gx"].to_numpy(np.int64)] = pdf["val"].to_numpy()
-        line = "".join(f"{v:.12g}".rjust(cw) for v in vals) + "\r\n"
-        frow = h - 1 - gy  # bottom-up
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, line.encode("ascii"), data0 + frow * row_len)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"gy": [gy], "n": [len(pdf)]})
+        vals[pdf["gx"].to_numpy()] = pdf["val"].to_numpy()
+        return data0 + (h - 1 - gy) * row_len, _text_row(vals)  # bottom-up
 
-    (
-        cells.groupBy("gy")
-        .applyInPandas(write_rows, "gy long, n long")
-        .collect()  # bounded: one row per grid row
-    )
+    RG.write_slabs(cells, path, F.col("gy").cast("long"), (h, w), encode)
 
 
 def read_gsag(spark: SparkSession, path: str,
               block_rows: int = 64) -> DataFrame:
     """ASCII scan.  Fixed-width files (write_gsag's layout, detected by
     size = header + h·row_len) read fully distributed — one row-block
-    pread per task, same slab contract as the binary path.  Foreign
+    pread per slab, same kernel as the binary path.  Foreign
     files with arbitrary whitespace wrapping are a sequential-prefix
     problem (a token's grid position depends on every byte before it);
     those fall back to a driver-side parse, bounded by the format's
@@ -217,45 +163,21 @@ def read_gsag(spark: SparkSession, path: str,
         raise ValueError("surfer: missing DSAA magic")
     w, h = (int(t) for t in lines[1].split())
     header_len = sum(len(ln) + 2 for ln in lines[:5])  # CRLF
-    cw = 18
-    row_len = w * cw + 2
+    row_len = w * _CW + 2
 
     if os.path.getsize(path) == header_len + h * row_len:
-        n_blocks = (h + block_rows - 1) // block_rows
-        slabs = spark.range(n_blocks).toDF("slab").repartition(
-            min(n_blocks, 32), "slab")
+        bl = RG.Blocks(h, block_rows)
 
-        def read_slab(batches: Iterator[pd.DataFrame]
-                      ) -> Iterator[pd.DataFrame]:
-            fd = os.open(path, os.O_RDONLY)
-            try:
-                for pdf in batches:
-                    for s in pdf["slab"].to_numpy():
-                        blk = int(s)
-                        y0 = blk * block_rows  # top-down
-                        rows = min(block_rows, h - y0)
-                        frow0 = h - (y0 + rows)
-                        blob = os.pread(fd, rows * row_len,
-                                        header_len + frow0 * row_len)
-                        arr = np.array([
-                            [float(ln[i * cw:(i + 1) * cw])
-                             for i in range(w)]
-                            for ln in blob.decode("ascii")
-                            .splitlines()])[::-1]
-                        yy, xx = np.mgrid[0:rows, 0:w]
-                        vals = arr.ravel()
-                        keep = ~np.isclose(vals, BLANK_F64, rtol=1e-6)
-                        yield pd.DataFrame({
-                            "gy": (yy.ravel() + y0).astype(
-                                np.int64)[keep],
-                            "gx": xx.ravel().astype(np.int64)[keep],
-                            "val": vals[keep],
-                        })
-            finally:
-                os.close(fd)
+        def decode(read, slab):
+            _, y0, rows = bl.span(slab)
+            blob = read(header_len + (h - (y0 + rows)) * row_len,
+                        (rows * row_len,), "u1").tobytes()
+            arr = np.array([
+                [float(ln[i * _CW:(i + 1) * _CW]) for i in range(w)]
+                for ln in blob.decode("ascii").splitlines()])[::-1]
+            yield 0, y0, 0, _blanked(arr)
 
-        return slabs.mapInPandas(
-            read_slab, "gy long, gx long, val double")
+        return RG.read_slabs(spark, path, bl.count, decode)
 
     # foreign wrap: sequential token scan on the driver (bounded:
     # DSAA is an interchange format), then parallelize
@@ -268,14 +190,10 @@ def read_gsag(spark: SparkSession, path: str,
         raise ValueError(f"surfer: expected {w * h} values, "
                          f"got {len(toks)}")
     arr = np.array(toks).reshape(h, w)[::-1]  # to top-down
-    yy, xx = np.mgrid[0:h, 0:w]
-    vals = arr.ravel()
-    keep = ~np.isclose(vals, BLANK_F64, rtol=1e-6)
-    pdf = pd.DataFrame({
-        "gy": yy.ravel().astype(np.int64)[keep],
-        "gx": xx.ravel().astype(np.int64)[keep],
-        "val": vals[keep]})
-    return spark.createDataFrame(pdf)
+    gy, gx = np.nonzero(~np.ma.getmaskarray(_blanked(arr)))
+    return spark.createDataFrame(pd.DataFrame({
+        "gy": gy.astype(np.int64), "gx": gx.astype(np.int64),
+        "val": arr[gy, gx]}))
 
 
 # ---------------------------------------------------------------------------
@@ -327,37 +245,16 @@ def read_gs7bg(spark: SparkSession, path: str,
     dropped (gs7bgdataset.cpp:191)."""
     hdr = parse_gs7bg_header(path)
     w, h = hdr["w"], hdr["h"]
-    blank, data0 = hdr["blank"], hdr["data0"]
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows)
 
-    slabs = spark.range(n_blocks).toDF("slab").repartition(
-        min(n_blocks, 32), "slab")
+    def decode(read, slab):
+        _, y0, rows = bl.span(slab)
+        arr = read(hdr["data0"] + (h - (y0 + rows)) * w * 8, (rows, w),
+                   "<f8")[::-1]
+        yield 0, y0, 0, np.ma.masked_where(
+            ~(arr < hdr["blank"] * (1 - 1e-9)), arr)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    blk = int(s)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    frow0 = h - (y0 + rows)
-                    blob = os.pread(fd, rows * w * 8,
-                                    data0 + frow0 * w * 8)
-                    arr = np.frombuffer(blob, dtype="<f8").reshape(
-                        rows, w)[::-1]
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    vals = arr.ravel()
-                    keep = vals < blank * (1 - 1e-9)
-                    yield pd.DataFrame({
-                        "gy": (yy.ravel() + y0).astype(np.int64)[keep],
-                        "gx": xx.ravel().astype(np.int64)[keep],
-                        "val": vals[keep],
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(read_slab, "gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode)
 
 
 def write_gs7bg(
@@ -367,44 +264,20 @@ def write_gs7bg(
 ) -> None:
     """Distributed sink over (gy, gx, val): tagged header sections +
     blank-filled DATA payload driver-side, one row-block pwrite per
-    task at the flipped offset."""
-    stats = cells.agg(F.min("val").alias("lo"),
-                      F.max("val").alias("hi")).collect()[0]
-    blank = BLANK_F64
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(struct.pack("<3i", _S7_HEADER_TAG, 4, 1))
-        fh.write(struct.pack("<2i", _S7_GRID_TAG, 72))
-        fh.write(struct.pack("<2i", h, w))
-        fh.write(struct.pack(
-            "<8d", xlo, ylo, cell, cell,
-            float(stats["lo"]), float(stats["hi"]), 0.0, blank))
-        fh.write(struct.pack("<2i", _S7_DATA_TAG, w * h * 8))
-        data0 = fh.tell()
-        row = np.full(w, blank, dtype="<f8").tobytes()
-        for _ in range(h):
-            fh.write(row)
+    slab at the flipped offset."""
+    lo, hi = RG.value_range(cells)
+    head = (struct.pack("<3i", _S7_HEADER_TAG, 4, 1)
+            + struct.pack("<2i", _S7_GRID_TAG, 72) + struct.pack("<2i", h, w)
+            + struct.pack("<8d", xlo, ylo, cell, cell, lo, hi, 0.0,
+                          BLANK_F64)
+            + struct.pack("<2i", _S7_DATA_TAG, w * h * 8))
+    data0 = RG.preallocate(path, head, RG.fill_row(BLANK_F64, "<f8", w), h)
+    bl = RG.Blocks(h, block_rows)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
-        buf = np.full((rows, w), blank, dtype="<f8")
-        buf[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = pdf["val"].to_numpy()
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf[::-1].tobytes(order="C"),
-                      data0 + (h - (y0 + rows)) * w * 8)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [blk], "n": [len(pdf)]})
+    def encode(slab, pdf):
+        _, y0, rows = bl.span(slab)
+        buf = RG.scatter(pdf, (rows, w), BLANK_F64, "<f8",
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return data0 + (h - (y0 + rows)) * w * 8, buf[::-1]
 
-    (
-        cells.withColumn(
-            "_slab",
-            F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()
-    )
+    RG.write_slabs(cells, path, bl.key(), (h, w), encode)

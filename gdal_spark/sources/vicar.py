@@ -19,23 +19,17 @@ Format — the engine's only SELF-SIZING ASCII label:
   every line read) — this driver is the engine's only format with a
   per-RECORD binary prefix, so the gate pins the strided-skip path.
 
-Spark mapping — the one-task-per-slab raw-raster contract
-(sources/ehdr.py): the driver parses only the label; read parallelizes
-one (band, row-block) slab per task, each ``pread``-ing its contiguous
-record range and dropping the NBB prefixes with a strided view; write
-pre-extends the file driver-side and one task per (band, row-block)
-``pwrite``s its records.  No pixel bytes touch the driver.
+Spark mapping — the raw-raster slab kernel (``sources/_rawgrid.py``):
+one (band, row-block) slab per contiguous record range, the NBB
+prefixes dropped by a strided view on read and left zero on write.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 _FORMATS = {"BYTE": "u1", "HALF": "<i2", "FULL": "<i4", "REAL": "<f4"}
 _OF_NP = {"u1": "BYTE", "i2": "HALF", "i4": "FULL", "f4": "REAL"}
@@ -100,45 +94,24 @@ def parse_vicar_label(path: str) -> dict:
 
 def read_vicar(spark: SparkSession, path: str,
                block_rows: int = 64) -> DataFrame:
-    """Distributed BSQ scan → (band, gy, gx, val double): one task per
-    (band, row-block); each record's NBB binary prefix is dropped by a
-    strided reshape, NLB binary-header records are skipped up front."""
+    """Distributed BSQ scan → (band, gy, gx, val double): one (band,
+    row-block) slab per pread; each record's NBB binary prefix is
+    dropped by a strided view, NLB binary-header records are skipped up
+    front."""
     hdr = parse_vicar_label(path)
     w, h, bands = hdr["w"], hdr["h"], hdr["bands"]
     np_dt = np.dtype(hdr["dtype"])
     recsize, nbb = hdr["recsize"], hdr["nbb"]
     data0 = hdr["lblsize"] + hdr["nlb"] * recsize
-    n_blocks = (h + block_rows - 1) // block_rows
+    bl = RG.Blocks(h, block_rows, bands)
 
-    slabs = spark.range(bands * n_blocks).toDF("slab").repartition(
-        min(bands * n_blocks, 32), "slab")
+    def decode(read, slab):
+        b, y0, rows = bl.span(slab)
+        # one record = nbb prefix bytes + w samples
+        arr = read(data0 + (b * h + y0) * recsize, (rows, recsize), "u1")
+        yield b, y0, 0, arr[:, nbb:].copy().view(np_dt)
 
-    def read_slab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for s in pdf["slab"].to_numpy():
-                    b, blk = divmod(int(s), n_blocks)
-                    y0 = blk * block_rows
-                    rows = min(block_rows, h - y0)
-                    pos = data0 + (b * h + y0) * recsize
-                    blob = os.pread(fd, rows * recsize, pos)
-                    # one record = nbb prefix bytes + w samples; view as
-                    # byte rows, slice off the prefix, then recast
-                    arr = np.frombuffer(blob, dtype="u1").reshape(
-                        rows, recsize)[:, nbb:].copy().view(np_dt)
-                    yy, xx = np.mgrid[0:rows, 0:w]
-                    yield pd.DataFrame({
-                        "band": np.full(arr.size, b, dtype=np.int64),
-                        "gy": (yy.ravel() + y0).astype(np.int64),
-                        "gx": xx.ravel().astype(np.int64),
-                        "val": arr.ravel().astype(np.float64),
-                    })
-        finally:
-            os.close(fd)
-
-    return slabs.mapInPandas(
-        read_slab, "band long, gy long, gx long, val double")
+    return RG.read_slabs(spark, path, bl.count, decode, banded=True)
 
 
 def write_vicar(
@@ -147,53 +120,24 @@ def write_vicar(
     fill: float = 0.0,
 ) -> None:
     """Distributed BSQ sink over (band, gy, gx, val): label + pre-extended
-    data driver-side, one task per (band, row-block) ``pwrite``s its
-    records (NBB prefix bytes left as the pre-extension's zeros)."""
+    data driver-side, one pwrite of records per (band, row-block) slab
+    (NBB prefix bytes left as zeros)."""
     if dtype not in _OF_NP:
         raise ValueError(f"vicar write: unsupported dtype {dtype!r}")
     fmt = _OF_NP[dtype]
     np_dt = np.dtype(_FORMATS[fmt])
-    item = np_dt.itemsize
-    recsize = nbb + w * item
-    label = vicar_label_bytes(w, h, bands, fmt, nbb, 0)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(label)
-        if fill == 0.0:
-            fh.truncate(len(label) + bands * h * recsize)  # sparse zeros
-        else:
-            rec = b"\x00" * nbb + np.full(w, fill, dtype=np_dt).tobytes()
-            for _ in range(bands * h):
-                fh.write(rec)
-    lblsize = len(label)
-    n_blocks = (h + block_rows - 1) // block_rows
+    recsize = nbb + w * np_dt.itemsize
+    data0 = RG.preallocate(path, vicar_label_bytes(w, h, bands, fmt, nbb, 0),
+                           bytes(nbb) + RG.fill_row(fill, np_dt, w),
+                           bands * h)
+    bl = RG.Blocks(h, block_rows, bands)
 
-    def write_slab(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        slab = int(key[0])
-        b, blk = divmod(slab, n_blocks)
-        y0 = blk * block_rows
-        rows = min(block_rows, h - y0)
+    def encode(slab, pdf):
+        b, y0, rows = bl.span(slab)
         buf = np.zeros((rows, recsize), dtype="u1")
-        px = buf[:, nbb:].view(np_dt)
-        if fill != 0.0:
-            px[:] = fill
-        px[pdf["gy"].to_numpy(np.int64) - y0,
-           pdf["gx"].to_numpy(np.int64)] = (
-            pdf["val"].to_numpy().astype(np_dt, copy=False))
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, buf.tobytes(order="C"),
-                      lblsize + (b * h + y0) * recsize)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"slab": [slab], "n": [len(pdf)]})
+        buf[:, nbb:] = RG.scatter(
+            pdf, (rows, w), fill, np_dt, pdf["gy"].to_numpy() - y0,
+            pdf["gx"].to_numpy()).view("u1")
+        return data0 + (b * h + y0) * recsize, buf
 
-    (
-        cells.withColumn(
-            "_slab",
-            (F.col("band") * F.lit(n_blocks)
-             + F.floor(F.col("gy") / F.lit(block_rows))).cast("long"))
-        .groupBy("_slab")
-        .applyInPandas(write_slab, "slab long, n long")
-        .collect()  # bounded: one row per (band, row-block)
-    )
+    RG.write_slabs(cells, path, bl.key(banded=True), (bands, h, w), encode)

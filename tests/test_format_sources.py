@@ -1824,6 +1824,17 @@ class TestIdrisi:
         with pytest.raises(ValueError, match="rgb24"):
             IDR.parse_rdc(p)
 
+    def test_empty_input_is_all_flagged(self, tmp_path, spark):
+        from gdal_spark.sources import idrisi as IDR
+
+        path = str(tmp_path / "e.rdc")
+        IDR.write_idrisi(spark.createDataFrame([], "gy long, gx long, val double"), path,
+                         3, 2, dtype="f4", flag=-1.0)
+        kv = dict(ln.split(":", 1) for ln in open(path).read().splitlines())
+        # a defined value range, not "None"
+        assert float(kv["min. value  "]) == float(kv["max. value  "]) == 0.0
+        assert IDR.read_idrisi(spark, path).count() == 0
+
 
 # ---------------------------------------------------------------------------
 # Surfer 6 grid codecs (frmts/gsg/gsbgdataset.cpp, gsagdataset.cpp)
@@ -1909,6 +1920,15 @@ class TestSurfer:
         open(p2, "w").write("XXXX\n1 1\n")
         with pytest.raises(ValueError, match="DSAA"):
             SRF.read_gsag(None, p2)
+
+    @pytest.mark.parametrize("fmt", ["gsbg", "gsag"])
+    def test_empty_input_is_all_blank(self, tmp_path, spark, fmt):
+        from gdal_spark.sources import surfer as SRF
+
+        path = str(tmp_path / "e.grd")
+        getattr(SRF, f"write_{fmt}")(spark.createDataFrame([], "gy long, gx long, val double"),
+                                     path, 3, 2)
+        assert getattr(SRF, f"read_{fmt}")(spark, path).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -2832,6 +2852,15 @@ class TestSurfer7:
         with pytest.raises(ValueError, match="DSRB"):
             S.parse_gs7bg_header(p2)
 
+    def test_empty_input_is_all_blank(self, tmp_path, spark):
+        from gdal_spark.sources import surfer as S
+
+        p = str(tmp_path / "e.grd")
+        S.write_gs7bg(spark.createDataFrame([], "gy long, gx long, val double"), p, 3, 2)
+        hdr = S.parse_gs7bg_header(p)
+        assert (hdr["zmin"], hdr["zmax"]) == (0.0, 0.0)
+        assert S.read_gs7bg(spark, p).count() == 0
+
 
 # ---------------------------------------------------------------------------
 # Northwood GRD codec (frmts/northwood/grddataset.cpp)
@@ -2886,3 +2915,10 @@ class TestNwtGrd:
         open(p, "wb").write(b"XXXXX" + b"\x00" * 1019)
         with pytest.raises(ValueError, match="HGPC1"):
             N.parse_header(p)
+
+    def test_empty_input_is_all_null(self, tmp_path, spark):
+        from gdal_spark.sources import nwtgrd as N
+
+        p = str(tmp_path / "e.grd")
+        N.write_nwtgrd(spark.createDataFrame([], "gy long, gx long, val double"), p, 3, 2)
+        assert N.read_nwtgrd(spark, p).count() == 0

@@ -18,12 +18,26 @@ from gdal_spark.operators import poly_join as PJ
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name):
-    df = Q.QUERIES[name](spark, SF)
+def _explain(df):
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _plan(spark, name):
+    return _explain(Q.QUERIES[name](spark, SF))
+
+
+def _python_before_exchange(p):
+    """An ArrowEvalPython node precedes every Exchange in the data flow.
+    Formatted explain prints the tree root-first but numbers operators
+    children first, so compare the operator ids, not text positions."""
+    import re
+
+    exchanges = [int(i) for i in re.findall(r"^\((\d+)\) \w*Exchange", p, re.M)]
+    python = [int(i) for i in re.findall(r"^\((\d+)\) ArrowEvalPython", p, re.M)]
+    return bool(python) and min(python) < min(exchanges, default=10 ** 9)
 
 
 def test_tile_assign_pruned_scan_no_shuffle(spark):
@@ -36,15 +50,9 @@ def test_tile_assign_pruned_scan_no_shuffle(spark):
                                   "pip_zonal_stats", "pip_multipolygon"])
 def test_pip_broadcast_map_only(spark, name):
     """Every PIP registry query runs the map-only join: the Python node
-    comes before any exchange, and no join shuffles the points. Formatted
-    explain numbers operators children first, so a smaller id is earlier
-    in the data flow."""
-    import re
-
+    comes before any exchange, and no join shuffles the points."""
     p = _plan(spark, name)
-    exchanges = [int(i) for i in re.findall(r"^\((\d+)\) \w*Exchange", p, re.M)]
-    python = [int(i) for i in re.findall(r"^\((\d+)\) ArrowEvalPython", p, re.M)]
-    assert python and min(python) < min(exchanges, default=10 ** 9)
+    assert _python_before_exchange(p)
     assert "ShuffledHashJoin" not in p
 
 
@@ -288,20 +296,11 @@ def test_overlay_erase_kernel_is_map_only_stage(spark):
     from gdal_spark.operators import poly_join as PJ
     from gdal_spark.queries import _OVERLAY_B_IDS
 
-    import io as _io
-    from contextlib import redirect_stdout as _ro
-
     from pyspark.sql import functions as F
 
     a = polygons_df(spark).filter(F.col("poly_id") < 64)
     b = polygons_b_df(spark).filter(F.col("poly_id").isin(*_OVERLAY_B_IDS))
-    out = PJ.layer_erase_parts_rect(a, b)
-    buf = _io.StringIO()
-    with _ro(buf):
-        out.explain("formatted")
-    p = buf.getvalue()
-    first_exchange = p.index("Exchange") if "Exchange" in p else 10 ** 9
-    assert p.index("ArrowEvalPython") < first_exchange
+    assert _python_before_exchange(_explain(PJ.layer_erase_parts_rect(a, b)))
 
 
 def test_s2_encode_single_agg_shuffle(spark):
