@@ -20,6 +20,9 @@ value scaling) and hands the kernel one callback per direction:
   ``encode(slab, pdf)`` returns.  :func:`preallocate` sizes the file
   first, so the tasks write disjoint ranges of one file and no pixel
   bytes pass through the driver.
+
+:func:`check_cells` is the one grid-range check of the engine's writers;
+the document kernel (``_docio.py``) and the HF2 writer use it too.
 """
 
 from __future__ import annotations
@@ -126,16 +129,12 @@ def write_slabs(cells: DataFrame, path: str, slab_expr: Column,
     ``(h, w)`` or ``(bands, h, w)``, the ranges of ``gy``/``gx`` and
     ``band``; a cell outside them raises ``ValueError`` here, after the
     slabs whose cells all lie inside have been written."""
-    names = ("band", "gy", "gx")[-len(shape):]
+    shape = dict(zip(("band", "gy", "gx")[-len(shape):], shape))
 
     def run(key, pdf):
-        for name, n in zip(names, shape):
-            col = pdf[name]
-            bad = col.isna() | (col < 0) | (col >= n)
-            if bad.any():
-                return pd.DataFrame({"bad": [
-                    f"{name} must lie in [0, {n}), got {col[bad].iloc[0]}"]})
-            pdf[name] = col.to_numpy(np.int64)
+        bad = check_cells(pdf, shape)
+        if bad:
+            return pd.DataFrame({"bad": [bad]})
         offset, data = encode(int(key[0]), pdf)
         if isinstance(data, np.ndarray):
             data = data.tobytes(order="C")
@@ -146,15 +145,35 @@ def write_slabs(cells: DataFrame, path: str, slab_expr: Column,
             os.close(fd)
         return pd.DataFrame({"bad": []}, dtype=object)
 
-    bad = sorted({
+    raise_bad_cells(path, [
         r["bad"] for r in (
             cells.withColumn("_slab", slab_expr)
             .groupBy("_slab")
             .applyInPandas(run, "bad string")
-            .collect())})  # bounded: one row per rejected slab
+            .collect())])  # bounded: one row per rejected slab
+
+
+def check_cells(pdf: pd.DataFrame, shape: dict) -> str | None:
+    """The first cell of ``pdf`` outside the grid, as a message, or
+    ``None``.  ``shape`` maps each index column to its extent ``n``; a
+    cell lies inside when every index is in ``[0, n)`` (not NULL).  The
+    checked columns of an all-inside ``pdf`` are cast to int64."""
+    for name, n in shape.items():
+        col = pdf[name]
+        bad = col.isna() | (col < 0) | (col >= n)
+        if bad.any():
+            return f"{name} must lie in [0, {n}), got {col[bad].iloc[0]}"
+        pdf[name] = col.to_numpy(np.int64)
+    return None
+
+
+def raise_bad_cells(path: str, bad: Iterable[str | None]) -> None:
+    """Raise the ``ValueError`` naming the first rejected cells of the
+    write to ``path``; ``None`` entries are shards that were written."""
+    bad = sorted({b for b in bad if b})
     if bad:
-        raise ValueError(
-            f"{os.path.basename(path)}: cell {'; '.join(bad[:3])}")
+        raise ValueError(f"{os.path.basename(os.path.normpath(path))}: "
+                         f"cell {'; '.join(bad[:3])}")
 
 
 def preallocate(path: str, head: bytes, row: bytes, n: int,

@@ -15,20 +15,19 @@ here are written as integers or shortest-roundtrip decimals, so they
 survive the text container exactly (same contract as the GeoJSON/KML
 drivers).
 
-Spark mapping: the standard format-driver contract — one ``.asc`` per
-row-block on write (``applyInPandas``), one task per file on read with a
-single vectorized ``np.loadtxt``-free ``np.fromstring`` parse.
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.asc`` per row-block on write, one decode per file on read with a
+single vectorized ``np.loadtxt``-free split parse.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 NODATA = -9999
 
@@ -77,28 +76,18 @@ def write_cell_aaigrids(
     """Distributed .asc sink over a (gx, gy, val) cell table: one grid per
     row-block; each block's yllcorner follows from its BOTTOM row (the
     lower-left-corner convention)."""
-    os.makedirs(directory, exist_ok=True)
-    keyed = cells.withColumn(
-        "_blk", (F.col("gy") / F.lit(block_rows)).cast("long"))
+    bl = RG.Blocks(height, block_rows)
 
-    def build(key, pdf):
-        blk = int(key[0])
-        y0 = blk * block_rows
-        h = min(block_rows, height - y0)
-        arr = np.full((h, width), NODATA, dtype=np.int64)
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64) - y0
-        arr[gy, gx] = pdf["val"].to_numpy().astype(np.int64)
+    def encode(blk, pdf):
+        _, y0, h = bl.span(blk)
+        arr = RG.scatter(pdf, (h, width), NODATA, np.int64,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
         yll = yll_top - (y0 + h) * cellsize
-        buf = aaigrid_bytes(arr, xll, yll, cellsize)
-        final = f"{directory}/block-{blk:05d}.asc"
-        with open(final, "wb") as fh:
-            fh.write(buf)
-        return pd.DataFrame({"path": [final], "n_pixels": [len(pdf)]})
+        return {f"block-{blk:05d}.asc":
+                aaigrid_bytes(arr, xll, yll, cellsize)}
 
-    manifest = keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n_pixels long")
-    return manifest.count()
+    return DIO.write_files(cells, directory, bl.key(), encode,
+                           {"gy": height, "gx": width})
 
 
 def read_aaigrids(
@@ -108,23 +97,14 @@ def read_aaigrids(
     """Distributed .asc scan → (gx, gy, val) with GLOBAL pixel rows
     recovered from each header's yllcorner; NODATA cells dropped (the
     reference's mask semantics)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.asc") \
-        .select(F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                hdr, arr = parse_aaigrid(bytes(buf))
-                h = int(hdr["nrows"])
-                y0 = int(round(
-                    (yll_top - hdr["yllcorner"]) / hdr["cellsize"])) - h
-                nod = hdr.get("nodata_value", NODATA)
-                yy, xx = np.mgrid[0:arr.shape[0], 0:arr.shape[1]]
-                keep = arr != nod
-                yield pd.DataFrame({
-                    "gx": xx[keep].astype(np.int64),
-                    "gy": (yy[keep] + y0).astype(np.int64),
-                    "val": arr[keep].astype(np.float64),
-                })
+    def decode(path, buf):
+        hdr, arr = parse_aaigrid(buf)
+        y0 = int(round((yll_top - hdr["yllcorner"]) / hdr["cellsize"])) \
+            - int(hdr["nrows"])
+        keep = arr != hdr.get("nodata_value", NODATA)
+        gy, gx = DIO.grid_index(arr.shape, keep, y0)
+        return pd.DataFrame({"gx": gx, "gy": gy, "val": arr[keep]})
 
-    return files.mapInPandas(parse, "gx long, gy long, val double")
+    return DIO.read_files(spark, f"{directory}/*.asc", decode,
+                          "gx long, gy long, val double")

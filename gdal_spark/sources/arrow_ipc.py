@@ -2,11 +2,11 @@
 over the PUBLIC pyarrow API (the Arrow IPC file format is Arrow's own
 published spec; the reference driver reads/writes the same container).
 
-Spark mapping: identical file-level-parallel contract as the other format
-drivers — one ``.arrow`` file per partition on write, one task per file on
-read.  The payload is columnar Arrow record batches, so both directions
-are zero-copy-ish: the writer hands pandas blocks to
-``pyarrow.ipc.new_file`` and the reader maps ``binaryFile`` bytes through
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.arrow`` file per shard of the partition key on write, one decode per
+file on read.  The payload is columnar Arrow record batches, so both
+directions are zero-copy-ish: the writer hands pandas blocks to
+``pyarrow.ipc.new_file`` and the reader maps the file bytes through
 ``pyarrow.ipc.open_file(BufferReader)`` — no row loops anywhere.  All
 types roundtrip bit-exactly (int64/float64 are stored as raw little-endian
 buffers in the IPC body).
@@ -14,12 +14,9 @@ buffers in the IPC body).
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def write_arrow_files(
@@ -28,34 +25,20 @@ def write_arrow_files(
     num_files: int,
     partition_key: str,
 ) -> int:
-    """Distributed Arrow-IPC-file sink: one .arrow file per partition.
-    Returns files written."""
+    """Distributed Arrow-IPC-file sink: one .arrow file per shard of
+    ``partition_key``.  Returns files written."""
     import pyarrow as pa
 
-    os.makedirs(directory, exist_ok=True)
-    cols = df.columns
-    staged = df.repartition(num_files, F.col(partition_key))
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts else None
-        final = f"{directory}/part-{pid:05d}.arrow"
-        table = (pa.Table.from_pandas(pdf, preserve_index=False)
-                 if pdf is not None else None)
-        if table is None:
-            yield pd.DataFrame({"path": [], "n_records": []})
-            return
-        table = table.select(cols).sort_by(partition_key)
-        with pa.OSFile(final, "wb") as sink, \
-                pa.ipc.new_file(sink, table.schema) as writer:
+    def encode(part, pdf):
+        table = pa.Table.from_pandas(pdf, preserve_index=False) \
+            .sort_by(partition_key)
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_file(sink, table.schema) as writer:
             writer.write_table(table)
-        yield pd.DataFrame({"path": [final], "n_records": [table.num_rows]})
+        return {f"part-{part:05d}.arrow": sink.getvalue().to_pybytes()}
 
-    manifest = staged.mapInPandas(write_part, "path string, n_records long")
-    return manifest.count()
+    return DIO.write_files(df, directory,
+                           DIO.hash_key(partition_key, num_files), encode)
 
 
 def read_arrow_files(
@@ -64,17 +47,12 @@ def read_arrow_files(
     schema: str,
 ) -> DataFrame:
     """Distributed Arrow-IPC scan: binaryFile bytes → pyarrow BufferReader
-    → pandas, one task per file.  ``schema`` is the Spark DDL of the
+    → pandas, one decode per file.  ``schema`` is the Spark DDL of the
     stored columns."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.arrow") \
-        .select(F.col("content").alias("buf"))
+    import pyarrow as pa
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                reader = pa.ipc.open_file(pa.BufferReader(bytes(buf)))
-                yield reader.read_all().to_pandas()
-
-    return files.mapInPandas(parse, schema)
+    return DIO.read_files(
+        spark, f"{directory}/*.arrow",
+        lambda path, buf: pa.ipc.open_file(pa.BufferReader(buf))
+        .read_all().to_pandas(),
+        schema)

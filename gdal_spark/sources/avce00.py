@@ -14,21 +14,17 @@ E00 is the classic fixed-width ASCII coverage interchange:
 * The section ends with a ``-1`` arc header (7 fields); the file with
   ``END``.
 
-Spark mapping — the repo's text-format contract (sources/gmt.py): one
-complete ``.e00`` shard per partition on write (map-only after the
-arc-id repartition), one task per shard on read (binaryFile bytes,
-fixed-width executor-side parse)."""
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+complete ``.e00`` shard per shard of the arc id on write, one decode
+per shard on read (fixed-width executor-side parse)."""
 
 from __future__ import annotations
-
-import os
-import tempfile
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def _real(v: float) -> str:
@@ -96,18 +92,10 @@ def write_arc_e00s(
     poly_cols: tuple[str, str] = ("lpoly", "rpoly"),
 ) -> int:
     """Distributed ARC sink over exploded vertex rows: one .e00 shard
-    per partition, arcs assembled executor-side."""
-    os.makedirs(directory, exist_ok=True)
+    per shard of the arc id, arcs assembled executor-side."""
     cols = [id_col, seq_col, x_col, y_col, *node_cols, *poly_cols]
-    staged = df.select(*cols).repartition(num_files, F.col(id_col))
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts \
-            else pd.DataFrame(columns=cols)
+    def encode(part, pdf):
         arcs = []
         for aid, g in pdf.sort_values([id_col, seq_col]).groupby(
                 id_col, sort=True):
@@ -119,37 +107,24 @@ def write_arc_e00s(
                 "rpoly": int(g[poly_cols[1]].iloc[0]),
                 "xy": g[[x_col, y_col]].to_numpy(np.float64),
             })
-        buf = arcs_e00_bytes(arcs)
-        tmp = tempfile.mktemp(suffix=".e00")
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        final = f"{directory}/part-{pid:05d}.e00"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(arcs)]})
+        return {f"part-{part:05d}.e00": arcs_e00_bytes(arcs)}
 
-    return staged.mapInPandas(
-        write_part, "path string, n_records long").count()
+    return DIO.write_files(df.select(*cols), directory,
+                           DIO.hash_key(id_col, num_files), encode)
 
 
 def read_arc_e00s(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed ARC scan → exploded vertex rows (arc_id, fnode,
-    tnode, lpoly, rpoly, seq, x, y); one task per .e00 shard."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.e00") \
-        .select(F.col("content").alias("buf"))
+    tnode, lpoly, rpoly, seq, x, y); one decode per .e00 shard."""
+    names = ["arc_id", "fnode", "tnode", "lpoly", "rpoly"]
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                recs = []
-                for a in parse_e00_arcs(bytes(buf)):
-                    for s, (x, y) in enumerate(a["xy"]):
-                        recs.append((a["arc_id"], a["fnode"], a["tnode"],
-                                     a["lpoly"], a["rpoly"], s,
-                                     float(x), float(y)))
-                yield pd.DataFrame(
-                    recs, columns=["arc_id", "fnode", "tnode", "lpoly",
-                                   "rpoly", "seq", "x", "y"])
+    def decode(path, buf):
+        return pd.DataFrame(
+            [[a[c] for c in names] + [s, float(x), float(y)]
+             for a in parse_e00_arcs(buf)
+             for s, (x, y) in enumerate(a["xy"])],
+            columns=names + ["seq", "x", "y"])
 
-    return files.mapInPandas(
-        parse, "arc_id long, fnode long, tnode long, lpoly long, "
-               "rpoly long, seq long, x double, y double")
+    return DIO.read_files(
+        spark, f"{directory}/*.e00", decode,
+        DIO.point_schema(names + ["seq"]))

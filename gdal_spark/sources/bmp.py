@@ -5,22 +5,21 @@ BITMAPFILEHEADER/BITMAPINFOHEADER layout (reference
 Supported, like the reference's create path: 24-bit BGR truecolor and
 8-bit paletted, bottom-up row order, rows padded to 4-byte multiples.
 
-Spark mapping: the standard format-driver contract — one .bmp file per
-row-block on write (``applyInPandas`` over the block key), one task per
-file on read (``binaryFile`` + vectorized ``frombuffer``); nothing is
-collected to the driver.
+Spark mapping: the document kernel (``sources/_docio.py``) — one .bmp
+file per row-block on write, one decode per file on read (vectorized
+``frombuffer``); nothing is collected to the driver.
 """
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 _FILE_HDR = "<2sIHHI"   # magic, file size, reserved ×2, pixel-data offset
 _INFO_HDR = "<IiiHHIIiiII"  # 40-byte BITMAPINFOHEADER
@@ -99,26 +98,18 @@ def write_rgb_bmps(cells: DataFrame, directory: str, width: int,
                    height: int, block_rows: int) -> int:
     """Distributed 24-bit sink over (gx, gy, r, g, b): one .bmp per
     row-block."""
-    os.makedirs(directory, exist_ok=True)
+    bl = RG.Blocks(height, block_rows)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        h = min(block_rows, height - y0)
-        arr = np.zeros((h, width, 3), dtype=np.uint8)
-        yy = pdf["gy"].to_numpy(np.int64) - y0
-        xx = pdf["gx"].to_numpy(np.int64)
-        for ch, col in enumerate(("r", "g", "b")):
-            arr[yy, xx, ch] = pdf[col].to_numpy(np.int64)
-        path = f"{directory}/block-{blk:05d}.bmp"
-        with open(path, "wb") as fh:
-            fh.write(bmp_bytes(arr))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+    def encode(blk, pdf):
+        _, y0, h = bl.span(blk)
+        rgb = pdf[["r", "g", "b"]].to_numpy(np.int64)
+        arr = RG.scatter(pdf, (h, width, 3), 0, np.uint8,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         vals=rgb)
+        return {f"block-{blk:05d}.bmp": bmp_bytes(arr)}
 
-    keyed = cells.withColumn(
-        "_blk", F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(cells, directory, bl.key(), encode,
+                           {"gy": height, "gx": width})
 
 
 def read_rgb_bmps(spark: SparkSession, directory: str,
@@ -126,23 +117,16 @@ def read_rgb_bmps(spark: SparkSession, directory: str,
     """Distributed scan → (gx, gy, r, g, b); global rows recovered from
     the block filename (BMP carries no georef — the reference pairs it
     with a world file, out of scope here like the PNM driver)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.bmp") \
-        .select("path", F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, buf in zip(pdf["path"], pdf["buf"]):
-                blk = int(str(path).rsplit("block-", 1)[1][:5])
-                hdr, arr = parse_bmp(bytes(buf))
-                if hdr["bits"] == 8:  # expand through the palette
-                    arr = hdr["palette"][arr]
-                yy, xx = np.mgrid[0:arr.shape[0], 0:arr.shape[1]]
-                yield pd.DataFrame({
-                    "gx": xx.ravel().astype(np.int64),
-                    "gy": (yy.ravel() + blk * block_rows).astype(np.int64),
-                    "r": arr[:, :, 0].ravel().astype(np.int64),
-                    "g": arr[:, :, 1].ravel().astype(np.int64),
-                    "b": arr[:, :, 2].ravel().astype(np.int64),
-                })
+    def decode(path, buf):
+        hdr, arr = parse_bmp(buf)
+        if hdr["bits"] == 8:  # expand through the palette
+            arr = hdr["palette"][arr]
+        gy, gx = DIO.grid_index(arr.shape,
+                                y0=DIO.block_of(path) * block_rows)
+        rgb = arr.reshape(-1, 3).astype(np.int64)
+        return pd.DataFrame({"gx": gx, "gy": gy, "r": rgb[:, 0],
+                             "g": rgb[:, 1], "b": rgb[:, 2]})
 
-    return files.mapInPandas(parse, "gx long, gy long, r long, g long, b long")
+    return DIO.read_files(spark, f"{directory}/*.bmp", decode,
+                          "gx long, gy long, r long, g long, b long")

@@ -20,23 +20,22 @@ Format (public spec):
   of the record before it (dted_api.c:683-693);
 * nodata is -32767 by convention (DTED_NODATA_VALUE).
 
-Spark mapping — the repo's standard tile-format contract (same as the
-SRTM HGT driver): one ``.dt1`` per 1×1-degree cell written via
-``applyInPandas`` over the tile key (a cell is bounded), ``binaryFile``
-one task per cell on read with fully vectorized numpy record parsing
-(sentinel + checksum verified for every column).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.dt1`` per 1×1-degree cell on write (a cell is bounded), one decode
+per cell on read with fully vectorized numpy record parsing (sentinel +
+checksum verified for every column).
 """
 
 from __future__ import annotations
 
-import os
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 UHL_SIZE, DSI_SIZE, ACC_SIZE = 80, 648, 2700
 NODATA = -32767
@@ -163,51 +162,32 @@ def write_dted_cells(cells: DataFrame, directory: str,
     """Distributed .dt1 sink over (lat_sw, lon_sw, row, col, elev) —
     row 0 = the cell's SOUTH edge, col 0 = west.  Absent samples are
     written as NODATA; one file per 1-degree cell (bounded task)."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lat_sw, lon_sw = int(key[0]), int(key[1])
-        arr = np.full((n_lat, n_lon), NODATA, dtype=np.int16)
-        arr[pdf["row"].to_numpy(np.int64),
-            pdf["col"].to_numpy(np.int64)] = (
-            pdf["elev"].to_numpy(np.int64).astype(np.int16))
-        path = f"{directory}/{dted_name(lat_sw, lon_sw)}"
-        with open(path, "wb") as fh:
-            fh.write(dted_bytes(arr, lat_sw, lon_sw))
-        return pd.DataFrame({"path": [path], "n_cells": [len(pdf)]})
+    def encode(tile, pdf):
+        lat_sw, lon_sw = map(int, tile)
+        arr = RG.scatter(pdf, (n_lat, n_lon), NODATA, np.int16,
+                         pdf["row"].to_numpy(), pdf["col"].to_numpy(),
+                         vals=pdf["elev"].to_numpy(np.int64))
+        return {dted_name(lat_sw, lon_sw): dted_bytes(arr, lat_sw, lon_sw)}
 
-    manifest = cells.groupBy("lat_sw", "lon_sw").applyInPandas(
-        build, "path string, n_cells long")
-    return manifest.count()
+    return DIO.write_files(cells, directory,
+                           (F.col("lat_sw"), F.col("lon_sw")), encode,
+                           {"row": n_lat, "col": n_lon})
 
 
 def read_dted(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed .dt1 scan → (lat_sw, lon_sw, row, col, elev, lon, lat);
     NODATA dropped.  lon/lat come from the UHL origin + interval fields
     (the reference's geotransform, dteddataset.cpp)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.dt1") \
-        .select(F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                lat_sw, lon_sw, arr = parse_dted(bytes(buf))
-                n_lat, n_lon = arr.shape
-                rr, cc = np.mgrid[0:n_lat, 0:n_lon]
-                keep = arr != NODATA
-                rows, cols = rr[keep], cc[keep]
-                yield pd.DataFrame({
-                    "lat_sw": np.full(rows.size, lat_sw, dtype=np.int64),
-                    "lon_sw": np.full(rows.size, lon_sw, dtype=np.int64),
-                    "row": rows.astype(np.int64),
-                    "col": cols.astype(np.int64),
-                    "elev": arr[keep].astype(np.int64),
-                    "lon": lon_sw + cols / (n_lon - 1.0),
-                    "lat": lat_sw + rows / (n_lat - 1.0),
-                })
+    def decode(path, buf):
+        lat_sw, lon_sw, arr = parse_dted(buf)
+        n_lat, n_lon = arr.shape
+        keep = arr != NODATA
+        rows, cols = DIO.grid_index(arr.shape, keep)
+        return DIO.tile_frame(lat_sw, lon_sw, rows, cols, arr[keep],
+                              lon_sw + cols / (n_lon - 1.0),
+                              lat_sw + rows / (n_lat - 1.0))
 
-    return files.mapInPandas(
-        parse,
-        "lat_sw long, lon_sw long, row long, col long, elev long, "
-        "lon double, lat double",
-    )
+    return DIO.read_files(spark, f"{directory}/*.dt1", decode,
+                          DIO.TILE_SCHEMA)

@@ -17,21 +17,17 @@ Doubles are written as shortest-roundtrip ``repr`` so coordinates survive
 the text container bit-exactly (the same contract as the GeoJSON/KML/XYZ
 drivers).
 
-Spark mapping — the repo's standard vector-driver contract: one ``.dxf``
-shard per partition on write (map-only after an optional key
-repartition), ``binaryFile`` one task per shard on read with a vectorized
-pair-stream scan.
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.dxf`` per shard of the layer key on write, one decode per shard on
+read with a vectorized pair-stream scan.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _PRELUDE = [
     "0", "SECTION", "2", "HEADER",
@@ -117,54 +113,26 @@ def write_point_dxfs(
     layer_col: str, lon: str = "lon", lat: str = "lat",
     num_files: int = 4,
 ) -> int:
-    """Distributed POINT-layer sink: one .dxf per partition, map-only
-    after the key repartition (no driver collect).  The layer name (group
-    code 8) carries the feature key — DXF's native attribute channel."""
-    os.makedirs(directory, exist_ok=True)
-    staged = df.select(layer_col, lon, lat).repartition(
-        num_files, F.col(layer_col))
+    """Distributed POINT-layer sink: one .dxf per shard of the layer
+    key (no driver collect).  The layer name (group code 8) carries the
+    feature key — DXF's native attribute channel."""
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            yield pd.DataFrame({"path": pd.Series(dtype="object"),
-                                "n_records": pd.Series(dtype="int64")})
-            return
-        pdf = pd.concat(parts, ignore_index=True)
+    def encode(part, pdf):
         pts = [(str(k), float(x), float(y)) for k, x, y in zip(
             pdf[layer_col], pdf[lon], pdf[lat])]
-        tmp = tempfile.mktemp(suffix=".dxf")
-        with open(tmp, "wb") as fh:
-            fh.write(dxf_bytes(points=pts))
-        final = f"{directory}/part-{pid:05d}.dxf"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(pts)]})
+        return {f"part-{part:05d}.dxf": dxf_bytes(points=pts)}
 
-    return int(
-        staged.mapInPandas(write_part, "path string, n_records long")
-        .agg(F.count(F.lit(1))).collect()[0][0]
-    )
+    return DIO.write_files(df.select(layer_col, lon, lat), directory,
+                           DIO.hash_key(layer_col, num_files), encode)
 
 
 def read_point_dxfs(spark: SparkSession, directory: str) -> DataFrame:
-    """Distributed POINT scan → (layer, lon, lat), one task per shard."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.dxf") \
-        .select(F.col("content").alias("buf"))
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                pts, _ = parse_dxf(bytes(buf))
-                yield pd.DataFrame({
-                    "layer": [p[0] for p in pts],
-                    "lon": [p[1] for p in pts],
-                    "lat": [p[2] for p in pts],
-                })
-
-    return files.mapInPandas(parse, "layer string, lon double, lat double")
+    """Distributed POINT scan → (layer, lon, lat), one decode per shard."""
+    return DIO.read_files(
+        spark, f"{directory}/*.dxf",
+        lambda path, buf: pd.DataFrame(parse_dxf(buf)[0],
+                                       columns=["layer", "lon", "lat"]),
+        "layer string, lon double, lat double")
 
 
 def write_polyline_dxfs(
@@ -173,54 +141,31 @@ def write_polyline_dxfs(
     closed: bool = True, num_files: int = 2,
 ) -> int:
     """Distributed LWPOLYLINE sink over (layer, xs:array, ys:array)."""
-    os.makedirs(directory, exist_ok=True)
-    staged = df.select(layer_col, xs, ys).repartition(
-        num_files, F.col(layer_col))
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            yield pd.DataFrame({"path": pd.Series(dtype="object"),
-                                "n_records": pd.Series(dtype="int64")})
-            return
-        pdf = pd.concat(parts, ignore_index=True)
+    def encode(part, pdf):
         pls = [
             (str(k), list(zip([float(v) for v in vx],
                               [float(v) for v in vy])), closed)
             for k, vx, vy in zip(pdf[layer_col], pdf[xs], pdf[ys])
         ]
-        tmp = tempfile.mktemp(suffix=".dxf")
-        with open(tmp, "wb") as fh:
-            fh.write(dxf_bytes(polylines=pls))
-        final = f"{directory}/part-{pid:05d}.dxf"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(pls)]})
+        return {f"part-{part:05d}.dxf": dxf_bytes(polylines=pls)}
 
-    return int(
-        staged.mapInPandas(write_part, "path string, n_records long")
-        .agg(F.count(F.lit(1))).collect()[0][0]
-    )
+    return DIO.write_files(df.select(layer_col, xs, ys), directory,
+                           DIO.hash_key(layer_col, num_files), encode)
 
 
 def read_polyline_dxfs(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed LWPOLYLINE scan → (layer, xs, ys, closed)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.dxf") \
-        .select(F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                _, pls = parse_dxf(bytes(buf))
-                yield pd.DataFrame({
-                    "layer": [p[0] for p in pls],
-                    "xs": [[v[0] for v in p[1]] for p in pls],
-                    "ys": [[v[1] for v in p[1]] for p in pls],
-                    "closed": [bool(p[2]) for p in pls],
-                })
+    def decode(path, buf):
+        pls = parse_dxf(buf)[1]
+        return pd.DataFrame({
+            "layer": [p[0] for p in pls],
+            "xs": [[v[0] for v in p[1]] for p in pls],
+            "ys": [[v[1] for v in p[1]] for p in pls],
+            "closed": [bool(p[2]) for p in pls],
+        })
 
-    return files.mapInPandas(
-        parse, "layer string, xs array<double>, ys array<double>,"
-        " closed boolean")
+    return DIO.read_files(
+        spark, f"{directory}/*.dxf", decode,
+        "layer string, xs array<double>, ys array<double>, closed boolean")

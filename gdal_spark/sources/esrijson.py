@@ -7,21 +7,21 @@ Layout: ``{"geometryType": "esriGeometryPoint", "spatialReference":
 "geometry": {"x": ..., "y": ...}}]}`` — geometry keyed per type instead
 of GeoJSON's coordinates array, attributes in a flat object.
 
-Spark mapping: the engine's NATIVE JSON path both ways — ``to_json`` on
-write (JVM Jackson shortest-roundtrip doubles, map-only), one task per
-document on read with a typed ``from_json`` schema.  Zero Python in the
+Spark mapping: ``to_json`` renders the features on write (JVM Jackson
+shortest-roundtrip doubles) and the document kernel
+(``sources/_docio.py``) writes one document per block; the read is one
+task per document with a typed ``from_json`` schema.  Zero Python in the
 feature path.
 """
 
 from __future__ import annotations
 
 import json
-import os
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def write_point_featuresets(pts: DataFrame, directory: str,
@@ -30,15 +30,10 @@ def write_point_featuresets(pts: DataFrame, directory: str,
     """Distributed FeatureSet sink: one JSON document per block; the
     feature objects are rendered by JVM ``to_json`` and only the bounded
     per-block envelope assembly happens in the kernel."""
-    os.makedirs(directory, exist_ok=True)
     feat = F.to_json(F.struct(
         F.struct(*[F.col(c) for c in int_fields]).alias("attributes"),
         F.struct(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
         .alias("geometry")))
-    keyed = pts.select(
-        F.pmod(F.hash(F.col(int_fields[0])), F.lit(num_files)).alias("_blk"),
-        F.col(int_fields[0]).alias("_k"), feat.alias("feat"))
-
     fields = [{"name": c, "type": "esriFieldTypeInteger"}
               for c in int_fields]
     head = json.dumps({
@@ -47,16 +42,14 @@ def write_point_featuresets(pts: DataFrame, directory: str,
         "fields": fields,
     }, separators=(",", ":"))[:-1]  # re-opened to splice "features"
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
+    def encode(blk, pdf):
         feats = ",".join(pdf.sort_values("_k")["feat"])
-        path = f"{directory}/block-{blk:05d}.json"
-        with open(path, "w") as fh:
-            fh.write(head + ',"features":[' + feats + "]}")
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+        return {f"block-{blk:05d}.json":
+                (head + ',"features":[' + feats + "]}").encode()}
 
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(
+        pts.select(F.col(int_fields[0]).alias("_k"), feat.alias("feat")),
+        directory, DIO.hash_key("_k", num_files), encode)
 
 
 def read_point_featuresets(spark: SparkSession, directory: str,

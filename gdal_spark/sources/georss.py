@@ -9,20 +9,19 @@ Layout: ``<rss version="2.0" xmlns:georss="http://www.georss.org/georss">
 child elements.  Coordinates are written with Python's
 shortest-roundtrip repr so doubles survive bit-exactly.
 
-Spark mapping: one RSS document per row-block on write
-(``applyInPandas``), one task per document on read (``binaryFile`` +
-executor-side ElementTree).
+Spark mapping: the document kernel (``sources/_docio.py``) — one RSS
+document per block on write, one decode per document on read
+(executor-side ElementTree).
 """
 
 from __future__ import annotations
 
-import os
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _GEORSS_NS = "http://www.georss.org/georss"
 
@@ -61,36 +60,22 @@ def parse_georss(buf: bytes, int_fields: list[str]) -> list[dict]:
 def write_point_georss(pts: DataFrame, directory: str,
                        int_fields: list[str], num_files: int = 8) -> int:
     """Distributed item sink: one RSS document per block."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        pdf = pdf.sort_values(int_fields[0])
-        path = f"{directory}/block-{blk:05d}.xml"
-        with open(path, "wb") as fh:
-            fh.write(georss_document(
-                [r._asdict() for r in pdf.itertuples(index=False)],
-                int_fields))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+    def encode(blk, pdf):
+        rows = [r._asdict() for r in
+                pdf.sort_values(int_fields[0]).itertuples(index=False)]
+        return {f"block-{blk:05d}.xml": georss_document(rows, int_fields)}
 
-    keyed = pts.withColumn(
-        "_blk", F.pmod(F.hash(F.col(int_fields[0])), F.lit(num_files)))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(pts, directory,
+                           DIO.hash_key(int_fields[0], num_files), encode)
 
 
 def read_point_georss(spark: SparkSession, directory: str,
                       int_fields: list[str]) -> DataFrame:
-    """Distributed item scan: one task per RSS document."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.xml") \
-        .select(F.col("content").alias("buf"))
-    schema = ", ".join([f"{c} long" for c in int_fields]
-                       + ["lon double", "lat double"])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                rows = parse_georss(bytes(buf), int_fields)
-                yield pd.DataFrame(rows)[int_fields + ["lon", "lat"]]
-
-    return files.mapInPandas(parse, schema)
+    """Distributed item scan: one decode per RSS document."""
+    names = int_fields + ["lon", "lat"]
+    return DIO.read_files(
+        spark, f"{directory}/*.xml",
+        lambda path, buf: pd.DataFrame(parse_georss(buf, int_fields),
+                                       columns=names),
+        DIO.point_schema(int_fields, "lon", "lat"))

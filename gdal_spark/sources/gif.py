@@ -12,20 +12,20 @@ classic off-by-one between the two ends), the dictionary caps at 4096
 and a CLEAR code resets it.  Coded bytes are wrapped in ≤255-byte
 sub-blocks.
 
-Spark mapping: the standard format-driver contract — one .gif per
-row-block on write (``applyInPandas``), one task per file on read.
+Spark mapping: the document kernel (``sources/_docio.py``) — one .gif
+per row-block on write, one decode per file on read.
 """
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 _MAX_CODE_SIZE = 12
 
@@ -210,49 +210,34 @@ def write_indexed_gifs(cells: DataFrame, directory: str, width: int,
                        palette: np.ndarray) -> int:
     """Distributed paletted sink over (gx, gy, idx): one .gif per
     row-block."""
-    os.makedirs(directory, exist_ok=True)
     pal = np.asarray(palette, dtype=np.uint8)
+    bl = RG.Blocks(height, block_rows)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        h = min(block_rows, height - y0)
-        arr = np.zeros((h, width), dtype=np.uint8)
-        arr[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = pdf["idx"].to_numpy(np.int64)
-        path = f"{directory}/block-{blk:05d}.gif"
-        with open(path, "wb") as fh:
-            fh.write(gif_bytes(arr, pal))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+    def encode(blk, pdf):
+        _, y0, h = bl.span(blk)
+        arr = RG.scatter(pdf, (h, width), 0, np.uint8,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy(),
+                         vals=pdf["idx"].to_numpy(np.int64))
+        return {f"block-{blk:05d}.gif": gif_bytes(arr, pal)}
 
-    keyed = cells.withColumn(
-        "_blk", F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(cells, directory, bl.key(), encode,
+                           {"gy": height, "gx": width})
 
 
 def read_indexed_gifs(spark: SparkSession, directory: str,
                       block_rows: int) -> DataFrame:
     """Distributed scan → (gx, gy, idx, r, g, b): indices expanded through
     each file's color table."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.gif") \
-        .select("path", F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, buf in zip(pdf["path"], pdf["buf"]):
-                blk = int(str(path).rsplit("block-", 1)[1][:5])
-                hdr, arr = parse_gif(bytes(buf))
-                rgb = hdr["palette"][arr]
-                yy, xx = np.mgrid[0:arr.shape[0], 0:arr.shape[1]]
-                yield pd.DataFrame({
-                    "gx": xx.ravel().astype(np.int64),
-                    "gy": (yy.ravel() + blk * block_rows).astype(np.int64),
-                    "idx": arr.ravel().astype(np.int64),
-                    "r": rgb[:, :, 0].ravel().astype(np.int64),
-                    "g": rgb[:, :, 1].ravel().astype(np.int64),
-                    "b": rgb[:, :, 2].ravel().astype(np.int64),
-                })
+    def decode(path, buf):
+        hdr, arr = parse_gif(buf)
+        gy, gx = DIO.grid_index(arr.shape,
+                                y0=DIO.block_of(path) * block_rows)
+        rgb = hdr["palette"][arr].reshape(-1, 3).astype(np.int64)
+        return pd.DataFrame({"gx": gx, "gy": gy,
+                             "idx": arr.ravel().astype(np.int64),
+                             "r": rgb[:, 0], "g": rgb[:, 1], "b": rgb[:, 2]})
 
-    return files.mapInPandas(
-        parse, "gx long, gy long, idx long, r long, g long, b long")
+    return DIO.read_files(
+        spark, f"{directory}/*.gif", decode,
+        "gx long, gy long, idx long, r long, g long, b long")

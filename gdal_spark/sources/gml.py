@@ -19,20 +19,19 @@ Coordinates are written with Python's shortest-roundtrip repr, so doubles
 survive the text container BIT-EXACTLY (the same contract as the GeoJSON /
 KML drivers).
 
-Spark mapping: the standard format-driver contract — one ``.gml`` document
-per partition on write (``mapInPandas``), one task per file on read
-(``binaryFile`` + executor-side ElementTree).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.gml`` document per shard of the first attribute on write, one decode
+per file on read (executor-side ElementTree).
 """
 
 from __future__ import annotations
 
-import os
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _GML_NS = "http://www.opengis.net/gml/3.2"
 _OGR_NS = "http://ogr.maptools.org/"
@@ -85,47 +84,26 @@ def write_point_gmls(
     df: DataFrame, directory: str, x_col: str, y_col: str,
     int_fields: list[str], num_files: int,
 ) -> int:
-    """Distributed GML sink: one FeatureCollection per partition."""
-    os.makedirs(directory, exist_ok=True)
+    """Distributed GML sink: one FeatureCollection per shard of
+    ``int_fields[0]``."""
     cols = [x_col, y_col] + int_fields
-    staged = df.select(*cols).repartition(num_files, F.col(int_fields[0]))
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def encode(part, pdf):
+        rows = [dict(zip(cols, vals)) for vals in
+                pdf.sort_values(int_fields[0]).itertuples(index=False)]
+        return {f"part-{part:05d}.gml":
+                gml_document(rows, x_col, y_col, int_fields)}
 
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts else \
-            pd.DataFrame(columns=cols)
-        pdf = pdf.sort_values(int_fields[0]) if len(pdf) else pdf
-        rows = [
-            dict(zip(cols, vals))
-            for vals in pdf[cols].itertuples(index=False)
-        ]
-        doc = gml_document(rows, cols[0], cols[1], int_fields)
-        final = f"{directory}/part-{pid:05d}.gml"
-        with open(final, "wb") as fh:
-            fh.write(doc)
-        yield pd.DataFrame({"path": [final], "n_records": [len(rows)]})
-
-    manifest = staged.mapInPandas(write_part, "path string, n_records long")
-    return manifest.count()
+    return DIO.write_files(df.select(*cols), directory,
+                           DIO.hash_key(int_fields[0], num_files), encode)
 
 
 def read_point_gmls(
     spark: SparkSession, directory: str, int_fields: list[str],
 ) -> DataFrame:
-    """Distributed GML scan: one task per document."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.gml") \
-        .select(F.col("content").alias("buf"))
-    schema = ", ".join(
-        [f"{c} long" for c in int_fields] + ["x double", "y double"])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                recs = parse_gml(bytes(buf), int_fields)
-                yield pd.DataFrame(
-                    recs, columns=int_fields + ["x", "y"])
-
-    return files.mapInPandas(parse, schema)
+    """Distributed GML scan: one decode per document."""
+    return DIO.read_files(
+        spark, f"{directory}/*.gml",
+        lambda path, buf: pd.DataFrame(parse_gml(buf, int_fields),
+                                       columns=int_fields + ["x", "y"]),
+        DIO.point_schema(int_fields))

@@ -10,20 +10,17 @@
 * multi-vertex geometries are separated by ``>`` lines (the classic
   GMT segment separator).
 
-Spark mapping — the repo's text-format contract: one ``.gmt`` shard
-per partition on write (map-only after the key repartition), one task
-per shard on read (binaryFile bytes, executor-side line parse)."""
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.gmt`` shard per shard of the key on write, one decode per shard on
+read (executor-side line parse)."""
 
 from __future__ import annotations
-
-import os
-import tempfile
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def _header(geom_type: str, fields: list[str]) -> str:
@@ -108,29 +105,12 @@ def write_point_gmts(
     num_files: int,
     partition_key: str | None = None,
 ) -> int:
-    """Distributed Point sink: one .gmt per partition."""
-    os.makedirs(directory, exist_ok=True)
-    key = partition_key or int_fields[0]
-    cols = int_fields + [x_col, y_col]
-    staged = df.select(*cols).repartition(num_files, F.col(key))
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts \
-            else pd.DataFrame(columns=cols)
-        buf = points_gmt_bytes(pdf, x_col, y_col, int_fields)
-        tmp = tempfile.mktemp(suffix=".gmt")
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        final = f"{directory}/part-{pid:05d}.gmt"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(pdf)]})
-
-    manifest = staged.mapInPandas(write_part, "path string, n_records long")
-    return manifest.count()
+    """Distributed Point sink: one .gmt per shard of the key."""
+    key = DIO.hash_key(partition_key or int_fields[0], num_files)
+    return DIO.write_files(
+        df.select(*int_fields, x_col, y_col), directory, key,
+        lambda part, pdf: {f"part-{part:05d}.gmt": points_gmt_bytes(
+            pdf, x_col, y_col, int_fields)})
 
 
 def read_point_gmts(
@@ -138,24 +118,16 @@ def read_point_gmts(
     directory: str,
     int_fields: list[str],
 ) -> DataFrame:
-    """Distributed Point scan: one task per .gmt shard."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.gmt") \
-        .select(F.col("content").alias("buf"))
-    out_schema = ", ".join(
-        [f"{c} long" for c in int_fields] + ["x double", "y double"])
+    """Distributed Point scan: one decode per .gmt shard."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                gt, names, feats = parse_gmt(bytes(buf))
-                if gt != "POINT":
-                    raise ValueError(f"gmt: expected POINT layer, got {gt}")
-                idx = [names.index(c) for c in int_fields]
-                recs = []
-                for attrs, xy in feats:
-                    recs.append(dict(
-                        {c: attrs[i] for c, i in zip(int_fields, idx)},
-                        x=float(xy[0, 0]), y=float(xy[0, 1])))
-                yield pd.DataFrame(recs, columns=int_fields + ["x", "y"])
+    def decode(path, buf):
+        gt, names, feats = parse_gmt(buf)
+        if gt != "POINT":
+            raise ValueError(f"gmt: expected POINT layer, got {gt}")
+        idx = [names.index(c) for c in int_fields]
+        return pd.DataFrame(
+            [[attrs[i] for i in idx] + [float(xy[0, 0]), float(xy[0, 1])]
+             for attrs, xy in feats], columns=int_fields + ["x", "y"])
 
-    return files.mapInPandas(parse, out_schema)
+    return DIO.read_files(spark, f"{directory}/*.gmt", decode,
+                          DIO.point_schema(int_fields))

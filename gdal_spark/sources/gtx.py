@@ -8,20 +8,20 @@ i32 cols — followed by rows×cols float32 shift values, SOUTH row first
 
 Spark mapping: the grid is a dimension-scale artifact (vertical datums are
 a few MB), so write stays a bounded single-file sink; the READ is the
-distributed path — one task per row-block ``pread``-ing its byte range,
-emitting (row, col, lat, lon, shift) for the broadcast-sample join the
-warp/transformer family uses.
+distributed path — row-block slabs on the slab kernel
+(``sources/_rawgrid.py``), emitting (row, col, lat, lon, shift) for the
+broadcast-sample join the warp/transformer family uses.
 """
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from gdal_spark.sources import _rawgrid as RG
 
 NODATA = -88.8888
 
@@ -53,38 +53,19 @@ def write_gtx(arr: np.ndarray, path: str, lat0: float, lon0: float,
 def read_gtx(spark: SparkSession, path: str,
              block_rows: int = 64) -> DataFrame:
     """Distributed scan → (row, col, lat, lon, shift), nodata dropped;
-    one task per row-block pread (header parsed driver-side only)."""
+    one row-block slab per task (header parsed driver-side only)."""
     h = parse_gtx_header(path)
-    rows, cols = h["rows"], h["cols"]
-    n_blocks = (rows + block_rows - 1) // block_rows
-    lat0, lon0, dlat, dlon = h["lat0"], h["lon0"], h["dlat"], h["dlon"]
+    cols = h["cols"]
+    bl = RG.Blocks(h["rows"], block_rows)
 
-    blocks = spark.range(n_blocks).toDF("blk").repartition(
-        min(n_blocks, 32), "blk")
+    def decode(read, slab):
+        _, r0, nr = bl.span(slab)
+        vals = read(40 + r0 * cols * 4, (nr, cols), ">f4").astype(np.float64)
+        yield 0, r0, 0, np.ma.masked_where(
+            ~(np.abs(vals - NODATA) > 1e-4), vals)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            for pdf in batches:
-                for b in pdf["blk"].to_numpy():
-                    r0 = int(b) * block_rows
-                    nr = min(block_rows, rows - r0)
-                    raw = os.pread(fd, nr * cols * 4, 40 + r0 * cols * 4)
-                    arr = np.frombuffer(raw, dtype=">f4").reshape(nr, cols)
-                    rr, cc = np.mgrid[0:nr, 0:cols]
-                    vals = arr.astype(np.float64)
-                    keep = np.abs(vals - NODATA) > 1e-4
-                    rrk = (rr + r0)[keep]
-                    cck = cc[keep]
-                    yield pd.DataFrame({
-                        "row": rrk.ravel().astype(np.int64),
-                        "col": cck.ravel().astype(np.int64),
-                        "lat": lat0 + rrk.ravel() * dlat,
-                        "lon": lon0 + cck.ravel() * dlon,
-                        "shift": vals[keep].ravel(),
-                    })
-        finally:
-            os.close(fd)
-
-    return blocks.mapInPandas(
-        fetch, "row long, col long, lat double, lon double, shift double")
+    return RG.read_slabs(spark, path, bl.count, decode).select(
+        F.col("gy").alias("row"), F.col("gx").alias("col"),
+        (F.lit(h["lat0"]) + F.col("gy") * F.lit(h["dlat"])).alias("lat"),
+        (F.lit(h["lon0"]) + F.col("gx") * F.lit(h["dlon"])).alias("lon"),
+        F.col("val").alias("shift"))

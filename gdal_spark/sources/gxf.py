@@ -17,24 +17,30 @@ value line(s) —
 This driver covers uncompressed GXF (no #GTYPE base-90 compression)
 with sense ±1/∓2 row organisations on read and writes sense 1.
 
-Spark mapping — the splittable-text contract (sources/surfer.py
-DSAA): the sink formats every scanline as one fixed-width text line so
-row-block tasks pwrite disjoint ranges; the scan preads per-slab line
-ranges when the fixed-width invariant holds and falls back to a
+Spark mapping: the slab kernel (``sources/_rawgrid.py``), as for
+surfer's DSAA text — the sink formats every scanline as one fixed-width
+text line, so slab tasks pwrite disjoint ranges; the scan preads
+scanline slabs when the fixed-width invariant holds and falls back to a
 driver-side token parse for foreign wrapping."""
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gdal_spark.sources import _rawgrid as RG
+
 _CW = 18  # fixed-width cell for the splittable sink
 _DUMMY = -1e31
+
+
+def _scanline(vals: np.ndarray) -> bytes:
+    """One fixed-width scanline: every cell ``_CW`` characters wide."""
+    return ("".join(f"{v:.12g}".rjust(_CW) for v in vals) + "\n").encode(
+        "ascii")
 
 
 def parse_gxf_header(path: str) -> dict:
@@ -72,52 +78,31 @@ def parse_gxf_header(path: str) -> dict:
 def read_gxf(spark: SparkSession, path: str,
              block_rows: int = 64) -> DataFrame:
     """Scan → (gy, gx, val double), gy top-down, dummies dropped.
-    Fixed-width files read as distributed row-block slabs; foreign
+    Fixed-width files read as distributed scanline slabs; foreign
     wraps fall back to a driver-side token parse (the interchange-
     format reality), then parallelize."""
     hdr = parse_gxf_header(path)
     w, h, sense = hdr["w"], hdr["h"], hdr["sense"]
     dummy, data0 = hdr["dummy"], hdr["data0"]
     row_len = w * _CW + 1
-    fixed = os.path.getsize(path) == data0 + h * row_len
 
-    def to_gy(scan: np.ndarray) -> np.ndarray:
-        # sense 1: scanline 0 is the south row; sense -2: north row
-        return (h - 1 - scan) if sense == 1 else scan
+    def blank(vals: np.ndarray) -> np.ma.MaskedArray:
+        return np.ma.masked_where(np.isclose(vals, dummy, rtol=1e-6), vals)
 
-    if fixed:
-        n_blocks = (h + block_rows - 1) // block_rows
-        slabs = spark.range(n_blocks).toDF("slab").repartition(
-            min(n_blocks, 32), "slab")
+    if os.path.getsize(path) == data0 + h * row_len:
+        bl = RG.Blocks(h, block_rows)
 
-        def read_slab(batches: Iterator[pd.DataFrame]
-                      ) -> Iterator[pd.DataFrame]:
-            fd = os.open(path, os.O_RDONLY)
-            try:
-                for pdf in batches:
-                    for s in pdf["slab"].to_numpy():
-                        blk = int(s)
-                        s0 = blk * block_rows
-                        rows = min(block_rows, h - s0)
-                        blob = os.pread(fd, rows * row_len,
-                                        data0 + s0 * row_len)
-                        text = blob.decode("ascii")
-                        vals = np.array(text.split(),
-                                        dtype=np.float64).reshape(rows, w)
-                        scan = np.repeat(
-                            np.arange(s0, s0 + rows, dtype=np.int64), w)
-                        gx = np.tile(np.arange(w, dtype=np.int64), rows)
-                        v = vals.ravel()
-                        keep = ~np.isclose(v, dummy, rtol=1e-6)
-                        yield pd.DataFrame({
-                            "gy": to_gy(scan)[keep], "gx": gx[keep],
-                            "val": v[keep]})
-            finally:
-                os.close(fd)
+        def decode(read, slab):
+            _, s0, rows = bl.span(slab)
+            text = read(data0 + s0 * row_len, (rows * row_len,), "u1") \
+                .tobytes().decode("ascii")
+            vals = blank(np.array(text.split(), dtype=np.float64)
+                         .reshape(rows, w))
+            # sense 1: scanline 0 is the south row; sense -2: the north
+            yield (0, h - s0 - rows, 0, vals[::-1]) if sense == 1 \
+                else (0, s0, 0, vals)
 
-        return slabs.mapInPandas(read_slab,
-                                 "gy long, gx long, val double")
-
+        return RG.read_slabs(spark, path, bl.count, decode)
     # foreign wrapping: sequential-prefix problem -> bounded driver parse
     with open(path, "rb") as fh:
         fh.seek(data0)
@@ -125,14 +110,12 @@ def read_gxf(spark: SparkSession, path: str,
     vals = np.array(toks, dtype=np.float64)
     if vals.size != w * h:
         raise ValueError(f"gxf: {vals.size} values, want {w * h}")
-    vals = vals.reshape(h, w)
-    recs = []
-    for scan in range(h):
-        gy = int(to_gy(np.array([scan]))[0])
-        for gx in range(w):
-            v = float(vals[scan, gx])
-            if not np.isclose(v, dummy, rtol=1e-6):
-                recs.append((gy, gx, v))
+    vals = blank(vals.reshape(h, w))
+    if sense == 1:
+        vals = vals[::-1]
+    gy, gx = np.nonzero(~np.ma.getmaskarray(vals))
+    recs = [(int(y), int(x), float(v)) for y, x, v in
+            zip(gy, gx, np.ma.getdata(vals)[gy, gx])]
     return spark.createDataFrame(recs, "gy long, gx long, val double") \
         .repartition(32)
 
@@ -142,8 +125,8 @@ def write_gxf(
     *, dummy: float = _DUMMY, title: str = "gdal_spark grid",
 ) -> None:
     """Sink over (gy, gx, val): header driver-side (sense 1 — south
-    row first), one fixed-width text line per scanline pwritten by a
-    per-row task (the surfer DSAA splittable layout)."""
+    row first), one fixed-width text line per scanline written by the
+    slab kernel (the surfer DSAA splittable layout)."""
     header = (
         "#TITLE\n"
         f"{title}\n"
@@ -158,26 +141,11 @@ def write_gxf(
         "#GRID\n"
     ).encode("ascii")
     row_len = w * _CW + 1
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(header)
-        blank = (f"{dummy:.12g}".rjust(_CW) * w) + "\n"
-        for _ in range(h):
-            fh.write(blank.encode("ascii"))
-    data0 = len(header)
+    data0 = RG.preallocate(path, header, _scanline(np.full(w, dummy)), h)
 
-    def write_rows(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        gy = int(key[0])
+    def encode(gy, pdf):
         vals = np.full(w, dummy)
-        vals[pdf["gx"].to_numpy(np.int64)] = pdf["val"].to_numpy()
-        line = "".join(f"{v:.12g}".rjust(_CW) for v in vals) + "\n"
-        scan = h - 1 - gy  # sense 1: south row first
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            os.pwrite(fd, line.encode("ascii"), data0 + scan * row_len)
-        finally:
-            os.close(fd)
-        return pd.DataFrame({"gy": [gy], "n": [len(pdf)]})
+        vals[pdf["gx"].to_numpy()] = pdf["val"].to_numpy()
+        return data0 + (h - 1 - gy) * row_len, _scanline(vals)  # sense 1
 
-    cells.groupBy("gy").applyInPandas(
-        write_rows, "gy long, n long").collect()
+    RG.write_slabs(cells, path, F.col("gy").cast("long"), (h, w), encode)

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gdal_spark.sources import _rawgrid as RG
+
 _HDR = 28
 
 
@@ -187,8 +189,11 @@ def write_hf2(
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     scale = vert_pres
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key, pdf):
         tid = int(key[0])
+        bad = RG.check_cells(pdf, {"gy": h, "gx": w})
+        if bad:
+            return pd.DataFrame({"tid": [tid], "blob": [None], "bad": [bad]})
         j, i = divmod(tid, nx)
         tw = min(tile, w - i * tile)
         th = min(tile, h - j * tile)
@@ -198,17 +203,22 @@ def write_hf2(
         c = pdf["gx"].to_numpy(np.int64) - i * tile
         vals[r, c] = pdf["val"].to_numpy(np.float64)
         blob = _encode_tile(vals, scale)
-        return pd.DataFrame({"tid": [tid], "blob": [blob]})
+        return pd.DataFrame({"tid": [tid], "blob": [blob], "bad": [None]})
 
     staged = cells.withColumn(
         "_tid",
         (F.floor((F.lit(h) - 1 - F.col("gy")) / F.lit(tile)) * nx
          + F.floor(F.col("gx") / F.lit(tile))).cast("long"),
-    ).groupBy("_tid").applyInPandas(encode, "tid long, blob binary") \
+    ).groupBy("_tid").applyInPandas(
+        encode, "tid long, blob binary, bad string") \
      .localCheckpoint(eager=True)
 
-    lengths = {r["tid"]: r["ln"] for r in staged.select(
-        "tid", F.length("blob").alias("ln")).collect()}  # tile-count rows
+    rows = staged.select("tid", "bad", F.length("blob").alias("ln")) \
+        .collect()  # tile-count rows
+    if any(r["bad"] for r in rows):
+        staged.unpersist()
+        RG.raise_bad_cells(path, [r["bad"] for r in rows])
+    lengths = {r["tid"]: r["ln"] for r in rows}
     pos = _HDR
     offsets: dict[int, int] = {}
     for tid in range(nx * ny):

@@ -19,21 +19,19 @@ A JML file is a self-describing XML document:
   — x,y pairs, x first) and one ``<property name="N">value</property>``
   per column (ogrjmlwriterlayer.cpp:179-221).
 
-Spark mapping — the repo's text-format contract (sources/gmt.py): one
-``.jml`` shard per partition on write, one task per shard on read
-(binaryFile bytes, executor-side regex parse — the dialect above, not
-a general XML parser)."""
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.jml`` shard per shard of the key on write, one decode per shard on
+read (executor-side regex parse — the dialect above, not a general XML
+parser)."""
 
 from __future__ import annotations
 
-import os
 import re
-import tempfile
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _TEMPLATE_HEAD = (
     "<?xml version='1.0' encoding='UTF-8'?>\n"
@@ -129,45 +127,20 @@ def write_point_jmls(
     int_fields: list[str], num_files: int,
     partition_key: str | None = None,
 ) -> int:
-    """Distributed Point sink: one .jml per partition."""
-    os.makedirs(directory, exist_ok=True)
-    key = partition_key or int_fields[0]
-    cols = int_fields + [x_col, y_col]
-    staged = df.select(*cols).repartition(num_files, F.col(key))
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts \
-            else pd.DataFrame(columns=cols)
-        buf = points_jml_bytes(pdf, x_col, y_col, int_fields)
-        tmp = tempfile.mktemp(suffix=".jml")
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        final = f"{directory}/part-{pid:05d}.jml"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(pdf)]})
-
-    return staged.mapInPandas(
-        write_part, "path string, n_records long").count()
+    """Distributed Point sink: one .jml per shard of the key."""
+    key = DIO.hash_key(partition_key or int_fields[0], num_files)
+    return DIO.write_files(
+        df.select(*int_fields, x_col, y_col), directory, key,
+        lambda part, pdf: {f"part-{part:05d}.jml": points_jml_bytes(
+            pdf, x_col, y_col, int_fields)})
 
 
 def read_point_jmls(
     spark: SparkSession, directory: str, int_fields: list[str],
 ) -> DataFrame:
-    """Distributed Point scan: one task per .jml shard."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.jml") \
-        .select(F.col("content").alias("buf"))
-    out_schema = ", ".join(
-        [f"{c} long" for c in int_fields] + ["x double", "y double"])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                recs = parse_jml(bytes(buf), int_fields)
-                yield pd.DataFrame(
-                    recs, columns=int_fields + ["x", "y"])
-
-    return files.mapInPandas(parse, out_schema)
+    """Distributed Point scan: one decode per .jml shard."""
+    return DIO.read_files(
+        spark, f"{directory}/*.jml",
+        lambda path, buf: pd.DataFrame(parse_jml(buf, int_fields),
+                                       columns=int_fields + ["x", "y"]),
+        DIO.point_schema(int_fields))

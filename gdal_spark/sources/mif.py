@@ -8,20 +8,18 @@ after ``Data`` (``Point x y``, ``Region nrings`` + per-ring vertex blocks,
 the same order — the spec's implicit positional 1:1, exactly like the
 shapefile .shp↔.dbf pairing.
 
-Spark mapping: one MIF/MID pair per row-block on write
-(``applyInPandas``), one task per pair on read (two ``binaryFile`` scans
-joined on the path stem).  Coordinates are written as Python
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+MIF/MID pair per block on write, one decode per ``.mif`` on read, which
+reads its ``.mid`` sibling by path.  Coordinates are written as Python
 shortest-roundtrip decimals, so doubles survive bit-exactly.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def mif_pair(rows: list[tuple[float, float, list]],
@@ -83,45 +81,28 @@ def write_point_mifs(pts: DataFrame, directory: str,
                      int_fields: list[str], num_files: int = 8,
                      x_col: str = "lon", y_col: str = "lat") -> int:
     """Distributed Point-layer sink: one .mif/.mid pair per block."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        pdf = pdf.sort_values(int_fields[0])
+    def encode(blk, pdf):
         rows = [(float(r[x_col]), float(r[y_col]),
                  [r[c] for c in int_fields])
-                for _, r in pdf.iterrows()]
+                for _, r in pdf.sort_values(int_fields[0]).iterrows()]
         mif, mid = mif_pair(rows, int_fields)
-        stem = f"{directory}/block-{blk:05d}"
-        with open(stem + ".mif", "w") as fh:
-            fh.write(mif)
-        with open(stem + ".mid", "w") as fh:
-            fh.write(mid)
-        return pd.DataFrame({"path": [stem], "n": [len(pdf)]})
+        return {f"block-{blk:05d}.mif": mif.encode(),
+                f"block-{blk:05d}.mid": mid.encode()}
 
-    keyed = pts.withColumn(
-        "_blk", F.pmod(F.hash(F.col(int_fields[0])), F.lit(num_files)))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(pts, directory,
+                           DIO.hash_key(int_fields[0], num_files), encode)
 
 
 def read_point_mifs(spark: SparkSession, directory: str,
                     int_fields: list[str]) -> DataFrame:
-    """Distributed Point-layer scan: one task per MIF/MID pair."""
-    mif = spark.read.format("binaryFile").load(f"{directory}/*.mif").select(
-        F.regexp_replace("path", r"\.mif$", "").alias("stem"),
-        F.col("content").alias("mif"))
-    mid = spark.read.format("binaryFile").load(f"{directory}/*.mid").select(
-        F.regexp_replace("path", r"\.mid$", "").alias("stem"),
-        F.col("content").alias("mid"))
-    paired = mif.join(mid, "stem")
-    schema = ", ".join([f"{c} long" for c in int_fields]
-                       + ["x double", "y double"])
+    """Distributed Point-layer scan: one decode per .mif, which reads
+    its .mid sibling by path."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for mf, md in zip(pdf["mif"], pdf["mid"]):
-                yield parse_mif_pair(bytes(mf).decode(),
-                                     bytes(md).decode(), int_fields)
+    def decode(path, buf):
+        with open(path[:-len(".mif")] + ".mid", "rb") as fh:
+            return parse_mif_pair(buf.decode(), fh.read().decode(),
+                                  int_fields)
 
-    return paired.mapInPandas(parse, schema)
+    return DIO.read_files(spark, f"{directory}/*.mif", decode,
+                          DIO.point_schema(int_fields))

@@ -17,23 +17,21 @@ Package layout written (the minimal valid .ods):
   ``table:number-columns-repeated`` so files from other producers
   parse.
 
-Spark mapping — the single-writer-container contract (gpkg/xlsx): one
-.ods per partition on write, ``binaryFile`` one task per file on read,
-parsed executor-side from the in-memory bytes."""
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+.ods per shard of the key on write, one decode per file on read, parsed
+executor-side from the in-memory bytes."""
 
 from __future__ import annotations
 
 import io
-import os
-import tempfile
 import zipfile
-from typing import Iterator
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _MIME = "application/vnd.oasis.opendocument.spreadsheet"
 _OFFICE = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
@@ -132,35 +130,18 @@ def write_point_odss(
     num_files: int,
     partition_key: str | None = None,
 ) -> int:
-    """Distributed sink: one .ods per partition; coordinates as
+    """Distributed sink: one .ods per shard of the key; coordinates as
     shortest-roundtrip office:value floats, row 1 = header."""
-    os.makedirs(directory, exist_ok=True)
-    key = partition_key or int_fields[0]
     cols = int_fields + [x_col, y_col]
-    staged = df.select(*cols).repartition(num_files, F.col(key))
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def encode(part, pdf):
+        rows = [tuple([float(int(v)) for v in r[:-2]]
+                      + [float(r[-2]), float(r[-1])])
+                for r in pdf.itertuples(index=False)]
+        return {f"part-{part:05d}.ods": ods_bytes(cols, rows)}
 
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts \
-            else pd.DataFrame(columns=cols)
-        rows = [
-            tuple([float(int(getattr(r, c))) for c in int_fields]
-                  + [float(getattr(r, x_col)), float(getattr(r, y_col))])
-            for r in pdf.itertuples(index=False)
-        ]
-        buf = ods_bytes(cols, rows)
-        tmp = tempfile.mktemp(suffix=".ods")
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        final = f"{directory}/part-{pid:05d}.ods"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(rows)]})
-
-    manifest = staged.mapInPandas(write_part, "path string, n_records long")
-    return manifest.count()
+    key = DIO.hash_key(partition_key or int_fields[0], num_files)
+    return DIO.write_files(df.select(*cols), directory, key, encode)
 
 
 def read_point_odss(
@@ -170,23 +151,15 @@ def read_point_odss(
     x_col: str = "x",
     y_col: str = "y",
 ) -> DataFrame:
-    """Distributed scan: one task per .ods; header row is the schema."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.ods") \
-        .select(F.col("content").alias("buf"))
-    out_schema = ", ".join(
-        [f"{c} long" for c in int_fields] + ["x double", "y double"])
+    """Distributed scan: one decode per .ods; header row is the schema."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                header, rows = parse_ods(bytes(buf))
-                idx = {h: i for i, h in enumerate(header)}
-                recs = []
-                for r in rows:
-                    rec = {c: int(r[idx[c]]) for c in int_fields}
-                    rec["x"] = float(r[idx[x_col]])
-                    rec["y"] = float(r[idx[y_col]])
-                    recs.append(rec)
-                yield pd.DataFrame(recs, columns=int_fields + ["x", "y"])
+    def decode(path, buf):
+        header, rows = parse_ods(buf)
+        idx = [header.index(c) for c in int_fields]
+        ix, iy = header.index(x_col), header.index(y_col)
+        return pd.DataFrame(
+            [[int(r[i]) for i in idx] + [float(r[ix]), float(r[iy])]
+             for r in rows], columns=int_fields + ["x", "y"])
 
-    return files.mapInPandas(parse, out_schema)
+    return DIO.read_files(spark, f"{directory}/*.ods", decode,
+                          DIO.point_schema(int_fields))

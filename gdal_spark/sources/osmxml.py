@@ -9,20 +9,19 @@ mapping the same way).  Coordinates are written with Python's
 shortest-roundtrip repr so doubles survive the text container
 bit-exactly (the KML/GPX/GeoJSON contract).
 
-Spark mapping: one .osm document per row-block on write
-(``applyInPandas``), one task per document on read (``binaryFile`` +
-executor-side ElementTree).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+.osm document per block on write, one decode per document on read
+(executor-side ElementTree).
 """
 
 from __future__ import annotations
 
-import os
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def osm_document(rows: list[dict], id_field: str,
@@ -58,38 +57,24 @@ def parse_osm(buf: bytes, id_field: str,
 def write_point_osm(pts: DataFrame, directory: str, id_field: str,
                     tag_fields: list[str], num_files: int = 8) -> int:
     """Distributed node sink: one .osm document per block."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        pdf = pdf.sort_values(id_field)
-        path = f"{directory}/block-{blk:05d}.osm"
-        with open(path, "wb") as fh:
-            fh.write(osm_document(
-                [r._asdict() for r in pdf.itertuples(index=False)],
-                id_field, tag_fields))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+    def encode(blk, pdf):
+        rows = [r._asdict() for r in
+                pdf.sort_values(id_field).itertuples(index=False)]
+        return {f"block-{blk:05d}.osm":
+                osm_document(rows, id_field, tag_fields)}
 
-    keyed = pts.withColumn(
-        "_blk", F.pmod(F.hash(F.col(id_field)), F.lit(num_files)))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(pts, directory,
+                           DIO.hash_key(id_field, num_files), encode)
 
 
 def read_point_osm(spark: SparkSession, directory: str, id_field: str,
                    tag_fields: list[str]) -> DataFrame:
-    """Distributed node scan: one task per .osm document."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.osm") \
-        .select(F.col("content").alias("buf"))
-    schema = ", ".join([f"{id_field} long"]
-                       + [f"{c} long" for c in tag_fields]
-                       + ["lon double", "lat double"])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                rows = parse_osm(bytes(buf), id_field, tag_fields)
-                yield pd.DataFrame(rows)[
-                    [id_field] + tag_fields + ["lon", "lat"]]
-
-    return files.mapInPandas(parse, schema)
+    """Distributed node scan: one decode per .osm document."""
+    names = [id_field] + tag_fields
+    return DIO.read_files(
+        spark, f"{directory}/*.osm",
+        lambda path, buf: pd.DataFrame(
+            parse_osm(buf, id_field, tag_fields),
+            columns=names + ["lon", "lat"]),
+        DIO.point_schema(names, "lon", "lat"))

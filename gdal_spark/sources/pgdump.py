@@ -8,20 +8,19 @@ Format: a SQL script per layer — ``CREATE TABLE``, PostGIS
 tab-delimited rows (geometry as uppercase hex EWKB-compatible WKB,
 little-endian) terminated by ``\\.``.
 
-Spark mapping: one .sql dump per row-block on write (``applyInPandas``),
-one task per dump on read.  Doubles ride the 8-byte IEEE WKB payload,
-bit-exact by construction.
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+.sql dump per block on write, one decode per dump on read.  Doubles ride
+the 8-byte IEEE WKB payload, bit-exact by construction.
 """
 
 from __future__ import annotations
 
-import os
 import struct
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _WKB_POINT_LE = "<BIdd"  # byte order, geometry type 1, x, y
 
@@ -71,36 +70,22 @@ def write_point_pgdumps(pts: DataFrame, directory: str, table: str,
                         int_fields: list[str], num_files: int = 8,
                         x_col: str = "lon", y_col: str = "lat") -> int:
     """Distributed Point-layer sink: one .sql dump per block."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        pdf = pdf.sort_values(int_fields[0])
+    def encode(blk, pdf):
         rows = [(float(r[x_col]), float(r[y_col]),
                  [r[c] for c in int_fields])
-                for _, r in pdf.iterrows()]
-        path = f"{directory}/block-{blk:05d}.sql"
-        with open(path, "w") as fh:
-            fh.write(pgdump_text(table, rows, int_fields))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+                for _, r in pdf.sort_values(int_fields[0]).iterrows()]
+        return {f"block-{blk:05d}.sql":
+                pgdump_text(table, rows, int_fields).encode()}
 
-    keyed = pts.withColumn(
-        "_blk", F.pmod(F.hash(F.col(int_fields[0])), F.lit(num_files)))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(pts, directory,
+                           DIO.hash_key(int_fields[0], num_files), encode)
 
 
 def read_point_pgdumps(spark: SparkSession, directory: str,
                        int_fields: list[str]) -> DataFrame:
-    """Distributed scan of the COPY blocks: one task per dump."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.sql") \
-        .select(F.col("content").alias("buf"))
-    schema = ", ".join([f"{c} long" for c in int_fields]
-                       + ["x double", "y double"])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                yield parse_pgdump(bytes(buf).decode(), int_fields)
-
-    return files.mapInPandas(parse, schema)
+    """Distributed scan of the COPY blocks: one decode per dump."""
+    return DIO.read_files(
+        spark, f"{directory}/*.sql",
+        lambda path, buf: parse_pgdump(buf.decode(), int_fields),
+        DIO.point_schema(int_fields))

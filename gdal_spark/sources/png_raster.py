@@ -14,14 +14,13 @@ grayscale-8 only) to the full driver surface the reference exposes:
   ``pngdataset.cpp`` SetGeoTransform → world file): 6 decimal lines
   xres / rot / rot / -yres / center-x / center-y of the UL pixel.
 
-Spark mapping mirrors the GeoTIFF driver contract: one ``.png`` (+
-``.wld``) per row-block on write (``applyInPandas`` over a closed-form
-cell table), one task per file on read (``binaryFile`` + numpy decode),
-GLOBAL pixel coordinates recovered from each file's world file.  Filters
-are decoded vectorized where the spec allows (Up fully, Sub via the
-cumulative recurrence) and per-pixel only for the genuinely sequential
-Average/Paeth recurrences — rows are bounded by the block width, never by
-dataset size.
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.png`` (+ ``.wld``) per row-block on write, one decode per file on read
+(numpy decode), GLOBAL pixel coordinates recovered from each file's
+world file.  Filters are decoded vectorized where the spec allows (Up
+fully, Sub via the cumulative recurrence) and per-pixel only for the
+genuinely sequential Average/Paeth recurrences — rows are bounded by the
+block width, never by dataset size.
 """
 
 from __future__ import annotations
@@ -29,14 +28,14 @@ from __future__ import annotations
 import os
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gdal_spark.functions.png import PNG_SIG, _chunk
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 
 def _filter_row(raw: np.ndarray, prev: np.ndarray, ftype: int,
@@ -200,51 +199,33 @@ def write_cell_pngs(
     """Distributed PNG sink: one grayscale PNG + .wld per ``block_rows``
     row-block.  ``cells`` is (gx, gy, val) with val already in range for
     ``depth``."""
-    os.makedirs(directory, exist_ok=True)
-    staged = cells.withColumn(
-        "blk", (F.col("gy") / block_rows).cast("long"))
+    bl = RG.Blocks(height, block_rows)
 
-    def write_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
+    def encode(blk, pdf):
         y0 = blk * block_rows
-        arr = np.zeros((block_rows, width),
-                       dtype=np.uint16 if depth == 16 else np.uint8)
-        arr[pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy()] = \
-            pdf["val"].to_numpy()
-        png = encode_png_gray(arr, depth=depth)
-        base = f"{directory}/block-{blk:05d}"
-        with open(base + ".png", "wb") as fh:
-            fh.write(png)
-        with open(base + ".wld", "w") as fh:
-            fh.write(world_file_text(RES, RES, 0.0, -y0 * RES))
-        return pd.DataFrame({"path": [base + ".png"], "n": [len(pdf)]})
+        arr = RG.scatter(pdf, (block_rows, width), 0,
+                         np.uint16 if depth == 16 else np.uint8,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return {f"block-{blk:05d}.png": encode_png_gray(arr, depth=depth),
+                f"block-{blk:05d}.wld": world_file_text(
+                    RES, RES, 0.0, -y0 * RES).encode()}
 
-    manifest = staged.groupBy("blk").applyInPandas(
-        write_block, "path string, n long")
-    return manifest.count()
+    return DIO.write_files(cells, directory, bl.key(), encode,
+                           {"gy": height, "gx": width})
 
 
 def read_pngs(spark: SparkSession, directory: str) -> DataFrame:
-    """Distributed PNG scan: one task per file; GLOBAL (gx, gy) recovered
-    from each file's world-file geotransform."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.png") \
-        .select("path", F.col("content").alias("buf"))
+    """Distributed PNG scan: one decode per file; GLOBAL (gx, gy)
+    recovered from each file's world-file geotransform."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, buf in zip(pdf["path"], pdf["buf"]):
-                local = path.replace("file:", "")
-                with open(os.path.splitext(local)[0] + ".wld") as fh:
-                    xres, yres, ulx, uly = parse_world_file(fh.read())
-                img = decode_png_gray(bytes(buf))
-                h, w = img.shape
-                gy0 = int(round(-uly / yres))
-                gx0 = int(round(ulx / xres))
-                gy, gx = np.mgrid[0:h, 0:w]
-                yield pd.DataFrame({
-                    "gx": (gx + gx0).reshape(-1).astype(np.int64),
-                    "gy": (gy + gy0).reshape(-1).astype(np.int64),
-                    "val": img.reshape(-1).astype(np.int64),
-                })
+    def decode(path, buf):
+        with open(os.path.splitext(path)[0] + ".wld") as fh:
+            xres, yres, ulx, uly = parse_world_file(fh.read())
+        img = decode_png_gray(buf)
+        gy, gx = DIO.grid_index(img.shape, y0=int(round(-uly / yres)),
+                                x0=int(round(ulx / xres)))
+        return pd.DataFrame({"gx": gx, "gy": gy,
+                             "val": img.ravel().astype(np.int64)})
 
-    return files.mapInPandas(parse, "gx long, gy long, val long")
+    return DIO.read_files(spark, f"{directory}/*.png", decode,
+                          "gx long, gy long, val long")

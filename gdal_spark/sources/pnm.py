@@ -5,20 +5,19 @@ Format: ASCII header ``P5|P6 <width> <height> <maxval>`` (whitespace/
 comment separated) followed by raw big-endian samples — 1 byte per sample
 for maxval < 256, 2 bytes otherwise; P6 interleaves RGB per pixel.
 
-Spark mapping: the standard format-driver contract — one file per
-row-block on write (``applyInPandas``), one task per file on read
-(``binaryFile`` + vectorized ``frombuffer``).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+file per row-block on write, one decode per file on read (vectorized
+``frombuffer``).
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 
 def pnm_bytes(arr: np.ndarray, maxval: int = 255) -> bytes:
@@ -69,24 +68,16 @@ def write_gray_pnms(cells: DataFrame, directory: str, width: int,
                     height: int, block_rows: int,
                     maxval: int = 255) -> int:
     """Distributed P5 sink over (gx, gy, val): one .pgm per row-block."""
-    os.makedirs(directory, exist_ok=True)
+    bl = RG.Blocks(height, block_rows)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        y0 = blk * block_rows
-        h = min(block_rows, height - y0)
-        arr = np.zeros((h, width), dtype=np.int64)
-        arr[pdf["gy"].to_numpy(np.int64) - y0,
-            pdf["gx"].to_numpy(np.int64)] = pdf["val"].to_numpy(np.int64)
-        path = f"{directory}/block-{blk:05d}.pgm"
-        with open(path, "wb") as fh:
-            fh.write(pnm_bytes(arr, maxval=maxval))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+    def encode(blk, pdf):
+        _, y0, h = bl.span(blk)
+        arr = RG.scatter(pdf, (h, width), 0, np.int64,
+                         pdf["gy"].to_numpy() - y0, pdf["gx"].to_numpy())
+        return {f"block-{blk:05d}.pgm": pnm_bytes(arr, maxval=maxval)}
 
-    keyed = cells.withColumn(
-        "_blk", F.floor(F.col("gy") / F.lit(block_rows)).cast("long"))
-    return keyed.groupBy("_blk").applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(cells, directory, bl.key(), encode,
+                           {"gy": height, "gx": width})
 
 
 def read_gray_pnms(spark: SparkSession, directory: str,
@@ -94,19 +85,13 @@ def read_gray_pnms(spark: SparkSession, directory: str,
     """Distributed P5 scan → (gx, gy, val); global rows recovered from the
     block filename (the format carries no georef — the reference's PNM
     driver behaves the same, world files aside)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.pgm") \
-        .select("path", F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, buf in zip(pdf["path"], pdf["buf"]):
-                blk = int(str(path).rsplit("block-", 1)[1][:5])
-                _, arr = parse_pnm(bytes(buf))
-                yy, xx = np.mgrid[0:arr.shape[0], 0:arr.shape[1]]
-                yield pd.DataFrame({
-                    "gx": xx.ravel().astype(np.int64),
-                    "gy": (yy.ravel() + blk * block_rows).astype(np.int64),
-                    "val": arr.ravel().astype(np.int64),
-                })
+    def decode(path, buf):
+        _, arr = parse_pnm(buf)
+        gy, gx = DIO.grid_index(arr.shape,
+                                y0=DIO.block_of(path) * block_rows)
+        return pd.DataFrame({"gx": gx, "gy": gy,
+                             "val": arr.ravel().astype(np.int64)})
 
-    return files.mapInPandas(parse, "gx long, gy long, val long")
+    return DIO.read_files(spark, f"{directory}/*.pgm", decode,
+                          "gx long, gy long, val long")

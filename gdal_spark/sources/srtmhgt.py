@@ -13,25 +13,26 @@ Format (public SRTM documentation):
   ``1/(n-1)`` degrees (edge rows/cols are shared with neighbour tiles);
 * voids are ``-32768``.
 
-Spark mapping — the repo's standard format-driver contract:
+Spark mapping: the document kernel (``sources/_docio.py``):
 
-* **write**: one ``.hgt`` file per 1-degree tile via ``applyInPandas``
-  over the tile key (a tile is bounded: <=3601^2 * 2 bytes = 26 MB);
-* **read**: ``binaryFile`` one task per tile, vectorized ``frombuffer``
-  parse, voids dropped (the reference's nodata mask), emitting global
-  (lon, lat, elev) so downstream DEM operators are tile-agnostic.
+* **write**: one ``.hgt`` file per 1-degree tile (a tile is bounded:
+  <=3601^2 * 2 bytes = 26 MB);
+* **read**: one decode per tile, vectorized ``frombuffer`` parse, voids
+  dropped (the reference's nodata mask), emitting global (lon, lat,
+  elev) so downstream DEM operators are tile-agnostic.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 VOID = -32768
 
@@ -77,53 +78,32 @@ def write_hgt_tiles(cells: DataFrame, directory: str, n: int) -> int:
     """Distributed .hgt sink over (lat_sw, lon_sw, row, col, elev) —
     row 0 = the tile's NORTH edge (spec order).  Cells absent from the
     input are written as VOID; one file per 1-degree tile."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lat_sw, lon_sw = int(key[0]), int(key[1])
-        arr = np.full((n, n), VOID, dtype=np.int16)
-        arr[pdf["row"].to_numpy(np.int64),
-            pdf["col"].to_numpy(np.int64)] = (
-            pdf["elev"].to_numpy(np.int64).astype(np.int16))
-        path = f"{directory}/{hgt_name(lat_sw, lon_sw)}"
-        with open(path, "wb") as fh:
-            fh.write(hgt_bytes(arr))
-        return pd.DataFrame({"path": [path], "n_cells": [len(pdf)]})
+    def encode(tile, pdf):
+        arr = RG.scatter(pdf, (n, n), VOID, np.int16, pdf["row"].to_numpy(),
+                         pdf["col"].to_numpy(),
+                         vals=pdf["elev"].to_numpy(np.int64))
+        return {hgt_name(*map(int, tile)): hgt_bytes(arr)}
 
-    manifest = cells.groupBy("lat_sw", "lon_sw").applyInPandas(
-        build, "path string, n_cells long")
-    return manifest.count()
+    return DIO.write_files(cells, directory,
+                           (F.col("lat_sw"), F.col("lon_sw")), encode,
+                           {"row": n, "col": n})
 
 
 def read_hgt(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed .hgt scan → (lat_sw, lon_sw, row, col, elev, lon, lat);
     voids dropped.  lon/lat are the sample's geographic position from the
     SW-corner name + 1/(n-1) spacing (the reference's geotransform)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.hgt") \
-        .select("path", F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, buf in zip(pdf["path"], pdf["buf"]):
-                lat_sw, lon_sw = parse_hgt_name(str(path))
-                arr = parse_hgt(bytes(buf))
-                n = arr.shape[0]
-                step = 1.0 / (n - 1)
-                rr, cc = np.mgrid[0:n, 0:n]
-                keep = arr != VOID
-                rows, cols = rr[keep], cc[keep]
-                yield pd.DataFrame({
-                    "lat_sw": np.full(rows.size, lat_sw, dtype=np.int64),
-                    "lon_sw": np.full(rows.size, lon_sw, dtype=np.int64),
-                    "row": rows.astype(np.int64),
-                    "col": cols.astype(np.int64),
-                    "elev": arr[keep].astype(np.int64),
-                    "lon": lon_sw + cols * step,
-                    "lat": lat_sw + 1.0 - rows * step,
-                })
+    def decode(path, buf):
+        lat_sw, lon_sw = parse_hgt_name(path)
+        arr = parse_hgt(buf)
+        step = 1.0 / (arr.shape[0] - 1)
+        keep = arr != VOID
+        rows, cols = DIO.grid_index(arr.shape, keep)
+        return DIO.tile_frame(lat_sw, lon_sw, rows, cols, arr[keep],
+                              lon_sw + cols * step,
+                              lat_sw + 1.0 - rows * step)
 
-    return files.mapInPandas(
-        parse,
-        "lat_sw long, lon_sw long, row long, col long, elev long,"
-        " lon double, lat double",
-    )
+    return DIO.read_files(spark, f"{directory}/*.hgt", decode,
+                          DIO.TILE_SCHEMA)

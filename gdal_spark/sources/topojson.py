@@ -9,23 +9,22 @@ geometries reference arcs by index — ``~i`` (ones' complement) means arc
 ``i`` walked backwards.  Adjacent polygons share boundary arcs instead of
 duplicating coordinates.
 
-Spark mapping: the standard format-driver contract — one Topology
-document per row-block on write (``applyInPandas``; shared-arc dedup is
-block-local, exactly the sharing a per-tile TopoJSON file carries in the
-wild), one task per document on read (``binaryFile`` → arc cumsum +
-stitching in numpy).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+Topology document per block on write (shared-arc dedup is block-local,
+exactly the sharing a per-tile TopoJSON file carries in the wild), one
+decode per document on read (arc cumsum + stitching in numpy).
 """
 
 from __future__ import annotations
 
 import json
-import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 
 def encode_topology(features: list[tuple[int, dict, list[list[tuple[int, int]]]]],
@@ -107,45 +106,33 @@ def write_polygon_topologies(cells: DataFrame, directory: str,
                              block_col: str = "blk") -> int:
     """Distributed sink over (blk, fid, props_json, ring qx/qy arrays):
     one Topology document per block, shared-arc dedup inside each."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = int(key[0])
-        feats = []
-        for row in pdf.sort_values("fid").itertuples():
-            ring = list(zip((int(v) for v in row.qx),
-                            (int(v) for v in row.qy)))
-            feats.append((int(row.fid), json.loads(row.props_json), [ring]))
-        path = f"{directory}/block-{blk:05d}.topojson"
-        with open(path, "w") as fh:
-            fh.write(encode_topology(feats, object_name, scale, translate))
-        return pd.DataFrame({"path": [path], "n": [len(feats)]})
+    def encode(blk, pdf):
+        feats = [(int(row.fid), json.loads(row.props_json),
+                  [list(zip((int(v) for v in row.qx),
+                            (int(v) for v in row.qy)))])
+                 for row in pdf.sort_values("fid").itertuples()]
+        return {f"block-{int(blk):05d}.topojson": encode_topology(
+            feats, object_name, scale, translate).encode()}
 
-    return cells.groupBy(block_col).applyInPandas(
-        build, "path string, n long").count()
+    return DIO.write_files(cells, directory, F.col(block_col), encode)
 
 
 def read_polygon_topologies(spark: SparkSession, directory: str,
                             object_name: str) -> DataFrame:
     """Distributed scan → (fid, props_json, ring array<struct<x,y>>) of
-    each feature's exterior ring; one task per Topology document."""
-    files = spark.read.format("binaryFile") \
-        .load(f"{directory}/*.topojson") \
-        .select(F.col("content").alias("buf"))
+    each feature's exterior ring; one decode per Topology document."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                rows = decode_topology(bytes(buf), object_name)
-                yield pd.DataFrame({
-                    "fid": [fid for fid, _, _ in rows],
-                    "props_json": [json.dumps(props, separators=(",", ":"))
-                                   for _, props, _ in rows],
-                    "ring": [[{"x": float(x), "y": float(y)}
-                              for x, y in rings[0]]
-                             for _, _, rings in rows],
-                })
+    def decode(path, buf):
+        rows = decode_topology(buf, object_name)
+        return pd.DataFrame({
+            "fid": [fid for fid, _, _ in rows],
+            "props_json": [json.dumps(props, separators=(",", ":"))
+                           for _, props, _ in rows],
+            "ring": [[{"x": float(x), "y": float(y)} for x, y in rings[0]]
+                     for _, _, rings in rows],
+        })
 
-    return files.mapInPandas(
-        parse,
+    return DIO.read_files(
+        spark, f"{directory}/*.topojson", decode,
         "fid long, props_json string, ring array<struct<x double, y double>>")

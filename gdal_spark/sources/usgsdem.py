@@ -19,22 +19,21 @@ Format (public USGS standard; geographic-coordinate variant):
 * nodata is -32767; Fortran ``D`` exponents are swapped to ``E``
   before parsing (the reference's DConvert does the same).
 
-Spark mapping — the repo's tile-format contract (cf. sources/dted.py):
-one ``.dem`` per 1×1-degree cell via ``applyInPandas`` over the cell
-key, ``binaryFile`` one task per cell on read with a whitespace-token
-scan of the profile region (block padding is whitespace, so records
-spanning 1024-byte blocks need no special casing).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.dem`` per 1×1-degree cell on write, one decode per cell on read with
+a whitespace-token scan of the profile region (block padding is
+whitespace, so records spanning 1024-byte blocks need no special
+casing).
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 NODATA = -32767
 _BLK = 1024
@@ -149,54 +148,35 @@ def write_dem_cells(cells: DataFrame, directory: str,
     """Distributed .dem sink over (lat_sw, lon_sw, row, col, elev) —
     row 0 = the cell's SOUTH edge.  Absent samples become NODATA; one
     text file per 1-degree cell (bounded task)."""
-    os.makedirs(directory, exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lat_sw, lon_sw = int(key[0]), int(key[1])
-        arr = np.full((n_lat, n_lon), NODATA, dtype=np.int16)
-        arr[pdf["row"].to_numpy(np.int64),
-            pdf["col"].to_numpy(np.int64)] = (
-            pdf["elev"].to_numpy(np.int64).astype(np.int16))
+    def encode(tile, pdf):
+        lat_sw, lon_sw = map(int, tile)
+        arr = RG.scatter(pdf, (n_lat, n_lon), NODATA, np.int16,
+                         pdf["row"].to_numpy(), pdf["col"].to_numpy(),
+                         vals=pdf["elev"].to_numpy(np.int64))
         ns = "n" if lat_sw >= 0 else "s"
         ew = "e" if lon_sw >= 0 else "w"
-        path = (f"{directory}/{ns}{abs(lat_sw):02d}"
-                f"{ew}{abs(lon_sw):03d}.dem")
-        with open(path, "wb") as fh:
-            fh.write(dem_bytes(arr, lat_sw, lon_sw))
-        return pd.DataFrame({"path": [path], "n_cells": [len(pdf)]})
+        return {f"{ns}{abs(lat_sw):02d}{ew}{abs(lon_sw):03d}.dem":
+                dem_bytes(arr, lat_sw, lon_sw)}
 
-    manifest = cells.groupBy("lat_sw", "lon_sw").applyInPandas(
-        build, "path string, n_cells long")
-    return manifest.count()
+    return DIO.write_files(cells, directory,
+                           (F.col("lat_sw"), F.col("lon_sw")), encode,
+                           {"row": n_lat, "col": n_lon})
 
 
 def read_dem(spark: SparkSession, directory: str) -> DataFrame:
     """Distributed .dem scan → (lat_sw, lon_sw, row, col, elev, lon,
     lat); NODATA dropped.  lon/lat come from the Type A corner +
     resolution fields (arc-seconds → degrees)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.dem") \
-        .select(F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                lat_sw, lon_sw, arr = parse_dem(bytes(buf))
-                n_lat, n_lon = arr.shape
-                rr, cc = np.mgrid[0:n_lat, 0:n_lon]
-                keep = arr != NODATA
-                rows, cols = rr[keep], cc[keep]
-                yield pd.DataFrame({
-                    "lat_sw": np.full(rows.size, lat_sw, dtype=np.int64),
-                    "lon_sw": np.full(rows.size, lon_sw, dtype=np.int64),
-                    "row": rows.astype(np.int64),
-                    "col": cols.astype(np.int64),
-                    "elev": arr[keep].astype(np.int64),
-                    "lon": lon_sw + cols / (n_lon - 1.0),
-                    "lat": lat_sw + rows / (n_lat - 1.0),
-                })
+    def decode(path, buf):
+        lat_sw, lon_sw, arr = parse_dem(buf)
+        n_lat, n_lon = arr.shape
+        keep = arr != NODATA
+        rows, cols = DIO.grid_index(arr.shape, keep)
+        return DIO.tile_frame(lat_sw, lon_sw, rows, cols, arr[keep],
+                              lon_sw + cols / (n_lon - 1.0),
+                              lat_sw + rows / (n_lat - 1.0))
 
-    return files.mapInPandas(
-        parse,
-        "lat_sw long, lon_sw long, row long, col long, elev long, "
-        "lon double, lat double",
-    )
+    return DIO.read_files(spark, f"{directory}/*.dem", decode,
+                          DIO.TILE_SCHEMA)

@@ -15,23 +15,23 @@ makes the engine ingest the format those pages actually arrive in:
 * ``response`` payloads are HTTP/1.1 messages; the html body starts
   after the HTTP header block's first CRLF CRLF.
 
-Spark mapping mirrors the other format drivers: one shard per partition
-on write (``mapInPandas``), one task per shard on read (``binaryFile``
-bytes + ``zlib.decompressobj`` member walk — the payload html stays BYTES
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+shard per shard of the doc id on write, one decode per shard on read
+(``zlib.decompressobj`` member walk — the payload html stays BYTES
 end-to-end so the extraction contract's byte-identical invariant is
 testable through the container).
 """
 
 from __future__ import annotations
 
-import os
 import zlib
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _CRLF = b"\r\n"
 
@@ -104,59 +104,36 @@ def write_warc_shards(
     id_col: str = "doc_id",
     html_col: str = "html",
 ) -> int:
-    """Distributed .warc.gz sink: one shard per partition, one gzip member
-    per record (CC layout).  Returns shards written."""
-    os.makedirs(directory, exist_ok=True)
-    staged = docs.select(id_col, html_col).repartition(
-        num_files, F.col(id_col))
+    """Distributed .warc.gz sink: one shard per shard of the doc id, one
+    gzip member per record (CC layout).  Returns shards written."""
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts else \
-            pd.DataFrame({id_col: [], html_col: []})
+    def encode(part, pdf):
         pdf = pdf.sort_values(id_col)
-        chunks = []
-        for did, html in zip(pdf[id_col], pdf[html_col]):
-            did = int(did)
-            rec = warc_record(
-                f"https://example.com/doc/{did}",
-                bytes(html),
-                rec_id=f"00000000-0000-0000-0000-{did:012d}",
-            )
-            chunks.append(gzip_member(rec))
-        final = f"{directory}/part-{pid:05d}.warc.gz"
-        with open(final, "wb") as fh:
-            fh.write(b"".join(chunks))
-        yield pd.DataFrame({"path": [final], "n_records": [len(pdf)]})
+        return {f"part-{part:05d}.warc.gz": b"".join(
+            gzip_member(warc_record(
+                f"https://example.com/doc/{int(did)}", bytes(html),
+                rec_id=f"00000000-0000-0000-0000-{int(did):012d}"))
+            for did, html in zip(pdf[id_col], pdf[html_col]))}
 
-    manifest = staged.mapInPandas(write_part, "path string, n_records long")
-    return manifest.count()
+    return DIO.write_files(docs.select(id_col, html_col), directory,
+                           DIO.hash_key(id_col, num_files), encode)
 
 
 def read_warc_shards(spark: SparkSession, directory: str) -> DataFrame:
-    """Distributed .warc.gz scan → (doc_id, uri, html binary): one task
+    """Distributed .warc.gz scan → (doc_id, uri, html binary): one decode
     per shard, gzip members walked executor-side, html body kept as raw
     BYTES (the byte-identical extraction contract rides on this)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.warc.gz") \
-        .select(F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                ids, uris, htmls = [], [], []
-                for raw in split_members(bytes(buf)):
-                    headers, payload = parse_record(raw)
-                    uri = headers["WARC-Target-URI"]
-                    ids.append(int(uri.rsplit("/", 1)[1]))
-                    uris.append(uri)
-                    htmls.append(http_body(payload))
-                yield pd.DataFrame({
-                    "doc_id": np.asarray(ids, dtype=np.int64),
-                    "uri": uris,
-                    "html": htmls,
-                })
+    def decode(path, buf):
+        ids, uris, htmls = [], [], []
+        for raw in split_members(buf):
+            headers, payload = parse_record(raw)
+            uri = headers["WARC-Target-URI"]
+            ids.append(int(uri.rsplit("/", 1)[1]))
+            uris.append(uri)
+            htmls.append(http_body(payload))
+        return pd.DataFrame({"doc_id": np.asarray(ids, dtype=np.int64),
+                             "uri": uris, "html": htmls})
 
-    return files.mapInPandas(parse, "doc_id long, uri string, html binary")
+    return DIO.read_files(spark, f"{directory}/*.warc.gz", decode,
+                          "doc_id long, uri string, html binary")

@@ -22,21 +22,17 @@ Layout (fixed-width text):
   token count (2 = elevation, 3 = roughness), the same dichotomy the
   reference's layer open logic uses.
 
-Spark mapping — the repo's text-format contract (sources/gmt.py): one
-``.map`` shard per partition on write (map-only after the key
-repartition), one task per shard on read (binaryFile bytes,
-executor-side token-stream parse)."""
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+``.map`` shard per shard of the feature id on write, one decode per
+shard on read (executor-side token-stream parse)."""
 
 from __future__ import annotations
-
-import os
-import tempfile
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _HEADER = (
     "gdal_spark WAsP map | no spatial ref sys\n"
@@ -114,56 +110,33 @@ def write_elevation_maps(
     x_col: str = "x", y_col: str = "y", seq_col: str = "seq",
 ) -> int:
     """Distributed elevation-contour sink over exploded vertex rows
-    (id, z, seq, x, y): one .map shard per partition, features grouped
-    executor-side."""
-    os.makedirs(directory, exist_ok=True)
-    staged = df.select(id_col, z_col, seq_col, x_col, y_col).repartition(
-        num_files, F.col(id_col))
+    (id, z, seq, x, y): one .map shard per shard of the feature id,
+    features grouped executor-side."""
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def encode(part, pdf):
+        feats = [(float(g[z_col].iloc[0]),
+                  g[[x_col, y_col]].to_numpy(np.float64))
+                 for _, g in pdf.sort_values([id_col, seq_col]).groupby(
+                     id_col, sort=True)]
+        return {f"part-{part:05d}.map": elevation_map_bytes(feats)}
 
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = (pd.concat(parts, ignore_index=True) if parts
-               else pd.DataFrame(columns=[id_col, z_col, seq_col,
-                                          x_col, y_col]))
-        feats = []
-        for fid, g in pdf.sort_values([id_col, seq_col]).groupby(
-                id_col, sort=True):
-            feats.append((float(g[z_col].iloc[0]),
-                          g[[x_col, y_col]].to_numpy(np.float64)))
-        buf = elevation_map_bytes(feats)
-        tmp = tempfile.mktemp(suffix=".map")
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        final = f"{directory}/part-{pid:05d}.map"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(feats)]})
-
-    return staged.mapInPandas(
-        write_part, "path string, n_records long").count()
+    return DIO.write_files(
+        df.select(id_col, z_col, seq_col, x_col, y_col), directory,
+        DIO.hash_key(id_col, num_files), encode)
 
 
 def read_elevation_maps(spark: SparkSession, directory: str) -> DataFrame:
-    """Distributed scan → exploded vertex rows (z, seq, x, y) plus the
-    shard-local feature ordinal; one task per .map shard."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.map") \
-        .select(F.col("content").alias("buf"))
+    """Distributed scan → exploded vertex rows (z, seq, x, y); one
+    decode per .map shard."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                kind, feats = parse_wasp(bytes(buf))
-                if kind != "elevation":
-                    raise ValueError(
-                        f"wasp: expected elevation layer, got {kind}")
-                recs = []
-                for z, xy in feats:
-                    for s, (x, y) in enumerate(xy):
-                        recs.append((float(z), s, float(x), float(y)))
-                yield pd.DataFrame(
-                    recs, columns=["z", "seq", "x", "y"])
+    def decode(path, buf):
+        kind, feats = parse_wasp(buf)
+        if kind != "elevation":
+            raise ValueError(f"wasp: expected elevation layer, got {kind}")
+        return pd.DataFrame(
+            [(float(z), s, float(x), float(y))
+             for z, xy in feats for s, (x, y) in enumerate(xy)],
+            columns=["z", "seq", "x", "y"])
 
-    return files.mapInPandas(
-        parse, "z double, seq long, x double, y double")
+    return DIO.read_files(spark, f"{directory}/*.map", decode,
+                          "z double, seq long, x double, y double")

@@ -17,26 +17,24 @@ via repr, so coordinates survive bit-exactly); strings as
 ``t="inlineStr"`` (self-contained — no sharedStrings part needed,
 which the reference reader also accepts).
 
-Spark mapping — the repo's standard single-writer-container contract
-(gpkg/spatialite): one .xlsx per partition on write (a zip is one
-writer), ``binaryFile`` one task per file on read, parsed executor-side
-from the in-memory bytes (zipfile over BytesIO — no temp files).
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+.xlsx per shard of the key on write (a zip is one writer), one decode
+per file on read, parsed executor-side from the in-memory bytes (zipfile
+over BytesIO — no temp files).
 """
 
 from __future__ import annotations
 
 import io
-import os
 import re
-import tempfile
 import zipfile
-from typing import Iterator
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
 
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _CT = (
@@ -191,36 +189,19 @@ def write_point_xlsxs(
     sheet: str = "layer",
     partition_key: str | None = None,
 ) -> int:
-    """Distributed sink: one .xlsx per partition (map-only after the key
-    repartition).  Coordinates ride as shortest-roundtrip decimal
-    numbers, attributes as integer cells; row 1 is the header."""
-    os.makedirs(directory, exist_ok=True)
-    key = partition_key or int_fields[0]
+    """Distributed sink: one .xlsx per shard of the key.  Coordinates
+    ride as shortest-roundtrip decimal numbers, attributes as integer
+    cells; row 1 is the header."""
     cols = int_fields + [x_col, y_col]
-    staged = df.select(*cols).repartition(num_files, F.col(key))
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def encode(part, pdf):
+        rows = [tuple([int(v) for v in r[:-2]]
+                      + [float(r[-2]), float(r[-1])])
+                for r in pdf.itertuples(index=False)]
+        return {f"part-{part:05d}.xlsx": xlsx_bytes(cols, rows, sheet=sheet)}
 
-        pid = TaskContext.get().partitionId()
-        parts = list(batches)
-        pdf = pd.concat(parts, ignore_index=True) if parts \
-            else pd.DataFrame(columns=cols)
-        rows = [
-            tuple([int(getattr(r, c)) for c in int_fields]
-                  + [float(getattr(r, x_col)), float(getattr(r, y_col))])
-            for r in pdf.itertuples(index=False)
-        ]
-        buf = xlsx_bytes(cols, rows, sheet=sheet)
-        tmp = tempfile.mktemp(suffix=".xlsx")
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        final = f"{directory}/part-{pid:05d}.xlsx"
-        os.replace(tmp, final)
-        yield pd.DataFrame({"path": [final], "n_records": [len(rows)]})
-
-    manifest = staged.mapInPandas(write_part, "path string, n_records long")
-    return manifest.count()
+    key = DIO.hash_key(partition_key or int_fields[0], num_files)
+    return DIO.write_files(df.select(*cols), directory, key, encode)
 
 
 def read_point_xlsxs(
@@ -233,22 +214,14 @@ def read_point_xlsxs(
     """Distributed scan: binaryFile bytes → executor-side zip + XML parse
     → typed columns (header row consumed as the schema; the writer's
     original column names are looked up in it)."""
-    files = spark.read.format("binaryFile").load(f"{directory}/*.xlsx") \
-        .select(F.col("content").alias("buf"))
-    out_schema = ", ".join(
-        [f"{c} long" for c in int_fields] + ["x double", "y double"])
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                header, rows = parse_xlsx(bytes(buf))
-                idx = {h: i for i, h in enumerate(header)}
-                recs = []
-                for r in rows:
-                    rec = {c: int(r[idx[c]]) for c in int_fields}
-                    rec["x"] = float(r[idx[x_col]])
-                    rec["y"] = float(r[idx[y_col]])
-                    recs.append(rec)
-                yield pd.DataFrame(recs, columns=int_fields + ["x", "y"])
+    def decode(path, buf):
+        header, rows = parse_xlsx(buf)
+        idx = [header.index(c) for c in int_fields]
+        ix, iy = header.index(x_col), header.index(y_col)
+        return pd.DataFrame(
+            [[int(r[i]) for i in idx] + [float(r[ix]), float(r[iy])]
+             for r in rows], columns=int_fields + ["x", "y"])
 
-    return files.mapInPandas(parse, out_schema)
+    return DIO.read_files(spark, f"{directory}/*.xlsx", decode,
+                          DIO.point_schema(int_fields))

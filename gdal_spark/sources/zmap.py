@@ -14,20 +14,22 @@ Format:
   end of every column (the reference emits it by default and its
   reader requires the per-column grouping to locate values).
 
-Spark mapping — write is the engine's bounded single-writer text
-contract (one ``applyInPandas`` task per grid, matching the format's
-one-file-one-grid model); read ships file bytes via ``binaryFile`` and
-parses executor-side with a vectorized per-column reshape."""
+Spark mapping: the document kernel (``sources/_docio.py``) — one
+file per grid on write (one task: the format's one-file-one-grid
+model), one decode per file on read with a vectorized per-column
+reshape."""
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import _docio as DIO
+from gdal_spark.sources import _rawgrid as RG
 
 _FIELD, _PER_LINE, _DEC = 20, 4, 7
 
@@ -105,38 +107,27 @@ def write_zmap(
     """Bounded single-writer sink over (gy, gx, val), gy 0 = north
     (one grid = one text file in this format; fact-scale rasters use
     the engine's tiled formats)."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.full((h, w), nodata, dtype=np.float64)
-        arr[pdf["gy"].to_numpy(np.int64),
-            pdf["gx"].to_numpy(np.int64)] = pdf["val"].to_numpy()
-        with open(path, "wb") as fh:
-            fh.write(zmap_bytes(arr, xmin, xmin + w * cellsize,
-                                ymax - h * cellsize, ymax, nodata))
-        return pd.DataFrame({"path": [path], "n": [len(pdf)]})
+    def encode(_, pdf):
+        arr = RG.scatter(pdf, (h, w), nodata, np.float64,
+                         pdf["gy"].to_numpy(), pdf["gx"].to_numpy())
+        return {os.path.basename(path): zmap_bytes(
+            arr, xmin, xmin + w * cellsize, ymax - h * cellsize, ymax,
+            nodata)}
 
-    cells.withColumn("_one", F.lit(1)).groupBy("_one").applyInPandas(
-        build, "path string, n long").collect()
+    DIO.write_files(cells, os.path.dirname(path) or ".", F.lit(0), encode,
+                    {"gy": h, "gx": w})
 
 
 def read_zmap(spark: SparkSession, path: str) -> DataFrame:
-    """Scan → (gy, gx, val double), nodata dropped; one task per file
+    """Scan → (gy, gx, val double), nodata dropped; one decode per file
     (binaryFile bytes, executor-side parse)."""
-    files = spark.read.format("binaryFile").load(path) \
-        .select(F.col("content").alias("buf"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for buf in pdf["buf"]:
-                _, _, _, _, nodata, arr = parse_zmap(bytes(buf))
-                hh, ww = arr.shape
-                yy, xx = np.mgrid[0:hh, 0:ww]
-                keep = arr != nodata
-                yield pd.DataFrame({
-                    "gy": yy[keep].astype(np.int64),
-                    "gx": xx[keep].astype(np.int64),
-                    "val": arr[keep],
-                })
+    def decode(_, buf):
+        *_, nodata, arr = parse_zmap(buf)
+        keep = arr != nodata
+        gy, gx = DIO.grid_index(arr.shape, keep)
+        return pd.DataFrame({"gy": gy, "gx": gx, "val": arr[keep]})
 
-    return files.mapInPandas(parse, "gy long, gx long, val double")
+    return DIO.read_files(spark, path, decode,
+                          "gy long, gx long, val double")

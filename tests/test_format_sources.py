@@ -5,6 +5,7 @@ Reference semantics: ogr/ogrsf_frmts/shape/ (shpopen.c, dbfopen.c),
 ogr/ogrsf_frmts/gpkg/ (ogrgeopackageutility.cpp), ogr/ogrsf_frmts/geojson/.
 """
 
+import os
 import struct
 import tempfile
 
@@ -2055,7 +2056,9 @@ class TestWasp:
             "fid long, seq long, z double, x double, y double")
         d = str(tmp_path / "maps")
         n = W.write_elevation_maps(verts, d, 2)
-        assert n == 2
+        # both fids hash to shard 1 of 2; an empty shard writes no file
+        assert n == 1
+        assert os.listdir(d) == ["part-00001.map"]
         back = W.read_elevation_maps(spark, d).toPandas()
         assert len(back) == 5
         assert sorted(back["z"].unique()) == [-2.5, 5.0]

@@ -69,6 +69,22 @@ def test_hgt_spark_roundtrip_voids_dropped(spark):
     assert chk["elev"] == (n + 2) % 97 - 10
 
 
+@pytest.mark.parametrize("fmt", ["kml", "xlsx"])
+def test_doc_writer_leaves_only_its_files(spark, tmp_path, fmt):
+    """The document kernel writes each file under a dot-prefixed name in
+    the target directory and renames it into place: afterwards the
+    directory holds the driver's files and nothing else."""
+    from gdal_spark.sources import kml, xlsx
+
+    write = {"kml": kml.write_point_kmls, "xlsx": xlsx.write_point_xlsxs}
+    df = spark.range(40).select(F.col("id").alias("k"),
+                                (F.col("id") * 0.5).alias("x"),
+                                (F.col("id") * 0.25).alias("y"))
+    d = str(tmp_path / fmt)
+    assert write[fmt](df, d, "x", "y", ["k"], 4) == 4
+    assert sorted(os.listdir(d)) == [f"part-{i:05d}.{fmt}" for i in range(4)]
+
+
 # ---------------------------------------------------------------------------
 # XYZ ASCII grid
 # ---------------------------------------------------------------------------
