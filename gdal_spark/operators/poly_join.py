@@ -54,14 +54,17 @@ def _candidate_pairs(
     cell are disjoint by construction and not emitted."""
 
     def cover(df: DataFrame, id_col: str, geom_col: str, s: str) -> DataFrame:
-        # tile math is NULL at the poles: clamp latitudes to the Mercator limit
-        ymin, ymax = (
-            F.least(F.greatest(F.col(c), F.lit(-TM.MAX_LAT)), F.lit(TM.MAX_LAT))
-            for c in ("ymin", "ymax")
+        # the tile math rejects coordinates outside lon/lat range: clamp the
+        # envelope into it (a NULL envelope stays NULL and gets no cell), so
+        # a part past the antimeridian keeps its cells
+        xmin, xmax, ymin, ymax = (
+            F.when(F.col(c) < -lim, -lim).when(F.col(c) > lim, lim).otherwise(F.col(c))
+            for c, lim in (("xmin", 180.0), ("xmax", 180.0),
+                           ("ymin", 90.0), ("ymax", 90.0))
         )
         # ty of the envelope TOP (ymax) is the smallest ty (XYZ y grows south)
-        txmin, tymin = TM.lonlat_to_tile(F.col("xmin"), ymax, zoom)
-        txmax, tymax = TM.lonlat_to_tile(F.col("xmax"), ymin, zoom)
+        txmin, tymin = TM.lonlat_to_tile(xmin, ymax, zoom)
+        txmax, tymax = TM.lonlat_to_tile(xmax, ymin, zoom)
         return (
             df.select(
                 F.col(id_col).cast("long").alias(f"id_{s}"),

@@ -112,10 +112,13 @@ def sort_spatial(df: DataFrame, zoom: int = 12, lon: str = "lon",
                  lat: str = "lat") -> DataFrame:
     """`gdal vector sort` by space-filling curve (gdalalg_vector_sort.cpp:371
     hilbert; our curve is the quadkey) — range-partitioned so output files
-    are spatially local."""
+    are spatially local. Sorts on the quadkey's nibble words (one ``long``
+    per 16 levels, in the string's order) and never renders the string."""
     tx, ty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    keyed = df.withColumn("_qk", TM.quadkey(tx, ty, zoom))
-    return keyed.repartitionByRange("_qk").sortWithinPartitions("_qk").drop("_qk")
+    words = [w for w, _ in TM._nibble_words(tx, ty, zoom)]
+    keys = [f"_qk{i}" for i in range(len(words))]
+    keyed = df.select("*", *(w.alias(k) for w, k in zip(words, keys)))
+    return keyed.repartitionByRange(*keys).sortWithinPartitions(*keys).drop(*keys)
 
 
 def limit_rows(df: DataFrame, n: int, offset: int = 0) -> DataFrame:

@@ -10038,11 +10038,14 @@ def q_points_dwithin_join(spark, sf_dir):
     rects = polygons_df(spark).filter(F.col("poly_id") < 64).select(
         "poly_id", "xmin", "ymin", "xmax", "ymax"
     )
+    # the padded box clamped into the tile domain, which rejects lon past ±180
     txmin, tymin = TM.lonlat_to_tile(
-        F.col("xmin") - _DW_D, F.col("ymax") + _DW_D, _DW_ZOOM
+        F.greatest(F.col("xmin") - _DW_D, F.lit(-180.0)),
+        F.least(F.col("ymax") + _DW_D, F.lit(90.0)), _DW_ZOOM
     )
     txmax, tymax = TM.lonlat_to_tile(
-        F.col("xmax") + _DW_D, F.col("ymin") - _DW_D, _DW_ZOOM
+        F.least(F.col("xmax") + _DW_D, F.lit(180.0)),
+        F.greatest(F.col("ymin") - _DW_D, F.lit(-90.0)), _DW_ZOOM
     )
     cover = (
         rects.select(

@@ -113,8 +113,9 @@ def grid_index(shape: tuple, keep: np.ndarray | None = None,
 
 
 def block_of(path: str) -> int:
-    """The block number of a ``block-NNNNN.<ext>`` file."""
-    return int(path.rsplit("block-", 1)[1][:5])
+    """The block number of a ``block-NNNNN.<ext>`` file: every digit up to
+    the extension, so block 100000 is not read as 10000."""
+    return int(path.rsplit("block-", 1)[1].split(".", 1)[0])
 
 
 # rows of a 1x1-degree elevation tile (SRTM HGT, DTED, USGS DEM)

@@ -82,12 +82,56 @@ def tms_to_xyz(ty_tms: Column, zoom: int) -> Column:
     return (F.lit((1 << zoom) - 1) - ty_tms).cast("int")
 
 
+def _tile_index(t: Column, ok: Column, zoom: int) -> Column:
+    """``t`` clamped into ``[0, 2^z)`` where ``ok``, NULL elsewhere."""
+    return F.when(ok, F.least(F.greatest(t, F.lit(0)), F.lit((1 << zoom) - 1)))
+
+
 def lonlat_to_tile(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
-    """lon/lat → XYZ (tx, ty) at zoom — the full chain, closed form."""
-    mx, my = lonlat_to_meters(lon, lat)
+    """lon/lat → XYZ (tx, ty) at zoom — the full chain, closed form.
+
+    Total over the double domain, one axis at a time: a NULL, NaN or ±inf
+    coordinate, a lon outside [-180, 180] or a lat outside [-90, 90] gives a
+    NULL index on its axis (rejected, not wrapped: a lon of 190 is bad
+    input, not 10° east of the antimeridian). lat is clamped to ±MAX_LAT,
+    and both indices to ``[0, 2^z)``, so lon = -180 is column 0 and the
+    poles are the first and last rows. Inside the domain nothing changes.
+    """
+    mx, my = lonlat_to_meters(
+        lon, F.least(F.greatest(lat, F.lit(-MAX_LAT)), F.lit(MAX_LAT)))
     px, py = meters_to_pixels(mx, my, zoom)
     tx, ty_tms = pixels_to_tile(px, py)
-    return tx, tms_to_xyz(ty_tms, zoom)
+    return (_tile_index(tx, lon.between(-180.0, 180.0), zoom),
+            _tile_index(tms_to_xyz(ty_tms, zoom), lat.between(-90.0, 90.0), zoom))
+
+
+# Four shift-or-mask steps move bit i of a 16-bit value to bit 4i.
+_SPREAD = ((24, 0x000000FF000000FF), (12, 0x000F000F000F000F),
+           (6, 0x0303030303030303), (3, 0x1111111111111111))
+
+
+def _spread(x: Column) -> Column:
+    for s, m in _SPREAD:
+        x = x.bitwiseOR(F.shiftleft(x, s)).bitwiseAND(F.lit(m))
+    return x
+
+
+def _nibble_words(tx: Column, ty_xyz: Column, zoom: int) -> list[tuple[Column, int]]:
+    """The quadkey as ``(word, digits)`` pairs, one ``long`` per 16 levels,
+    most significant first. Digit i of a word (bit i of tx plus twice bit i
+    of ty) is its hex nibble i, so for a fixed zoom the words' numeric order
+    is the quadkey's string order."""
+    tx, ty = tx.cast("long"), ty_xyz.cast("long")
+    words = []
+    for low in range((max(zoom, 1) - 1) // 16 * 16, -1, -16):
+        n = min(16, zoom - low)
+        mask = F.lit((1 << n) - 1)
+
+        def bits(t: Column) -> Column:
+            return _spread((F.shiftright(t, low) if low else t).bitwiseAND(mask))
+
+        words.append((bits(tx).bitwiseOR(F.shiftleft(bits(ty), 1)), n))
+    return words
 
 
 def quadkey(tx: Column, ty_xyz: Column, zoom: int) -> Column:
@@ -95,17 +139,20 @@ def quadkey(tx: Column, ty_xyz: Column, zoom: int) -> Column:
     TMS→XYZ first — we take XYZ directly so no flip here).
 
     digit_i = bit(tx, i) + 2*bit(ty_xyz, i), emitted from the top bit down.
-    Pure integer column math (shiftright/bitwise-and → concat) so it stays in
-    codegen; ``zoom`` must be a literal, which it always is in tiling plans.
+    The low 16 levels of tx and ty are spread so that bit i lands at bit 4i
+    and interleaved into one "nibble word" (``_nibble_words``), which holds
+    each base-4 digit in its own hex nibble: ``hex`` then prints the digits
+    in order, and ``lpad`` restores the leading zeros. Zooms past 16 concat
+    one word per 16 levels. That is a few dozen integer ops and two string
+    ops per 16 levels, where a cast to string per digit plus a z-way concat
+    cost three times as much (BENCH.md §24). It stays Catalyst column math
+    inside codegen. ``zoom`` must be a literal, which it always is in tiling
+    plans; a NULL index gives a NULL key.
     """
     if zoom == 0:
         return F.lit("")
-    digits = []
-    for i in range(zoom, 0, -1):
-        bit_x = F.shiftright(tx, i - 1).bitwiseAND(F.lit(1))
-        bit_y = F.shiftright(ty_xyz, i - 1).bitwiseAND(F.lit(1))
-        digits.append((bit_x + bit_y * F.lit(2)).cast("string"))
-    return F.concat(*digits)
+    keys = [F.lpad(F.hex(w), n, "0") for w, n in _nibble_words(tx, ty_xyz, zoom)]
+    return keys[0] if len(keys) == 1 else F.concat(*keys)
 
 
 def tile_bounds_meters(tx: Column, ty_tms: Column, zoom: int) -> tuple[
@@ -155,12 +202,18 @@ def py_pixels_to_tile(px: float, py: float) -> tuple[int, int]:
     )
 
 
-def py_lonlat_to_tile(lon: float, lat: float, zoom: int) -> tuple[int, int]:
-    """lon/lat → XYZ (tx, ty)."""
-    mx, my = py_lonlat_to_meters(lon, lat)
+def py_lonlat_to_tile(lon: float | None, lat: float | None,
+                     zoom: int) -> tuple[int | None, int | None]:
+    """lon/lat → XYZ (tx, ty), with the domain rules of ``lonlat_to_tile``."""
+    ok_lon = lon is not None and -180.0 <= lon <= 180.0
+    ok_lat = lat is not None and -90.0 <= lat <= 90.0
+    mx, my = py_lonlat_to_meters(lon if ok_lon else 0.0,
+                                 min(max(lat, -MAX_LAT), MAX_LAT) if ok_lat else 0.0)
     px, py = py_meters_to_pixels(mx, my, zoom)
     tx, ty_tms = py_pixels_to_tile(px, py)
-    return tx, (1 << zoom) - 1 - ty_tms
+    n = 1 << zoom
+    return (min(max(tx, 0), n - 1) if ok_lon else None,
+            min(max(n - 1 - ty_tms, 0), n - 1) if ok_lat else None)
 
 
 def py_quadkey(tx: int, ty_xyz: int, zoom: int) -> str:
@@ -204,21 +257,29 @@ def sql_meters_y(lat_expr: str) -> str:
     )
 
 
+def _sql_tile_index(t_expr: str, ok_expr: str, zoom: int) -> str:
+    return (f"(case when {ok_expr} then least(greatest({t_expr}, 0), "
+            f"{(1 << zoom) - 1}) end)")
+
+
 def sql_tile_x(lon_expr: str, zoom: int) -> str:
     res = resolution(zoom)
-    return (
+    tx = (
         f"cast(ceil((({sql_meters_x(lon_expr)}) + {ORIGIN_SHIFT!r}) / {res!r}"
         f" / {float(TILE_SIZE)!r}) - 1 as int)"
     )
+    return _sql_tile_index(tx, f"({lon_expr}) between -180.0 and 180.0", zoom)
 
 
 def sql_tile_y_xyz(lat_expr: str, zoom: int) -> str:
     res = resolution(zoom)
+    lat_c = f"least(greatest({lat_expr}, {-MAX_LAT!r}), {MAX_LAT!r})"
     ty_tms = (
-        f"(ceil((({sql_meters_y(lat_expr)}) + {ORIGIN_SHIFT!r}) / {res!r}"
+        f"(ceil((({sql_meters_y(lat_c)}) + {ORIGIN_SHIFT!r}) / {res!r}"
         f" / {float(TILE_SIZE)!r}) - 1)"
     )
-    return f"cast({(1 << zoom) - 1} - {ty_tms} as int)"
+    return _sql_tile_index(f"cast({(1 << zoom) - 1} - {ty_tms} as int)",
+                           f"({lat_expr}) between -90.0 and 90.0", zoom)
 
 
 def sql_quadkey(tx_expr: str, ty_xyz_expr: str, zoom: int) -> str:

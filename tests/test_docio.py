@@ -106,3 +106,30 @@ def test_missing_directory_still_raises(spark, tmp_path):
 
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         kml.read_point_kmls(spark, str(tmp_path / "absent"), LAYER)
+
+
+# the block-image drivers that name files ``block-NNNNN.<ext>``:
+# (input schema, writer, extra writer args after the grid, reader)
+BLOCK_PAIRS = {
+    "pnm": ("gx long, gy long, val long", "write_gray_pnms", (),
+            "read_gray_pnms"),
+    "bmp": ("gx long, gy long, r long, g long, b long", "write_rgb_bmps", (),
+            "read_rgb_bmps"),
+    "gif": ("gx long, gy long, idx long", "write_indexed_gifs",
+            (np.zeros((2, 3)),), "read_indexed_gifs"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(BLOCK_PAIRS))
+def test_block_number_past_five_digits_roundtrips(spark, tmp_path, name):
+    """Block 100000 is written as ``block-100000.<ext>`` and must read back
+    at its own rows, not at block 10000's."""
+    schema, writer, extra, reader = BLOCK_PAIRS[name]
+    m = _module(name)
+    ncols = len(schema.split(","))
+    cells = spark.createDataFrame([(0, 100000) + (1,) * (ncols - 2)], schema)
+    path = str(tmp_path / "out")
+    # a 1 x 100001 grid in one-row blocks
+    assert getattr(m, writer)(cells, path, 1, 100001, 1, *extra) == 1
+    back = getattr(m, reader)(spark, path, 1).collect()
+    assert [(r["gx"], r["gy"]) for r in back] == [(0, 100000)]

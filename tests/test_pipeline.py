@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from gdal_spark import pipeline as P
 from gdal_spark.data.pages import pages_df, polygons_df
 from gdal_spark.spatial import geometry as G
+from gdal_spark.spatial import tilemath as TM
 
 
 @pytest.fixture(scope="module")
@@ -34,6 +35,22 @@ def test_execute_sql(spark, pages):
 def test_sort_spatial_clusters(spark, pages):
     out = P.sort_spatial(pages.select("i", "lon", "lat"), zoom=8)
     assert out.count() == 500
+
+    # the row order is a sort on the quadkey string, over one nibble word
+    # (zoom 8) and over two (zoom 20), NULL and out-of-domain rows included
+    odd = spark.createDataFrame(
+        [(-1, None, 1.0), (-2, 190.0, 1.0), (-3, float("nan"), 1.0),
+         (-4, -180.0, 90.0), (-5, 180.0, -90.0)], "i long, lon double, lat double")
+    frame = pages.select("i", "lon", "lat").unionByName(odd)
+
+    def with_key(df, zoom):
+        tx, ty = TM.lonlat_to_tile(F.col("lon"), F.col("lat"), zoom)
+        return df.select(TM.quadkey(tx, ty, zoom).alias("qk"))
+
+    for zoom in (8, 20):
+        got = [r.qk for r in with_key(P.sort_spatial(frame, zoom=zoom), zoom).collect()]
+        want = [r.qk for r in with_key(frame, zoom).orderBy(F.asc_nulls_first("qk")).collect()]
+        assert len(got) == 505 and got == want
 
 
 def test_reproject_roundtrip(spark, pages):

@@ -275,6 +275,18 @@ def test_pole_touching_envelopes_still_pair(spark, pole):
     assert [(r["id_a"], r["id_b"], r["within"]) for r in lrel] == [(7, 1, True)]
 
 
+@pytest.mark.parametrize("side", [-1.0, 1.0])
+def test_antimeridian_crossing_envelopes_still_pair(spark, side):
+    """A box reaching past lon = ±180 and a box inside it are one candidate
+    pair: the cell cover clamps the envelope into the tile domain, which
+    rejects a lon outside [-180, 180]."""
+    x0, x1 = sorted((170.0 * side, 180.5 * side))
+    a = _box_rows(spark, [(1, x0, 10.0, x1, 20.0)])
+    b = _box_rows(spark, [(2, x0 + 2.0, 12.0, x1 - 2.0, 15.0)])
+    rel = PJ.poly_relate_join(a, b).collect()
+    assert [(r["id_a"], r["id_b"], r["contains"]) for r in rel] == [(1, 2, True)]
+
+
 def _with_null_geometry(df):
     """``df`` plus a copy of its first row with id 999 and a NULL geometry
     (``rings`` or ``coords``); the envelope columns (if any) stay non-NULL."""

@@ -3,8 +3,10 @@ heavily on randomized/parametrized geometry and transform cases
 (autotest/ogr/ogr_geom.py, autotest/osr/osr_proj4.py); these mirror that
 strategy for the pure-python kernels the engine's Column/Arrow code shares.
 
-All properties run WITHOUT a SparkSession (numpy/python level), so they are
-cheap enough to fuzz hundreds of cases per run.
+Most properties run WITHOUT a SparkSession (numpy/python level), so they
+are cheap enough to fuzz hundreds of cases per run. The tile-math
+properties at the end check Spark column math: each example is a batch of
+rows evaluated in one job, so they run fewer examples.
 """
 
 import math
@@ -12,7 +14,7 @@ import os
 import sys
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -532,3 +534,78 @@ def test_jdem_decimeter_field_roundtrip(dm):
     assert int(field) == dm
     val = dm * 0.1
     assert int(round(val * 10)) == dm
+
+
+# ---------------------------------------------------------------------------
+# Tile math (spatial/tilemath.py): the engine's column math against its
+# Python mirror and, for the tile domain, DuckDB over the SQL fragments.
+# ---------------------------------------------------------------------------
+
+from gdal_spark.spatial import tilemath as TM  # noqa: E402
+
+_int32 = st.one_of(st.none(), st.integers(-2**31, 2**31 - 1))
+# the word boundaries, the sign and the int extremes
+_EDGE_TILES = [(-1, -1), (-2**31, 2**31 - 1), (2**31 - 1, -2**31), (0, 0),
+               (None, 0), (0, None), (None, None), (65535, 65536),
+               (2**16 + 1, 2**17 - 1), (2**30 - 1, 2**30), (5, -2)]
+
+
+@settings(max_examples=25, deadline=None)
+@given(pairs=st.lists(st.tuples(_int32, _int32), min_size=1, max_size=40),
+       z=st.integers(min_value=0, max_value=30))
+@example(pairs=_EDGE_TILES, z=0)
+@example(pairs=_EDGE_TILES, z=16)
+@example(pairs=_EDGE_TILES, z=17)
+@example(pairs=_EDGE_TILES, z=30)
+def test_quadkey_column_is_bit_exact_python_mirror(spark, pairs, z):
+    """Python's & reads the same low bits of a negative int as Spark's
+    shiftright; a NULL index gives a NULL key at every zoom but 0."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(pairs, "tx int, ty int")
+    got = [r[0] for r in df.select(
+        TM.quadkey(F.col("tx"), F.col("ty"), z)).collect()]
+    assert got == [None if z and None in p else TM.py_quadkey(*p, z)
+                   for p in pairs]
+
+
+_POLES = [-90.0, 90.0, TM.MAX_LAT, -TM.MAX_LAT, 85.06, -85.06, 89.999]
+_EDGE_COORDS = [None, math.nan, math.inf, -math.inf, -180.0, 180.0, 180.5,
+                -181.0, 0.0, 1e308, -5e-324] + _POLES
+_coord = st.one_of(
+    st.none(), st.floats(),  # the full double range, NaN and ±inf included
+    st.floats(min_value=-200.0, max_value=200.0),
+    st.sampled_from(_EDGE_COORDS),
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(rows=st.lists(st.tuples(_coord, _coord), min_size=1, max_size=40),
+       z=st.integers(min_value=0, max_value=30))
+@example(rows=[(lon, lat) for lon in _EDGE_COORDS for lat in _EDGE_COORDS],
+         z=12)
+def test_tile_domain_is_total(spark, rows, z):
+    """Every tile index is NULL or inside [0, 2^z), and the engine, the
+    Python mirror and DuckDB give the same (tx, ty) on every row."""
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(rows, "lon double, lat double")
+    tx, ty = TM.lonlat_to_tile(F.col("lon"), F.col("lat"), z)
+    got = [tuple(r) for r in df.select(tx, ty).collect()]
+    assert all(t is None or 0 <= t < 1 << z for r in got for t in r)
+    assert got == [TM.py_lonlat_to_tile(lon, lat, z) for lon, lat in rows]
+
+    con = duckdb.connect()
+    # Arrow keeps NaN apart from NULL, which a pandas frame would not
+    con.register("pts", pa.table({
+        "i": pa.array(range(len(rows)), pa.int64()),
+        "lon": pa.array([r[0] for r in rows], pa.float64()),
+        "lat": pa.array([r[1] for r in rows], pa.float64()),
+    }))
+    oracle = con.execute(
+        f"SELECT {TM.sql_tile_x('lon', z)}, {TM.sql_tile_y_xyz('lat', z)} "
+        "FROM pts ORDER BY i").fetchall()
+    con.close()
+    assert got == [tuple(r) for r in oracle]
